@@ -15,7 +15,68 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** Read a parquet table graft wrote (or was handed) without a Spark
+    * job. Plain `spark.read.parquet` infers the schema with a one-task
+    * job per call (about 75 ms against 12 ms with the schema given, on
+    * a 4-core box); here the file that inference would pick — the first
+    * visible data file in path order — has its footer read on the
+    * driver with Spark's own reader and converter under the session's
+    * SQLConf, and that schema is handed to the reader. Partition
+    * columns are still inferred from the directory names.
+    *
+    * Falls back to plain `spark.read.parquet`, so summary handling and
+    * error messages stay Spark's own, when: a `_metadata` or
+    * `_common_metadata` summary is present, no visible data file
+    * exists, the footer cannot be read or converted, schema merging is
+    * on, or the directory layout is not a plain or `k=v`-partitioned
+    * table. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+
+  private val summaryFiles = Set("_metadata", "_common_metadata")
+
+  /** hidden per Spark's file index: `_x` (not `_k=v`), `.x`, `x._COPYING_` */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  private def footerSchema(spark: SparkSession, path: String)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+    import org.apache.spark.sql.graft.ParquetFooterBridge
+    // data files under `dir`, or None when the layout needs Spark's own
+    // handling (a summary file, or a subdirectory that is not `k=v`)
+    def dataFiles(fs: FileSystem, dir: Path): Option[Seq[FileStatus]] = {
+      val (dirs, files) = fs.listStatus(dir).toSeq.partition(_.isDirectory)
+      val visibleDirs = dirs.filterNot(d => hidden(d.getPath.getName))
+      if (files.exists(f => summaryFiles(f.getPath.getName)) ||
+          visibleDirs.exists(!_.getPath.getName.contains("="))) None
+      else {
+        val here = files.filterNot(f => hidden(f.getPath.getName))
+        val nested = visibleDirs.map(d => dataFiles(fs, d.getPath))
+        // data files both here and in partition dirs: a conflicting
+        // layout, Spark reports it
+        if (nested.contains(None) || (here.nonEmpty && nested.exists(_.get.nonEmpty))) None
+        else Some(here ++ nested.flatMap(_.get))
+      }
+    }
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) None
+    else try {
+      val conf = ParquetFooterBridge.hadoopConf(spark)
+      val root = new Path(path)
+      val fs = root.getFileSystem(conf)
+      val status = fs.getFileStatus(root)
+      val files = if (status.isDirectory) dataFiles(fs, root) else Some(Seq(status))
+      // schema inference reads the first data file in path order
+      files.filter(_.nonEmpty).map(_.minBy(_.getPath.toString))
+        .map(ParquetFooterBridge.footerSchema(spark, conf, _))
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")

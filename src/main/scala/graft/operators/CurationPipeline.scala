@@ -144,15 +144,15 @@ object CurationPipeline {
     val storeDir = s"$base/store"
     NeuriteAtlas.morphReport(documents).write.mode("overwrite").parquet(reportDir)
     existingStore(documents).write.mode("overwrite").parquet(storeDir)
-    val report = spark.read.parquet(reportDir)
+    val report = graft.Tables.read(spark, reportDir)
     val actions = annotationActions(computedAnnotations(report),
-      spark.read.parquet(storeDir))
+      graft.Tables.read(spark, storeDir))
     val updates = actions.select(
       annId(col("morph_id"), col("neurite_type")).as("ann_id"),
       col("morph_id"), col("neurite_type"),
       col("n_sections"), col("cum_len_um"), col("rev"))
     MergeWriter.applyTo(spark, storeDir, updates, "ann_id")
-    spark.read.parquet(storeDir)
+    graft.Tables.read(spark, storeDir)
       .select("morph_id", "neurite_type", "n_sections", "cum_len_um", "rev")
       .orderBy("morph_id", "neurite_type")
   }

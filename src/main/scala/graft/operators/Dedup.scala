@@ -1435,7 +1435,13 @@ object Dedup {
     * join) and every aggregate past the restriction runs on
     * leak-sized rows; the corpus pays ONE row-local window scan and
     * never exchanges on the window key (the q113 discipline — the
-    * restriction happens BEFORE anything corpus-sized moves). */
+    * restriction happens BEFORE anything corpus-sized moves).
+    *
+    * NOTE (r19 semantics): CONSTRUCTION executes Spark jobs — the
+    * benchmark-side window set is localCheckpoint'ed when the frame is
+    * BUILT (so even `explain` or a plan audit runs the benchmark
+    * tokenize+window+distinct pass), and the frame reads that
+    * lineage-free snapshot of source state as of the build. */
   def leakAttribution(docs: DataFrame, windowTokens: Int = 8): DataFrame = {
     val w = windowTokens
     require(w >= 1, s"windowTokens must be >= 1, got $w")

@@ -67,7 +67,7 @@ object MergeWriter {
     // not the configured default filesystem.
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recover(fs, p)
-    val merged = mergedState(spark.read.parquet(path), updates, key, deleteFlag)
+    val merged = mergedState(graft.Tables.read(spark, path), updates, key, deleteFlag)
     val staging = new org.apache.hadoop.fs.Path(path + ".staging")
     val backup = new org.apache.hadoop.fs.Path(path + ".bak")
     merged.write.mode("overwrite").parquet(staging.toString)
@@ -92,33 +92,40 @@ object MergeWriter {
     * on the updates, and STABLE under updates for existing keys (a
     * key's partition value never changes) — the standard partitioned-
     * MERGE precondition; violating it can duplicate a key across
-    * partitions. Inserts may land in brand-new partitions. The touched
-    * partition list is collected to the driver — it is bounded by the
-    * table's partition count, a catalog-sized model, not data. */
+    * partitions. Inserts may land in brand-new partitions.
+    *
+    * One aggregate over the updates is collected to the driver: per
+    * touched partition value, whether some update row of it survives
+    * the merge (`max(!coalesce(deleteFlag, false))`; always true
+    * without a delete flag). It is bounded by the table's partition
+    * count, a catalog-sized model, not data. Under the stable-partition
+    * contract a surviving update row lands in its own partition, so
+    * only a partition whose update rows are ALL deletes can end up
+    * empty. Only when such a candidate exists is the merged state
+    * cached (it is then consumed twice) and the candidates' remaining
+    * partition values listed before the write; otherwise the merge
+    * goes straight to the write. */
   def applyToPartitioned(spark: SparkSession, path: String, updates: DataFrame,
                          key: String, partCol: String,
                          deleteFlag: Option[String] = None): Unit = {
-    val touched = updates.select(col(partCol)).distinct().collect().map(_.get(0))
+    val survives = max(deleteFlag.fold(lit(true))(f => !coalesce(col(f), lit(false))))
+    val touched = updates.groupBy(col(partCol)).agg(survives).collect()
+      .map(r => r.get(0) -> r.getBoolean(1))
     // a NULL partition value would three-valued-NULL out of the isin
     // filter below (existing null-partition rows silently dropped from
     // the merge) — reject it instead of corrupting
-    require(!touched.contains(null),
+    require(!touched.exists(_._1 == null),
       s"applyToPartitioned: updates carry a NULL $partCol — null partitions are not mergeable")
     if (touched.nonEmpty) {
-      val target = spark.read.parquet(path).filter(col(partCol).isin(touched: _*))
+      val target = graft.Tables.read(spark, path)
+        .filter(col(partCol).isin(touched.map(_._1).toSeq: _*))
       val merged0 = mergedState(target, updates, key, deleteFlag)
-      // Deletes can empty a touched partition, and dynamic overwrite
-      // would then leave its old files alive — that path must LIST the
-      // merged state's partitions before writing, so it caches (the
-      // merged frame is consumed twice). Without a delete flag no
-      // touched partition can empty (every touched partition keeps at
-      // least its update rows), so the insert/update-only path — the
-      // per-batch index-maintenance hot loop — skips the cache and the
-      // extra listing job and goes straight to the write.
-      val merged = if (deleteFlag.isEmpty) merged0 else merged0.cache()
+      val candidates = touched.collect { case (v, false) => v }
+      val merged = if (candidates.isEmpty) merged0 else merged0.cache()
       try {
-        if (deleteFlag.nonEmpty) {
-          val remaining = merged.select(col(partCol)).distinct().collect().map(_.get(0)).toSet
+        if (candidates.nonEmpty) {
+          val remaining = merged.filter(col(partCol).isin(candidates.toSeq: _*))
+            .select(col(partCol)).distinct().collect().map(_.get(0)).toSet
           // a touched partition whose rows were ALL deleted emits no
           // output, so dynamic overwrite would leave its old files alive.
           // Drop those dirs BEFORE the write: their correct final state is
@@ -129,7 +136,7 @@ object MergeWriter {
           // not atomic across partitions (that needs a table format with
           // a log); the merge is idempotent under replay, which is the
           // recovery story here.
-          val emptied = touched.filterNot(remaining)
+          val emptied = candidates.filterNot(remaining)
           if (emptied.nonEmpty) {
             val p = new org.apache.hadoop.fs.Path(path)
             val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -155,7 +162,7 @@ object MergeWriter {
           case Some(v) => spark.conf.set(conf, v)
           case None    => spark.conf.unset(conf)
         }
-      } finally if (deleteFlag.nonEmpty) merged.unpersist(blocking = false)
+      } finally if (candidates.nonEmpty) merged.unpersist(blocking = false)
     }
   }
 
@@ -219,7 +226,7 @@ object Upsert {
     val dir = graft.Scratch.dir("graft_merge_") + "/state"
     target(customer).write.mode("overwrite").parquet(dir)
     MergeWriter.applyTo(spark, dir, updates(orders, supplier), "c_custkey", Some("is_deleted"))
-    spark.read.parquet(dir).orderBy("c_custkey")
+    graft.Tables.read(spark, dir).orderBy("c_custkey")
   }
 
   /** q43b's update batch: zero out every overdrawn customer (deeply
@@ -251,7 +258,7 @@ object Upsert {
       .write.mode("overwrite").partitionBy("segment").parquet(dir)
     MergeWriter.applyToPartitioned(spark, dir, partitionedUpdates(customer, supplier),
       "c_custkey", "segment", Some("is_deleted"))
-    spark.read.parquet(dir)
+    graft.Tables.read(spark, dir)
       .select("c_custkey", "segment", "acctbal_cents")
       .orderBy("c_custkey")
   }

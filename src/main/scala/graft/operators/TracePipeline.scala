@@ -156,10 +156,10 @@ object TracePipeline {
     val storeDir = s"$base/store"
     Traces.traceReport(documents).write.mode("overwrite").parquet(reportDir)
     existingStore(documents).write.mode("overwrite").parquet(storeDir)
-    val report = spark.read.parquet(reportDir)
-    val updates = pushUpdates(report, spark.read.parquet(storeDir))
+    val report = graft.Tables.read(spark, reportDir)
+    val updates = pushUpdates(report, graft.Tables.read(spark, storeDir))
     MergeWriter.applyTo(spark, storeDir, updates, "trace_id")
-    spark.read.parquet(storeDir)
+    graft.Tables.read(spark, storeDir)
       .select("trace_id", "types", "single_cell_stimuli", "rev")
       .orderBy("trace_id")
   }

@@ -109,10 +109,7 @@ object TopKPerKey {
   def apply(df: DataFrame, keyCols: Seq[Column], orderCols: Seq[Column],
             k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(Strategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ Strategy
-    }
+    TopKInstaller.installStrategy(spark)
     ColumnBridge.ofRows(spark, TopKPerKeyNode(
       keyCols.map(ColumnBridge.expression),
       orderCols.map(toSortOrder),

@@ -104,11 +104,11 @@ object IndexCatalog {
     * compacting (or derive N from the distinct doc domain). */
   def compactSegments(spark: SparkSession, indexPath: String, metaPath: String,
                       table: String, buckets: Int = 16): Unit = {
-    spark.read.parquet(indexPath).drop("seg")
+    graft.Tables.read(spark, indexPath).drop("seg")
       .write.mode("overwrite").format("parquet")
       .bucketBy(buckets, "term").sortBy("term")
       .saveAsTable(table)
-    spark.read.parquet(metaPath)
+    graft.Tables.read(spark, metaPath)
       .agg(sum("n_docs").cast("long").as("n_docs"))
       .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_meta")
   }

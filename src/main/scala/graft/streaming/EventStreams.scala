@@ -33,7 +33,7 @@ object EventStreams {
       // NonFatal only: wrapping an OutOfMemoryError / InterruptedException
       // in IllegalArgumentException with a 'seed the dir' message would
       // mislead — fatal errors propagate unwrapped
-      try spark.read.parquet(dir).schema
+      try graft.Tables.read(spark, dir).schema
       catch { case scala.util.control.NonFatal(e) => throw new IllegalArgumentException(
         s"readEventStream: cannot probe the ts encoding from '$dir' — the " +
           "stream dir must be seeded with at least one parquet file before " +
@@ -434,13 +434,13 @@ object EventStreams {
     val spark = computed.sparkSession
     pushCycleSink("annotationPushSink", computed, checkpoint, actionsPath,
       Seq("entity_id", "compartment"),
-      basePath => spark.read.parquet(storePath)
+      basePath => graft.Tables.read(spark, storePath)
         .select(col("entity_id").as("ex_id"), col("compartment").as("ex_comp"),
           col("rev").as("prev_rev"))
         .write.mode("overwrite").parquet(basePath)
     ) { (batch, batchId, basePath, cycleDir) =>
       val s = batch.sparkSession
-      val base = s.read.parquet(basePath)
+      val base = graft.Tables.read(s, basePath)
       val actions = graft.operators.Curation.annotationDiff(
         batch.toDF(), base, part)
       actions.write.mode("overwrite").parquet(s"$cycleDir/batch=$batchId")
@@ -486,13 +486,13 @@ object EventStreams {
     val spark = report.sparkSession
     pushCycleSink("tracePushSink", report, checkpoint, actionsPath,
       Seq("trace_id"),
-      basePath => spark.read.parquet(storePath)
+      basePath => graft.Tables.read(spark, storePath)
         .select(col("trace_id"), col("types"), col("rev"))
         .write.mode("overwrite").parquet(basePath)
     ) { (batch, batchId, basePath, cycleDir) =>
       val s = batch.sparkSession
       val actions = graft.operators.TracePipeline.pushActions(
-        batch.toDF(), s.read.parquet(basePath))
+        batch.toDF(), graft.Tables.read(s, basePath))
       actions.write.mode("overwrite").parquet(s"$cycleDir/batch=$batchId")
       graft.operators.MergeWriter.applyTo(
         s, storePath, actions.drop("prev_rev"), "trace_id")
@@ -572,7 +572,7 @@ object EventStreams {
         val s = batch.sparkSession
         val batchKeys = batch.toDF().select(keyCols.map(col): _*).distinct()
         if (fs.exists(new org.apache.hadoop.fs.Path(keylogRoot))) {
-          val prior = s.read.parquet(keylogRoot).filter(col("batch") =!= batchId)
+          val prior = graft.Tables.read(s, keylogRoot).filter(col("batch") =!= batchId)
           val clash = batchKeys.join(
             prior.select(keyCols.map(col): _*), keyCols, "left_semi")
           val sample = clash.limit(3).collect()

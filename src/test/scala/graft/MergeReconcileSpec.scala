@@ -82,6 +82,59 @@ class MergeReconcileSpec extends AnyFunSuite {
       "deleted partition holds no live rows")
   }
 
+  /** a part-partitioned (id, part, cents) table in a fresh directory */
+  private def partitionedTable(prefix: String, rows: Seq[(Long, String, Long)]): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString + "/state"
+    rows.toDF("id", "part", "cents").write.mode("overwrite").partitionBy("part").parquet(dir)
+    dir
+  }
+
+  private def stateOf(dir: String): Map[Long, (String, Long)] =
+    spark.read.parquet(dir).collect()
+      .map(r => r.getAs[Long]("id") -> ((r.getAs[String]("part"), r.getAs[Long]("cents")))).toMap
+
+  test("partition-scoped merge: an all-delete partition keeps its carried-over row") {
+    val dir = partitionedTable("graft_pmerge_alldel_",
+      Seq((1L, "a", 100L), (2L, "a", 200L), (3L, "b", 300L)))
+    // every update row of partition a is a delete, but key 2 carries over
+    val updates = Seq((1L, "a", 100L, true), (4L, "b", 400L, false))
+      .toDF("id", "part", "cents", "gone")
+    MergeWriter.applyToPartitioned(spark, dir, updates, "id", "part", Some("gone"))
+    assert(stateOf(dir) == Map(2L -> (("a", 200L)), 3L -> (("b", 300L)), 4L -> (("b", 400L))))
+  }
+
+  test("partition-scoped merge: a mixed partition loses only the deleted key") {
+    val dir = partitionedTable("graft_pmerge_mixed_",
+      Seq((1L, "a", 100L), (2L, "a", 200L), (3L, "a", 300L), (4L, "b", 400L)))
+    val updates = Seq((1L, "a", 150L, false), (2L, "a", 200L, true))
+      .toDF("id", "part", "cents", "gone")
+    MergeWriter.applyToPartitioned(spark, dir, updates, "id", "part", Some("gone"))
+    assert(stateOf(dir) == Map(1L -> (("a", 150L)), 3L -> (("a", 300L)), 4L -> (("b", 400L))))
+  }
+
+  test("partition-scoped merge rejects a NULL partition value and leaves the table as it was") {
+    val dir = partitionedTable("graft_pmerge_null_", Seq((1L, "a", 100L), (2L, "b", 200L)))
+    def files(): Set[(String, Long)] = {
+      import java.nio.file.Files
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toSet
+      finally walk.close()
+    }
+    val before = files()
+    val updates = Seq((1L, "a", 150L, false), (3L, null, 300L, false))
+      .toDF("id", "part", "cents", "gone")
+    Seq(Some("gone"), None).foreach { flag =>
+      val batch = if (flag.isEmpty) updates.drop("gone") else updates
+      val e = intercept[IllegalArgumentException](
+        MergeWriter.applyToPartitioned(spark, dir, batch, "id", "part", flag))
+      assert(e.getMessage.contains("NULL part"), e.getMessage)
+      assert(files() == before, s"delete flag $flag: the table files changed")
+    }
+    assert(stateOf(dir) == Map(1L -> (("a", 100L)), 2L -> (("b", 200L))))
+  }
+
   test("recover rolls an interrupted swap forward or back") {
     import org.apache.hadoop.fs.Path
     val conf = spark.sparkContext.hadoopConfiguration

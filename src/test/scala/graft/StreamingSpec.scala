@@ -20,6 +20,12 @@ class StreamingSpec extends AnyFunSuite {
     dir.toFile.getAbsolutePath
   }
 
+  test("an unseeded event stream directory is refused with the seeding message") {
+    val empty = java.nio.file.Files.createTempDirectory("graft_stream_unseeded").toString
+    val e = intercept[IllegalArgumentException](EventStreams.readEventStream(spark, empty))
+    assert(e.getMessage.contains("must be seeded"), e.getMessage)
+  }
+
   test("streaming hourly windows equal the batch aggregation") {
     val stream = EventStreams.readEventStream(spark, eventsDir)
     val q = EventStreams.hourlyCounts(stream)
