@@ -1206,33 +1206,6 @@ object Corpus {
       .orderBy("query_id")
   }
 
-  // dev probes for the q103b stage split (BenchScaleCurve knee hunts)
-  private[graft] def probeCf(corpus: DataFrame): DataFrame =
-    chunkFeaturesSparseInput(corpus)
-  private[graft] def probeCrows(corpus: DataFrame): DataFrame =
-    chunkFeaturesSparseInput(corpus)
-      .select(col("doc_id"), col("chunk_idx"),
-        explode(graft.functions.HashExpressions.md5_shingle_hashes(col("__ct"), RetbShingleK)).as("h"))
-      .distinct()
-  private[graft] def probeChamps(docs: DataFrame): DataFrame = {
-    val isQuery = pmod(col("doc_id"), lit(RetbMod.toLong)) === 0L
-    val crows = probeCrows(docs.filter(!isQuery))
-    val df = crows.groupBy("h").agg(count(lit(1)).cast(org.apache.spark.sql.types.LongType).as("df"))
-    val qtoks = docs.filter(isQuery)
-      .select(col("doc_id").as("query_id"), expr(chunkToksSql("text")).as("__qtk"))
-      .filter(size(col("__qtk")) > 0)
-    val qrows = qtoks.select(col("query_id"),
-      explode(graft.functions.HashExpressions.md5_shingle_hashes(col("__qtk"), RetbShingleK)).as("h")).distinct()
-    graft.plans.TopKPerKey(qrows.join(df, Seq("h")),
-      Seq(col("query_id")), Seq(col("df"), col("h")), RetbChamps)
-  }
-  private[graft] def probeCands(docs: DataFrame): DataFrame = {
-    val isQuery = pmod(col("doc_id"), lit(RetbMod.toLong)) === 0L
-    val crows = probeCrows(docs.filter(!isQuery))
-    probeChamps(docs).select("query_id", "h").join(crows, Seq("h"))
-      .select("query_id", "doc_id", "chunk_idx").distinct()
-  }
-
   /** chunk rows carrying the sliced token array (shared geometry;
     * the sparse path explodes tokens instead of building the dense
     * vector). */

@@ -101,7 +101,13 @@ object Dedup {
     * plan-pinned). The previous renamed-projection self-join computed
     * the full shingle→signature pipeline once PER SIDE: two corpus
     * scans and two signature passes for one logical banding, at every
-    * call site (q33/q59/q57/q124b/q125/q133 all pay it). */
+    * call site (q33/q59/q57/q124b/q125/q133 all pay it).
+    *
+    * SKEW / AQE trade: the explicit repartition also fixes the join's
+    * shuffle shape. A duplicate-heavy corpus puts a hot band bucket in
+    * ONE partition, and because both sides read a user-specified
+    * exchange, AQE can no longer turn the join into a broadcast when
+    * the input is small. */
   def minhashCandidatePairs(docs: DataFrame): DataFrame = {
     val b = minhashBands(docs).repartition(col("band_idx"), col("band_hash"))
     val left = b.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_a"))
@@ -1201,7 +1207,7 @@ object Dedup {
     * materialized cut-list frames (q107b and q113 columns). This is
     * what a deployment runs: the two upstream scans happen once when
     * each screen's list is persisted; combining costs only cut-sized
-    * rows (BenchCutSplit prices the split, the q82/q88b accounting
+    * rows (`BenchSplit cut` prices the split, the q82/q88b accounting
     * discipline). The inventory q118 entry stays self-contained — its
     * bench figure honestly prices both upstream scans per rep. */
   def combineCutLists(dupSpans: DataFrame, contamSpans: DataFrame): DataFrame =

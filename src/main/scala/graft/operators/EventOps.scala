@@ -319,8 +319,8 @@ object EventOps {
     * [[TransitionBucketUs]]-wide time buckets; the lag window runs per
     * (user, bucket) — a bot user holding half the corpus spreads over
     * the timeline's buckets instead of serializing through one task
-    * (BenchSkew measured the user-keyed window 1.65× slower at 50%-bot
-    * skew; the q51 caveat this op no longer carries). Bucket-first
+    * (`BenchSplit skew` measured the user-keyed window 1.65× slower
+    * at 50%-bot skew; the q51 caveat this op no longer carries). Bucket-first
     * rows stitch to the previous non-empty bucket's last event through
     * a per-user window over the BUCKET-SUMMARY frame — calendar-
     * bounded rows per user, never event-sized. Spec pins equality
@@ -397,7 +397,7 @@ object EventOps {
 
   /** the plain user-keyed lag form of [[eventTransitions]] — the spec
     * baseline the segmented plan must equal row-for-row (and the
-    * BenchSkew comparison arm), exposed as the SMALL-DEPLOYMENT
+    * `BenchSplit skew` comparison arm), exposed as the SMALL-DEPLOYMENT
     * opt-in: ~2.4× cheaper than the segmented form below ~30% hot-user
     * share on benchmark-sized corpora, but its worst case serializes
     * the hottest user through one task (2.5× degradation at a 50%-bot

@@ -233,7 +233,7 @@ object Multimodal {
 
   /** the fixture at a payload-size multiplier: image/video dims and
     * audio sample counts scale by `scale` (image/video payload BYTES
-    * scale ≈ scale²) — the BenchMediaScale knob that sweeps payload
+    * scale ≈ scale²) — the `BenchSplit media_scale` knob that sweeps payload
     * size at fixed row count, because the 100 TB multimodal question
     * is byte-dominated I/O, not row count (the sf0.1 fixture's ~700 B
     * payloads leave even a 100× row decade overhead-dominated —
@@ -295,16 +295,11 @@ object Multimodal {
         max(col("doc_id")).as("last_doc"))
       .orderBy("mime")
 
-  /** q41: decode/feature-extract — typed per-partition map running the
-    * REAL [[decodeMedia]] over every payload, then a per-mime summary
-    * of the decoded geometry and payload statistics. Every aggregate is
-    * an exact integer the oracle reproduces from the fixture's closed
-    * form — so the whole decode path (header parse, length validation,
-    * byte aggregation) is hash-checked per round. */
   /** TEST-ONLY MUTANT HOOK (r15 verdict item 5): when flipped by
-    * MutationPinSpec, [[extractFeatures]] routes the media frame
-    * through a SECOND payload-sized exchange (behind a typed-map
-    * barrier so CollapseRepartition cannot fold it away) — the exact
+    * MutationPinSpec, the repartitioning [[featuresRollup]] (q41's
+    * path) routes the media frame through a SECOND payload-sized
+    * exchange (behind a typed-map barrier so CollapseRepartition
+    * cannot fold it away) — the exact
     * regression the one-blob-exchange plan pin exists to catch. The
     * spec flips it, asserts the pin's predicate now reads 2, restores
     * it — so every `sbt test` run re-proves the fence bites (the r15
@@ -312,104 +307,50 @@ object Multimodal {
     * proof permanent). Never set outside tests. */
   @volatile private[graft] var mutantExtraBlobExchange = false
 
-  def extractFeatures(documents: DataFrame, partitions: Int = 0): DataFrame = {
-    val spark = documents.sparkSession
+  /** q41: decode/feature-extract — typed per-partition map running the
+    * REAL [[decodeMedia]] over every payload, then a per-mime summary
+    * of the decoded geometry and payload statistics. Every aggregate is
+    * an exact integer the oracle reproduces from the fixture's closed
+    * form — so the whole decode path (header parse, length validation,
+    * byte aggregation) is hash-checked per round. */
+  def extractFeatures(documents: DataFrame, partitions: Int = 0): DataFrame =
+    featuresRollup(mediaFrame(documents), repartition = true, partitions)
+
+  /** the shared decode→per-mime rollup over a given media frame
+    * (doc_id, mime, content): q41 runs it over the fixture frame, q41d
+    * over the resized one, and the `media*` cost splits
+    * ([[graft.BenchSplit]]) over scaled and hot-blob frames.
+    * `repartition` routes the payloads through the skew-evening doc_id
+    * exchange first — the ONE payload-sized exchange in the engine.
+    * Without it the decode runs on the scan's own partitioning: same
+    * result (the rollup is commutative), only the exchange placement
+    * differs. The public operators pay the exchange, because at 100 TB
+    * a few oversized payloads in one input split would serialize a
+    * whole task; the splits price both forms. `decodeReps` > 1 repeats
+    * the real decoder to emulate a production codec's cost ratio (a
+    * JPEG/video decode is ~10× its read; the engine's decoders are
+    * single-pass byte sums ≈ the scan cost). */
+  private[graft] def featuresRollup(media: DataFrame, repartition: Boolean,
+                                    partitions: Int = 0, decodeReps: Int = 1): DataFrame = {
+    val spark = media.sparkSession
     import spark.implicits._
     // default width = the session's shuffle parallelism (same derivation
     // as pqAdcSearch) — a hardcoded 32 would be wrong on a real cluster
     val width = if (partitions > 0) partitions
       else spark.sessionState.conf.numShufflePartitions
-    val routed = mediaFrame(documents)
-      .repartition(width, col("doc_id"))
-      .as[MediaRow]
-    featuresRollup(
+    val routed = if (!repartition) media.as[MediaRow] else {
+      val r = media.repartition(width, col("doc_id")).as[MediaRow]
       if (mutantExtraBlobExchange)
-        routed.mapPartitions(identity).repartition(width, col("mime")).as[MediaRow]
-      else routed)
-  }
-
-  /** the NO-SHUFFLE variant of q41 — decode on the scan's own (on-read)
-    * partitioning, skipping the skew-evening repartition: the pricing
-    * probe for the ONE payload-sized exchange in the engine
-    * (BenchMediaSplit times both forms; the repartition's cost is their
-    * difference). Results are identical — the rollup is commutative —
-    * only the exchange placement differs. Kept private: the public
-    * operator deliberately pays the exchange, because at 100 TB a few
-    * oversized payloads in one input split would serialize a whole
-    * task (the stated skew argument); a deployment whose payloads are
-    * size-bounded can adopt this shape instead. */
-  private[graft] def extractFeaturesNoShuffle(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    featuresRollup(mediaFrame(documents).as[MediaRow])
-  }
-
-  /** q41 at a payload-size multiplier, exchange togglable — the
-    * BenchMediaScale probe: the 100 TB multimodal cost is payload
-    * BYTES, so the decade that matters sweeps payload size at fixed
-    * row count and prices the blob repartition at each point. */
-  private[graft] def extractFeaturesScaled(documents: DataFrame, scale: Int,
-                                           withRepartition: Boolean): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val media = mediaFrame(documents, scale)
-    val routed = if (withRepartition)
-      media.repartition(spark.sessionState.conf.numShufflePartitions, col("doc_id"))
-    else media
-    featuresRollup(routed.as[MediaRow])
-  }
-
-  /** q41 under HOT-BLOB skew, exchange togglable — the BenchMediaSkew
-    * probe measuring the scenario the skew-evening repartition EXISTS
-    * for: `hotPermille` of documents carry `hotScale`-sized payloads,
-    * placed either SPREAD through the id space (doc_id mod 1000) or
-    * CLUSTERED at its head (doc_id < corpus·permille/1000 — adjacent
-    * ids land in the same input splits, so without the exchange ONE
-    * scan task decodes most of the oversized payloads and the job
-    * waits on its tail). */
-  private[graft] def extractFeaturesHotBlobs(documents: DataFrame,
-                                             hotPermille: Int, hotScale: Int,
-                                             clustered: Boolean,
-                                             withRepartition: Boolean,
-                                             decodeReps: Int = 1): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val n = documents.count()
-    val hot: org.apache.spark.sql.Column =
-      if (clustered) col("doc_id") < lit(n * hotPermille / 1000L)
-      else pmod(col("doc_id"), lit(1000L)) < lit(hotPermille.toLong)
-    val media = documents.select(col("doc_id"),
-        when(col("source").isin("src0", "src1"), ImageMime)
-          .when(col("source").isin("src2", "src3"), AudioMime)
-          .otherwise(VideoMime).as("mime"),
-        hot.as("__hot"))
-      .as[(Long, String, Boolean)]
-      .map { case (id, mime, isHot) =>
-        MediaRow(id, mime, synthMedia(id, mime, if (isHot) hotScale else 1)) }
-      .toDF()
-    val routed = if (withRepartition)
-      media.repartition(spark.sessionState.conf.numShufflePartitions, col("doc_id"))
-    else media
-    // decodeReps emulates a REAL codec's cost ratio: the engine's
-    // format decoders are single-pass byte sums (≈ the scan cost), but
-    // a production JPEG/video decode is ~10× its read — repeating the
-    // real decoder reproduces that ratio without faking the work
-    featuresAgg(spark, routed.as[MediaRow].mapPartitions(_.map { r =>
+        r.mapPartitions(identity).repartition(width, col("mime")).as[MediaRow]
+      else r
+    }
+    featuresAgg(spark, routed.mapPartitions(_.map { r =>
       var f = decodeMedia(r)
       var i = 1
       while (i < decodeReps) { f = decodeMedia(r); i += 1 }
       f
     }).toDF())
   }
-
-  /** the shared decode→per-mime rollup (q41 and q41d run it over
-    * different media frames — original vs resized). */
-  private def featuresRollup(media: Dataset[MediaRow]): DataFrame =
-    featuresAgg(media.sparkSession, {
-      val spark = media.sparkSession
-      import spark.implicits._
-      media.mapPartitions(_.map(decodeMedia)).toDF()
-    })
 
   private def featuresAgg(spark: org.apache.spark.sql.SparkSession,
                           feats: DataFrame): DataFrame =
@@ -469,7 +410,8 @@ object Multimodal {
     featuresRollup(mediaFrame(documents)
       .repartition(width, col("doc_id"))
       .as[MediaRow]
-      .mapPartitions(_.map(resizeImage(_, newW, newH))))
+      .mapPartitions(_.map(resizeImage(_, newW, newH)))
+      .toDF(), repartition = false)
   }
 
   /** resize stage: per-partition map keeping the binary column shape;
@@ -508,7 +450,7 @@ object Multimodal {
     * record WITHOUT the content bytes. Persist it and the three views
     * become column reads / explodes ([[reportFeatures]],
     * [[reportResizedFeatures]], [[reportFrameSamples]] — spec-proven
-    * equal; BenchMediaSplit prices standalone-vs-report).
+    * equal; `BenchSplit media` prices standalone-vs-report).
     *
     * SCHEMA MIGRATION (r15): the record gained `resized` — a frame
     * persisted by an older build lacks the column and

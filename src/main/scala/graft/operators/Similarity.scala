@@ -95,6 +95,9 @@ object Similarity {
     // SAME exchange (ReusedExchange, r20 guide §2.4): the renamed
     // projections alone re-computed the lsh_buckets pass per side —
     // two embedding scans and two plane-matrix passes per banding.
+    // Skew/AQE trade: the repartition fixes the shuffle shape, so a hot
+    // (table, bucket) lands in one partition and AQE can no longer
+    // broadcast a small input.
     val b = e.select(col("vec_id"),
       posexplode(tableBucketsCol(col("embedding"), bandedPlanes(nTables, nPlanes, dim))))
       .withColumnRenamed("pos", "table")
@@ -299,7 +302,7 @@ object Similarity {
     * would not be broadcast-sized otherwise), so the refinement is a
     * few million flops; running it as Spark jobs paid per-iteration
     * scheduling plus a fresh whole-stage-codegen compile for every new
-    * centroid literal matrix, which BenchPqSplit measured as the
+    * centroid literal matrix, which `BenchSplit pq` measured as the
     * dominant cost of every PQ/IVF query (train 1.7s vs 0.15s scan).
     *
     * Means are computed in QUANTIZED fixed-point: per-dimension sums of

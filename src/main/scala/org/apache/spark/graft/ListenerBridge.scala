@@ -3,7 +3,9 @@ package org.apache.spark.graft
 import org.apache.spark.SparkContext
 
 /** Test/bench-only bridge into the private[spark] listener bus: the
-  * shuffle-byte measurement ([[graft.ShuffleBytes]]) must DRAIN the
+  * shuffle-byte meter ([[graft.ShuffleBytes]], used by `Bench`,
+  * `BenchKmv` and the `media_scale`/`media_skew` splits of
+  * [[graft.BenchSplit]]) must DRAIN the
   * async listener bus before reading its counters, or a fast job's
   * stage-completed events race the read. Same pattern as
   * [[org.apache.spark.sql.graft.ColumnBridge]] — one line of
