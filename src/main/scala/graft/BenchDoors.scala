@@ -35,9 +35,7 @@ object BenchDoors {
     val loadThreshold = sys.env.getOrElse("SPARK_GRAFT_LOAD_THRESHOLD", "3.0").toDouble
     val loadMaxWaitS = sys.env.getOrElse("SPARK_GRAFT_LOAD_MAX_WAIT_S", "600").toInt
     val slices = 4
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSplit.session()
     import spark.implicits._
 
     /** per-cell quiet gate: wait (bounded) for the box to quiet. The
@@ -53,8 +51,6 @@ object BenchDoors {
       (deg, waited)
     }
 
-    def tmp(prefix: String): String =
-      java.nio.file.Files.createTempDirectory(prefix).toString
     def timeIt(fn: () => Unit): Double = {
       val t0 = System.nanoTime(); fn(); (System.nanoTime() - t0) / 1e9
     }
@@ -77,7 +73,7 @@ object BenchDoors {
 
     /** run one door rep: fresh checkpoint, AvailableNow to drain. */
     def doorRep(mk: String => org.apache.spark.sql.streaming.DataStreamWriter[Row]): Double = {
-      val ckpt = tmp("graft_doors_ckpt")
+      val ckpt = Scratch.dir("graft_doors_ckpt")
       timeIt { () =>
         val q = mk(ckpt).trigger(Trigger.AvailableNow()).start()
         try q.processAllAvailable() finally q.stop()
@@ -127,7 +123,7 @@ object BenchDoors {
     val screenCell = {
       val docs = Tables.documents(spark, sfDir)
       val nRows = docs.count()
-      val dir = tmp("graft_doors_screen")
+      val dir = Scratch.dir("graft_doors_screen")
       (0 until slices).foreach(i => docs
         .filter(pmod(col("doc_id"), lit(slices.toLong)) === i.toLong)
         .coalesce(1).write.mode("append").parquet(dir))
@@ -165,7 +161,7 @@ object BenchDoors {
       val corpusSide = docs.filter(
         pmod(col("doc_id"), lit(graft.operators.Corpus.RetMod.toLong)) =!= 0L)
       val nRows = corpusSide.count()
-      val dir = tmp("graft_doors_ret")
+      val dir = Scratch.dir("graft_doors_ret")
       (0 until slices).foreach(i => corpusSide
         .filter(pmod(col("doc_id"), lit(slices.toLong)) === i.toLong)
         .coalesce(1).write.mode("append").parquet(dir))
@@ -217,7 +213,7 @@ object BenchDoors {
       val withTs = ev.withColumn("ts_us", unix_micros(col("ts")))
       val qs = withTs.stat.approxQuantile("ts_us", Array(0.25, 0.5, 0.75), 0.001)
         .map(_.toLong)
-      val dir = tmp("graft_doors_sess")
+      val dir = Scratch.dir("graft_doors_sess")
       val bounds = (Long.MinValue +: qs :+ Long.MaxValue).distinct.sorted.sliding(2).toSeq
       val waveRows = bounds.map { b =>
         val w = withTs.filter(col("ts_us") >= b(0) && col("ts_us") < b(1)).drop("ts_us")
@@ -276,7 +272,7 @@ object BenchDoors {
         computed0.withColumn("entity_id", col("entity_id") + lit(i * shift)))
         .reduce(_ unionByName _)
       val nRows = computed.count()
-      val dir = tmp("graft_doors_annpush_src")
+      val dir = Scratch.dir("graft_doors_annpush_src")
       // slices must be KEY-DISJOINT (the replay contract): hash slices
       // at 1x, one-universe-per-slice at x10 (so the keylog grows by a
       // whole universe per batch)
@@ -291,10 +287,10 @@ object BenchDoors {
       }
       def doorWithProgress(mfpt: Option[Int]): (Double, Seq[(Long, Long)]) = {
         // writer door mutates its store: fresh store + actions per rep
-        val storeDir = tmp("graft_doors_annpush_store") + "/store"
-        val actDir = tmp("graft_doors_annpush_act")
+        val storeDir = Scratch.dir("graft_doors_annpush_store") + "/store"
+        val actDir = Scratch.dir("graft_doors_annpush_act")
         graft.operators.Curation.annotationStoreSeed(part).write.parquet(storeDir)
-        val ckpt = tmp("graft_doors_annpush_ckpt") + "/ckpt"
+        val ckpt = Scratch.dir("graft_doors_annpush_ckpt") + "/ckpt"
         var prog: Seq[(Long, Long)] = Nil
         val t = timeIt { () =>
           val rs = spark.readStream.schema(computed.schema)
@@ -351,13 +347,13 @@ object BenchDoors {
     // files — the door prices the arriving-trace steady state.
     val tracePushCell = {
       val docs = Tables.documents(spark, sfDir)
-      val reportDir = tmp("graft_doors_trace") + "/report"
+      val reportDir = Scratch.dir("graft_doors_trace") + "/report"
       graft.operators.Traces.traceReport(docs)
         .write.mode("overwrite").parquet(reportDir)
       val report = spark.read.parquet(reportDir)
       val nRows = report.count()
       val kSlices = 3
-      val dir = tmp("graft_doors_trace_src")
+      val dir = Scratch.dir("graft_doors_trace_src")
       (0 until kSlices).foreach { i =>
         report.filter(pmod(hash(col("trace_id")), lit(kSlices)) === i)
           .coalesce(1).write.mode("append").parquet(dir)
@@ -365,10 +361,10 @@ object BenchDoors {
       var lastProg: Seq[(Long, Long)] = Nil
       def doorWithProgress(mfpt: Option[Int]): (Double, Seq[(Long, Long)]) = {
         // writer door mutates its store: fresh store per rep
-        val storeDir = tmp("graft_doors_trace_store") + "/store"
+        val storeDir = Scratch.dir("graft_doors_trace_store") + "/store"
         graft.operators.TracePipeline.existingStore(docs).write.parquet(storeDir)
-        val actDir = tmp("graft_doors_trace_act")
-        val ckpt = tmp("graft_doors_trace_ckpt") + "/ckpt"
+        val actDir = Scratch.dir("graft_doors_trace_act")
+        val ckpt = Scratch.dir("graft_doors_trace_ckpt") + "/ckpt"
         var prog: Seq[(Long, Long)] = Nil
         val t = timeIt { () =>
           val rs = spark.readStream.schema(report.schema)

@@ -41,9 +41,7 @@ object BenchKmv {
     val (degraded, loadWaitedS) = Bench.awaitQuiet(
       sys.env.getOrElse("SPARK_GRAFT_LOAD_THRESHOLD", "3.0").toDouble,
       sys.env.getOrElse("SPARK_GRAFT_LOAD_MAX_WAIT_S", "600").toInt)
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSplit.session()
 
     val part = Tables.part(spark, sfDir)
     val lineitem = Tables.lineitem(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** RECALL evidence for the approximate families (r13 verdict item 2,
   * extended r14): the ANN family's recall is audited by inventory
   * operators (q110/q110b); q103b's champion-list pruning and q31's
@@ -27,7 +25,7 @@ object BenchRetrievalSaturation {
     val dirs = sys.env.getOrElse("SPARK_GRAFT_RECALL_DIRS",
       "/root/testdata/sf0.01,/root/testdata/sf0.1").split(',').map(_.trim).toSeq
     val k = sys.env.getOrElse("SPARK_GRAFT_RECALL_K", "3").toInt
-    val spark = GraftSession.local(32)
+    val spark = BenchSplit.session()
     import org.apache.spark.sql.functions._
     val rows = dirs.map { dir =>
       val docs = Tables.documents(spark, dir)
@@ -54,14 +52,8 @@ object BenchRecall {
   def main(args: Array[String]): Unit = {
     val dirs = sys.env.getOrElse("SPARK_GRAFT_RECALL_DIRS",
       "/root/testdata/sf0.01,/root/testdata/sf0.1").split(',').map(_.trim).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val k = sys.env.getOrElse("SPARK_GRAFT_RECALL_K", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSplit.session()
     val rows = dirs.map { dir =>
       val docs = Tables.documents(spark, dir)
       val a = graft.operators.Corpus.retrievalRecallAudit(docs, k).collect()

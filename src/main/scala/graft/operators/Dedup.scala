@@ -969,12 +969,7 @@ object Dedup {
   def spanDedup(docs: DataFrame, windowTokens: Int = 8): DataFrame = {
     val w = windowTokens
     require(w >= 1, s"windowTokens must be >= 1, got $w")
-    val wins = docs
-      .select(col("doc_id"), tokens(coalesce(col("text"), lit(""))).as("tk"))
-      .select(col("doc_id"), posexplode(expr(
-        s"CASE WHEN size(tk) >= $w THEN transform(sequence(1, size(tk) - ${w - 1})," +
-          s" i -> array_join(slice(tk, i, $w), ' ')) ELSE array() END")))
-      .select(col("doc_id"), col("pos"), md5_60(col("col")).as("h"))
+    val wins = windowHashes(docs, w)
       // the joins push isnotnull(doc_id) / isnotnull(h) into ONE
       // consumer's subtree each; both are no-ops on this data (md5 of a
       // coalesced string is never null) — stating them here keeps the
@@ -1022,26 +1017,9 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** per-doc merged CUT INTERVALS for the span-cut pair (q107/q107b):
-    * (doc_id, spans) where spans is the sorted array of maximal
-    * half-open token ranges [s, e) covering every duplicated window
-    * this doc must remove. The removal rule is the Lee et al. 2022
-    * APPLY step made deterministic: a w-token window whose content
-    * occurs in ≥2 distinct docs is OWNED by the smallest doc_id
-    * containing it; every other doc cuts every occurrence (within-doc
-    * repetition inside the owner stays q54's screen, the q91 scoping).
-    *
-    * Scale shape: identical to [[spanDedup]] — the window stream is
-    * hash-partitioned on the window hash ONCE and that exchange feeds
-    * BOTH the owner election and the cut join (plan-pinned
-    * ReusedExchange; the election keeps the same column set via the
-    * max(pos) prune guard so the two subtrees canonicalize equal).
-    * The interval merge folds row-locally over the collected cut
-    * positions (bounded by doc length) inside the one doc-keyed
-    * aggregate — gaps-and-islands without a per-doc window pass. */
   /** (doc_id, pos, h): the w-token window stream — one row per offset,
-    * 0-based, 60-bit content hash. Shared by the span-cut pair and the
-    * contamination-span screen. */
+    * 0-based, 60-bit content hash. Shared by [[spanDedup]], the
+    * span-cut pair and the contamination-span screen. */
   private def windowHashes(docs: DataFrame, w: Int): DataFrame =
     docs
       .select(col("doc_id"), tokens(coalesce(col("text"), lit(""))).as("tk"))
@@ -1080,6 +1058,23 @@ object Dedup {
   private def spanList(perDoc: DataFrame): DataFrame =
     explodeSpans(perDoc, "spans").orderBy("doc_id", "start_pos")
 
+  /** per-doc merged CUT INTERVALS for the span-cut pair (q107/q107b):
+    * (doc_id, spans) where spans is the sorted array of maximal
+    * half-open token ranges [s, e) covering every duplicated window
+    * this doc must remove. The removal rule is the Lee et al. 2022
+    * APPLY step made deterministic: a w-token window whose content
+    * occurs in ≥2 distinct docs is OWNED by the smallest doc_id
+    * containing it; every other doc cuts every occurrence (within-doc
+    * repetition inside the owner stays q54's screen, the q91 scoping).
+    *
+    * Scale shape: identical to [[spanDedup]] — the window stream is
+    * hash-partitioned on the window hash ONCE and that exchange feeds
+    * BOTH the owner election and the cut join (plan-pinned
+    * ReusedExchange; the election keeps the same column set via the
+    * max(pos) prune guard so the two subtrees canonicalize equal).
+    * The interval merge folds row-locally over the collected cut
+    * positions (bounded by doc length) inside the one doc-keyed
+    * aggregate — gaps-and-islands without a per-doc window pass. */
   private def spanCutPerDoc(docs: DataFrame, w: Int): DataFrame = {
     require(w >= 1, s"windowTokens must be >= 1, got $w")
     val wins = windowHashes(docs, w)

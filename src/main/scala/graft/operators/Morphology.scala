@@ -359,13 +359,10 @@ object Morphology {
   /** q79: parse + tree-walk every payload (row-local, per-partition),
     * one metrics row per entity. The repartition evens payload skew
     * before the decode stage, same as q41's extractFeatures. */
-  def morphMetrics(documents: DataFrame, partitions: Int = 0): DataFrame = {
+  def morphMetrics(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val width = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
-    decodeStage(morphFrame(documents)
-        .repartition(width, col("morph_id"))
+    decodeStage(Scale.decodeSpread(morphFrame(documents), "morph_id")
         .as[MorphRow])
       .orderBy("morph_id")
   }

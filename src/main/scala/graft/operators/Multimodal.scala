@@ -313,8 +313,8 @@ object Multimodal {
     * an exact integer the oracle reproduces from the fixture's closed
     * form — so the whole decode path (header parse, length validation,
     * byte aggregation) is hash-checked per round. */
-  def extractFeatures(documents: DataFrame, partitions: Int = 0): DataFrame =
-    featuresRollup(mediaFrame(documents), repartition = true, partitions)
+  def extractFeatures(documents: DataFrame): DataFrame =
+    featuresRollup(mediaFrame(documents), repartition = true)
 
   /** the shared decode→per-mime rollup over a given media frame
     * (doc_id, mime, content): q41 runs it over the fixture frame, q41d
@@ -331,17 +331,12 @@ object Multimodal {
     * JPEG/video decode is ~10× its read; the engine's decoders are
     * single-pass byte sums ≈ the scan cost). */
   private[graft] def featuresRollup(media: DataFrame, repartition: Boolean,
-                                    partitions: Int = 0, decodeReps: Int = 1): DataFrame = {
+                                    decodeReps: Int = 1): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    // default width = the session's shuffle parallelism (same derivation
-    // as pqAdcSearch) — a hardcoded 32 would be wrong on a real cluster
-    val width = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
     val routed = if (!repartition) media.as[MediaRow] else {
-      val r = media.repartition(width, col("doc_id")).as[MediaRow]
-      if (mutantExtraBlobExchange)
-        r.mapPartitions(identity).repartition(width, col("mime")).as[MediaRow]
+      val r = Scale.decodeSpread(media, "doc_id").as[MediaRow]
+      if (mutantExtraBlobExchange) Scale.decodeSpread(r.mapPartitions(identity), "mime")
       else r
     }
     featuresAgg(spark, routed.mapPartitions(_.map { r =>
@@ -375,14 +370,10 @@ object Multimodal {
     * for it, same posture as the q41 decode stats). Row-local behind
     * the one skew-evening repartition; output is frame-grain, bounded
     * by Σ frames/stride. */
-  def frameSampleManifest(documents: DataFrame, stride: Int = 2,
-                          partitions: Int = 0): DataFrame = {
+  def frameSampleManifest(documents: DataFrame, stride: Int = 2): DataFrame = {
     val spark = documents.sparkSession
-    val width = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
     import spark.implicits._
-    mediaFrame(documents)
-      .repartition(width, col("doc_id"))
+    Scale.decodeSpread(mediaFrame(documents), "doc_id")
       .as[MediaRow]
       .mapPartitions(_.flatMap(sampleFrameStats(_, stride)))
       .toDF()
@@ -401,14 +392,10 @@ object Multimodal {
     * row-local per-partition maps behind one repartition — the
     * multimodal pipeline shape (decode → transform → re-encode →
     * feature-extract) with zero extra exchanges. */
-  def resizedFeatures(documents: DataFrame, newW: Int = 8, newH: Int = 6,
-                      partitions: Int = 0): DataFrame = {
+  def resizedFeatures(documents: DataFrame, newW: Int = 8, newH: Int = 6): DataFrame = {
     val spark = documents.sparkSession
-    val width = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
     import spark.implicits._
-    featuresRollup(mediaFrame(documents)
-      .repartition(width, col("doc_id"))
+    featuresRollup(Scale.decodeSpread(mediaFrame(documents), "doc_id")
       .as[MediaRow]
       .mapPartitions(_.map(resizeImage(_, newW, newH)))
       .toDF(), repartition = false)
@@ -457,14 +444,11 @@ object Multimodal {
     * [[reportResizedFeatures]] fails loudly on it (missing-column
     * analysis error, never silent nulls); re-build the frame, which is
     * a derived artifact, not a checkpointed store. */
-  def mediaReport(documents: DataFrame, partitions: Int = 0,
-                  stride: Int = 2, newW: Int = 8, newH: Int = 6): Dataset[MediaReport] = {
+  def mediaReport(documents: DataFrame, stride: Int = 2,
+                  newW: Int = 8, newH: Int = 6): Dataset[MediaReport] = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val width = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
-    mediaFrame(documents)
-      .repartition(width, col("doc_id"))
+    Scale.decodeSpread(mediaFrame(documents), "doc_id")
       .as[MediaRow]
       .mapPartitions(_.map(r =>
         MediaReport(decodeMedia(r), decodeMedia(resizeImage(r, newW, newH)),

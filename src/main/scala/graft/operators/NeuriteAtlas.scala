@@ -243,14 +243,11 @@ object NeuriteAtlas {
       maxRadSq, nodes.length.toLong)
   }
 
-  private def decoded[A](documents: DataFrame, partitions: Int)(
+  private def decoded[A](documents: DataFrame)(
       kernel: MorphRow => Seq[A])(implicit enc: org.apache.spark.sql.Encoder[A]): Dataset[A] = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val width = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
-    Morphology.morphFrame(documents)
-      .repartition(width, col("morph_id"))
+    Scale.decodeSpread(Morphology.morphFrame(documents), "morph_id")
       .as[MorphRow]
       .mapPartitions(_.flatMap(kernel))
   }
@@ -283,10 +280,10 @@ object NeuriteAtlas {
     * per-(type, voxel) pre-aggregation bounds the join input by the
     * touched-voxel count, not the point count. */
   def leafRegionAttribution(documents: DataFrame, nation: DataFrame,
-                            region: DataFrame, partitions: Int = 0): DataFrame = {
+                            region: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val rows = decoded(documents, partitions)(r =>
+    val rows = decoded(documents)(r =>
       typeVoxelRows(r.morph_id, Morphology.parseSwc(r.swc))).toDF()
     labeled(rows, nation, region)
       .groupBy("morph_id", "neurite_type", "region")
@@ -314,10 +311,10 @@ object NeuriteAtlas {
   /** q98b: per-type NEURITE FEATURES — the cumulatedLength/section
     * structure half of the reference's neuriteFeature record. Pure
     * kernel output: one scan, zero exchanges before the output sort. */
-  def neuriteFeatures(documents: DataFrame, partitions: Int = 0): DataFrame = {
+  def neuriteFeatures(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    decoded(documents, partitions)(r =>
+    decoded(documents)(r =>
       typeFeatureRows(r.morph_id, Morphology.parseSwc(r.swc))).toDF()
       .orderBy("morph_id", "neurite_type")
   }
@@ -325,20 +322,20 @@ object NeuriteAtlas {
   /** q98c: per-type SECTION DISTRIBUTION statistics — join-free like
     * q98b; the whole distribution summary is per-entity work riding
     * the decode scan. */
-  def sectionStats(documents: DataFrame, partitions: Int = 0): DataFrame = {
+  def sectionStats(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    decoded(documents, partitions)(r =>
+    decoded(documents)(r =>
       typeSectionStats(r.morph_id, Morphology.parseSwc(r.swc))).toDF()
       .orderBy("morph_id", "neurite_type")
   }
 
   /** q79b: whole-morphology spatial extents — join-free, one row per
     * entity off the decode scan. */
-  def morphExtents(documents: DataFrame, partitions: Int = 0): DataFrame = {
+  def morphExtents(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    decoded(documents, partitions)(r =>
+    decoded(documents)(r =>
       Seq(morphExtentRow(r.morph_id, Morphology.parseSwc(r.swc)))).toDF()
       .orderBy("morph_id")
   }
@@ -364,10 +361,10 @@ object NeuriteAtlas {
     * parquet — no payload is ever re-read. The kernels are the SAME
     * objects the standalone operators run (one shared decomposition
     * per entity), so the views cannot drift — spec-proven equal. */
-  def morphReport(documents: DataFrame, partitions: Int = 0): Dataset[MorphReport] = {
+  def morphReport(documents: DataFrame): Dataset[MorphReport] = {
     val spark = documents.sparkSession
     import spark.implicits._
-    decoded(documents, partitions) { r =>
+    decoded(documents) { r =>
       val nodes = Morphology.parseSwc(r.swc)
       val dec = Morphology.decompose(nodes)
       Seq(MorphReport(r.morph_id,

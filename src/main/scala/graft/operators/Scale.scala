@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
 /** Scale tooling: the join-shape utilities a 100 TB deployment leans on
@@ -19,6 +19,25 @@ object Scale {
   def localized(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** Collect a frame that must hold at most `maxRows` rows: reads
+    * `limit(maxRows + 1)` and fails, naming `op` and the count it saw,
+    * when the frame is larger — the runtime guard behind a "this is
+    * dimension-sized" claim about input from outside the program. */
+  def bounded(df: DataFrame, maxRows: Int, op: String): Array[Row] = {
+    val rows = df.limit(maxRows + 1).collect()
+    require(rows.length <= maxRows,
+      s"$op: expected at most $maxRows rows to collect, saw ${rows.length} (limit ${maxRows + 1})")
+    rows
+  }
+
+  /** Hash-spread a payload frame on `key` over the session's
+    * `spark.sql.shuffle.partitions` before a per-row decode stage, so a
+    * few oversized payloads in one input split cannot serialize a task.
+    * The count is stated rather than left to AQE, which coalesces only
+    * unnumbered repartitions: the decode keeps the full width. */
+  def decodeSpread[T](ds: Dataset[T], key: String): Dataset[T] =
+    ds.repartition(ds.sparkSession.sessionState.conf.numShufflePartitions, col(key))
 
   /** Inner join with the left side's hot keys spread over `salts`
     * sub-keys and the right side replicated once per salt. Result

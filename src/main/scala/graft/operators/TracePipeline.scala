@@ -52,11 +52,11 @@ import org.apache.spark.sql.types.LongType
   * is the classify core's bounded partial_collect_set buffer, q123's
   * own inventoried shape, a few short strings per trace —
   * TracePipelineSpec);
-  * row-local check metrics, one sweeps explode, the dimension-sized
-  * ontology closure BROADCASTS (the only broadcast — never data-
-  * sized), two AQE-splittable trace-keyed equi-joins (verdict gate,
-  * store rev lookup), one map-side-combined per-trace aggregate, no
-  * window. Unlike q141's annotation store, the trace store is keyed by
+  * row-local check metrics, one sweeps explode, the ontology closure
+  * as a row-local IN-list (closed on the driver over the literal edge
+  * list — no join), two AQE-splittable trace-keyed equi-joins
+  * (verdict gate, store rev lookup), one map-side-combined per-trace
+  * aggregate, no window. Unlike q141's annotation store, the trace store is keyed by
   * the entity itself (a fix job updates existing resources and never
   * creates), so the merge is a pure per-key update; at 100 TB the
   * store merge takes the q43b partitioned-writer path — the flat swap

@@ -240,13 +240,10 @@ object Traces {
   /** q80: decode every container (row-local, per-partition) and emit
     * the per-sweep declared-vs-computed consistency report — q46's
     * binary twin. */
-  def sweepConsistency(documents: DataFrame, partitions: Int = 0): DataFrame = {
+  def sweepConsistency(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val width = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
-    decodeStage(traceFrame(documents)
-        .repartition(width, col("trace_id"))
+    decodeStage(Scale.decodeSpread(traceFrame(documents), "trace_id")
         .as[TraceRow])
       .orderBy("trace_id", "sweep")
   }
@@ -263,13 +260,10 @@ object Traces {
     * whole selection chain is per-entity, so it rides the decode scan:
     * zero exchanges beyond the skew-evening repartition and the output
     * sort — q79's plan shape). */
-  def representativeSweeps(documents: DataFrame, partitions: Int = 0): DataFrame = {
+  def representativeSweeps(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val width = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
-    traceFrame(documents)
-      .repartition(width, col("trace_id"))
+    Scale.decodeSpread(traceFrame(documents), "trace_id")
       .as[TraceRow]
       .mapPartitions(_.map(r => electRepresentative(decodeTraceFull(r))))
       .toDF()
@@ -293,13 +287,10 @@ object Traces {
     * column reads over the persisted parquet. The decode and election
     * are the SAME functions the standalone operators run, so the views
     * cannot drift — spec-proven equal. */
-  def traceReport(documents: DataFrame, partitions: Int = 0): Dataset[TraceReport] = {
+  def traceReport(documents: DataFrame): Dataset[TraceReport] = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val width = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
-    traceFrame(documents)
-      .repartition(width, col("trace_id"))
+    Scale.decodeSpread(traceFrame(documents), "trace_id")
       .as[TraceRow]
       .mapPartitions(_.map { r =>
         val dec = decodeTraceFull(r)
@@ -346,8 +337,9 @@ object Traces {
     * Scale shape: content classification rides the ONE row-local
     * decode scan (q80's machinery — a deployment reads the persisted
     * [[traceReport]] frame instead of re-decoding); the ontology
-    * closure is dimension-sized and BROADCASTS; one map-side-combined
-    * trace-keyed aggregate ends the plan. */
+    * closure runs on the driver over the literal edge list and enters
+    * the plan as an IN-list membership test on the decode scan (no
+    * join); one map-side-combined trace-keyed aggregate ends the plan. */
   def singleCellTypeFix(documents: DataFrame): DataFrame =
     singleCellClassify(
       sweepConsistencyRowLocal(documents).select("trace_id", "computed"))
@@ -361,19 +353,15 @@ object Traces {
     * cannot drift (the q140/q141 shared-diff discipline). Unsorted —
     * callers order. */
   def singleCellClassify(computedSweeps: DataFrame): DataFrame = {
-    val spark = computedSweeps.sparkSession
-    import spark.implicits._
-    val edges = StimulusEdges.toDF("child", "parent")
-    val singleCell = Ontology.descendantsOf(edges, SingleCellRoot)
-      .select(col("node")).distinct()
+    val singleCell = Ontology.closure(StimulusEdges)
+      .collect { case (node, SingleCellRoot, _) => node }.distinct
     computedSweeps
-      .join(broadcast(singleCell.withColumn("__sc", lit(1))),
-        col("computed") === col("node"), "left")
+      .withColumn("__sc", col("computed").isin(singleCell: _*))
       .groupBy(col("trace_id"))
       .agg(
-        count(col("__sc")).as("n_single_cell_sweeps"),
+        count(when(col("__sc"), 1)).as("n_single_cell_sweeps"),
         array_join(array_sort(collect_set(
-          when(col("__sc").isNotNull, col("computed")))), ",")
+          when(col("__sc"), col("computed")))), ",")
           .as("single_cell_stimuli"))
       .withColumn("already_typed", alreadyTyped(col("trace_id")))
       .withColumn("action",

@@ -163,7 +163,7 @@ class MultimodalSpec extends AnyFunSuite {
     }
   }
 
-  test("scaled fixture payloads decode to scaled geometry (the BenchMediaScale knob)") {
+  test("scaled fixture payloads decode to scaled geometry (the media_scale split knob)") {
     // synthMedia(id, mime, s) must emit VALID containers whose dims are
     // exactly s x the base geometry — the payload-size decade's knob is
     // only meaningful if the scaled payloads exercise the same real

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Ontology
+import graft.operators.{Atlas, Ontology}
 
 class OntologySpec extends AnyFunSuite {
   import TestSpark._
@@ -26,6 +29,50 @@ class OntologySpec extends AnyFunSuite {
     val out = Ontology.descendantsOf(edges, "stim").collect()
       .map(r => (r.getString(0), r.getInt(1))).toSet
     assert(out == Set(("a", 1), ("b", 1), ("c", 2)))
+  }
+
+  private def paths(df: DataFrame): Seq[(String, String, Int)] =
+    df.select("node", "ancestor", "depth").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq.sorted
+
+  test("a cycle stops at the depth bound") {
+    val out = paths(Ontology.transitiveClosure(
+      Seq(("a", "b"), ("b", "a")).toDF("child", "parent")))
+    // one path per start node per depth; odd depths reach the other
+    // node, even depths come back to the start
+    assert(out == (1 to Ontology.MaxDepth).flatMap { d =>
+      Seq(("a", if (d % 2 == 1) "b" else "a", d), ("b", if (d % 2 == 1) "a" else "b", d))
+    }.sorted)
+  }
+
+  test("a DAG node reachable two ways appears twice") {
+    val out = paths(Ontology.transitiveClosure(
+      Seq(("d", "b"), ("d", "c"), ("b", "a"), ("c", "a")).toDF("child", "parent")))
+    assert(out == Seq(("b", "a", 1), ("c", "a", 1), ("d", "a", 2), ("d", "a", 2),
+      ("d", "b", 1), ("d", "c", 1)))
+  }
+
+  test("an empty edge list gives an empty closure with the path schema") {
+    val out = Ontology.transitiveClosure(Seq.empty[(String, String)].toDF("child", "parent"))
+    assert(out.collect().isEmpty)
+    assert(out.schema.map(f => f.name -> f.dataType) ==
+      Seq("node" -> StringType, "ancestor" -> StringType, "depth" -> IntegerType))
+  }
+
+  test("an edge list above the ceiling fails, naming the operator and the count") {
+    val n = Ontology.MaxEdges + 1
+    val edges = spark.range(n)
+      .select(col("id").cast("string").as("child"), lit("root").as("parent"))
+    val e = intercept[IllegalArgumentException](Ontology.transitiveClosure(edges))
+    assert(e.getMessage.contains("Ontology.transitiveClosure") &&
+      e.getMessage.contains(s"saw $n"), e.getMessage)
+  }
+
+  test("geoClosure rows are exactly the geoAncestors rows at depth >= 1") {
+    val (r, n) = (Tables.region(spark, sf), Tables.nation(spark, sf))
+    val closure = paths(Ontology.geoClosure(r, n))
+    assert(closure.nonEmpty)
+    assert(closure == paths(Atlas.geoAncestors(r, n).filter(col("depth") >= 1)))
   }
 
   test("vec_dot is available via SQL through GraftExtensions-style registration") {

@@ -33,11 +33,41 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  test("ontology closure uses only broadcast joins") {
-    val plan = Ontology.geoClosure(Tables.region(spark, dir), Tables.nation(spark, dir))
-      .queryExecution.executedPlan.toString()
-    assert(plan.contains("BroadcastHashJoin"), "edge joins should broadcast")
-    assert(!plan.contains("SortMergeJoin"), "dimension-sized closure must not shuffle-join")
+  test("ontology closure is a local relation, no join or exchange; q29/q123 pinned") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import spark.implicits._
+    val (r, n) = (Tables.region(spark, dir), Tables.nation(spark, dir))
+    val stimulus = graft.operators.Traces.StimulusEdges.toDF("child", "parent")
+    Seq(
+      "transitiveClosure" -> Ontology.transitiveClosure(stimulus),
+      "descendantsOf" -> Ontology.descendantsOf(stimulus, graft.operators.Traces.SingleCellRoot),
+      "geoAncestors" -> graft.operators.Atlas.geoAncestors(r, n),
+      "geoClosure" -> Ontology.geoClosure(r, n)
+    ).foreach { case (name, df) =>
+      df.queryExecution.toRdd.count()
+      val ns = PlanWalks.nodes(df.queryExecution.executedPlan)
+      assert(!ns.exists(_.isInstanceOf[FileSourceScanExec]), s"$name: the closure scans parquet")
+      assert(!ns.exists(_.isInstanceOf[BaseJoinExec]), s"$name: the closure joins")
+      assert(!ns.exists(_.isInstanceOf[BroadcastExchangeLike]), s"$name: the closure broadcasts")
+      // the one exchange allowed is geoClosure's output sort, above the closure
+      val shuffles = ns.collect { case s: ShuffleExchangeLike => s.outputPartitioning }
+      val allowed = if (name == "geoClosure") 1 else 0
+      assert(shuffles.length <= allowed && shuffles.forall(_.isInstanceOf[RangePartitioning]),
+        s"$name: exchanges under the closure: $shuffles")
+    }
+    // executed-plan sizes, equal to PLANS_r21 at sf0.1: an in-plan
+    // closure adds a join and its broadcast per level to both
+    Seq("q29_ontology_closure" -> 9, "q123_single_cell_type" -> 27).foreach {
+      case (q, want) =>
+        val df = SparkEntry.queries(q)(spark, dir)
+        df.queryExecution.toRdd.count()
+        val ns = PlanWalks.nodes(df.queryExecution.executedPlan)
+        assert(!ns.exists(_.isInstanceOf[BaseJoinExec]), s"$q: a join came back")
+        assert(ns.length == want, s"$q: expected $want executed-plan nodes, got ${ns.length}")
+    }
   }
 
   test("heavy-hitter verify pass broadcasts the candidate set") {
@@ -327,6 +357,54 @@ class PlanShapeSpec extends AnyFunSuite {
       "sentinel row carries 0-bigram docs — no doc_id join-back")
   }
 
+  /** the dataFilters of a parquet scan that pushed something which
+    * translate to a source filter but are not among the pushed filters
+    * the parquet reader accepts for the scan's first file. The pushed
+    * list is the scan's translated dataFilters, as the scan's own
+    * (protected) pushedDownFilters computes it. */
+  private def parquetUnaccepted(s: org.apache.spark.sql.execution.FileSourceScanExec)
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.graft.FilterBridge
+    val pushed = s.dataFilters.flatMap(FilterBridge.translate)
+    val file = s.relation.location.inputFiles.headOption
+    if (pushed.isEmpty || file.isEmpty || !s.relation.fileFormat.isInstanceOf[
+        org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat]) Nil
+    else {
+      val accepted = FilterBridge.parquetAccepted(spark, file.get, pushed)
+      s.dataFilters.filter(f => FilterBridge.translate(f).exists(tf => !accepted.contains(tf)))
+    }
+  }
+
+  test("pushdown fence fires on a listed-as-pushed predicate the parquet reader refuses") {
+    // positive control for the partial-pushdown detector below: with
+    // date pushdown off, the date predicates still translate and are
+    // listed in PushedFilters, but the parquet reader never evaluates
+    // them — the detector must name exactly those, and only those
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_pushdown_").toString + "/t"
+    Seq((1L, java.sql.Date.valueOf("2024-01-02")), (2L, java.sql.Date.valueOf("2024-03-04")))
+      .toDF("k", "d").write.parquet(path)
+    val key = "spark.sql.parquet.filterPushdown.date"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val df = spark.read.parquet(path)
+        .filter(col("k") > 0L && col("d") > lit(java.sql.Date.valueOf("2024-02-01")))
+      assert(df.count() == 1)
+      val scan = PlanWalks.nodes(df.queryExecution.executedPlan).collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }.head
+      assert(scan.metadata("PushedFilters").contains("GreaterThan(d,"),
+        "the refused predicate is still listed as pushed")
+      val missed = parquetUnaccepted(scan)
+      assert(missed.nonEmpty && missed.forall(_.references.map(_.name).toSet == Set("d")),
+        s"expected only the date predicates, got ${missed.map(_.sql)}")
+      spark.conf.set(key, "true")
+      assert(parquetUnaccepted(scan).isEmpty, "with date pushdown on, every predicate is accepted")
+    } finally spark.conf.set(key, prev)
+  }
+
   test("filtered-unpushed scans stay the adjudicated derived-expression set") {
     // ADJUDICATION RULE (r18, membership fenced r19 per the verdict):
     // a scan whose dataFilters did NOT translate into PushedFilters is
@@ -354,29 +432,37 @@ class PlanShapeSpec extends AnyFunSuite {
       "q66_pii_scrub", "q84_bloom_decontaminate", "q88_indexed_search")
     // r20 (ADVICE): the zero-pushed detector alone would let a scan
     // that pushes ONE plain predicate while failing to push another
-    // escape the fence. Second detector: for every scan that pushed
-    // anything, each dataFilter that *translates* to a source filter
-    // (DataSourceStrategy.translateFilter — the planner's own
-    // pushability test) must appear among the PushedFilters; a
-    // translatable-but-unpushed predicate fails the suite outright
-    // (no allowlist — the adjudication rule only ever covers
-    // untranslatable derived-expression screens).
-    val partialPushed = scala.collection.mutable.ArrayBuffer[String]()
+    // escape the fence. Second detector: each dataFilter that
+    // *translates* to a source filter (the planner's own pushability
+    // test) must be in the list the PARQUET READER accepts
+    // (ParquetFilters.createFilter over the scan's pushed filters, see
+    // [[parquetUnaccepted]]). PushedFilters lists every translated
+    // filter whether or not parquet can use it, so matching against
+    // that string could never fire. The reader refuses a predicate
+    // when the column's parquet type has no filter support; each such
+    // (query, columns) site below was adjudicated from the file
+    // footers, and a new one — or one that goes away — fails here:
+    //  - INT64 TIMESTAMP(isAdjustedToUTC=false) — lineitem.l_shipdate
+    //    and events.ts: ParquetFilters matches only UTC-adjusted
+    //    timestamps, so no predicate on these columns uses row-group
+    //    statistics;
+    //  - list columns (embeddings.embedding): parquet filters address
+    //    primitive leaves only.
+    val refusedAllowed = Set(
+      "q01_pricing_summary" -> Set("l_shipdate"),
+      "q52_session_window" -> Set("ts"),
+      "q69_semantic_outliers" -> Set("embedding"))
+    val refused = scala.collection.mutable.ArrayBuffer[(String, Set[String], String)]()
     val found = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       val scans = PlanWalks.nodes(df.queryExecution.executedPlan).collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s
       }
       scans.foreach { s =>
-        val pushedStr = s.metadata.getOrElse("PushedFilters", "[]")
-        if (pushedStr.nonEmpty && pushedStr != "[]") {
-          val missed = s.dataFilters.filter { f =>
-            org.apache.spark.sql.graft.FilterBridge.translate(f)
-              .exists(tf => !pushedStr.contains(tf.toString))
-          }
-          if (missed.nonEmpty)
-            partialPushed += s"$name: ${missed.map(_.sql).mkString(" AND ")}"
-        }
+        val missed = parquetUnaccepted(s)
+        if (missed.nonEmpty)
+          refused += ((name, missed.flatMap(_.references.map(_.name)).toSet,
+            missed.map(_.sql).mkString(" AND ")))
       }
       val hasUnpushed = scans.exists { s =>
         s.dataFilters.nonEmpty &&
@@ -390,9 +476,13 @@ class PlanShapeSpec extends AnyFunSuite {
       s"unadjudicated filtered-unpushed scans appeared in: ${gained.toSeq.sorted}")
     assert(lost.isEmpty,
       s"stale allowlist entries (scan now pushes or is gone) — prune: ${lost.toSeq.sorted}")
-    assert(partialPushed.isEmpty,
-      s"translatable predicates left unpushed on scans that pushed others:\n" +
-        partialPushed.mkString("\n"))
+    val newRefusals = refused.filterNot(r => refusedAllowed((r._1, r._2)))
+    assert(newRefusals.isEmpty,
+      "predicates listed as pushed that the parquet reader refuses:\n" +
+        newRefusals.map(r => s"${r._1}: ${r._3}").mkString("\n"))
+    val staleRefusals = refusedAllowed.diff(refused.map(r => (r._1, r._2)).toSet)
+    assert(staleRefusals.isEmpty,
+      s"stale reader-refusal entries (predicate now accepted or gone) — prune: $staleRefusals")
   }
 
   test("r19 plan collapses hold: q108b two scans, local atlas dimensions") {

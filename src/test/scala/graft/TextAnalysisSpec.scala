@@ -83,8 +83,15 @@ class TextAnalysisSpec extends AnyFunSuite {
 
   test("multimodal decode is deterministic and partition-count independent") {
     val docs = Tables.documents(spark, sf)
-    val a = Multimodal.extractFeatures(docs, partitions = 2).collect()
-    val b = Multimodal.extractFeatures(docs, partitions = 7).collect()
+    // the decode width is the session's shuffle parallelism
+    def decodedAt(width: Int) = {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", width.toString)
+      try Multimodal.extractFeatures(docs).collect()
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+    val a = decodedAt(2)
+    val b = decodedAt(7)
     assert(a.sameElements(b))
     assert(a.length == 3) // three mime groups
   }
