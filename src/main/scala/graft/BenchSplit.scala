@@ -203,6 +203,68 @@ object BenchSplit {
         Corpus.reportCorpusCard(_, rates, 5000))
       r.phase("views_14ops_s")(views.foreach(op => rows(op(frame))))
     },
+    // the README release flow in one session, op by op: wall ms and
+    // the Janino compiles (count and ms) each op pays, for one cold
+    // pass and SPARK_GRAFT_REPS warm passes — a warm pass that still
+    // compiles classes is not fitting Spark's codegen cache
+    "release" -> { r =>
+      val slices = r.path("slices")
+      Seq(0, 1).foreach(p => r.docs.filter(pmod(col("doc_id"), lit(2)) === p)
+        .select(streaming.DocStreams.docsSchema.fieldNames.map(col).toSeq: _*)
+        .coalesce(1).write.mode("append").parquet(slices))
+      var rar: (Map[String, Long], Long) = null
+      var lm: LmScreen.LmModel = null
+      var ds: Dsir.DsirModel = null
+      var cents: Seq[Seq[Double]] = null
+      var drains = 0
+      val ops: Seq[(String, () => Unit)] = Seq(
+        "rarity_model" -> (() => rar = Frequency.rarityModel(r.docs)),
+        "lm_model" -> (() => lm = LmScreen.lmModel(r.docs)),
+        "dsir_model" -> (() => ds = Dsir.dsirModel(r.docs)),
+        "doc_report_write" -> (() => r.save(TextAnalysis.docReport(r.docs, rar, lm, ds), "report")),
+        "view_q70_dataset_split" -> (() =>
+          rows(TextAnalysis.reportDatasetSplit(r.load("report"), 500, 500))),
+        "view_q101b_dsir_resample" -> (() =>
+          rows(Dsir.resampleFromWeights(TextAnalysis.reportDsir(r.load("report"))))),
+        "release_stores" -> (() => {
+          val (fp, band) = Dedup.releaseStores(r.docs)
+          r.save(fp, "fp"); r.save(band, "band")
+        }),
+        "ingest_door" -> (() => {
+          drains += 1
+          val arriving = r.spark.readStream.schema(streaming.DocStreams.docsSchema)
+            .option("maxFilesPerTrigger", "1").parquet(slices)
+          val q = streaming.DocStreams.releaseDedupSink(arriving, r.load("fp"), r.load("band"),
+            r.path(s"door/out-$drains"), r.path(s"door/ckpt-$drains"))
+          try q.awaitTermination() finally q.stop()
+        }),
+        "ivf_centroids" -> (() => cents = Similarity.ivfCentroids(r.emb, 16)),
+        "view_q104c_semdedup" -> (() => rows(Similarity.semanticDedupCellsWithModel(r.emb, cents))))
+      // one pass: per op wall ms, compiles and compile ms; pass totals
+      def pass(key: String): (Double, Long, Double) = {
+        var (ms, compiles, compileMs) = (0.0, 0L, 0.0)
+        r.nest(key) { p =>
+          ops.foreach { case (name, op) =>
+            val (c0, n0, t0) = (CodegenCost.compiles, CodegenCost.nanos, System.nanoTime())
+            op()
+            val (dt, dc, dn) = ((System.nanoTime() - t0) / 1e6, CodegenCost.compiles - c0,
+              (CodegenCost.nanos - n0) / 1e6)
+            p.put(s"${name}_ms", Bench.fmt3(dt)); p.put(s"${name}_compiles", dc)
+            p.put(s"${name}_compile_ms", Bench.fmt3(dn))
+            ms += dt; compiles += dc; compileMs += dn
+          }
+          p.put("pass_ms", Bench.fmt3(ms)); p.put("compiles", compiles)
+          p.put("compile_ms", Bench.fmt3(compileMs))
+        }
+        (ms, compiles, compileMs)
+      }
+      r.put("cold_classes", pass("cold")._2)
+      val warm = (1 to r.reps).map(i => pass(s"warm$i"))
+      def p50(xs: Seq[Double]) = Bench.fmt3(xs.sorted.apply(xs.length / 2))
+      r.put("warm_pass_ms_p50", p50(warm.map(_._1)))
+      r.put("warm_compiles_p50", p50(warm.map(_._2.toDouble)))
+      r.put("warm_compile_ms_p50", p50(warm.map(_._3)))
+    },
     // q108: store collapse (once per release) vs the probe of the
     // persisted stores (per ingest batch)
     "rel" -> { r =>
@@ -408,6 +470,15 @@ object BenchSplit {
     try names.foreach(name => println(run(spark, dir, n, name)))
     finally spark.stop()
   }
+}
+
+/** Spark's process-wide codegen counters: Janino compiles (cache
+  * misses of the generated-class cache) and their cumulative time. */
+object CodegenCost {
+  def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  def nanos: Long =
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
 }
 
 /** The A/B ruler: warm medians over `SPARK_GRAFT_REPS` runs per query

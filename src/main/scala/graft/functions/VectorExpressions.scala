@@ -515,6 +515,108 @@ object VectorExpressions {
     ColumnBridge.column(CellDotsExpr(ColumnBridge.expression(embedding),
       cells.map(_.toArray).toArray))
 
+  val NearestCellType: StructType = StructType(Seq(
+    StructField("score", DoubleType), StructField("cell", IntegerType, nullable = false)))
+
+  /** IVF cell assignment in one pass: struct(score, cell) of the cell
+    * maximising score_c = dot(v, m_c) / (norm · |m_c|) — exactly what
+    * `greatest(struct(score_0, 0), …, struct(score_{C−1}, C−1))` returns,
+    * without building and comparing C structs per row. The order is
+    * greatest's: a null score ranks lowest, NaN ranks highest (and
+    * equals NaN), −0.0 equals 0.0, and a tie goes to the larger cell.
+    * Each score is Spark's double division: a null norm or embedding
+    * gives a null score, and a zero divisor fails under ANSI
+    * (`failOnError`, the session's mode when the expression is built)
+    * and gives null otherwise. Dots fold in [[CellDotsExpr]]'s order. */
+  case class NearestCell(left: Expression, right: Expression, cells: Array[Array[Double]],
+                         failOnError: Boolean) extends BinaryExpression {
+    require(cells.nonEmpty, "nearest_cell needs at least one centroid")
+    override def checkInputDataTypes() = (left.dataType, right.dataType) match {
+      case (ArrayType(FloatType | DoubleType, _), DoubleType) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case (l, r) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"nearest_cell expects (array<float|double>, double), got ($l, $r)")
+    }
+    override def dataType: DataType = NearestCellType
+    override def nullable: Boolean = false
+    override def prettyName: String = "nearest_cell"
+    override protected def stringArgs: Iterator[Any] =
+      Iterator(left, right, s"cells[${cells.length}]")
+    private val cellNorms = cells.map(c => math.sqrt(c.map(x => x * x).sum))
+
+    /** `x` is null when the embedding is, `norm` when the norm is */
+    def kernel(x: ArrayData, norm: java.lang.Double): org.apache.spark.sql.catalyst.InternalRow = {
+      val g = if (x == null) null else getter(left)
+      var best = 0
+      var bestScore: java.lang.Double = null
+      var c = 0
+      while (c < cells.length) {
+        val score: java.lang.Double =
+          if (norm == null || x == null) null
+          else {
+            val div = norm * cellNorms(c)
+            if (div == 0.0) {
+              if (failOnError)
+                throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero in nearest_cell.")
+              null
+            } else {
+              val m = cells(c)
+              val n = math.min(x.numElements(), m.length)
+              var s = 0.0
+              var i = 0
+              while (i < n) { s += read(x, g, i) * m(i); i += 1 }
+              s / div
+            }
+          }
+        val wins =
+          if (score == null) bestScore == null
+          else bestScore == null ||
+            org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(score, bestScore) >= 0
+        if (wins) { best = c; bestScore = score }
+        c += 1
+      }
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](bestScore, best))
+    }
+
+    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+      kernel(left.eval(input).asInstanceOf[ArrayData],
+        right.eval(input).asInstanceOf[java.lang.Double])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+      val l = left.genCode(ctx)
+      val r = right.genCode(ctx)
+      val ref = ctx.addReferenceObj("nearestCell", this, classOf[NearestCell].getName)
+      ev.copy(code = code"""
+        |${l.code}
+        |${r.code}
+        |InternalRow ${ev.value} = $ref.kernel(${l.isNull} ? null : ${l.value},
+        |  ${r.isNull} ? null : Double.valueOf(${r.value}));""".stripMargin,
+        isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+    }
+
+    override def equals(o: Any): Boolean = o match {
+      case n: NearestCell => left == n.left && right == n.right && failOnError == n.failOnError &&
+        ((cells eq n.cells) || java.util.Arrays.deepEquals(
+          cells.asInstanceOf[Array[AnyRef]], n.cells.asInstanceOf[Array[AnyRef]]))
+      case _ => false
+    }
+    override def hashCode(): Int =
+      31 * (31 * left.hashCode() + right.hashCode()) +
+        java.util.Arrays.deepHashCode(cells.asInstanceOf[Array[AnyRef]])
+
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): Expression =
+      copy(left = newLeft, right = newRight)
+  }
+
+  /** the nearest IVF cell of each row as struct(score, cell) — see
+    * [[NearestCell]]; `norm` is the embedding's L2 norm column */
+  def nearest_cell(embedding: Column, norm: Column, cells: Seq[Seq[Double]]): Column =
+    ColumnBridge.column(NearestCell(ColumnBridge.expression(embedding),
+      ColumnBridge.expression(norm), cells.map(_.toArray).toArray,
+      org.apache.spark.sql.internal.SQLConf.get.ansiEnabled))
+
   /** Column API: codegen'd dot product (inputs auto-cast to
     * array<double>). */
   def vec_dot(a: Column, b: Column): Column =

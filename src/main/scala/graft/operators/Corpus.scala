@@ -12,6 +12,15 @@ import org.apache.spark.sql.types.LongType
   */
 object Corpus {
 
+  /** ceiling on the distinct `source` values a per-source stats collect
+    * may hold — a release mixes a catalogue of sources, not one per
+    * document; more fails loud ([[Scale.localized]] with a bound) */
+  val MaxSources = 65536
+
+  /** ceiling on the distinct `lang` values a per-language collect may
+    * hold (ISO 639-3 lists about 7,900 language codes) */
+  val MaxLanguages = 8192
+
   /** floor(2^60 · bp / 10000) — the keep-threshold for a rate in basis
     * points against the 60-bit md5 hash. Computed exactly in BigInt and
     * inlined as the SAME literal into the DuckDB oracle SQL. */
@@ -247,7 +256,7 @@ object Corpus {
     val stats = Scale.localized(toks.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
       sum(col("n_tokens")).cast(LongType).as("avail_tokens"))
-      .withColumn("weight_bp", weightCol))
+      .withColumn("weight_bp", weightCol), MaxSources, "Corpus.mixtureBalance")
     val wTotal = stats.agg(sum(col("weight_bp")).cast(LongType).as("w_total"))
     val scaled = stats.crossJoin(broadcast(wTotal))
       .withColumn("tot_if_binding",
@@ -349,7 +358,8 @@ object Corpus {
     // isqrt/share/target arithmetic is local-relation work.
     val stats = Scale.localized(docs.select(col("lang"), tokenCountCol.as("n_tokens"))
       .groupBy("lang").agg(count(lit(1)).as("n_docs"),
-        coalesce(sum("n_tokens"), lit(0L)).cast(LongType).as("n_tokens")))
+        coalesce(sum("n_tokens"), lit(0L)).cast(LongType).as("n_tokens")),
+      MaxLanguages, "Corpus.temperatureMix")
     val w = stats
       .withColumn("__s0", expr(isqrtSeedSql("n_tokens")))
       .withColumn("w", expr(isqrtCorrectSql("n_tokens", "__s0")))
@@ -824,21 +834,14 @@ object Corpus {
     * (a SQL fragment naming it) — lets a caller that also needs the
     * token stream for other work (q103's feature vectors) tokenize
     * ONCE and still run the ONE shared geometry. */
-  def chunkArrayOfToks(toks: String): org.apache.spark.sql.Column = {
-    val S = chunkStride
-    expr(
-      s"""transform(array($toks), tk -> transform(
-         |  CASE WHEN size(tk) > 0 THEN sequence(0, greatest(size(tk) - $ChunkO, 1) - 1, $S)
-         |       ELSE slice(sequence(0, 0), 1, 0) END,
-         |  s -> struct(
-         |    CAST(s DIV $S AS BIGINT) AS chunk_idx,
-         |    CAST(s AS BIGINT) AS start_tok,
-         |    CAST(least(s + $ChunkW, size(tk)) AS BIGINT) AS end_tok,
-         |    CAST(least(s + $ChunkW, size(tk)) - s AS BIGINT) AS n_chunk_tokens,
-         |    CAST(conv(substring(md5(CAST(array_join(
-         |      slice(tk, s + 1, least(s + $ChunkW, size(tk)) - s), ' ')
-         |      AS BINARY)), 1, 15), 16, 10) AS BIGINT) AS chunk_hash)))[0]""".stripMargin)
-  }
+  def chunkArrayOfToks(toks: String): org.apache.spark.sql.Column =
+    chunkSpansCol(expr(toks))
+
+  /** the chunk geometry over a token-array column — one kernel per row
+    * ([[graft.functions.TextKernels.ChunkSpans]]); a null array has no
+    * chunk. */
+  def chunkSpansCol(toks: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    graft.functions.TextKernels.chunk_spans(toks, ChunkW, ChunkO)
 
   /** q103 retrieval geometry: feature buckets, score scale and the
     * benchmark query-set rule — shared with the oracle SQL.

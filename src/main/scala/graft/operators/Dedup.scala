@@ -1237,20 +1237,20 @@ object Dedup {
     * construction, so the doc-side LEFT equi-join is one linear
     * exchange (AQE broadcasts it when small); the cut, recount and
     * re-hash run row-locally over the one tokenization via the SAME
-    * [[cleanTokensSql]] rule as q114 — the two applies cannot drift. */
+    * [[cutCol]] rule as q114 — the two applies cannot drift. */
   def combinedCutApply(docs: DataFrame, windowTokens: Int = 8): DataFrame =
     docs
       .select(col("doc_id"), tokens(coalesce(col("text"), lit(""))).as("__tk"))
       .join(combinedCutPerDoc(docs, windowTokens), Seq("doc_id"), "left")
       .withColumn("cut_spans", coalesce(col("spans"),
         expr("CAST(array() AS ARRAY<STRUCT<s:INT,e:INT>>)")))
-      .withColumn("__cl", expr(cleanTokensSql("cut_spans")))
+      .withColumn("__cl", cutCol(col("__tk"), col("cut_spans")))
       .select(col("doc_id"),
         size(col("__tk")).cast("long").as("n_tokens"),
         size(col("cut_spans")).cast("long").as("n_cut_spans"),
         spanTokensSumCol("cut_spans").as("tokens_cut"),
-        size(col("__cl")).cast("long").as("clean_n_tokens"),
-        md5_60(array_join(col("__cl"), " ")).as("clean_hash"))
+        col("__cl.clean_n_tokens"),
+        col("__cl.clean_hash"))
       .orderBy("doc_id")
 
   /** the benchmark window-hash set COLLECTED — eval-suite-sized by
@@ -1263,10 +1263,9 @@ object Dedup {
 
   /** row-local q113 against a FROZEN collected benchmark set — the
     * ingest-door form ([[graft.streaming.DocStreams.contaminationLookup]]):
-    * window hashes, set probe and the interval merge all evaluate
-    * inside one projection over the token array (the SAME fold SQL as
-    * the batch aggregate, so the merge rule cannot drift) — no join,
-    * no state, no shuffle. Emits the q113 columns, unordered (streams
+    * window hashes, set probe and the interval merge all evaluate in
+    * one kernel over the token array (the batch aggregate's merge rule,
+    * spec-pinned equal to q113) — no join, no state, no shuffle. Emits the q113 columns, unordered (streams
     * don't sort); docs with nothing contaminated emit no rows. */
   def contaminationSpansRowLocal(docs: DataFrame, benchHashes: Seq[Long],
                                  windowTokens: Int = 8): DataFrame =
@@ -1278,30 +1277,50 @@ object Dedup {
     * fold), no join, no exchange. All other columns ride through. */
   def withContamSpans(docs: DataFrame, benchHashes: Seq[Long],
                       windowTokens: Int = 8): DataFrame =
-    withContamCols(docs, benchHashes, windowTokens).drop("__tk")
+    docs.select(col("*"), contamSpansCol(tokens(coalesce(col("text"), lit(""))),
+      benchHashes, windowTokens).as("contam_spans"))
 
-  /** the frame form of the q114 APPLY — appends, beside
-    * `contam_spans`, the cut manifest columns (`contam_n_tokens`,
-    * `clean_n_tokens`, `clean_hash`) in the same one row-local pass,
-    * so the persisted report carries the cleaned fingerprint without
-    * ever re-reading text. `contam_n_tokens` keeps q114's raw token
-    * count (an empty text is the one-token [""] stream, exactly like
-    * the span index space); the gopher `n_words` column keeps its own
-    * zero-for-empty convention — they differ by design. */
+  /** the merged contamination intervals of a whitespace token array —
+    * window hashes, sorted-set probe and the interval merge in one
+    * kernel ([[graft.functions.TextKernels.WindowSpans]]); the merge
+    * rule is [[mergeSpansFoldSql]]'s: a position merges into the open
+    * interval while it is at or before the interval's end. */
+  private def contamSpansCol(wsToks: Column, benchHashes: Seq[Long], w: Int): Column =
+    graft.functions.TextKernels.window_spans(wsToks, benchHashes, w)
+
+  /** the q114 apply as a column list over a whitespace token array
+    * (`tokens(coalesce(text, ''))`): `contam_spans`, the cut manifest
+    * columns `contam_n_tokens`, `clean_n_tokens`, `clean_hash` — so the
+    * persisted report carries the cleaned fingerprint without ever
+    * re-reading text. `contam_n_tokens` keeps q114's raw token count
+    * (an empty text is the one-token [""] stream, exactly like the
+    * span index space); the gopher `n_words` column keeps its own
+    * zero-for-empty convention — they differ by design. The list both
+    * [[withContamApplyCols]] and [[TextAnalysis.docReport]] select. */
+  def contamApplyCols(wsToks: Column, benchHashes: Seq[Long],
+                      windowTokens: Int = 8): Seq[Column] = {
+    val spans = contamSpansCol(wsToks, benchHashes, windowTokens)
+    val cut = cutCol(wsToks, spans)
+    Seq(spans.as("contam_spans"), size(wsToks).cast("long").as("contam_n_tokens"),
+      cut.getField("clean_n_tokens").as("clean_n_tokens"),
+      cut.getField("clean_hash").as("clean_hash"))
+  }
+
+  /** the frame form of the q114 APPLY — appends [[contamApplyCols]] in
+    * one row-local pass (tokenized once; all other columns ride). */
   def withContamApplyCols(docs: DataFrame, benchHashes: Seq[Long],
                           windowTokens: Int = 8): DataFrame =
-    withContamCols(docs, benchHashes, windowTokens)
-      .withColumn("__cl", expr(cleanTokensSql()))
-      .withColumn("contam_n_tokens", size(col("__tk")).cast("long"))
-      .withColumn("clean_n_tokens", size(col("__cl")).cast("long"))
-      .withColumn("clean_hash", md5_60(array_join(col("__cl"), " ")))
-      .drop("__tk", "__cl")
+    docs.select(col("*"), tokens(coalesce(col("text"), lit(""))).as("__tk"))
+      .select(col("*") +: contamApplyCols(col("__tk"), benchHashes, windowTokens): _*)
+      .drop("__tk")
 
   /** the ONE cut rule: a token survives iff no merged interval covers
-    * its index — shared by the apply operators (q114, q118b), the
-    * stream door and the frame pass so none of them can drift. */
-  private def cleanTokensSql(spansCol: String = "contam_spans"): String =
-    s"filter(__tk, (t, i) -> NOT exists($spansCol, sp -> i >= sp.s AND i < sp.e))"
+    * its index; struct(clean_n_tokens, clean_hash) with the hash the
+    * 60-bit md5 of the survivors joined by one space — shared by the
+    * apply operators (q114, q118b), the stream door and the frame pass
+    * so none of them can drift ([[graft.functions.TextKernels.CutTokens]]). */
+  private def cutCol(toks: Column, spans: Column): Column =
+    graft.functions.TextKernels.cut_tokens(toks, spans)
 
   /** Σ(e − s) over the merged spans — the tokens a cut removes. */
   private[graft] def spanTokensSumCol(spansCol: String): Column =
@@ -1317,37 +1336,6 @@ object Dedup {
         col("col.s").cast("long").as("start_pos"),
         col("col.e").cast("long").as("end_pos"),
         (col("col.e") - col("col.s")).cast("long").as("span_tokens"))
-
-  /** the shared row-local core: tokenize once, probe the frozen set,
-    * fold the merged intervals — `__tk` stays so the APPLY step
-    * ([[decontamApplyRowLocal]]) cuts the SAME token array the spans
-    * index into (one tokenization per doc, the decode-once rule). */
-  private def withContamCols(docs: DataFrame, benchHashes: Seq[Long],
-                             windowTokens: Int): DataFrame = {
-    val w = windowTokens
-    require(w >= 1, s"windowTokens must be >= 1, got $w")
-    docs
-      .withColumn("__tk", tokens(coalesce(col("text"), lit(""))))
-      // window hashes via the codegen kernel, LET-BOUND in a 1-element
-      // transform — md5 inside the filter lambda would run interpreted
-      // per position, and a projected hash COLUMN referenced in the
-      // lambda gets spliced back and re-evaluated per element (the
-      // q103/r1 HOF lesson + the q102c splice lesson); the probe is a
-      // binary search against the ONE shared frozen long[] — not an
-      // array_contains linear scan over a per-row literal array, which
-      // is O(positions × |bench set|) per doc at eval-suite sizes
-      .withColumn("__pos",
-        transform(
-          array(graft.functions.HashExpressions.md5_shingle_hashes(col("__tk"), w)),
-          hs => when(size(col("__tk")) >= w,
-              filter(sequence(lit(0), size(col("__tk")) - w),
-                i => graft.functions.HashExpressions.sorted_long_contains(
-                  get(hs, i), benchHashes)))
-            .otherwise(expr("CAST(array() AS ARRAY<INT>)")))
-        .getItem(0))
-      .withColumn("contam_spans", expr(mergeSpansFoldSql("__pos", w)))
-      .drop("__pos")
-  }
 
   /** q114: DECONTAMINATION APPLY — the rewrite q113 plans: every
     * contaminated [s, e) token range is cut from the corpus document
@@ -1396,16 +1384,13 @@ object Dedup {
     // tokens_cut = Σ(e − s) over the merged disjoint spans — identical
     // to counting the filtered-out tokens (q114's conservation law,
     // spec-pinned) — and tokens_after = before − cut falls out POST-
-    // aggregate. Consuming `clean_n_tokens` here (the r11 shape) let
-    // CollapseProject splice the whole window-hash→probe→fold chain
-    // INSIDE the per-token cut lambda (contam_spans had only one
-    // consumer left), re-evaluating it once per TOKEN instead of once
-    // per row — the q102c splice lesson at a new boundary; 7.7 s warm
-    // vs q114's 1.1 s before this rewrite. spanTokensSumCol's fold
-    // takes the chain as its one whole-array input, so it evaluates
-    // once per row no matter how CollapseProject inlines it.
-    withContamCols(docs.filter(!isBenchmark(col("doc_id"))),
-        benchmarkWindowHashes(docs, windowTokens), windowTokens)
+    // aggregate. spanTokensSumCol's fold takes the span array as its
+    // one whole-array input, so the span kernel evaluates once per row
+    // however CollapseProject inlines it.
+    docs.filter(!isBenchmark(col("doc_id")))
+      .select(col("lang"), tokens(coalesce(col("text"), lit(""))).as("__tk"))
+      .select(col("lang"), col("__tk"), contamSpansCol(col("__tk"),
+        benchmarkWindowHashes(docs, windowTokens), windowTokens).as("contam_spans"))
       .select(col("lang"),
         size(col("__tk")).cast("long").as("contam_n_tokens"),
         spanTokensSumCol("contam_spans").as("__cut"))

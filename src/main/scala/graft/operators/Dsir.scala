@@ -97,30 +97,15 @@ object Dsir {
   private[operators] def bucketCol(t: Column): Column =
     pmod(Dedup.md5_60(concat(lit(FeatPrefix), t)), lit(Buckets.toLong))
 
-  /** The per-bucket delta model: (f, delta_mb), EXACTLY [[Buckets]]
-    * rows (absent buckets carry their smoothed prior). delta_mb =
-    * mb_raw − mb_target ⇒ positive when the bucket is relatively more
-    * frequent in the target slice. One corpus scan. */
-  private[operators] def deltaModel(docs: DataFrame): DataFrame = {
-    val feat = docs.select(col("doc_id"), explode(tokCol).as("t"))
-      .select(col("doc_id"), bucketCol(col("t")).as("f"))
-    val cnts = feat.groupBy("f").agg(
-      count(lit(1)).as("r_f"),
-      sum(when(pmod(col("doc_id"), lit(TargetMod.toLong)) === 0, 1L).otherwise(0L)).as("t_f"))
-    // full bucket domain: a bucket no token hashed into still has a
-    // smoothed probability on both sides
-    val domain = docs.sparkSession.range(Buckets.toLong).select(col("id").as("f"))
-    val full = domain.join(broadcast(cnts), Seq("f"), "left")
-      .select(col("f"),
-        coalesce(col("r_f"), lit(0L)).as("r_f"),
-        coalesce(col("t_f"), lit(0L)).as("t_f"))
-    val tot = full.agg(sum("r_f").as("rtot"), sum("t_f").as("ttot"))
-    val withTot = full.crossJoin(broadcast(tot))
-    withTot.select(col("f"),
-      (graft.functions.LogExpressions.log2mb(col("r_f") + 1L, col("rtot") + Buckets.toLong) -
-        graft.functions.LogExpressions.log2mb(col("t_f") + 1L, col("ttot") + Buckets.toLong))
-        .as("delta_mb"))
-  }
+  /** The per-bucket delta model as a LOCAL frame: (f, delta_mb),
+    * EXACTLY [[Buckets]] rows (absent buckets carry their smoothed
+    * prior). delta_mb = mb_raw − mb_target ⇒ positive when the bucket
+    * is relatively more frequent in the target slice. Trained by
+    * [[TextModels]] in one corpus read at construction; the deltas are
+    * driver arithmetic. */
+  private[operators] def deltaModel(docs: DataFrame): DataFrame =
+    TextModels.dsirFrame(docs, TextModels.train(docs,
+      TextModels.Parts(rarity = false, lm = false, dsir = true)).dsir.get)
 
   /** unordered weight core — the scoring scan: every document has ≥ 1
     * token (the empty text canonicalizes to one empty token), so one
@@ -176,28 +161,24 @@ object Dsir {
   }
 
   def dsirModel(docs: DataFrame): DsirModel =
-    DsirModel(deltaModel(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    TextModels.forRelease(docs, 10, 1024)(_.dsir, _.copy(dsir = None))
 
-  /** Row-local scoring against a FROZEN collected model, appended as
-    * `dsir_n_tokens` / `dsir_weight_mb` / `dsir_keep` columns (all
-    * other columns ride through): hash each token into its bucket,
-    * look the bucket's delta up in the literal 64-entry map, sum — one
-    * aggregate expression, no explode, no state, no shuffle. Shared by
-    * the stream twin [[graft.streaming.DocStreams.dsirLookup]] and the
-    * decode-once [[TextAnalysis.docReport]] frame. */
-  def dsirScoreRowLocal(docs: DataFrame, model: DsirModel): DataFrame = {
-    val entries = model.delta.toSeq.sortBy(_._1)
-    docs
-      .withColumn("__ds_dm", map_from_arrays(
-        typedlit(entries.map(_._1)), typedlit(entries.map(_._2))))
-      .withColumn("__ds_tk", expr("split(trim(lower(coalesce(text, ''))), ' +')"))
-      .withColumn("dsir_n_tokens", size(col("__ds_tk")).cast("long"))
-      .withColumn("dsir_weight_mb", expr(
-        s"""aggregate(__ds_tk, CAST(0 AS BIGINT), (acc, t) ->
-           |  acc + element_at(__ds_dm, pmod(CAST(conv(substring(
-           |    md5(concat('$FeatPrefix', t)), 1, 15), 16, 10) AS BIGINT),
-           |    CAST($Buckets AS BIGINT))))""".stripMargin))
-      .withColumn("dsir_keep", col("dsir_weight_mb") > 0L)
-      .drop("__ds_dm", "__ds_tk")
+  /** the q101 per-document fields against a FROZEN collected model —
+    * `dsir_n_tokens` / `dsir_weight_mb` / `dsir_keep` over a whitespace
+    * token array: each token hashes into its bucket and the bucket
+    * deltas sum, one kernel per row
+    * ([[graft.functions.TextKernels.DsirScore]]). The column list both
+    * [[dsirScoreRowLocal]] and [[TextAnalysis.docReport]] select. */
+  def dsirCols(wsToks: Column, model: DsirModel): Seq[Column] = {
+    val k = graft.functions.TextKernels.dsir_score(wsToks,
+      (0L until Buckets.toLong).map(model.delta), FeatPrefix)
+    graft.functions.TextKernels.DsirType.fieldNames.toSeq.map(f => k.getField(f).as(f))
   }
+
+  /** Row-local scoring against a FROZEN collected model, appended as the
+    * [[dsirCols]] (all other columns ride through) — no explode, no
+    * state, no shuffle. The stream twin
+    * [[graft.streaming.DocStreams.dsirLookup]]. */
+  def dsirScoreRowLocal(docs: DataFrame, model: DsirModel): DataFrame =
+    docs.select(col("*") +: dsirCols(TextModels.wsTokens, model): _*)
 }

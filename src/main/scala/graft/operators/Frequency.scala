@@ -140,14 +140,19 @@ object Frequency {
     *
     * Output per document (docs with ≥1 token): token count, OOV count
     * and share, mean token cost, and the `is_tail` flag (OOV share >
-    * `fenceOovBp`). Plan: three linear passes over the corpus (sketch,
-    * verify, score), two broadcast joins, one map-side-combined doc
-    * aggregate — nothing keyed by token ever crosses the wire.
+    * `fenceOovBp`). Plan: the model trains in two linear passes
+    * ([[TextModels]]: sketch, then verify — run at construction, the
+    * vocabulary re-entering as a local relation), then one scoring pass
+    * with two broadcast joins and one map-side-combined doc aggregate —
+    * nothing keyed by token ever crosses the wire.
     * N·10⁴ must fit BIGINT: fine to ~10¹⁵ tokens (≈ 4 PB of text),
     * beyond the 100 TB design point. */
   def rarityScreen(docs: DataFrame, phiBp: Int = 10, capacity: Int = 1024,
                    fenceOovBp: Int = 5000): DataFrame = {
-    val (keyed, vocab, total) = rarityParts(docs, phiBp, capacity)
+    val model = TextModels.train(docs, TextModels.Parts(rarity = true, lm = false, dsir = false),
+      phiBp, capacity).rarity.get
+    val (vocab, total) = TextModels.rarityFrames(docs, model)
+    val keyed = docs.select(col("doc_id"), explode(TextModels.regexTokens).as("tok"))
     keyed.join(broadcast(vocab), Seq("tok"), "left")
       .crossJoin(broadcast(total))
       .withColumn("cost", when(col("cnt").isNotNull,
@@ -164,77 +169,39 @@ object Frequency {
       .orderBy("doc_id")
   }
 
-  /** the (token stream, vocabulary, 1-row total) building blocks of the
-    * rarity screen — shared by the batch operator above and the
-    * collected [[rarityModel]]. */
-  private def rarityParts(docs: DataFrame, phiBp: Int,
-                          capacity: Int): (DataFrame, DataFrame, DataFrame) = {
-    require((capacity + 1).toLong * phiBp >= 10000L,
-      s"capacity $capacity too small for phi=$phiBp bp: vocabulary tokens could be missed")
-    val keyed = docs.select(col("doc_id"),
-        explode(expr("regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]', 0)")).as("tok"))
-      .withColumn("h", Dedup.md5_60(col("tok")))
-    // explode_outer keeps the n_total row even when the sketch is empty,
-    // so the scoring pass always has its 1-row total to broadcast
-    val cands = keyed
-      .agg(graft.functions.MgSketch.mg_sketch(col("h"), capacity).as("c"),
-        count(lit(1)).as("n_total"))
-      .select(explode_outer(col("c")).as("h"), col("n_total"))
-    val vocab = keyed.join(broadcast(cands.filter(col("h").isNotNull)), Seq("h"))
-      .groupBy("tok", "n_total").agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") * 10000L > col("n_total") * phiBp)
-      .select("tok", "cnt")
-    val total = cands.groupBy().agg(max(col("n_total")).as("n_total"))
-    (keyed, vocab, total)
-  }
-
   /** The q75 vocabulary MODEL, collected to the driver: (token → exact
     * count, total token count). Bounded by `capacity` entries — a
     * broadcast-sized model like the IVF centroids, NOT a data-scale
-    * collect. Train batch-side on a released corpus, then score an
-    * ingest stream row-locally with
+    * collect. Trained by [[TextModels]] together with the release's LM
+    * and DSIR models (the first of the three builders trains all
+    * three). Score an ingest stream row-locally with
     * [[graft.streaming.DocStreams.rarityLookup]]. */
   def rarityModel(docs: DataFrame, phiBp: Int = 10,
-                  capacity: Int = 1024): (Map[String, Long], Long) = {
-    val (_, vocab, total) = rarityParts(docs, phiBp, capacity)
-    val m = vocab.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val n = total.collect().headOption.map(_.getLong(0)).getOrElse(0L)
-    (m, n)
+                  capacity: Int = 1024): (Map[String, Long], Long) =
+    TextModels.forRelease(docs, phiBp, capacity)(_.rarity, _.copy(rarity = None))
+
+  /** the q75 per-document fields against the FROZEN collected
+    * vocabulary — `rar_n_tokens` / `rar_n_oov` / `rar_oov_bp` /
+    * `rar_mean_cost` / `rar_is_tail` over a regex token array (null for
+    * null text: every field null; the oov/cost fields are null for
+    * token-less documents). Same integer formulas as [[rarityScreen]],
+    * one kernel per row ([[graft.functions.TextKernels.RarityScore]]).
+    * The column list both [[rarityScoreRowLocal]] and
+    * [[TextAnalysis.docReport]] select. */
+  def rarityCols(regexToks: Column, model: Map[String, Long], nTotal: Long,
+                 phiBp: Int = 10, fenceOovBp: Int = 5000): Seq[Column] = {
+    val k = graft.functions.TextKernels.rarity_score(regexToks, model, nTotal, phiBp, fenceOovBp)
+    graft.functions.TextKernels.RarityType.fieldNames.toSeq.map(f => k.getField(f).as(f))
   }
 
   /** Row-local scoring against the FROZEN collected q75 vocabulary,
-    * appended as `rar_n_tokens` / `rar_n_oov` / `rar_oov_bp` /
-    * `rar_mean_cost` / `rar_is_tail` columns (all other columns ride
-    * through; the rar_ fields are null for token-less documents —
+    * appended as the [[rarityCols]] (all other columns ride through;
     * callers wanting the batch screen's contract filter on
-    * rar_n_tokens > 0). Same integer cost formulas as
-    * [[rarityScreen]], evaluated per row with higher-order functions —
-    * no explode, no state, no shuffle. Shared by the stream twin
-    * [[graft.streaming.DocStreams.rarityLookup]] and the decode-once
-    * [[TextAnalysis.docReport]] frame. */
+    * rar_n_tokens > 0) — no explode, no state, no shuffle. The stream
+    * twin [[graft.streaming.DocStreams.rarityLookup]]. */
   def rarityScoreRowLocal(docs: DataFrame, model: Map[String, Long], nTotal: Long,
-                          phiBp: Int = 10, fenceOovBp: Int = 5000): DataFrame = {
-    val ceil = nTotal * 10000L / (nTotal * phiBp / 10000L + 1L)
-    docs
-      .withColumn("__rar_m", map_from_arrays(
-        typedlit(model.keys.toSeq), typedlit(model.values.toSeq)))
-      .withColumn("__rar_toks",
-        expr("regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]', 0)"))
-      .withColumn("rar_n_tokens", size(col("__rar_toks")).cast("long"))
-      .withColumn("rar_n_oov",
-        expr("CAST(size(filter(__rar_toks, t -> element_at(__rar_m, t) IS NULL)) AS BIGINT)"))
-      .withColumn("__rar_sum_cost",
-        expr(s"aggregate(__rar_toks, CAST(0 AS BIGINT), (acc, t) -> acc + " +
-          s"coalesce(CAST(${nTotal * 10000L} AS BIGINT) DIV element_at(__rar_m, t), " +
-          s"CAST($ceil AS BIGINT)))"))
-      .withColumn("rar_oov_bp",
-        when(col("rar_n_tokens") > 0, expr("(10000 * rar_n_oov) DIV rar_n_tokens")))
-      .withColumn("rar_mean_cost",
-        when(col("rar_n_tokens") > 0, expr("__rar_sum_cost DIV rar_n_tokens")))
-      .withColumn("rar_is_tail",
-        when(col("rar_n_tokens") > 0, col("rar_oov_bp") > fenceOovBp))
-      .drop("__rar_m", "__rar_toks", "__rar_sum_cost")
-  }
+                          phiBp: Int = 10, fenceOovBp: Int = 5000): DataFrame =
+    docs.select(col("*") +: rarityCols(TextModels.regexTokens, model, nTotal, phiBp, fenceOovBp): _*)
 
   /** q68 instance: the per-source TOP-TERMS report over the corpus
     * (tokens with share > 2% within their source) — the vocabulary-

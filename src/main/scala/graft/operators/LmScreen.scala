@@ -34,14 +34,13 @@ import org.apache.spark.sql.functions._
   * that would overflow int64). The DuckDB oracle carries the same
   * unrolled steps as chained CTEs ([[log2mbSqlCtes]]).
   *
-  * Scale shape: the kernel runs on MODEL-sized frames only (≤ (K+1)²
-  * bigram rows + K+1 contexts + 1), never on the document stream.
-  * Train token counts hash-shuffle a bounded token domain with
-  * map-side combine; the vocabulary election is a K-bounded
-  * TakeOrdered (the distributed top-K plan: per-partition heaps, K
-  * rows to the driver); bigram construction is a row-local array zip
-  * (no positional self-join); mapped bigram counts collapse map-side
-  * to ≤ (K+1)² rows. Scoring = vocab/model broadcast joins + one
+  * Scale shape: the kernel runs on the driver over MODEL-sized
+  * collections only (≤ (K+1)² bigram counts + K+1 contexts + 1,
+  * [[TextModels]]), never on the document stream. Train token counts
+  * hash-shuffle a bounded token domain with map-side combine; the
+  * vocabulary election is a K-bounded TakeOrdered (the distributed
+  * top-K plan: per-partition heaps, K rows to the driver); mapped
+  * bigram counts collapse map-side to ≤ (K+1)² rows. Scoring = vocab/model broadcast joins + one
   * map-side-combined doc_id aggregate — nothing data-sized ever
   * shuffles on a token key.
   */
@@ -186,56 +185,44 @@ object LmScreen {
       .select(gk :+ "tok" map col: _*)
   }
 
-  /** the trained model: (vocab, pair surprisal, context surprisal for
-    * unseen pairs, unseen-context surprisal) — all model-sized (each
-    * frame gains the `gk` columns when grouped); callers broadcast.
-    * The grouped vocabulary election runs on the repo's bounded-heap
-    * TopKPerKey operator (per-partition heaps, ≤ K rows per group to
-    * the final stage) — the global one on TakeOrdered.
+  /** the trained model as LOCAL frames: (vocab, pair surprisal, context
+    * surprisal for unseen pairs, unseen-context surprisal) — all
+    * model-sized (each frame gains the `gk` columns when grouped);
+    * callers broadcast. The global model is [[TextModels.train]]'s; the
+    * per-group one elects each group's vocabulary on the repo's
+    * bounded-heap TopKPerKey operator and counts its mapped train
+    * bigrams in a second read. Either way the surprisals come from the
+    * ONE driver-side arithmetic ([[TextModels.lmModel]]).
     *
     * NOTE (r19 semantics): building the model EXECUTES Spark jobs at
-    * construction time — vocab and pair counts are collected and
-    * re-entered as local relations (see [[Scale.localized]]), so
-    * callers pay the training scans when they call this, not at first
-    * action, and the local relations snapshot source state as of the
-    * build. */
+    * construction time — callers pay the training scans when they call
+    * this, not at first action, and the frames snapshot source state
+    * as of the build. */
   private[operators] def model(docs: DataFrame, gk: Seq[String] = Nil)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // every frame built here is MODEL-sized (≤ (K+1)² rows per group) —
-    // collect the two that anchor corpus scans (vocab election, mapped
-    // bigram counts) and re-enter them as local relations: left lazy,
-    // every downstream broadcast re-executes the full train-scan
-    // lineage per use (the q100 before-plan embedded the training
-    // subtree repeatedly — 32 exchanges / 15 corpus scans; q100b worse,
-    // with the per-lang TopKPerKey election re-run per broadcast).
-    // Still computed from the parquet inputs on every invocation —
-    // nothing persists across runs.
-    def localize(df: DataFrame): DataFrame = Scale.localized(df)
-    val train = docs.filter(pmod(col("doc_id"), lit(TrainMod.toLong)) === 0)
-    val vocab = localize(vocabElection(docs, gk))
-    val pairCounts = localize(mappedBigrams(train, vocab, gk)
-      .filter(!col("is_doc"))
-      .groupBy(gk ++ Seq("m1", "m2") map col: _*).agg(count(lit(1)).as("c2")))
-    val ctxCounts = pairCounts
-      .groupBy(gk :+ "m1" map col: _*).agg(sum("c2").as("c1"))
-    // V+1: vocab classes + unk — the Laplace smoothing domain, per group
-    val vd =
-      if (gk.isEmpty) vocab.agg((count(lit(1)) + lit(1L)).as("vd"))
-      else vocab.groupBy(gk.map(col): _*).agg((count(lit(1)) + lit(1L)).as("vd"))
-    // every frame here is model-sized — hint broadcast so the builder
-    // never plans a shuffle join for a ≤ (K+1)²-row table
-    def withVd(df: DataFrame): DataFrame =
-      if (gk.isEmpty) df.crossJoin(vd) else df.join(broadcast(vd), gk)
-    val pairModel = withLog2mb(
-      withVd(pairCounts.join(broadcast(ctxCounts), gk :+ "m1")),
-      col("c2") + 1L, col("c1") + col("vd"), "mb")
-      .select(gk ++ Seq("m1", "m2", "mb") map col: _*)
-    val ctxModel = withLog2mb(withVd(ctxCounts),
-      lit(1L), col("c1") + col("vd"), "ctx_mb")
-      .select(gk ++ Seq("m1", "ctx_mb") map col: _*)
-    val unkModel = withLog2mb(vd, lit(1L), col("vd"), "unk_mb")
-      .select(gk :+ "unk_mb" map col: _*)
-    (vocab, pairModel, ctxModel, unkModel)
+    val models =
+      if (gk.isEmpty)
+        Seq(Seq.empty[Any] -> TextModels.train(docs,
+          TextModels.Parts(rarity = false, lm = true, dsir = false)).lm.get)
+      else {
+        val election = vocabElection(docs, gk)
+        val vocabRows = Scale.bounded(election, VocabK * Corpus.MaxLanguages,
+          "LmScreen.vocabElection")
+        val vocab = docs.sparkSession.createDataFrame(
+          java.util.Arrays.asList(vocabRows: _*), election.schema)
+        val train = docs.filter(pmod(col("doc_id"), lit(TrainMod.toLong)) === 0)
+        val pairRows = Scale.bounded(mappedBigrams(train, vocab, gk)
+            .filter(!col("is_doc"))
+            .groupBy(gk ++ Seq("m1", "m2") map col: _*).agg(count(lit(1)).as("c2")),
+          (VocabK + 1) * (VocabK + 1) * Corpus.MaxLanguages, "LmScreen.pairCounts")
+        val n = gk.length
+        val pairsBy = pairRows.toSeq.groupBy(r => (0 until n).map(r.get))
+        vocabRows.toSeq.groupBy(r => (0 until n).map(r.get)).toSeq.map { case (k, vs) =>
+          k -> TextModels.lmModel(vs.map(_.getString(n)),
+            pairsBy.getOrElse(k, Nil).map(r => (r.getString(n), r.getString(n + 1), r.getLong(n + 2))))
+        }
+      }
+    TextModels.lmFrames(docs, gk, models)
   }
 
   /** The collected LM model — bounded ((K+1)² pairs + K+1 contexts +
@@ -248,47 +235,30 @@ object LmScreen {
   case class LmModel(vocab: Set[String], pairMb: Map[String, Long],
                      ctxMb: Map[String, Long], unkMb: Long)
 
-  /** Row-local scoring against a FROZEN collected model, appended as
-    * `lm_n_bigrams` / `lm_total_mb` / `lm_avg_mb` / `lm_keep` columns
-    * (all other columns ride through): vocabulary fold, pair / context
-    * / unseen surprisal lookups and the per-doc mean, one aggregate
-    * expression over the token array — no explode, no state, no
-    * shuffle. Shared by the q101-family stream twin
-    * [[graft.streaming.DocStreams.lmLookup]] and the decode-once
-    * [[TextAnalysis.docReport]] frame. */
-  def lmScoreRowLocal(docs: DataFrame, model: LmModel): DataFrame =
-    docs
-      .withColumn("__lm_pm", map_from_arrays(
-        typedlit(model.pairMb.keys.toSeq), typedlit(model.pairMb.values.toSeq)))
-      .withColumn("__lm_cm", map_from_arrays(
-        typedlit(model.ctxMb.keys.toSeq), typedlit(model.ctxMb.values.toSeq)))
-      .withColumn("__lm_vs", typedlit(model.vocab.toSeq))
-      .withColumn("__lm_tk", expr("split(trim(lower(coalesce(text, ''))), ' +')"))
-      .withColumn("__lm_m", expr(
-        s"transform(__lm_tk, t -> CASE WHEN array_contains(__lm_vs, t) THEN t ELSE '$UnkTok' END)"))
-      .withColumn("lm_n_bigrams",
-        expr("CAST(greatest(size(__lm_tk) - 1, 0) AS BIGINT)"))
-      .withColumn("lm_total_mb", expr(
-        s"""CASE WHEN size(__lm_tk) >= 2 THEN
-           |  aggregate(sequence(0, size(__lm_tk) - 2), CAST(0 AS BIGINT), (acc, i) ->
-           |    acc + coalesce(element_at(__lm_pm, concat(__lm_m[i], ' ', __lm_m[i + 1])),
-           |                   element_at(__lm_cm, __lm_m[i]),
-           |                   CAST(${model.unkMb} AS BIGINT))) END""".stripMargin))
-      .withColumn("lm_avg_mb",
-        when(col("lm_n_bigrams") > 0, expr("lm_total_mb DIV lm_n_bigrams")))
-      .withColumn("lm_keep",
-        col("lm_n_bigrams") > 0 && col("lm_avg_mb") <= KeepMaxMb)
-      .drop("__lm_pm", "__lm_cm", "__lm_vs", "__lm_tk", "__lm_m")
-
-  def lmModel(docs: DataFrame): LmModel = {
-    val (vocab, pairModel, ctxModel, unkModel) = model(docs, Nil)
-    LmModel(
-      vocab.collect().map(_.getString(0)).toSet,
-      pairModel.collect()
-        .map(r => s"${r.getString(0)} ${r.getString(1)}" -> r.getLong(2)).toMap,
-      ctxModel.collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
-      unkModel.collect().headOption.map(_.getLong(0)).getOrElse(0L))
+  /** the q100 per-document fields against a FROZEN collected model —
+    * `lm_n_bigrams` / `lm_total_mb` / `lm_avg_mb` / `lm_keep` over a
+    * whitespace token array: vocabulary fold, pair / context / unseen
+    * surprisal lookups and the per-doc mean in one kernel per row
+    * ([[graft.functions.TextKernels.LmScore]]). The column list both
+    * [[lmScoreRowLocal]] and [[TextAnalysis.docReport]] select. */
+  def lmCols(wsToks: Column, model: LmModel): Seq[Column] = {
+    val k = graft.functions.TextKernels.lm_score(wsToks, model.vocab, model.pairMb,
+      model.ctxMb, model.unkMb, UnkTok, KeepMaxMb)
+    graft.functions.TextKernels.LmType.fieldNames.toSeq.map(f => k.getField(f).as(f))
   }
+
+  /** Row-local scoring against a FROZEN collected model, appended as the
+    * [[lmCols]] (all other columns ride through) — no explode, no
+    * state, no shuffle. The q101-family stream twin
+    * [[graft.streaming.DocStreams.lmLookup]]. */
+  def lmScoreRowLocal(docs: DataFrame, model: LmModel): DataFrame =
+    docs.select(col("*") +: lmCols(TextModels.wsTokens, model): _*)
+
+  /** the collected global model — trained by [[TextModels]] together
+    * with the release's rarity and DSIR models (the first of the three
+    * builders trains all three). */
+  def lmModel(docs: DataFrame): LmModel =
+    TextModels.forRelease(docs, 10, 1024)(_.lm, _.copy(lm = None))
 
   /** q100: the per-document LM screen (see object doc). Columns:
     * doc_id, lang, n_bigrams, total_mb, avg_mb (total_mb/avg_mb null

@@ -6,6 +6,11 @@ import org.apache.spark.sql.functions._
 /** Scale tooling: the join-shape utilities a 100 TB deployment leans on
   * when AQE alone isn't enough — key salting for pathological skew and
   * bucketed (pre-shuffled) table layout for repeated co-located joins.
+  *
+  * Construction rule for wide row-local frames: one or two `select`s,
+  * not a chain of `withColumn`s — every `withColumn` re-analyses the
+  * whole plan, so a frame of n derived columns pays n analyses at
+  * build time ([[TextAnalysis.docReport]] is the worked example).
   */
 object Scale {
 
@@ -30,6 +35,14 @@ object Scale {
       s"$op: expected at most $maxRows rows to collect, saw ${rows.length} (limit ${maxRows + 1})")
     rows
   }
+
+  /** [[localized]] with a ceiling: collects through [[bounded]], so a
+    * frame whose size depends on the data (a per-source or per-language
+    * rollup) fails naming `op` and the row count instead of flooding
+    * the driver. */
+  def localized(df: DataFrame, maxRows: Int, op: String): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(bounded(df, maxRows, op): _*), df.schema)
 
   /** Hash-spread a payload frame on `key` over the session's
     * `spark.sql.shuffle.partitions` before a per-row decode stage, so a

@@ -27,9 +27,6 @@ object Similarity {
     * pad the argmin/argmax instead of failing analysis. */
   private def leastOf(cols: Seq[Column]): Column =
     if (cols.size == 1) cols.head else least(cols: _*)
-  private def greatestOf(cols: Seq[Column]): Column =
-    if (cols.size == 1) cols.head else greatest(cols: _*)
-
   /** the 4-bit packing bound every PQ entry point must enforce — an
     * unguarded k>16 would silently overflow codes into the next
     * nibble and corrupt every downstream lookup. */
@@ -212,8 +209,8 @@ object Similarity {
           org.apache.spark.sql.types.StructField("n_queries", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("mean_recall_bp", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("micro_recall_bp", org.apache.spark.sql.types.LongType))))
-    val (e, scores) = withCellScores(withNorm(embeddings), cents)
-    val c = e.withColumn("cell", greatestOf(scores).getField("cell"))
+    val (e, scores, best) = withCellScores(withNorm(embeddings), cents)
+    val c = e.withColumn("cell", best.getField("cell"))
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("e_c"),
         col("norm").as("n_c"), col("cell"))
     val probeStructs = slice(reverse(array_sort(array(scores: _*))), 1, nProbes.max)
@@ -257,11 +254,13 @@ object Similarity {
   /** appends `__dots` (all centroid dot products, ONE codegen
     * expression over the reference-object matrix — evaluated once per
     * row, no per-cell literal subtrees) and returns the (score, cell)
-    * struct columns over it — shared by the nearest-cell assignment
-    * and the query-side multi-cell probing. The centroid norm is a
-    * per-cell constant factor, divided out of the argmax/sort. */
+    * struct columns over it for query-side multi-cell probing, plus the
+    * nearest cell as struct(score, cell) from ONE kernel
+    * ([[graft.functions.VectorExpressions.NearestCell]], greatest's
+    * order over those structs without building them). The centroid
+    * norm is a per-cell constant factor, divided out of the argmax/sort. */
   private def withCellScores(df: DataFrame, centroids: Seq[Seq[Double]])
-      : (DataFrame, Seq[Column]) = {
+      : (DataFrame, Seq[Column], Column) = {
     val withDots = df.withColumn("__dots",
       graft.functions.VectorExpressions.vec_cell_dots(col("embedding"), centroids))
     val cols = centroids.toIndexedSeq.zipWithIndex.map { case (c, i) =>
@@ -269,7 +268,8 @@ object Similarity {
       struct((element_at(col("__dots"), i + 1) / (col("norm") * cn)).as("score"),
         lit(i).as("cell"))
     }
-    (withDots, cols)
+    (withDots, cols,
+      graft.functions.VectorExpressions.nearest_cell(col("embedding"), col("norm"), centroids))
   }
 
   /** Spark's `CAST(round(col * 1000000) AS BIGINT)` replicated for the
@@ -690,9 +690,9 @@ object Similarity {
 
   private def ivfPqIndexFor(embeddings: DataFrame, cents: Seq[Seq[Double]],
                             books: Seq[Seq[Seq[Double]]], m: Int, d: Int): DataFrame = {
-    val (eScored, scores) = withCellScores(withNorm(embeddings), cents)
+    val (eScored, scores, best) = withCellScores(withNorm(embeddings), cents)
     encodeWithBooks(
-        eScored.withColumn("cell", greatestOf(scores).getField("cell")),
+        eScored.withColumn("cell", best.getField("cell")),
         books, m, d, keep = Seq(col("vec_id"), col("cell")))
       .select("vec_id", "cell", "pq_code")
   }
@@ -705,7 +705,7 @@ object Similarity {
     val books = pqCodebooks(embeddings, m, dim, k)
     if (cents.isEmpty || books.headOption.forall(_.isEmpty)) return emptyAdc(embeddings)
     val d = dim / m
-    val (eScored, scores) = withCellScores(withNorm(embeddings), cents)
+    val (eScored, scores, best) = withCellScores(withNorm(embeddings), cents)
     // the index shape is [[buildIvfPqIndex]] (same models, one scan).
     // The repartition is the same stage barrier as in [[pqAdcSearch]]:
     // it keeps the cell/encode expressions out of the probe join's
@@ -735,10 +735,10 @@ object Similarity {
     * float→double subtraction is exact (float widens losslessly), so
     * the DuckDB replay lands on identical residual doubles. */
   private def residualFrame(embeddings: DataFrame, cents: Seq[Seq[Double]]): DataFrame = {
-    val (eScored, scores) = withCellScores(withNorm(embeddings), cents)
+    val (eScored, scores, best) = withCellScores(withNorm(embeddings), cents)
     val centLit = typedlit(cents.map(_.toIndexedSeq).toIndexedSeq)
     eScored
-      .withColumn("cell", greatestOf(scores).getField("cell"))
+      .withColumn("cell", best.getField("cell"))
       .withColumn("__x2",
         graft.functions.VectorExpressions.vec_norm_sq(col("embedding")))
       // centroid TRUNCATED to the row's length: zip_with pads the
@@ -824,7 +824,7 @@ object Similarity {
         keep = Seq(col("vec_id").as("neighbor_id"), col("cell")))
       .select("neighbor_id", "cell", "pq_code")
       .repartition(embeddings.sparkSession.sessionState.conf.numShufflePartitions)
-    val (eScored, scores) = withCellScores(withNorm(embeddings), cents)
+    val (eScored, scores, best) = withCellScores(withNorm(embeddings), cents)
     val probeCells = slice(reverse(array_sort(array(scores: _*))), 1, nProbe)
       .getField("cell")
     val centLit = typedlit(cents.map(_.toIndexedSeq).toIndexedSeq)
@@ -934,9 +934,9 @@ object Similarity {
     val cents = ivfCentroids(embeddings, nCells)
     if (cents.isEmpty) // empty corpus: keep the schema, zero rows
       return withNorm(embeddings).withColumn("cell", lit(0))
-    val (withDots, scores) = withCellScores(withNorm(embeddings), cents)
+    val (withDots, scores, best) = withCellScores(withNorm(embeddings), cents)
     withDots
-      .withColumn("cell", greatestOf(scores).getField("cell"))
+      .withColumn("cell", best.getField("cell"))
       .drop("__dots")
   }
 
@@ -951,8 +951,8 @@ object Similarity {
              nQueries: Int = 20, k: Int = 10, nProbe: Int = 6): DataFrame = {
     val cents = ivfCentroids(embeddings, nCells)
     if (cents.isEmpty) return emptyKnn(embeddings.sparkSession)
-    val (e, scores) = withCellScores(withNorm(embeddings), cents)
-    val c = e.withColumn("cell", greatestOf(scores).getField("cell"))
+    val (e, scores, best) = withCellScores(withNorm(embeddings), cents)
+    val c = e.withColumn("cell", best.getField("cell"))
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("e_c"),
         col("norm").as("n_c"), col("cell"))
     // top-nProbe cells: sort the (score, cell) structs descending by
@@ -990,8 +990,8 @@ object Similarity {
       .withColumn("lang", lit(null).cast("string"))
       .select("query_id", "lang", "neighbor_id", "cos_bp", "rank")
     val meta = docs.select(col("doc_id"), col("lang"))
-    val (e, scores) = withCellScores(withNorm(embeddings), cents)
-    val c = e.withColumn("cell", greatestOf(scores).getField("cell"))
+    val (e, scores, best) = withCellScores(withNorm(embeddings), cents)
+    val c = e.withColumn("cell", best.getField("cell"))
       .join(meta, col("vec_id") === col("doc_id"))
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("e_c"),
         col("norm").as("n_c"), col("cell"), col("lang").as("lang_c"))
@@ -1157,8 +1157,7 @@ object Similarity {
     if (cents.isEmpty)
       return emptyModelFrame(embeddings, "clusterAssignWithModel",
         e.select(col("vec_id"), lit(0L).as("cell"), lit(0L).as("cos_bp")))
-    val (withDots, scores) = withCellScores(e, cents)
-    val best = greatestOf(scores)
+    val (withDots, scores, best) = withCellScores(e, cents)
     withDots.select(col("vec_id"),
       best.getField("cell").cast("long").as("cell"),
       cosBp(best.getField("score")))
@@ -1236,9 +1235,9 @@ object Similarity {
       return emptyModelFrame(embeddings, "semanticDedupCellsWithModel",
         e0.select(col("vec_id"), lit(0L).as("cell"), lit(true).as("keep"),
           lit(null).cast("long").as("dup_of"), lit(null).cast("long").as("max_cos_bp")))
-    val (withDots, scores) = withCellScores(e0, cents)
+    val (withDots, scores, best) = withCellScores(e0, cents)
     val e = withDots.select(col("vec_id"), col("embedding"), col("norm"),
-      greatestOf(scores).getField("cell").cast("long").as("cell"))
+      best.getField("cell").cast("long").as("cell"))
     // dimension-sized (one row per cell); assert_true throws on the
     // first oversized cell — in-cell cost is quadratic by design
     val sizes = e.groupBy("cell").agg(count(lit(1)).as("__cn"))
@@ -1455,8 +1454,7 @@ object Similarity {
     require(books.size == m && dim % m == 0, s"need $m codebooks for dim $dim")
     require(books.forall(_.nonEmpty), "empty codebook: train on a non-empty corpus")
     requirePackable(m, books.map(_.size).max.max(2))
-    val (withDots, scores) = withCellScores(e, cents)
-    val best = greatestOf(scores)
+    val (withDots, scores, best) = withCellScores(e, cents)
     val base = withDots
       .withColumn("cell", best.getField("cell").cast("long"))
       .withColumn("cos_bp", cosBp(best.getField("score")))

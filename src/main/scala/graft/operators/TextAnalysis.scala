@@ -26,29 +26,30 @@ object TextAnalysis {
     * `predicted_lang` column — shared by q37 (confusion counts), q46
     * (declared-vs-content consistency) and the q55 composite pipeline. */
   private[operators] def withPredictedLang(documents: DataFrame,
-                                           keepHits: Boolean = false): DataFrame = {
-    val withP = documents.withColumn("__p", concat(lit(" "), col("text"), lit(" ")))
-    val withCounts = LangMarkers.foldLeft(withP) { case (df, (l, m)) =>
-      df.withColumn(s"c_$l",
-        expr(s"(length(__p) - length(replace(__p, '$m', ''))) DIV ${m.length}"))
-    }
-    val langs = LangMarkers.map(_._1)
-    val pred = langs.dropRight(1).zipWithIndex.foldLeft(when(lit(false), "")) {
-      case (acc, (l, i)) =>
-        val rest = langs.drop(i + 1).map(r => col(s"c_$r"))
-        val restMax = if (rest.size == 1) rest.head else greatest(rest: _*)
-        acc.when(col(s"c_$l") >= restMax, l)
-    }.otherwise(langs.last)
-    // the winner is the argmax, so its marker count IS the max — the
-    // q128 evidence gate reads it without re-deriving the election
-    val withHits =
-      if (keepHits)
-        withCounts.withColumn("pred_hits",
-          greatest(langs.map(l => col(s"c_$l")): _*).cast(LongType))
-      else withCounts
-    withHits.withColumn("predicted_lang", pred)
-      .drop("__p" +: langs.map(l => s"c_$l"): _*)
+                                           keepHits: Boolean = false): DataFrame =
+    documents.select(col("*") +: (predictedLangCol.as("predicted_lang") +:
+      (if (keepHits) Seq(predHitsCol.as("pred_hits")) else Nil)): _*)
+
+  /** per-language marker occurrence counts over the space-padded text */
+  private def markerCounts: Seq[Column] = LangMarkers.map { case (_, m) =>
+    expr(s"(length(' ' || text || ' ') - length(replace(' ' || text || ' ', '$m', ''))) DIV ${m.length}")
   }
+
+  /** the marker-count election as one column over `text` */
+  private[graft] def predictedLangCol: Column = {
+    val langs = LangMarkers.map(_._1)
+    val c = markerCounts
+    langs.dropRight(1).zipWithIndex.foldLeft(when(lit(false), "")) {
+      case (acc, (l, i)) =>
+        val rest = c.drop(i + 1)
+        val restMax = if (rest.size == 1) rest.head else greatest(rest: _*)
+        acc.when(c(i) >= restMax, l)
+    }.otherwise(langs.last)
+  }
+
+  /** the winner is the argmax, so its marker count IS the max — the
+    * q128 evidence gate reads it without re-deriving the election */
+  private def predHitsCol: Column = greatest(markerCounts: _*).cast(LongType)
 
   /** q37: n-gram-heuristic language ID → confusion counts vs the
     * labelled lang column. */
@@ -132,18 +133,20 @@ object TextAnalysis {
     * counts, alpha share in basis points, quality flag. Shared by the
     * standalone q38 projection and the decode-once [[docReport]]. */
   private[graft] def withQualityCols(documents: DataFrame): DataFrame =
-    documents
-      .withColumn("computed_chars", length(col("text")).cast(LongType))
-      .withColumn("n_alpha",
-        length(regexp_replace(col("text"), "[^a-zA-Z]", "")).cast(LongType))
-      .withColumn("n_punct",
-        length(regexp_replace(col("text"), "[^.,;:!?]", "")).cast(LongType))
-      .withColumn("n_stopword_the",
-        expr("(length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' the ', ''))) DIV 5")
-          .cast(LongType))
-      .withColumn("alpha_bp", expr("(10000 * n_alpha) DIV nullif(computed_chars, 0)"))
-      .withColumn("is_quality",
-        col("computed_chars").between(50, 20000) && col("alpha_bp") > 6000)
+    documents.select(col("*") +: qualityCols: _*)
+
+  /** the q38 column list over `text` */
+  private def qualityCols: Seq[Column] = {
+    val chars = length(col("text")).cast(LongType)
+    val alpha = length(regexp_replace(col("text"), "[^a-zA-Z]", "")).cast(LongType)
+    val alphaBp = div(lit(10000) * alpha, nonZero(chars))
+    Seq(chars.as("computed_chars"), alpha.as("n_alpha"),
+      length(regexp_replace(col("text"), "[^.,;:!?]", "")).cast(LongType).as("n_punct"),
+      expr("(length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' the ', ''))) DIV 5")
+        .cast(LongType).as("n_stopword_the"),
+      alphaBp.as("alpha_bp"),
+      (chars.between(50, 20000) && alphaBp > 6000).as("is_quality"))
+  }
 
   /** q116: GOPHER-STYLE RULE MATRIX — the published composite quality
     * filter (Gopher §A1.1 / Dolma / RedPajama-v2 quality signals) as a
@@ -167,34 +170,31 @@ object TextAnalysis {
     * `n_words`, and the composite as `gopher_n_failed`/`gopher_keep`
     * (prefixed like the other screens' keeps, so the report frame
     * stays unambiguous). Pure row-local. */
-  private[graft] def withGopherCols(documents: DataFrame): DataFrame = {
-    val stop = "('the','and','of','to','a')"
-    documents
-      .withColumn("__gtk", Dedup.tokens(coalesce(col("text"), lit(""))))
-      .withColumn("n_words", expr(
-        "CASE WHEN length(trim(coalesce(text, ''))) = 0 THEN CAST(0 AS BIGINT) ELSE CAST(size(__gtk) AS BIGINT) END"))
-      .withColumn("__gwl", expr("CAST(length(array_join(__gtk, '')) AS BIGINT)"))
-      .withColumn("__gnstop", expr(s"CAST(size(filter(__gtk, t -> t IN $stop)) AS BIGINT)"))
-      .withColumn("__gnalphaw", expr("CAST(size(filter(__gtk, t -> t rlike '[a-z]')) AS BIGINT)"))
-      .withColumn("__gnpunct", expr(
-        "CAST(length(regexp_replace(coalesce(text, ''), '[^.,;:!?]', '')) AS BIGINT)"))
-      .withColumn("__gndist", expr("CAST(size(array_distinct(__gtk)) AS BIGINT)"))
-      .withColumn("word_count_ok", expr("n_words BETWEEN 50 AND 100000"))
-      .withColumn("mean_word_len_ok",
-        expr("n_words > 0 AND __gwl >= 3 * n_words AND __gwl <= 10 * n_words"))
-      .withColumn("stopword_ok", expr("__gnstop >= 2"))
-      .withColumn("alpha_words_ok", expr("n_words > 0 AND 5 * __gnalphaw >= 4 * n_words"))
-      .withColumn("punct_ratio_ok", expr("2 * __gnpunct <= n_words"))
-      .withColumn("distinct_ratio_ok", expr("n_words > 0 AND 5 * __gndist >= n_words"))
-      .withColumn("gopher_n_failed", expr(
-        """CAST((CASE WHEN word_count_ok THEN 0 ELSE 1 END)
-          | + (CASE WHEN mean_word_len_ok THEN 0 ELSE 1 END)
-          | + (CASE WHEN stopword_ok THEN 0 ELSE 1 END)
-          | + (CASE WHEN alpha_words_ok THEN 0 ELSE 1 END)
-          | + (CASE WHEN punct_ratio_ok THEN 0 ELSE 1 END)
-          | + (CASE WHEN distinct_ratio_ok THEN 0 ELSE 1 END) AS BIGINT)""".stripMargin))
-      .withColumn("gopher_keep", col("gopher_n_failed") === 0)
-      .drop("__gtk", "__gwl", "__gnstop", "__gnalphaw", "__gnpunct", "__gndist")
+  private[graft] def withGopherCols(documents: DataFrame): DataFrame =
+    documents.select(col("*"), TextModels.wsTokens.as("__gtk"))
+      .select(col("*") +: gopherCols(col("__gtk")): _*)
+      .drop("__gtk")
+
+  /** the q116 column list over `text` and its whitespace token array
+    * (`tokens(coalesce(text, ''))`) */
+  private def gopherCols(wsToks: Column): Seq[Column] = {
+    val words = when(length(trim(coalesce(col("text"), lit("")))) === 0, lit(0L))
+      .otherwise(size(wsToks).cast(LongType))
+    val wl = length(array_join(wsToks, "")).cast(LongType)
+    val classes = graft.functions.TextKernels.word_class_counts(wsToks,
+      Seq("the", "and", "of", "to", "a"))
+    val punct = length(regexp_replace(coalesce(col("text"), lit("")), "[^.,;:!?]", "")).cast(LongType)
+    val dist = size(array_distinct(wsToks)).cast(LongType)
+    val rules = Seq(
+      "word_count_ok" -> words.between(50, 100000),
+      "mean_word_len_ok" -> (words > 0 && wl >= words * 3 && wl <= words * 10),
+      "stopword_ok" -> (classes.getField("n_stop") >= 2),
+      "alpha_words_ok" -> (words > 0 && classes.getField("n_alpha_words") * 5 >= words * 4),
+      "punct_ratio_ok" -> (punct * 2 <= words),
+      "distinct_ratio_ok" -> (words > 0 && dist * 5 >= words))
+    val failed = rules.map { case (_, r) => when(r, 0).otherwise(1) }.reduce(_ + _).cast(LongType)
+    (words.as("n_words") +: rules.map { case (n, r) => r.as(n) }) ++
+      Seq(failed.as("gopher_n_failed"), (failed === 0).as("gopher_keep"))
   }
 
   private def gopherOutCols: Seq[Column] = Seq(col("doc_id"), col("n_words"),
@@ -286,14 +286,15 @@ object TextAnalysis {
   /** the q39 kernel in append form — whitespace / distinct / BPE-ish
     * token counts ride alongside the input columns. */
   private[graft] def withTokenCountCols(documents: DataFrame): DataFrame =
-    documents
-      .withColumn("n_ws_tokens",
-        size(split(trim(col("text")), " +")).cast(LongType))
-      .withColumn("n_distinct_tokens",
-        size(array_distinct(split(trim(col("text")), " +"))).cast(LongType))
-      .withColumn("n_bpe_tokens",
-        expr("size(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]', 0))")
-          .cast(LongType))
+    documents.select(col("*") +: tokenCountCols(split(trim(col("text")), " +"),
+      TextModels.regexTokens): _*)
+
+  /** the q39 column list over the raw whitespace split
+    * (`split(trim(text), ' +')`) and the regex token array */
+  private def tokenCountCols(rawWs: Column, regexToks: Column): Seq[Column] = Seq(
+    size(rawWs).cast(LongType).as("n_ws_tokens"),
+    size(array_distinct(rawWs)).cast(LongType).as("n_distinct_tokens"),
+    size(regexToks).cast(LongType).as("n_bpe_tokens"))
 
   /** q39: token counting — whitespace tokens, distinct tokens, and a
     * BPE-ish regex segmentation (letter runs / digit runs / single
@@ -367,22 +368,31 @@ object TextAnalysis {
 
   /** the q54 kernel in append form — per n-gram size one codegen
     * frequency-stats pass, shares in basis points, repetition flag. */
-  private[graft] def withRepetitionCols(documents: DataFrame): DataFrame = {
+  private[graft] def withRepetitionCols(documents: DataFrame): DataFrame =
+    documents.select(col("*") +: repetitionCols(Dedup.tokens(col("text"))): _*)
+
+  /** the q54 column list over `tokens(text)` */
+  private def repetitionCols(toks: Column): Seq[Column] = {
     def stats(k: Int) = graft.functions.HashExpressions.array_freq_stats(
-      Dedup.shingleHashes(col("text"), k))
-    documents
-      .withColumn("__s1", stats(1)).withColumn("__s2", stats(2))
-      .withColumn("__s3", stats(3))
-      .withColumn("top_token_bp", expr("(10000 * __s1[2]) DIV nullif(__s1[0], 0)"))
-      .withColumn("top_2gram_bp", expr("(10000 * __s2[2]) DIV nullif(__s2[0], 0)"))
-      .withColumn("dup_3gram_bp",
-        expr("(10000 * (__s3[0] - __s3[1])) DIV nullif(__s3[0], 0)"))
-      .withColumn("is_repetitive",
-        col("top_token_bp") > TopTokenMaxBp ||
-          col("top_2gram_bp") > Top2GramMaxBp ||
-          col("dup_3gram_bp") > Dup3GramMaxBp)
-      .drop("__s1", "__s2", "__s3")
+      graft.functions.HashExpressions.md5_shingle_hashes(toks, k))
+    val (s1, s2, s3) = (stats(1), stats(2), stats(3))
+    val top = div(lit(10000) * s1.getItem(2), nonZero(s1.getItem(0)))
+    val top2 = div(lit(10000) * s2.getItem(2), nonZero(s2.getItem(0)))
+    val dup3 = div(lit(10000) * (s3.getItem(0) - s3.getItem(1)), nonZero(s3.getItem(0)))
+    Seq(top.as("top_token_bp"), top2.as("top_2gram_bp"), dup3.as("dup_3gram_bp"),
+      (top > TopTokenMaxBp || top2 > Top2GramMaxBp || dup3 > Dup3GramMaxBp).as("is_repetitive"))
   }
+
+  /** `nullif(x, 0)` spelled as a CASE: Spark 4 rewrites `nullif` into a
+    * common-expression projection of its own, one more Project per use */
+  private def nonZero(x: Column): Column = when(x =!= 0, x)
+
+  /** SQL `a DIV b` (truncating integral division, null on a null side) */
+  private def div(a: Column, b: Column): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      org.apache.spark.sql.catalyst.expressions.IntegralDivide(
+        org.apache.spark.sql.graft.ColumnBridge.expression(a),
+        org.apache.spark.sql.graft.ColumnBridge.expression(b)))
 
   /** canonical form used for fingerprinting: lowercase, strip
     * non-alphanumerics, collapse whitespace. */
@@ -450,13 +460,15 @@ object TextAnalysis {
     * ONE definition with the standalone operator and the docReport
     * view, so the three cannot drift). */
   private[graft] def withEntropyCols(documents: DataFrame): DataFrame =
-    documents
-      .withColumn("__e", graft.functions.HashExpressions.array_entropy_stats(
-        Dedup.shingleHashes(col("text"), 1)))
-      .withColumn("entropy_n_tokens", col("__e").getItem(0))
-      .withColumn("entropy_distinct", col("__e").getItem(1))
-      .withColumn("entropy_mb", col("__e").getItem(2))
-      .drop("__e")
+    documents.select(col("*") +: entropyCols(Dedup.tokens(col("text"))): _*)
+
+  /** the q137 column list over `tokens(text)` */
+  private def entropyCols(toks: Column): Seq[Column] = {
+    val e = graft.functions.HashExpressions.array_entropy_stats(
+      graft.functions.HashExpressions.md5_shingle_hashes(toks, 1))
+    Seq(e.getItem(0).as("entropy_n_tokens"), e.getItem(1).as("entropy_distinct"),
+      e.getItem(2).as("entropy_mb"))
+  }
 
   private def entropyView(df: DataFrame): DataFrame =
     df.select(col("doc_id"),
@@ -493,7 +505,7 @@ object TextAnalysis {
     * [[LmScreen.lmModel]], [[Dsir.dsirModel]] — the frozen-model
     * contract), then computes this frame in ONE pure row-local pass
     * (ZERO exchanges, plan-pinned: every kernel is a column
-    * expression, the models are broadcast-free literal maps) and
+    * expression, the models ride inside their kernels as hash maps) and
     * persists it WITHOUT the text column. Every per-doc screen
     * becomes a column read over the narrow frame, and every
     * corpus-level view (lang confusion, fingerprint dedup, split
@@ -507,31 +519,46 @@ object TextAnalysis {
     * n_chars), q37/q46 predicted_lang, q38 quality fields
     * (computed_chars…is_quality), q39 token counts, q54 repetition
     * fields, q40/q42/q70 fingerprint, q30 content_hash, q75 rar_*,
-    * q100 lm_*, q101 dsir_*. */
+    * q100 lm_*, q101 dsir_*.
+    *
+    * CONSTRUCTION RULE: build a wide row-local frame with one or two
+    * `select`s, never a `withColumn` ladder — each `withColumn`
+    * re-analyses the whole plan (this frame's 40-step ladder built 84
+    * analysed Projects and took ~0.5 s to construct). Two, not one:
+    * the first projection materialises the token arrays several
+    * features share, the second selects every feature column over them
+    * (plan-pinned: ≤ 2 ProjectExec, no lambda). Inlining the arrays
+    * into one projection re-tokenizes once per reference. */
   def docReport(documents: DataFrame,
                 rarityModel: (Map[String, Long], Long),
                 lmModel: LmScreen.LmModel,
                 dsirModel: Dsir.DsirModel,
-                benchWindowHashes: Seq[Long] = Nil): DataFrame =
-    documents
-      .transform(withPredictedLang(_))
-      .transform(withQualityCols)
-      .transform(withTokenCountCols)
-      .transform(withRepetitionCols)
-      .transform(withEntropyCols)
-      .transform(withGopherCols)
-      .withColumn("fingerprint", fingerprintCol(col("text")))
-      .withColumn("content_hash", md5(col("text").cast(BinaryType)))
-      .withColumn("chunks", Corpus.chunkArrayOfText("text"))
-      .transform(Frequency.rarityScoreRowLocal(_, rarityModel._1, rarityModel._2))
-      .transform(LmScreen.lmScoreRowLocal(_, lmModel))
-      .transform(Dsir.dsirScoreRowLocal(_, dsirModel))
-      // q113's frozen-set probe + the q114 apply — still one pure
-      // row-local projection (the benchmark window set is the fourth
-      // frozen model; Nil is legal and yields empty spans with the
-      // clean hash equal to the content's own normalized hash)
-      .transform(Dedup.withContamApplyCols(_, benchWindowHashes))
-      .drop("text")
+                benchWindowHashes: Seq[Long] = Nil): DataFrame = {
+    // projection 1: the shared token arrays, each tokenized once
+    val arrays = documents.select(col("*"),
+      TextModels.regexTokens.as("__rt"), TextModels.wsTokens.as("__wt"),
+      Dedup.tokens(col("text")).as("__tx"), split(trim(col("text")), " +").as("__st"))
+    // projection 2: every feature column, the same column lists the
+    // standalone operators select
+    val features =
+      (predictedLangCol.as("predicted_lang") +: qualityCols) ++
+        tokenCountCols(col("__st"), col("__rt")) ++
+        repetitionCols(col("__tx")) ++ entropyCols(col("__tx")) ++
+        gopherCols(col("__wt")) ++
+        Seq(fingerprintCol(col("text")).as("fingerprint"),
+          md5(col("text").cast(BinaryType)).as("content_hash"),
+          Corpus.chunkSpansCol(col("__rt")).as("chunks")) ++
+        Frequency.rarityCols(col("__rt"), rarityModel._1, rarityModel._2) ++
+        LmScreen.lmCols(col("__wt"), lmModel) ++
+        Dsir.dsirCols(col("__wt"), dsirModel) ++
+        // q113's frozen-set probe + the q114 apply (the benchmark window
+        // set is the fourth frozen model; Nil is legal and yields empty
+        // spans with the clean hash equal to the content's own
+        // normalized hash)
+        Dedup.contamApplyCols(col("__wt"), benchWindowHashes)
+    val keep = documents.columns.filter(_ != "text").map(c => col(c))
+    arrays.select(keep ++ features: _*)
+  }
 
   // Views over the (persisted) report frame — each must reproduce its
   // standalone operator exactly (spec-proven in DocReportSpec).

@@ -163,13 +163,11 @@ object DocStreams {
     * batch q75 screen ([[graft.operators.Frequency.rarityScreen]]).
     * The model ([[graft.operators.Frequency.rarityModel]]: token →
     * exact count + corpus total, ≤ capacity entries) is trained
-    * batch-side on the released corpus and rides as ONE map literal;
-    * scoring is the same integer cost formulas, evaluated per row with
-    * higher-order functions — STATELESS, so it runs at any ingest rate
-    * with zero state store. (The HOF fold evaluates interpreted — fine
-    * at ingest rates; the batch screen keeps the codegen explode path
-    * for full-corpus scans.) Docs with zero tokens are dropped, same
-    * contract as the batch screen. */
+    * batch-side on the released corpus and rides inside the
+    * `rarity_score` kernel as a hash map; scoring is the same integer
+    * cost formulas, one kernel call per row — STATELESS, so it runs at
+    * any ingest rate with zero state store. Docs with zero tokens are
+    * dropped, same contract as the batch screen. */
   def rarityLookup(docs: DataFrame, model: Map[String, Long], nTotal: Long,
                    phiBp: Int = 10, fenceOovBp: Int = 5000): DataFrame =
     graft.operators.Frequency.rarityScoreRowLocal(docs, model, nTotal, phiBp, fenceOovBp)
@@ -181,8 +179,8 @@ object DocStreams {
   /** Ingest-time LM perplexity screen (q100's stream twin): score each
     * arriving document against the FROZEN collected bigram model
     * ([[graft.operators.LmScreen.lmModel]]) — vocabulary fold, pair /
-    * context / unseen surprisal lookups and the per-doc mean, all as
-    * one row-local aggregate expression over the token array (no
+    * context / unseen surprisal lookups and the per-doc mean, all in
+    * the one row-local `lm_score` kernel over the token array (no
     * explode, no state, no shuffle). Retraining belongs batch-side
     * (the rarity/BPE discipline: a silently drifting model would
     * re-score the corpus); spec-equal to the batch q100. */
@@ -195,9 +193,9 @@ object DocStreams {
   /** Ingest-time DSIR relevance screen (q101's stream twin): score
     * each arriving document against the FROZEN collected delta model
     * ([[graft.operators.Dsir.dsirModel]] — exactly
-    * [[graft.operators.Dsir.Buckets]] entries) as one row-local
-    * aggregate over the token array: hash each token into its bucket,
-    * look the bucket's delta up in the literal map, sum. No explode,
+    * [[graft.operators.Dsir.Buckets]] entries) with the one row-local
+    * `dsir_score` kernel over the token array: hash each token into its
+    * bucket, read the bucket's delta, sum. No explode,
     * no state, no shuffle; retraining is batch-side (the frozen-model
     * contract — a drifting model would silently re-score the corpus).
     * Spec-equal to the batch q101. */

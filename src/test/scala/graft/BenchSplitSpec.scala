@@ -26,6 +26,11 @@ class BenchSplitSpec extends AnyFunSuite {
       "base_build_256c_s", "maintain_50row_256c_s"), Map()),
     "report" -> (Set("model_train_s", "standalone_14ops_s", "frame_build_persist_s",
       "views_14ops_s"), Map()),
+    "release" -> (Set("cold_classes", "warm_pass_ms_p50", "warm_compiles_p50", "warm_compile_ms_p50"),
+      Seq("cold", "warm1").map(_ -> (Seq("rarity_model", "lm_model", "dsir_model", "doc_report_write",
+        "view_q70_dataset_split", "view_q101b_dsir_resample", "release_stores", "ingest_door",
+        "ivf_centroids", "view_q104c_semdedup").flatMap(op => Seq(s"${op}_ms", s"${op}_compiles",
+        s"${op}_compile_ms")).toSet ++ Set("pass_ms", "compiles", "compile_ms"))).toMap),
     "rel" -> (Set("store_build_s", "probe_s"), Map()),
     "cut" -> (Set("upstream_scans_s", "combine_s"), Map()),
     "cluster" -> (Set("ivf_train_s", "cards_frozen_s", "sample_frozen_s",

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{BpeExpressions, HashExpressions, LogExpressions, VectorExpressions}
+import graft.functions.{BpeExpressions, HashExpressions, LogExpressions, TextKernels, VectorExpressions}
 
 /** CODEGEN ↔ INTERPRETED agreement for every custom Catalyst
   * expression (r15): 15 of the 22 doGenCode sites delegate to the same
@@ -92,6 +92,88 @@ class CodegenAgreementSpec extends AnyFunSuite {
     assert(gen.length == int.length && gen.nonEmpty)
     gen.zip(int).zipWithIndex.foreach { case ((g, i2), idx) =>
       assert(g == i2, s"row $idx diverges between codegen and interpreted: $g vs $i2")
+    }
+  }
+
+  /** the frozen-model text kernels and the nearest-cell kernel over
+    * edge rows: empty and null text, a zero vector, NaN components, a
+    * short embedding, a tied score (zero divisors are checked apart:
+    * under ANSI they fail in both modes) */
+  private val cells = Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0), Seq(0.5, 0.5, 3.0))
+  private def kernelBattery(s: org.apache.spark.sql.SparkSession, withCells: Seq[Seq[Double]]) = {
+    import s.implicits._
+    val nan = Double.NaN
+    val rows = Seq[(Long, String, Seq[Double])](
+      (0L, "the cat sat on the mat, the end", Seq(1.0, 1.0, 0.0)),   // tie between cells 0 and 1
+      (1L, "", Seq(0.2, -0.4, 1.5)),
+      (2L, null, null),
+      (3L, "a b a b a b c 42 !", Seq(nan, 1.0, 0.0)),
+      (4L, "x  y   z x y z x y", Seq(2.0, 1.0)),                     // short embedding
+      (5L, "Unk <unk> unk the the", Seq(-1.0, -1.0, -1.0)),
+      (6L, "zz", Seq(nan, nan, nan)))
+    val df = rows.toDF("id", "text", "emb")
+      .withColumn("norm", sqrt(VectorExpressions.vec_norm_sq(col("emb"))))
+    val ws = graft.operators.TextModels.wsTokens
+    val rx = graft.operators.TextModels.regexTokens
+    val lm = graft.operators.LmScreen.LmModel(Set("the", "a", "b", "<unk>"),
+      Map("the the" -> 900L, "a b" -> 100L, "<unk> the" -> 2500L),
+      Map("the" -> 3000L, "a" -> 1200L), 4096L)
+    val spans = TextKernels.window_spans(ws, Seq(
+      graft.functions.HashExpressions.Md5Kernels.hashRange(
+        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
+          Array("a", "b").map(org.apache.spark.unsafe.types.UTF8String.fromString)), 0, 2)), 2)
+    df.select(col("id"),
+        TextKernels.rarity_score(rx, Map("the" -> 3L, "a" -> 3L, "b" -> 3L), 40L, 10, 5000).as("rar"),
+        TextKernels.lm_score(ws, lm.vocab, lm.pairMb, lm.ctxMb, lm.unkMb, "<unk>", 3400L).as("lm"),
+        TextKernels.dsir_score(ws, (0 until 64).map(i => (i % 7 - 3).toLong), "dsir:").as("ds"),
+        TextKernels.word_class_counts(ws, Seq("the", "and", "a")).as("wc"),
+        spans.as("sp"),
+        TextKernels.cut_tokens(ws, spans).as("cut"),
+        TextKernels.chunk_spans(rx, 4, 1).as("ch"),
+        VectorExpressions.nearest_cell(col("emb"), col("norm"), withCells).as("nc"))
+      .orderBy("id").collect().map(_.toSeq)
+  }
+
+  private def interpreted = {
+    val interp = spark.newSession()
+    interp.conf.set("spark.sql.codegen.wholeStage", "false")
+    interp.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    interp
+  }
+
+  test("the text and nearest-cell kernels agree between codegen and interpreted, edge rows included") {
+    val gen = kernelBattery(spark, cells)
+    val int = kernelBattery(interpreted, cells)
+    assert(gen.length == 7)
+    gen.zip(int).foreach { case (g, i) => assert(g.toString == i.toString, s"$g vs $i") }
+  }
+
+  test("nearest_cell keeps greatest's order: null lowest, NaN highest, ties to the larger cell") {
+    import spark.implicits._
+    val df = Seq[(Long, Seq[Double])]((0L, Seq(1.0, 1.0, 0.0)), (1L, null),
+        (2L, Seq(Double.NaN, 1.0, 0.0)), (3L, Seq(2.0, 1.0)), (4L, Seq(-1.0, -1.0, -1.0)))
+      .toDF("id", "embedding").withColumn("norm", sqrt(VectorExpressions.vec_norm_sq(col("embedding"))))
+      .withColumn("__dots", VectorExpressions.vec_cell_dots(col("embedding"), cells))
+    val structs = cells.zipWithIndex.map { case (c, i) =>
+      struct((element_at(col("__dots"), i + 1) / (col("norm") * math.sqrt(c.map(x => x * x).sum)))
+        .as("score"), lit(i).as("cell")) }
+    val got = df.select(col("id"), VectorExpressions.nearest_cell(col("embedding"), col("norm"), cells)
+      .as("k"), greatest(structs: _*).as("g")).orderBy("id").collect()
+    got.foreach(r => assert(r.get(1) == r.get(2), s"row ${r.get(0)}: kernel ${r.get(1)} vs greatest ${r.get(2)}"))
+    assert(got(0).getStruct(1).getInt(1) == 1, "a tied score goes to the larger cell")
+  }
+
+  test("nearest_cell: a zero vector or a zero centroid fails under ANSI in both modes, as the division does") {
+    import spark.implicits._
+    def run(s: org.apache.spark.sql.SparkSession, emb: Seq[Double], cs: Seq[Seq[Double]]) = {
+      import s.implicits._
+      Seq((0L, emb)).toDF("id", "emb").select(VectorExpressions.nearest_cell(col("emb"),
+        sqrt(VectorExpressions.vec_norm_sq(col("emb"))), cs)).collect()
+    }
+    Seq((Seq(0.0, 0.0, 0.0), cells), (Seq(1.0, 2.0, 3.0), cells :+ Seq(0.0, 0.0, 0.0))).foreach {
+      case (emb, cs) =>
+        intercept[Exception](run(spark, emb, cs))
+        intercept[Exception](run(interpreted, emb, cs))
     }
   }
 }

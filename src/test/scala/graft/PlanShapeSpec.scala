@@ -304,8 +304,16 @@ class PlanShapeSpec extends AnyFunSuite {
       "vocabulary and total must broadcast back onto the scoring scan")
     assert(!plan.contains("SortMergeJoin"),
       "a shuffle join on tokens would be the 100 TB killer the sketch plan avoids")
-    assert(plan.contains("ObjectHashAggregate"),
+    // the model trains at construction (TextModels): its first read is
+    // the map-side-combined sketch, the LM election on the K-bounded
+    // TakeOrdered, and no join at all
+    val tplan = graft.operators.TextModels.firstRead(Tables.documents(spark, dir),
+      graft.operators.TextModels.AllParts, 1024).queryExecution.executedPlan.toString()
+    assert(tplan.contains("ObjectHashAggregate"),
       "the vocabulary sketch must be map-side combined")
+    assert(tplan.contains(s"TakeOrderedAndProject(limit=${graft.operators.TextModels.firstReadRows}"),
+      "the training read returns through the K-bounded distributed top-K")
+    assert(!tplan.contains("Join"), "the training read joins nothing")
   }
 
   test("LM screen: one scoring scan, broadcast model, no token shuffle-join") {
@@ -323,8 +331,6 @@ class PlanShapeSpec extends AnyFunSuite {
       .count(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
     assert(scans == 1,
       s"the LM screen must scan the corpus exactly once, saw $scans")
-    assert(plan.contains("log2mb"),
-      "the surprisal kernel must ride as the single codegen expression")
     val vplan = graft.operators.LmScreen.vocabElection(Tables.documents(spark, dir), Nil)
       .queryExecution.executedPlan.toString()
     assert(vplan.contains("TakeOrderedAndProject(limit=16"),
@@ -524,8 +530,6 @@ class PlanShapeSpec extends AnyFunSuite {
       "nothing data-sized may shuffle-join on a token/bucket key")
     assert(!plan.contains("Window") && !plan.contains("CartesianProduct"),
       "no hot-key window; the only cross join broadcasts a 1-row total")
-    assert(plan.contains("log2mb"),
-      "the surprisal kernel must ride as the codegen expression")
   }
 
   test("DSIR resample: the draw is a K-bounded TakeOrdered, never a global sort") {
@@ -551,6 +555,39 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"),
       "the report frame must be a pure map-side scan")
     assert(!plan.contains("Join"), "frozen models are literals, not joins")
+    // two projections (the shared token arrays, then every feature
+    // column), not a withColumn ladder; and no CodegenFallback lambda
+    val ep = df.queryExecution.executedPlan
+    val projects = PlanWalks.nodes(ep).count(_.isInstanceOf[org.apache.spark.sql.execution.ProjectExec])
+    assert(projects <= 2, s"the report frame must be at most two projections, saw $projects:\n$ep")
+    val lambdas = PlanWalks.nodes(ep).flatMap(_.expressions).flatMap(_.collect {
+      case l: org.apache.spark.sql.catalyst.expressions.LambdaFunction => l })
+    assert(lambdas.isEmpty, s"no lambda may break the codegen stage: $lambdas")
+  }
+
+  test("IVF cell assignment runs on the nearest-cell kernel: no caller's plan holds greatest") {
+    val emb = Tables.embeddings(spark, dir)
+    val cents = Similarity.ivfCentroids(emb, 16)
+    val books = Similarity.pqCodebooks(emb)
+    val callers: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "annRecallSweep" -> (() => Similarity.annRecallSweep(emb)),
+      "ivfAssign" -> (() => Similarity.ivfAssign(emb, 16)),
+      "knnIvf" -> (() => Similarity.knnIvf(emb)),
+      "knnIvfFiltered" -> (() => Similarity.knnIvfFiltered(emb, Tables.documents(spark, dir))),
+      "knnIvfPq" -> (() => Similarity.knnIvfPq(emb)),
+      "knnIvfRpq" -> (() => Similarity.knnIvfRpq(emb)),
+      "clusterAssignWithModel" -> (() => Similarity.clusterAssignWithModel(emb, cents)),
+      "semanticDedupCellsWithModel" -> (() => Similarity.semanticDedupCellsWithModel(emb, cents)),
+      "vecReportWithModels" -> (() => Similarity.vecReportWithModels(emb, cents, books, 8, 64)))
+    callers.foreach { case (name, df) =>
+      val q = df()
+      q.collect()
+      val plan = q.queryExecution.executedPlan.toString()
+      assert("greatest\\(struct\\(score".r.findFirstIn(plan).isEmpty,
+        s"$name still assigns cells with greatest over (score, cell) structs")
+    }
+    val c = Similarity.clusterAssignWithModel(emb, cents).queryExecution.executedPlan.toString()
+    assert(c.contains("nearest_cell"), "the assignment must run on the kernel")
   }
 
   test("pq encode: scoring is one row-local scan against the broadcast model") {
@@ -745,10 +782,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // post-aggregate, so the chain appears in exactly ONE projection.
     val df = graft.operators.Dedup.decontamReport(Tables.documents(spark, dir))
     val plan = df.queryExecution.executedPlan.toString()
-    assert("md5_shingle_hashes".r.findAllIn(plan).length == 1,
-      s"the window-hash kernel must appear exactly once in q122's plan:\n${plan.take(3000)}")
-    assert("sorted_long_contains".r.findAllIn(plan).length == 1,
-      "the frozen-set probe must appear exactly once")
+    assert("window_spans".r.findAllIn(plan).length == 1,
+      s"the window-hash/probe/merge kernel must appear exactly once in q122's plan:\n${plan.take(3000)}")
     assert(!plan.contains("filter(__tk"),
       "the report never cuts tokens — counts come from the spans fold, not the cut lambda")
     assert(!plan.contains("Join") && !plan.contains("Window"),
