@@ -32,9 +32,8 @@ object TextKernels {
   /** an expression whose codegen is one virtual call into `kernel` —
     * the md5-shingle / CDC pattern */
   sealed trait KernelCodegen extends Expression {
-    def kernelName: String
     protected def genCall(ctx: CodegenContext, ev: ExprCode, args: String*): String = {
-      val ref = ctx.addReferenceObj(kernelName, this, getClass.getName)
+      val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
       s"${ev.value} = (${CodeGenerator.javaType(dataType)}) $ref.kernel(${args.mkString(", ")});"
     }
   }
@@ -48,8 +47,6 @@ object TextKernels {
   abstract class TokenKernel extends UnaryExpression with KernelCodegen {
     def kernel(a: ArrayData): Any
     override def checkInputDataTypes(): TypeCheckResult = stringArray(child, prettyName)
-    override def kernelName: String = prettyName
-    override def prettyName: String
     override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, a => genCall(ctx, ev, a))
@@ -345,7 +342,6 @@ object TextKernels {
       }
     override def dataType: DataType = CutType
     override def prettyName: String = "cut_tokens"
-    override def kernelName: String = prettyName
 
     def kernel(a: ArrayData, spans: ArrayData): InternalRow = {
       val n = a.numElements()
@@ -400,7 +396,6 @@ object TextKernels {
     override def dataType: DataType = ChunkArrayType
     override def nullable: Boolean = false
     override def prettyName: String = "chunk_spans"
-    override def kernelName: String = prettyName
 
     def kernel(a: ArrayData): ArrayData = {
       val n = if (a == null) 0 else a.numElements()
@@ -423,7 +418,7 @@ object TextKernels {
       kernel(child.eval(input).asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val c = child.genCode(ctx)
-      val ref = ctx.addReferenceObj(kernelName, this, getClass.getName)
+      val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
       ev.copy(code = code"""
         |${c.code}
         |${CodeGenerator.javaType(dataType)} ${ev.value} =

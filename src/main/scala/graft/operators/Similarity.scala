@@ -690,7 +690,7 @@ object Similarity {
 
   private def ivfPqIndexFor(embeddings: DataFrame, cents: Seq[Seq[Double]],
                             books: Seq[Seq[Seq[Double]]], m: Int, d: Int): DataFrame = {
-    val (eScored, scores, best) = withCellScores(withNorm(embeddings), cents)
+    val (eScored, _, best) = withCellScores(withNorm(embeddings), cents)
     encodeWithBooks(
         eScored.withColumn("cell", best.getField("cell")),
         books, m, d, keep = Seq(col("vec_id"), col("cell")))
@@ -705,7 +705,7 @@ object Similarity {
     val books = pqCodebooks(embeddings, m, dim, k)
     if (cents.isEmpty || books.headOption.forall(_.isEmpty)) return emptyAdc(embeddings)
     val d = dim / m
-    val (eScored, scores, best) = withCellScores(withNorm(embeddings), cents)
+    val (eScored, scores, _) = withCellScores(withNorm(embeddings), cents)
     // the index shape is [[buildIvfPqIndex]] (same models, one scan).
     // The repartition is the same stage barrier as in [[pqAdcSearch]]:
     // it keeps the cell/encode expressions out of the probe join's
@@ -735,7 +735,7 @@ object Similarity {
     * float→double subtraction is exact (float widens losslessly), so
     * the DuckDB replay lands on identical residual doubles. */
   private def residualFrame(embeddings: DataFrame, cents: Seq[Seq[Double]]): DataFrame = {
-    val (eScored, scores, best) = withCellScores(withNorm(embeddings), cents)
+    val (eScored, _, best) = withCellScores(withNorm(embeddings), cents)
     val centLit = typedlit(cents.map(_.toIndexedSeq).toIndexedSeq)
     eScored
       .withColumn("cell", best.getField("cell"))
@@ -824,7 +824,7 @@ object Similarity {
         keep = Seq(col("vec_id").as("neighbor_id"), col("cell")))
       .select("neighbor_id", "cell", "pq_code")
       .repartition(embeddings.sparkSession.sessionState.conf.numShufflePartitions)
-    val (eScored, scores, best) = withCellScores(withNorm(embeddings), cents)
+    val (eScored, scores, _) = withCellScores(withNorm(embeddings), cents)
     val probeCells = slice(reverse(array_sort(array(scores: _*))), 1, nProbe)
       .getField("cell")
     val centLit = typedlit(cents.map(_.toIndexedSeq).toIndexedSeq)
@@ -934,7 +934,7 @@ object Similarity {
     val cents = ivfCentroids(embeddings, nCells)
     if (cents.isEmpty) // empty corpus: keep the schema, zero rows
       return withNorm(embeddings).withColumn("cell", lit(0))
-    val (withDots, scores, best) = withCellScores(withNorm(embeddings), cents)
+    val (withDots, _, best) = withCellScores(withNorm(embeddings), cents)
     withDots
       .withColumn("cell", best.getField("cell"))
       .drop("__dots")
@@ -1157,7 +1157,7 @@ object Similarity {
     if (cents.isEmpty)
       return emptyModelFrame(embeddings, "clusterAssignWithModel",
         e.select(col("vec_id"), lit(0L).as("cell"), lit(0L).as("cos_bp")))
-    val (withDots, scores, best) = withCellScores(e, cents)
+    val (withDots, _, best) = withCellScores(e, cents)
     withDots.select(col("vec_id"),
       best.getField("cell").cast("long").as("cell"),
       cosBp(best.getField("score")))
@@ -1235,7 +1235,7 @@ object Similarity {
       return emptyModelFrame(embeddings, "semanticDedupCellsWithModel",
         e0.select(col("vec_id"), lit(0L).as("cell"), lit(true).as("keep"),
           lit(null).cast("long").as("dup_of"), lit(null).cast("long").as("max_cos_bp")))
-    val (withDots, scores, best) = withCellScores(e0, cents)
+    val (withDots, _, best) = withCellScores(e0, cents)
     val e = withDots.select(col("vec_id"), col("embedding"), col("norm"),
       best.getField("cell").cast("long").as("cell"))
     // dimension-sized (one row per cell); assert_true throws on the
@@ -1454,7 +1454,7 @@ object Similarity {
     require(books.size == m && dim % m == 0, s"need $m codebooks for dim $dim")
     require(books.forall(_.nonEmpty), "empty codebook: train on a non-empty corpus")
     requirePackable(m, books.map(_.size).max.max(2))
-    val (withDots, scores, best) = withCellScores(e, cents)
+    val (withDots, _, best) = withCellScores(e, cents)
     val base = withDots
       .withColumn("cell", best.getField("cell").cast("long"))
       .withColumn("cos_bp", cosBp(best.getField("score")))
