@@ -215,13 +215,15 @@ object BenchSplit {
       var rar: (Map[String, Long], Long) = null
       var lm: LmScreen.LmModel = null
       var ds: Dsir.DsirModel = null
+      var report: DataFrame = null
       var cents: Seq[Seq[Double]] = null
       var drains = 0
       val ops: Seq[(String, () => Unit)] = Seq(
         "rarity_model" -> (() => rar = Frequency.rarityModel(r.docs)),
         "lm_model" -> (() => lm = LmScreen.lmModel(r.docs)),
         "dsir_model" -> (() => ds = Dsir.dsirModel(r.docs)),
-        "doc_report_write" -> (() => r.save(TextAnalysis.docReport(r.docs, rar, lm, ds), "report")),
+        "doc_report_build" -> (() => report = TextAnalysis.docReport(r.docs, rar, lm, ds)),
+        "doc_report_write" -> (() => r.save(report, "report")),
         "view_q70_dataset_split" -> (() =>
           rows(TextAnalysis.reportDatasetSplit(r.load("report"), 500, 500))),
         "view_q101b_dsir_resample" -> (() =>

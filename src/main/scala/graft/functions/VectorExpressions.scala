@@ -518,55 +518,50 @@ object VectorExpressions {
   val NearestCellType: StructType = StructType(Seq(
     StructField("score", DoubleType), StructField("cell", IntegerType, nullable = false)))
 
-  /** IVF cell assignment in one pass: struct(score, cell) of the cell
-    * maximising score_c = dot(v, m_c) / (norm · |m_c|) — exactly what
-    * `greatest(struct(score_0, 0), …, struct(score_{C−1}, C−1))` returns,
-    * without building and comparing C structs per row. The order is
-    * greatest's: a null score ranks lowest, NaN ranks highest (and
-    * equals NaN), −0.0 equals 0.0, and a tie goes to the larger cell.
-    * Each score is Spark's double division: a null norm or embedding
-    * gives a null score, and a zero divisor fails under ANSI
-    * (`failOnError`, the session's mode when the expression is built)
-    * and gives null otherwise. Dots fold in [[CellDotsExpr]]'s order. */
-  case class NearestCell(left: Expression, right: Expression, cells: Array[Array[Double]],
+  /** IVF cell assignment over a row's [[CellDotsExpr]] array:
+    * struct(score, cell) of the cell maximising
+    * score_c = dots[c] / (norm · cellNorms[c]) — exactly what
+    * `greatest(struct(score_0, 0), …, struct(score_{C−1}, C−1))` over
+    * those divisions returns, without building and comparing C structs
+    * per row. The order is greatest's: a null score ranks lowest, NaN
+    * ranks highest (and equals NaN), −0.0 equals 0.0, and a tie goes to
+    * the larger cell. Each score is Spark's double division: a null
+    * dots array or norm gives a null score, and a zero divisor fails
+    * under ANSI (`failOnError`, the session's mode when the expression
+    * is built) and gives null otherwise. */
+  case class NearestCell(left: Expression, right: Expression, cellNorms: Array[Double],
                          failOnError: Boolean) extends BinaryExpression {
-    require(cells.nonEmpty, "nearest_cell needs at least one centroid")
+    require(cellNorms.nonEmpty, "nearest_cell needs at least one centroid")
     override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _), DoubleType) =>
+      case (ArrayType(DoubleType, _), DoubleType) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case (l, r) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"nearest_cell expects (array<float|double>, double), got ($l, $r)")
+        s"nearest_cell expects (array<double>, double), got ($l, $r)")
     }
     override def dataType: DataType = NearestCellType
     override def nullable: Boolean = false
     override def prettyName: String = "nearest_cell"
     override protected def stringArgs: Iterator[Any] =
-      Iterator(left, right, s"cells[${cells.length}]")
-    private val cellNorms = cells.map(c => math.sqrt(c.map(x => x * x).sum))
+      Iterator(left, right, s"cells[${cellNorms.length}]")
 
-    /** `x` is null when the embedding is, `norm` when the norm is */
-    def kernel(x: ArrayData, norm: java.lang.Double): org.apache.spark.sql.catalyst.InternalRow = {
-      val g = if (x == null) null else getter(left)
+    /** `dots` is null when the embedding is, `norm` when the norm is */
+    def kernel(dots: ArrayData, norm: java.lang.Double): org.apache.spark.sql.catalyst.InternalRow = {
+      if (dots != null && dots.numElements() != cellNorms.length)
+        throw new IllegalArgumentException(
+          s"nearest_cell: ${dots.numElements()} dots for ${cellNorms.length} cells")
       var best = 0
       var bestScore: java.lang.Double = null
       var c = 0
-      while (c < cells.length) {
+      while (c < cellNorms.length) {
         val score: java.lang.Double =
-          if (norm == null || x == null) null
+          if (norm == null || dots == null || dots.isNullAt(c)) null
           else {
             val div = norm * cellNorms(c)
             if (div == 0.0) {
               if (failOnError)
                 throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero in nearest_cell.")
               null
-            } else {
-              val m = cells(c)
-              val n = math.min(x.numElements(), m.length)
-              var s = 0.0
-              var i = 0
-              while (i < n) { s += read(x, g, i) * m(i); i += 1 }
-              s / div
-            }
+            } else dots.getDouble(c) / div
           }
         val wins =
           if (score == null) bestScore == null
@@ -597,13 +592,11 @@ object VectorExpressions {
 
     override def equals(o: Any): Boolean = o match {
       case n: NearestCell => left == n.left && right == n.right && failOnError == n.failOnError &&
-        ((cells eq n.cells) || java.util.Arrays.deepEquals(
-          cells.asInstanceOf[Array[AnyRef]], n.cells.asInstanceOf[Array[AnyRef]]))
+        java.util.Arrays.equals(cellNorms, n.cellNorms)
       case _ => false
     }
     override def hashCode(): Int =
-      31 * (31 * left.hashCode() + right.hashCode()) +
-        java.util.Arrays.deepHashCode(cells.asInstanceOf[Array[AnyRef]])
+      31 * (31 * left.hashCode() + right.hashCode()) + java.util.Arrays.hashCode(cellNorms)
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -611,10 +604,12 @@ object VectorExpressions {
   }
 
   /** the nearest IVF cell of each row as struct(score, cell) — see
-    * [[NearestCell]]; `norm` is the embedding's L2 norm column */
-  def nearest_cell(embedding: Column, norm: Column, cells: Seq[Seq[Double]]): Column =
-    ColumnBridge.column(NearestCell(ColumnBridge.expression(embedding),
-      ColumnBridge.expression(norm), cells.map(_.toArray).toArray,
+    * [[NearestCell]]; `dots` is the row's [[vec_cell_dots]] over the
+    * centroids, `norm` the embedding's L2 norm, `cellNorms` the
+    * centroids' L2 norms */
+  def nearest_cell(dots: Column, norm: Column, cellNorms: Seq[Double]): Column =
+    ColumnBridge.column(NearestCell(ColumnBridge.expression(dots),
+      ColumnBridge.expression(norm), cellNorms.toArray,
       org.apache.spark.sql.internal.SQLConf.get.ansiEnabled))
 
   /** Column API: codegen'd dot product (inputs auto-cast to

@@ -90,8 +90,6 @@ object Dsir {
   /** race-uniform prefix. */
   val RacePrefix = "race:"
 
-  private def tokCol: Column = split(trim(lower(coalesce(col("text"), lit("")))), " +")
-
   /** feature bucket of a token: md5_60("dsir:" ‖ t) mod B. md5_60 is
     * nonnegative, so pmod ≡ %, but pmod documents the intent. */
   private[operators] def bucketCol(t: Column): Column =
@@ -104,15 +102,14 @@ object Dsir {
     * [[TextModels]] in one corpus read at construction; the deltas are
     * driver arithmetic. */
   private[operators] def deltaModel(docs: DataFrame): DataFrame =
-    TextModels.dsirFrame(docs, TextModels.train(docs,
-      TextModels.Parts(rarity = false, lm = false, dsir = true)).dsir.get)
+    TextModels.dsirFrame(docs, TextModels.train(docs, TextModels.DsirOnly).dsir.get)
 
   /** unordered weight core — the scoring scan: every document has ≥ 1
     * token (the empty text canonicalizes to one empty token), so one
     * inner broadcast join + one map-side-combined aggregate surfaces
     * every document with no join-back. */
   private def weightsUnordered(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("lang"), explode(tokCol).as("t"))
+    docs.select(col("doc_id"), col("lang"), explode(TextModels.wsTokens).as("t"))
       .select(col("doc_id"), col("lang"), bucketCol(col("t")).as("f"))
       .join(broadcast(deltaModel(docs)), Seq("f"))
       .groupBy("doc_id", "lang")
@@ -161,7 +158,7 @@ object Dsir {
   }
 
   def dsirModel(docs: DataFrame): DsirModel =
-    TextModels.forRelease(docs, 10, 1024)(_.dsir, _.copy(dsir = None))
+    TextModels.forRelease(docs, 10, 1024, TextModels.DsirOnly)(_.dsir, _.copy(dsir = None))
 
   /** the q101 per-document fields against a FROZEN collected model —
     * `dsir_n_tokens` / `dsir_weight_mb` / `dsir_keep` over a whitespace

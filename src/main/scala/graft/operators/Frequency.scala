@@ -149,8 +149,7 @@ object Frequency {
     * beyond the 100 TB design point. */
   def rarityScreen(docs: DataFrame, phiBp: Int = 10, capacity: Int = 1024,
                    fenceOovBp: Int = 5000): DataFrame = {
-    val model = TextModels.train(docs, TextModels.Parts(rarity = true, lm = false, dsir = false),
-      phiBp, capacity).rarity.get
+    val model = TextModels.train(docs, TextModels.RarityOnly, phiBp, capacity).rarity.get
     val (vocab, total) = TextModels.rarityFrames(docs, model)
     val keyed = docs.select(col("doc_id"), explode(TextModels.regexTokens).as("tok"))
     keyed.join(broadcast(vocab), Seq("tok"), "left")
@@ -178,7 +177,8 @@ object Frequency {
     * [[graft.streaming.DocStreams.rarityLookup]]. */
   def rarityModel(docs: DataFrame, phiBp: Int = 10,
                   capacity: Int = 1024): (Map[String, Long], Long) =
-    TextModels.forRelease(docs, phiBp, capacity)(_.rarity, _.copy(rarity = None))
+    TextModels.forRelease(docs, phiBp, capacity,
+      TextModels.RarityOnly)(_.rarity, _.copy(rarity = None))
 
   /** the q75 per-document fields against the FROZEN collected
     * vocabulary — `rar_n_tokens` / `rar_n_oov` / `rar_oov_bp` /
@@ -237,8 +237,7 @@ object Frequency {
     * exposed for the plan pin now that [[pmiCollocations]] localizes
     * its result. */
   private[graft] def pmiPairCounts(docs: DataFrame): DataFrame = {
-    val toks = docs.select(col("lang"),
-      expr("split(trim(lower(coalesce(text, ''))), ' +')").as("tk"))
+    val toks = docs.select(col("lang"), TextModels.wsTokens.as("tk"))
     val counts = toks.select(col("lang"), explode(col("tk")).as("tok"))
       .groupBy("lang", "tok").agg(count(lit(1)).as("cnt"))
     // vocab (≤ V·langs rows) is MODEL-sized — localized so the election
@@ -348,8 +347,7 @@ object Frequency {
   def vocabDrift(relA: DataFrame, relB: DataFrame): DataFrame = {
     import graft.functions.LogExpressions.log2mb
     val v = lit(DriftVocabK.toLong)
-    def toks(rel: DataFrame) = rel.select(
-      explode(expr("split(trim(lower(coalesce(text, ''))), ' +')")).as("tok"))
+    def toks(rel: DataFrame) = rel.select(explode(TextModels.wsTokens).as("tok"))
     val ta = toks(relA)
     // ONE scan per release (the before-plan paid 3 of A and 2 of B):
     // A's full token counts are checkpointed — the vocabulary election,

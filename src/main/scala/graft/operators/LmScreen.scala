@@ -129,11 +129,6 @@ object LmScreen {
   // operator
   // ---------------------------------------------------------------
 
-  /** whitespace tokens under the dedup-family canonicalization (null
-    * text canonicalizes to the empty string — one empty token, zero
-    * bigrams — so the sentinel row below still surfaces the doc). */
-  private def tokCol: Column = split(trim(lower(coalesce(col("text"), lit("")))), " +")
-
   /** bigram pair structs: an index transform over the token array —
     * ascending sequence sliced so 0/1-token docs yield no pairs. */
   private val BigramsExpr =
@@ -155,7 +150,7 @@ object LmScreen {
                             carry: Seq[String] = Nil, sentinel: Boolean = false): DataFrame = {
     val pairs = if (sentinel) s"concat(array($SentinelExpr), $BigramsExpr)" else BigramsExpr
     val keep = (gk ++ carry.filterNot(gk.contains)).distinct
-    docs.select(col("doc_id") +: keep.map(col) :+ tokCol.as("tk"): _*)
+    docs.select(col("doc_id") +: keep.map(col) :+ TextModels.wsTokens.as("tk"): _*)
       .select(col("doc_id") +: keep.map(col) :+ explode(expr(pairs)).as("bg"): _*)
       .select(col("doc_id") +: keep.map(col) :+ col("bg.t1").as("t1") :+
         col("bg.t2").as("t2") :+ col("bg.is_doc").as("is_doc"): _*)
@@ -169,19 +164,17 @@ object LmScreen {
         col("is_doc"): _*)
   }
 
-  /** the LAZY vocabulary-election frame — top-[[VocabK]] train tokens
-    * under the total (count desc, token asc) order, via the K-bounded
-    * distributed top-K (global: TakeOrdered; grouped: the bounded-heap
-    * TopKPerKey). Exposed so PlanShapeSpec can pin the election shape
-    * now that [[model]] collects its result. */
+  /** the LAZY per-group vocabulary-election frame — each group's
+    * top-[[VocabK]] train tokens under the total (count desc, token
+    * asc) order, on the bounded-heap TopKPerKey. Exposed so PlanShapeSpec
+    * can pin the election shape now that [[model]] collects its result
+    * (the global election is [[TextModels.firstRead]]'s). */
   private[graft] def vocabElection(docs: DataFrame, gk: Seq[String]): DataFrame = {
-    val train = docs.filter(pmod(col("doc_id"), lit(TrainMod.toLong)) === 0)
-    val counts = train
-      .select(gk.map(col) :+ explode(tokCol).as("tok"): _*)
+    require(gk.nonEmpty, "the global vocabulary is elected by TextModels.firstRead")
+    val counts = docs.filter(pmod(col("doc_id"), lit(TrainMod.toLong)) === 0)
+      .select(gk.map(col) :+ explode(TextModels.wsTokens).as("tok"): _*)
       .groupBy(gk :+ "tok" map col: _*).agg(count(lit(1)).as("cnt"))
-    (if (gk.isEmpty) counts.orderBy(col("cnt").desc, col("tok").asc).limit(VocabK)
-     else graft.plans.TopKPerKey(counts, gk.map(col),
-       Seq(col("cnt").desc, col("tok").asc), VocabK))
+    graft.plans.TopKPerKey(counts, gk.map(col), Seq(col("cnt").desc, col("tok").asc), VocabK)
       .select(gk :+ "tok" map col: _*)
   }
 
@@ -202,8 +195,7 @@ object LmScreen {
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val models =
       if (gk.isEmpty)
-        Seq(Seq.empty[Any] -> TextModels.train(docs,
-          TextModels.Parts(rarity = false, lm = true, dsir = false)).lm.get)
+        Seq(Seq.empty[Any] -> TextModels.train(docs, TextModels.LmOnly).lm.get)
       else {
         val election = vocabElection(docs, gk)
         val vocabRows = Scale.bounded(election, VocabK * Corpus.MaxLanguages,
@@ -258,7 +250,7 @@ object LmScreen {
     * with the release's rarity and DSIR models (the first of the three
     * builders trains all three). */
   def lmModel(docs: DataFrame): LmModel =
-    TextModels.forRelease(docs, 10, 1024)(_.lm, _.copy(lm = None))
+    TextModels.forRelease(docs, 10, 1024, TextModels.LmOnly)(_.lm, _.copy(lm = None))
 
   /** q100: the per-document LM screen (see object doc). Columns:
     * doc_id, lang, n_bigrams, total_mb, avg_mb (total_mb/avg_mb null

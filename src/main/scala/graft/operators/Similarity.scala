@@ -255,21 +255,21 @@ object Similarity {
     * expression over the reference-object matrix — evaluated once per
     * row, no per-cell literal subtrees) and returns the (score, cell)
     * struct columns over it for query-side multi-cell probing, plus the
-    * nearest cell as struct(score, cell) from ONE kernel
-    * ([[graft.functions.VectorExpressions.NearestCell]], greatest's
-    * order over those structs without building them). The centroid
+    * nearest cell as struct(score, cell) from ONE kernel over the same
+    * `__dots` ([[graft.functions.VectorExpressions.NearestCell]],
+    * greatest's order over those structs without building them). The centroid
     * norm is a per-cell constant factor, divided out of the argmax/sort. */
   private def withCellScores(df: DataFrame, centroids: Seq[Seq[Double]])
       : (DataFrame, Seq[Column], Column) = {
     val withDots = df.withColumn("__dots",
       graft.functions.VectorExpressions.vec_cell_dots(col("embedding"), centroids))
-    val cols = centroids.toIndexedSeq.zipWithIndex.map { case (c, i) =>
-      val cn = math.sqrt(c.map(x => x * x).sum)
+    val cellNorms = centroids.map(c => math.sqrt(c.map(x => x * x).sum))
+    val cols = cellNorms.toIndexedSeq.zipWithIndex.map { case (cn, i) =>
       struct((element_at(col("__dots"), i + 1) / (col("norm") * cn)).as("score"),
         lit(i).as("cell"))
     }
     (withDots, cols,
-      graft.functions.VectorExpressions.nearest_cell(col("embedding"), col("norm"), centroids))
+      graft.functions.VectorExpressions.nearest_cell(col("__dots"), col("norm"), cellNorms))
   }
 
   /** Spark's `CAST(round(col * 1000000) AS BIGINT)` replicated for the

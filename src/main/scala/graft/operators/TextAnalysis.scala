@@ -556,7 +556,7 @@ object TextAnalysis {
         // spans with the clean hash equal to the content's own
         // normalized hash)
         Dedup.contamApplyCols(col("__wt"), benchWindowHashes)
-    val keep = documents.columns.filter(_ != "text").map(c => col(c))
+    val keep = documents.columns.toSeq.filter(_ != "text").map(c => col(c))
     arrays.select(keep ++ features: _*)
   }
 

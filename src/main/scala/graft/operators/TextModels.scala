@@ -41,6 +41,9 @@ object TextModels {
 
   case class Parts(rarity: Boolean, lm: Boolean, dsir: Boolean)
   val AllParts: Parts = Parts(rarity = true, lm = true, dsir = true)
+  val RarityOnly: Parts = Parts(rarity = true, lm = false, dsir = false)
+  val LmOnly: Parts = Parts(rarity = false, lm = true, dsir = false)
+  val DsirOnly: Parts = Parts(rarity = false, lm = false, dsir = true)
 
   /** the collected results of one training run (each present iff its
     * part was trained) */
@@ -137,7 +140,7 @@ object TextModels {
           case r if r.getLong(3) * 10000L > nTotal * phiBp => r.getString(1) -> r.getLong(3)
         }.toMap, nTotal))
       else None,
-      if (parts.lm) Some(lmModel(vocab, pairs.map(r => (r.getString(1), r.getString(2), r.getLong(3)))))
+      if (parts.lm) Some(lmModel(vocab, pairs.toSeq.map(r => (r.getString(1), r.getString(2), r.getLong(3)))))
       else None,
       if (parts.dsir) Some(dsirModel(byKind.getOrElse(DsirBucket, Array.empty[Row])
         .map(r => r.getLong(2) -> (r.getLong(3), r.getLong(4))).toMap))
@@ -172,48 +175,61 @@ object TextModels {
   // ---------------------------------------------- the release handoff
 
   /** One release asks for all three models, one builder at a time
-    * (`rarityModel`, `lmModel`, `dsirModel`). The first builder call
-    * trains all three in one run and parks the two it did not ask for;
-    * a later builder call over the same input takes its parked model
-    * once. "The same input" means an equal canonical plan (and deterministic)
-    * reading the same files at the same length and modification time;
-    * anything else trains afresh. A parked model is handed out at most
-    * once, so a release that asks again trains again. */
+    * (`rarityModel`, `lmModel`, `dsirModel`). When the input can be
+    * recognised again, the first builder call trains all three in one
+    * run and parks the two it did not ask for; a later builder call
+    * over the same input takes its parked model once. "The same input"
+    * means a deterministic batch plan with an equal canonical form
+    * whose every leaf is known not to change under it: a local relation,
+    * a range, a one-row relation, or files read through a file index at
+    * the same length and modification time. Any other leaf (a V2 table,
+    * a catalog table, an RDD, …) carries no snapshot the key could
+    * compare, so such an input trains only the part its caller asked
+    * for and parks nothing. A parked model is handed out at most once,
+    * and the slot (the input's key and the parked models) empties when
+    * the last of them is taken or the next training replaces it. */
+  private val NoModels = Trained(None, None, None)
   private var parkedKey: Option[AnyRef] = None
-  private var parked: Trained = Trained(None, None, None)
+  private var parked: Trained = NoModels
 
   private def inputKey(docs: DataFrame, phiBp: Int, capacity: Int): Option[AnyRef] = {
+    import org.apache.spark.sql.catalyst.plans.logical
+    import org.apache.spark.sql.execution.datasources._
     val plan = docs.queryExecution.analyzed
     if (!plan.deterministic || plan.isStreaming) None
     else {
-      val files = plan.collectLeaves().flatMap {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation => h.location match {
-            case idx: org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex =>
-              idx.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-            case _ => return None
+      val files = plan.collectLeaves().map {
+        case _: logical.LocalRelation | _: logical.Range | _: logical.OneRowRelation => Some(Nil)
+        case l: LogicalRelation => l.relation match {
+          case h: HadoopFsRelation => h.location match {
+            case idx: PartitioningAwareFileIndex =>
+              Some(idx.allFiles().toSeq.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)))
+            case _ => None
           }
-          case _ => return None
+          case _ => None
         }
-        case _ => Nil
-      }.sortBy(_._1)
-      Some((plan.canonicalized, files, phiBp, capacity))
+        case _ => None
+      }
+      if (files.contains(None)) None
+      else Some((plan.canonicalized, files.flatten.flatten.sortBy(_._1), phiBp, capacity))
     }
   }
 
-  private[operators] def forRelease[A](docs: DataFrame, phiBp: Int, capacity: Int)
+  private[operators] def forRelease[A](docs: DataFrame, phiBp: Int, capacity: Int, parts: Parts)
                                       (take: Trained => Option[A],
                                        taken: Trained => Trained): A = synchronized {
     val key = inputKey(docs, phiBp, capacity)
     val hit = if (key.isDefined && key == parkedKey) take(parked) else None
-    hit match {
-      case Some(model) => parked = taken(parked); model
-      case None =>
+    val (model, rest) = hit match {
+      case Some(m) => (m, taken(parked))
+      case None if key.isDefined =>
         val t = train(docs, AllParts, phiBp, capacity)
-        parkedKey = key
-        parked = if (key.isDefined) taken(t) else Trained(None, None, None)
-        take(t).get
+        (take(t).get, taken(t))
+      case None => (take(train(docs, parts, phiBp, capacity)).get, NoModels)
     }
+    parked = rest
+    parkedKey = if (rest == NoModels) None else key
+    model
   }
 
   // ------------------------------------ the lazy frames over the results

@@ -27,7 +27,8 @@ class BenchSplitSpec extends AnyFunSuite {
     "report" -> (Set("model_train_s", "standalone_14ops_s", "frame_build_persist_s",
       "views_14ops_s"), Map()),
     "release" -> (Set("cold_classes", "warm_pass_ms_p50", "warm_compiles_p50", "warm_compile_ms_p50"),
-      Seq("cold", "warm1").map(_ -> (Seq("rarity_model", "lm_model", "dsir_model", "doc_report_write",
+      Seq("cold", "warm1").map(_ -> (Seq("rarity_model", "lm_model", "dsir_model", "doc_report_build",
+        "doc_report_write",
         "view_q70_dataset_split", "view_q101b_dsir_resample", "release_stores", "ingest_door",
         "ivf_centroids", "view_q104c_semdedup").flatMap(op => Seq(s"${op}_ms", s"${op}_compiles",
         s"${op}_compile_ms")).toSet ++ Set("pass_ms", "compiles", "compile_ms"))).toMap),

@@ -100,6 +100,10 @@ class CodegenAgreementSpec extends AnyFunSuite {
     * short embedding, a tied score (zero divisors are checked apart:
     * under ANSI they fail in both modes) */
   private val cells = Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0), Seq(0.5, 0.5, 3.0))
+  private def nearest(emb: org.apache.spark.sql.Column, norm: org.apache.spark.sql.Column,
+                      cs: Seq[Seq[Double]]) =
+    VectorExpressions.nearest_cell(VectorExpressions.vec_cell_dots(emb, cs), norm,
+      cs.map(c => math.sqrt(c.map(x => x * x).sum)))
   private def kernelBattery(s: org.apache.spark.sql.SparkSession, withCells: Seq[Seq[Double]]) = {
     import s.implicits._
     val nan = Double.NaN
@@ -130,7 +134,7 @@ class CodegenAgreementSpec extends AnyFunSuite {
         spans.as("sp"),
         TextKernels.cut_tokens(ws, spans).as("cut"),
         TextKernels.chunk_spans(rx, 4, 1).as("ch"),
-        VectorExpressions.nearest_cell(col("emb"), col("norm"), withCells).as("nc"))
+        nearest(col("emb"), col("norm"), withCells).as("nc"))
       .orderBy("id").collect().map(_.toSeq)
   }
 
@@ -157,8 +161,9 @@ class CodegenAgreementSpec extends AnyFunSuite {
     val structs = cells.zipWithIndex.map { case (c, i) =>
       struct((element_at(col("__dots"), i + 1) / (col("norm") * math.sqrt(c.map(x => x * x).sum)))
         .as("score"), lit(i).as("cell")) }
-    val got = df.select(col("id"), VectorExpressions.nearest_cell(col("embedding"), col("norm"), cells)
-      .as("k"), greatest(structs: _*).as("g")).orderBy("id").collect()
+    val got = df.select(col("id"), VectorExpressions.nearest_cell(col("__dots"), col("norm"),
+        cells.map(c => math.sqrt(c.map(x => x * x).sum))).as("k"), greatest(structs: _*).as("g"))
+      .orderBy("id").collect()
     got.foreach(r => assert(r.get(1) == r.get(2), s"row ${r.get(0)}: kernel ${r.get(1)} vs greatest ${r.get(2)}"))
     assert(got(0).getStruct(1).getInt(1) == 1, "a tied score goes to the larger cell")
   }
@@ -167,7 +172,7 @@ class CodegenAgreementSpec extends AnyFunSuite {
     import spark.implicits._
     def run(s: org.apache.spark.sql.SparkSession, emb: Seq[Double], cs: Seq[Seq[Double]]) = {
       import s.implicits._
-      Seq((0L, emb)).toDF("id", "emb").select(VectorExpressions.nearest_cell(col("emb"),
+      Seq((0L, emb)).toDF("id", "emb").select(nearest(col("emb"),
         sqrt(VectorExpressions.vec_norm_sq(col("emb"))), cs)).collect()
     }
     Seq((Seq(0.0, 0.0, 0.0), cells), (Seq(1.0, 2.0, 3.0), cells :+ Seq(0.0, 0.0, 0.0))).foreach {

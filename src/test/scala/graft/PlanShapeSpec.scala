@@ -331,9 +331,11 @@ class PlanShapeSpec extends AnyFunSuite {
       .count(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
     assert(scans == 1,
       s"the LM screen must scan the corpus exactly once, saw $scans")
-    val vplan = graft.operators.LmScreen.vocabElection(Tables.documents(spark, dir), Nil)
-      .queryExecution.executedPlan.toString()
-    assert(vplan.contains("TakeOrderedAndProject(limit=16"),
+    // the global vocabulary is elected in the models' first training
+    // read, the one LmScreen.model runs
+    val vplan = graft.operators.TextModels.firstRead(Tables.documents(spark, dir),
+      graft.operators.TextModels.LmOnly, 1024).queryExecution.executedPlan.toString()
+    assert(vplan.contains(s"TakeOrderedAndProject(limit=${graft.operators.TextModels.firstReadRows}"),
       "the vocabulary election must be the K-bounded distributed top-K")
     // the sentinel row surfaces 0-bigram docs from the scoring
     // aggregate itself — no join keyed on doc_id may exist anywhere

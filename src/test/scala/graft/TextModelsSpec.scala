@@ -167,10 +167,47 @@ class TextModelsSpec extends AnyFunSuite {
     assert(jobs > 0, "a different plan must train its own model")
   }
 
+  test("an input whose leaf carries no snapshot retrains on every call, only the part asked for") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    // an RDD leaf that reads the file afresh on each computation: no
+    // file index, no length or modification time the key could compare
+    val file = java.nio.file.Files.createTempFile("graft_textmodels_", ".tsv")
+    val path = file.toString
+    def write(train: String): Unit = java.nio.file.Files.write(file, java.util.Arrays.asList(
+      (0L until 20L).map(i => s"$i\t${if (i % 5 == 0) train else "x y z"}"): _*))
+    val reads = spark.sparkContext.longAccumulator("corpus reads")
+    val rdd = spark.sparkContext.parallelize(Seq(0), 1).flatMap { _ =>
+      reads.add(1)
+      val src = scala.io.Source.fromFile(path)
+      try src.getLines().map { l =>
+        val Array(i, t) = l.split("\t", 2); Row(i.toLong, t) }.toList
+      finally src.close()
+    }
+    val docs = spark.createDataFrame(rdd,
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+    try {
+      write("a b a b a")
+      val before = TextModels.train(docs, TextModels.AllParts)
+      reads.reset()
+      Frequency.rarityModel(docs)
+      assert(reads.value == 2, s"rarity alone is two corpus reads, saw ${reads.value}")
+      write("c d c d c")
+      reads.reset()
+      val lm = LmScreen.lmModel(docs)
+      assert(reads.value == 2, s"the LM alone is two corpus reads, saw ${reads.value}")
+      assert(lm != before.lm.get && lm == refLm(docs), "the LM must be trained on the data as it is now")
+      reads.reset()
+      val ds = Dsir.dsirModel(docs)
+      assert(reads.value == 1, s"DSIR alone is one corpus read, saw ${reads.value}")
+      assert(ds.delta == refDsir(docs))
+    } finally java.nio.file.Files.delete(file)
+  }
+
   test("the model collects fail naming the site and the size they saw") {
     val docs = Tables.documents(spark, sf)
     val e = intercept[IllegalArgumentException](Scale.bounded(
-      TextModels.secondRead(docs, Nil, Seq("the"), TextModels.Parts(rarity = false, lm = true, dsir = false)),
+      TextModels.secondRead(docs, Nil, Seq("the"), TextModels.LmOnly),
       3, "TextModels.secondRead"))
     assert(e.getMessage.contains("TextModels.secondRead") && e.getMessage.contains("saw 4"), e.getMessage)
   }
