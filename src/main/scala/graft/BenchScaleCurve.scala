@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -7,9 +9,9 @@ import org.apache.spark.sql.functions._
   * arguments in SURVEY are design arguments verified at sf0.1, and the
   * q102c episode (an interpreted-HOF kernel invisible at the verify SF,
   * 57 s at the bench SF) proved superlinear constants hide below the
-  * measured scale. This main synthesizes 3× and 10× corpora from the
-  * bench tables and times the heavy operators at 1×/3×/10× so ≈linear
-  * growth is a MEASUREMENT, not prose.
+  * measured scale. The `scale_curve` split ([[curve]]) synthesizes 3×
+  * and 10× corpora from the bench tables and times the heavy operators
+  * at 1×/3×/10× so ≈linear growth is a MEASUREMENT, not prose.
   *
   * Synthesis contract (what makes the ratios meaningful):
   *   - replica 0 is the base corpus verbatim; replica k offsets ids by
@@ -28,10 +30,10 @@ import org.apache.spark.sql.functions._
   *     (a bigger corpus has denser cells; the models stay bounded).
   *   - dimension tables (nation, region) do not scale — copied bytes.
   *
-  * Output: one JSON line per run with, per query, the warm-min seconds
-  * at each factor and the growth ratios r3 = t3/t1, r10 = t10/t1
-  * (≈linear ⇒ r3 ≈ 3, r10 ≈ 10; fixed per-run overhead pulls ratios
-  * BELOW the factor, so the superlinearity flag is r10 ≫ 10).
+  * Output: per query, the warm-min seconds at each factor and the
+  * growth ratios r3 = t3/t1, r10 = t10/t1 (≈linear ⇒ r3 ≈ 3, r10 ≈ 10;
+  * fixed per-run overhead pulls ratios BELOW the factor, so the
+  * superlinearity flag is r10 ≫ 10).
   */
 object BenchScaleCurve {
 
@@ -133,57 +135,46 @@ object BenchScaleCurve {
     }.reduce(_ unionByName _)
   }
 
-  /** the document-fixture scheme version, baked into the bucket marker
-    * name: v2 = the two-letter collision-free replica tag (r13). A
-    * bucket generated under an OLDER scheme carries a stale marker
-    * name, misses the current one, and regenerates automatically —
-    * the r13 advice finding: an unversioned marker short-circuited
-    * regeneration and silently kept the clone-degenerate single-letter
-    * corpus the tag fix existed to kill. Bump this whenever
-    * [[scaledDocuments]]' content rules change. (The events/relational
-    * markers stay unversioned deliberately: those fixtures are pure id
-    * offsets with no content synthesis to version.) */
-  val DocFixtureMarker = "_CURVE_OK_v2"
+  /** the replica scheme, written into each bucket's [[Stamp]]: v3 =
+    * the two-letter collision-free document tag (r13) and part +
+    * per-replica l_partkey offsets (r14). Bump it whenever a replica
+    * builder's content rules change, so buckets built under an older
+    * scheme regenerate instead of being timed as if current. */
+  private val Scheme = "v3"
+  private val Stamp = "_CURVE_STAMP"
 
-  /** materialize the scaled bucket (documents + embeddings synthesized,
-    * nation/region copied) — idempotent: skipped when already present
-    * under the CURRENT fixture scheme (see [[DocFixtureMarker]]). */
+  /** what a bucket built from `baseDir` at `factor` under [[Scheme]]
+    * holds in its stamp: the base is part of the key, so a bucket
+    * built from another SF is rebuilt, not silently timed against this
+    * base's ×1 */
+  private def stampOf(baseDir: String, factor: Int): String =
+    s"scheme=$Scheme base=${java.nio.file.Paths.get(baseDir).toAbsolutePath.normalize} " +
+      s"factor=$factor"
+
+  /** materialize the scaled bucket — documents, embeddings, events and
+    * the relational tables synthesized, nation/region copied — unless
+    * its stamp already matches. The stamp is removed first and written
+    * only after every table, so a bucket is either whole or rebuilt. */
   def materialize(spark: SparkSession, baseDir: String, outDir: String,
                   factor: Int): Unit = {
-    val marker = java.nio.file.Paths.get(outDir, DocFixtureMarker)
-    if (java.nio.file.Files.exists(marker)) {
-      ensureEvents(spark, baseDir, outDir, factor)
-      ensureRelational(spark, baseDir, outDir, factor)
-      return
-    }
-    scaledDocuments(spark, baseDir, factor)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-    scaledEmbeddings(spark, baseDir, factor)
-      .repartition(8)
-      .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
+    val stamp = java.nio.file.Paths.get(outDir, Stamp)
+    val want = stampOf(baseDir, factor)
+    if (java.nio.file.Files.exists(stamp) && java.nio.file.Files.readString(stamp) == want) return
+    java.nio.file.Files.deleteIfExists(stamp)
+    def write(df: DataFrame, table: String, parts: Int = 8): Unit =
+      df.repartition(parts).write.mode("overwrite").parquet(s"$outDir/$table.parquet")
+    val wide = spark.sparkContext.defaultParallelism
+    write(scaledDocuments(spark, baseDir, factor), "documents", wide)
+    write(scaledEmbeddings(spark, baseDir, factor), "embeddings")
+    write(scaledEvents(spark, baseDir, factor), "events", wide)
+    write(scaledCustomer(spark, baseDir, factor), "customer")
+    write(scaledOrders(spark, baseDir, factor), "orders")
+    write(scaledLineitem(spark, baseDir, factor), "lineitem", wide)
+    write(scaledPart(spark, baseDir, factor), "part")
     Seq("nation", "region").foreach { t =>
-      Tables.load(spark, baseDir, t).write.mode("overwrite")
-        .parquet(s"$outDir/$t.parquet")
+      Tables.load(spark, baseDir, t).write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     }
-    // retire any older-scheme marker so the bucket reads as exactly one
-    // version; create the current one
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(outDir, "_CURVE_OK"))
-    java.nio.file.Files.createFile(marker)
-    ensureEvents(spark, baseDir, outDir, factor)
-    ensureRelational(spark, baseDir, outDir, factor)
-  }
-
-  /** events joined the bucket after the first r11 curve runs — its own
-    * marker keeps materialize idempotent for buckets that predate it. */
-  private def ensureEvents(spark: SparkSession, baseDir: String,
-                           outDir: String, factor: Int): Unit = {
-    val marker = java.nio.file.Paths.get(outDir, "_CURVE_EVENTS_OK")
-    if (java.nio.file.Files.exists(marker)) return
-    scaledEvents(spark, baseDir, factor)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").parquet(s"$outDir/events.parquet")
-    java.nio.file.Files.createFile(marker)
+    java.nio.file.Files.writeString(stamp, want)
   }
 
   val RelStride = 10000000000L
@@ -236,115 +227,54 @@ object BenchScaleCurve {
     }.reduce(_ unionByName _)
   }
 
-  /** the relational tables joined the buckets in r13 — own marker for
-    * buckets that predate them. v2 (r14): part joined the bucket and
-    * l_partkey offsets per replica — the marker version bump forces
-    * v1 buckets to regenerate (the [[DocFixtureMarker]] lesson). */
-  private def ensureRelational(spark: SparkSession, baseDir: String,
-                               outDir: String, factor: Int): Unit = {
-    val marker = java.nio.file.Paths.get(outDir, "_CURVE_REL_OK_v2")
-    if (java.nio.file.Files.exists(marker)) return
-    scaledCustomer(spark, baseDir, factor)
-      .repartition(8).write.mode("overwrite").parquet(s"$outDir/customer.parquet")
-    scaledOrders(spark, baseDir, factor)
-      .repartition(8).write.mode("overwrite").parquet(s"$outDir/orders.parquet")
-    scaledLineitem(spark, baseDir, factor)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
-    scaledPart(spark, baseDir, factor)
-      .repartition(8).write.mode("overwrite").parquet(s"$outDir/part.parquet")
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(outDir, "_CURVE_REL_OK"))
-    java.nio.file.Files.createFile(marker)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val workDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_MEDIAN_REPS", "2").toInt.max(1)
+  /** the `scale_curve` split: the queries of `SPARK_GRAFT_SCALE_QUERIES`
+    * (default [[CurveQueries]]) at each factor of
+    * `SPARK_GRAFT_SCALE_FACTORS` (default 1,3,10), factor f reading the
+    * bucket `$SPARK_GRAFT_SCALE_DIR/x$f` (default: the split's scratch,
+    * deleted at exit — set the directory to keep replicas between
+    * runs). A query that fails at a factor is recorded as `err<f>`. */
+  def curve(r: BenchSplit.Run): Unit = {
+    val workDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", r.path("scale"))
     val factors = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "1,3,10")
       .split(',').map(_.trim.toInt).toSeq
     val queries = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(',').map(_.trim).toSeq).getOrElse(CurveQueries)
-    // the round's quiet-run discipline, uniform across measurement
-    // mains (r17 verdict item 2)
-    val (degraded, loadWaitedS) = Bench.awaitQuiet(
-      sys.env.getOrElse("SPARK_GRAFT_LOAD_THRESHOLD", "3.0").toDouble,
-      sys.env.getOrElse("SPARK_GRAFT_LOAD_MAX_WAIT_S", "600").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // one untimed warmup (JVM/codegen/committer), the Bench discipline
-    try SparkEntry.queries(queries.head)(spark, baseDir).count()
-    catch { case _: Throwable => }
-
-    val dirs: Map[Int, String] = factors.map { f =>
-      val d = if (f == 1) baseDir else s"$workDir/x$f"
-      if (f != 1) materialize(spark, baseDir, d, f)
-      f -> d
+    r.putStr("metric", "scale_curve"); r.putStr("unit", "sec")
+    r.put("factors", factors.mkString("[", ",", "]"))
+    val dirs = factors.map { f =>
+      if (f == 1) f -> r.sfDir
+      else { val d = s"$workDir/x$f"; materialize(r.spark, r.sfDir, d, f); f -> d }
     }.toMap
-
-    // toRdd.count(), not count(): the Bench rule — count() lets
-    // Catalyst prune zero-filled card plans to their LocalRelation
-    // (this harness's own q133 run read a flat 0.19s at every factor
-    // while the real plan cost 1.2s — the curve caught its own
-    // measurement bug)
-    def timeOnce(name: String, dir: String): (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      val err = try { SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count(); None } catch {
-        case e: Throwable =>
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
+    // q88b searches a compacted index by catalog name: drop the tables
+    // the curve's queries register, so the split leaves the session's
+    // catalog as it found it
+    val tables = r.spark.catalog.listTables().collect().map(_.name).toSet
+    try {
+      // one untimed warmup (JVM/codegen/committer), the Bench discipline
+      try BenchSplit.rows(SparkEntry.queries(queries.head)(r.spark, r.sfDir))
+      catch { case NonFatal(_) => }
+      r.nest("queries") { qs =>
+        queries.foreach { name =>
+          val byFactor = factors.map { f =>
+            var err: Option[String] = None
+            val (ts, _) = BenchSplit.warmTimes(r.reps) {
+              try BenchSplit.rows(SparkEntry.queries(name)(r.spark, dirs(f)))
+              catch { case NonFatal(e) => err = err.orElse(
+                Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")) }
+            }
+            (f, ts.head, err) // warm-min: the load-insensitive floor
+          }
+          val t1 = byFactor.head._2
+          qs.nest(name) { c =>
+            byFactor.foreach { case (f, t, _) => c.put(s"t$f", Bench.fmt3(t)) }
+            byFactor.tail.foreach { case (f, t, _) => c.put(s"r$f", Bench.fmt3(t / t1)) }
+            byFactor.foreach { case (f, _, e) =>
+              e.foreach(m => c.putStr(s"err$f", m.replace("\"", "'").replace("\n", " ")))
+            }
+          }
+        }
       }
-      ((System.nanoTime() - t0) / 1e9, err)
-    }
-
-    val rows = for (name <- queries) yield {
-      val byFactor = factors.map { f =>
-        val runs = (0 to reps).map(_ => timeOnce(name, dirs(f))) // 1 cold + reps warm
-        val err = runs.flatMap(_._2).headOption
-        // warm-min: the load-insensitive floor (Bench's discipline)
-        f -> (runs.drop(1).map(_._1).min, err)
-      }
-      (name, byFactor)
-    }
-
-    val f1 = factors.head
-    def fmt(v: Double) = Bench.fmt3(v)
-    val qjson = rows.map { case (name, byF) =>
-      val t1 = byF.find(_._1 == f1).get._2._1
-      val ratios = byF.filter(_._1 != f1).map { case (f, (t, _)) =>
-        s""""r$f":${fmt(t / t1)}"""
-      }
-      val times = byF.map { case (f, (t, _)) => s""""t$f":${fmt(t)}""" }
-      val errs = byF.collect { case (f, (_, Some(e))) =>
-        s""""err$f":"${e.replace("\"", "'").replace("\n", " ")}"""" }
-      "\"" + name + "\":{" + (times ++ ratios ++ errs).mkString(",") + "}"
-    }.mkString("{", ",", "}")
-    // end-of-run ramp label (r18 verdict item 3 — SCALE_CURVE_r18
-    // recorded loadavg 18.52 with degraded:false): re-sample when the
-    // timed work ends so a mid-run ramp self-labels
-    val rampedFlag = Bench.ramped(Bench.load1(),
-      sys.env.getOrElse("SPARK_GRAFT_LOAD_THRESHOLD", "3.0").toDouble)
-    val detail = s"""{"metric":"scale_curve","unit":"sec","base":"$baseDir",""" +
-      s""""factors":[${factors.mkString(",")}],"warm_reps":$reps,""" +
-      s""""degraded":$degraded,"ramped":$rampedFlag,"load_waited_s":$loadWaitedS,""" +
-      s""""loadavg":"${Bench.loadavg()}",""" +
-      s""""queries":$qjson}"""
-    println(detail)
-    // persist like every other artifact main (never overwrite)
-    sys.env.get("SPARK_GRAFT_SCALE_OUT").orElse(
-      sys.env.get("SPARK_GRAFT_ROUND").map(r => s"SCALE_CURVE_r$r.json"))
-      .foreach { requested =>
-        try {
-          val target = Bench.writeNew(detail, requested)
-          System.err.println(s"[scale] artifact persisted to $target")
-        } catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[scale] could not persist $requested: $e") }
-      }
-    spark.stop()
+    } finally r.spark.catalog.listTables().collect().map(_.name).filterNot(tables)
+      .foreach(t => r.spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 }

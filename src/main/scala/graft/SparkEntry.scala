@@ -66,8 +66,8 @@ object SparkEntry {
     // hash and the estimator returns the sketch size), which holds for
     // every part at the verify SFs — so the exact-countDistinct SQL is
     // a legitimate value oracle, not a tolerance check. The accuracy
-    // trade beyond k is priced by graft.BenchKmv's high-cardinality
-    // cell, not by this entry.
+    // trade beyond k is priced by the graft.BenchSplit `kmv` split's
+    // high-cardinality cell, not by this entry.
     "q23b_feature_annotations_kmv" -> ((s, d) => Curation.featureAnnotationsKmv(
       Tables.part(s, d), Tables.lineitem(s, d))),
     "q140_annotation_push" -> ((s, d) => Curation.annotationPush(

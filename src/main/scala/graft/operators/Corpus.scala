@@ -1150,7 +1150,7 @@ object Corpus {
   /** the confident-match band for [[retrievalRecallAudit]]:
     * sim_q20 ≥ 1000000 ⇔ cos² ≥ 1000000/2²⁰ ≈ 0.954 — the
     * near-duplicate band, far above the benchmark corpora's BULK pair
-    * distribution (measured at 256 buckets, BenchRetrievalSaturation:
+    * distribution (measured at 256 buckets by the r15 saturation probe, SURVEY r15:
     * exhaustive rank-1 MEDIAN cos² ≈ 0.78, rank-3 ≈ 0.75 at sf0.1 —
     * and BYTE-IDENTICAL at 1024 buckets, so ≥256 buckets is
     * effectively collision-free for this corpus and the clustered top

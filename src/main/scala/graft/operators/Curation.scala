@@ -62,9 +62,12 @@ object Curation {
       .orderBy("p_partkey")
   }
 
+  /** the KMV sketch size q23b and the `kmv` split use */
+  val KmvK = 64
+
   /** q23b (r18 verdict item 4 — q23's at-scale alternative, promoted
-    * to its own oracle-checked inventory entry): priced by
-    * [[graft.BenchKmv]], value-checked against the EXACT countDistinct
+    * to its own oracle-checked inventory entry): priced by the `kmv`
+    * split of [[graft.BenchSplit]], value-checked against the EXACT countDistinct
     * SQL, which is legitimate because below k distinct suppliers per
     * part (every part at the verify SFs — KmvSketchSpec pins it) the
     * sketch holds every distinct hash and the estimator returns the
@@ -81,11 +84,11 @@ object Curation {
     * q23's low per-key cardinality, where the sketch holds every hash
     * and the estimate is also EXACT (error 0); the accuracy trade only
     * appears on grains whose per-key distincts exceed k — the 100 TB
-    * shape, priced by BenchKmv's high-cardinality cell on the same
+    * shape, priced by the `kmv` split's high-cardinality cell on the same
     * tables. Estimator = the q17 (k-1)·2^60/kth form over a 60-bit
     * uniform hash (shiftrightunsigned(xxhash64)). */
   def featureAnnotationsKmv(part: DataFrame, lineitem: DataFrame,
-                            k: Int = 64): DataFrame = {
+                            k: Int = KmvK): DataFrame = {
     val h = shiftrightunsigned(xxhash64(col("l_suppkey")), 4)
     val usage = lineitem
       .groupBy(col("l_partkey").as("pk"))

@@ -154,7 +154,7 @@ object EventOps {
       // WindowExec "no partition defined" warning this emits is about
       // data-sized frames; this frame's size is fixed by the funnel
       // definition, not the data. (r17: the executed-plan inventory —
-      // BenchPlans / PLANS_r17 flagged_window_unpartitioned — counts
+      // PlanAudit --inventory / PLANS_r17 flagged_window_unpartitioned — counts
       // FOUR such windows suite-wide, each on a fixed-bound frame:
       // this one, q111/q112's ≤32-row post-limit rank frames, and
       // q119b's ≤4096-row bucket-offset dimension; the earlier "exactly

@@ -1,13 +1,13 @@
 package graft.plans
 
 /** THE physical-plan walk + fence predicates (moved from the test tree
-  * in r17 so the [[graft.BenchPlans]] inventory main shares the ONE
+  * in r17 so the `PlanAudit --inventory` census shares the ONE
   * definition the plan-pin specs use — the r16 review consolidated
   * three drifted spec-local copies into one walker precisely so a new
   * AQE node type can't blind one fence silently; a main-tree twin
-  * would have reopened that hole). The test-tree `graft.PlanWalks`
-  * object delegates here, and MutationPinSpec mutation-tests exactly
-  * these predicates, so a blind spot still fails the suite. */
+  * would have reopened that hole). The specs call this object
+  * directly, and MutationPinSpec mutation-tests exactly these
+  * predicates, so a blind spot still fails the suite. */
 object PlanWalk {
 
   def nodes(p: org.apache.spark.sql.execution.SparkPlan)
@@ -45,4 +45,14 @@ object PlanWalk {
       .filter(_.output.exists(
         _.dataType == org.apache.spark.sql.types.BinaryType))
   }
+
+  /** the scan lists at least one pushed source filter */
+  def pushesFilters(s: org.apache.spark.sql.execution.FileSourceScanExec): Boolean =
+    s.metadata.get("PushedFilters").exists(f => f.nonEmpty && f != "[]")
+
+  /** the scan holds data filters and none of them became a pushed
+    * source filter, so they run after the read over every row — the
+    * PLANS `scans_filtered_unpushed` class and the `--unpushed` audit */
+  def filteredUnpushed(s: org.apache.spark.sql.execution.FileSourceScanExec): Boolean =
+    s.dataFilters.nonEmpty && !pushesFilters(s)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{CurationPipeline, Morphology, NeuriteAtlas, Validation}
+import graft.plans.PlanWalk
 
 /** q141: the composed curation pipeline must (a) reuse the standalone
   * operators' verdicts and bodies bit-for-bit (shared-definition
@@ -79,7 +80,7 @@ class CurationPipelineSpec extends AnyFunSuite {
     // the report build: exactly one BinaryType-carrying exchange (the
     // skew-evening repartition before the single decode)
     val build = NeuriteAtlas.morphReport(docs).toDF()
-    val nBlob = PlanWalks.blobExchanges(build)
+    val nBlob = PlanWalk.blobExchanges(build)
     assert(nBlob == 1,
       s"report build must have exactly ONE blob exchange, got $nBlob")
 
@@ -90,7 +91,7 @@ class CurationPipelineSpec extends AnyFunSuite {
     val actions = CurationPipeline.annotationActions(
       CurationPipeline.computedAnnotations(spark.read.parquet(dir)),
       CurationPipeline.existingStore(docs))
-    val binaryNodes = PlanWalks.binaryCarryingNodes(actions)
+    val binaryNodes = PlanWalk.binaryCarryingNodes(actions)
     assert(binaryNodes.isEmpty,
       s"the post-persist pipeline must never carry payload bytes, got ${binaryNodes.length} nodes")
   }

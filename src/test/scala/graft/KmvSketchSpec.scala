@@ -28,7 +28,7 @@ class KmvSketchSpec extends AnyFunSuite {
   }
 
   test("the q23 KMV swap is exact at the fixture's below-k cardinalities") {
-    // the BenchKmv q23_swap cell's accuracy claim as a standing fence:
+    // the KMV_r18 q23_swap cell's accuracy claim as a standing fence:
     // per-part supplier distincts sit below k=64, so the sketch holds
     // every hash and n_suppliers_est must EQUAL q23's exact column row
     // for row — the wire collapse (the expand removal) costs nothing

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Multimodal
 import graft.operators.Multimodal.{MediaRow, decodeMedia, encodeAudio, encodeImage, encodeVideo}
+import graft.plans.PlanWalk
 
 /** Unit specs for the REAL media codecs (q41): header parse, payload
   * validation, content-based dispatch, nearest-neighbour resize and
@@ -249,7 +250,7 @@ class MultimodalSpec extends AnyFunSuite {
     // pin exists to catch (payload bytes dominate I/O there).
     val spark = TestSpark.spark
     val docs = Tables.documents(spark, TestSpark.sf)
-    // the SHARED fence predicate (PlanWalks) — MutationPinSpec
+    // the SHARED fence predicate (PlanWalk) — MutationPinSpec
     // mutation-tests exactly this definition, so a walker blind spot
     // cannot rot here unnoticed
     Seq(
@@ -257,7 +258,7 @@ class MultimodalSpec extends AnyFunSuite {
       "q41c" -> Multimodal.frameSampleManifest(docs),
       "q41d" -> Multimodal.resizedFeatures(docs)
     ).foreach { case (name, df) =>
-      val nBlob = PlanWalks.blobExchanges(df)
+      val nBlob = PlanWalk.blobExchanges(df)
       assert(nBlob == 1,
         s"$name must have exactly ONE blob-carrying exchange (the skew-evening " +
           s"repartition), got $nBlob")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Curation, Multimodal, Scale}
+import graft.plans.PlanWalk
 
 /** PERMANENT MUTATION TESTS (r15 verdict item 5): the repo's plan
   * fences were mutation-tested by hand in r15 (inject the regression,
@@ -18,11 +19,11 @@ class MutationPinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val docs = Tables.documents(spark, TestSpark.sf)
 
-  // the SHARED fence predicate the real pins run ([[PlanWalks]]) — not
+  // the SHARED fence predicate the real pins run ([[graft.plans.PlanWalk]]) — not
   // a local copy, so this spec mutation-tests the predicate the other
   // specs actually enforce
   private def blobExchanges(df: org.apache.spark.sql.DataFrame): Int =
-    PlanWalks.blobExchanges(df)
+    PlanWalk.blobExchanges(df)
 
   test("blob-exchange pin bites: a second payload exchange reads 2, clean reads 1") {
     assert(!Multimodal.mutantExtraBlobExchange)

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Corpus, MergeWriter, Ontology, Similarity, Upsert}
+import graft.plans.PlanWalk
 
 /** Physical-plan regression guards for the scale-critical shapes: the
   * operators below were specifically (re)designed so their plans
@@ -48,7 +49,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "geoClosure" -> Ontology.geoClosure(r, n)
     ).foreach { case (name, df) =>
       df.queryExecution.toRdd.count()
-      val ns = PlanWalks.nodes(df.queryExecution.executedPlan)
+      val ns = PlanWalk.nodes(df.queryExecution.executedPlan)
       assert(!ns.exists(_.isInstanceOf[FileSourceScanExec]), s"$name: the closure scans parquet")
       assert(!ns.exists(_.isInstanceOf[BaseJoinExec]), s"$name: the closure joins")
       assert(!ns.exists(_.isInstanceOf[BroadcastExchangeLike]), s"$name: the closure broadcasts")
@@ -64,7 +65,7 @@ class PlanShapeSpec extends AnyFunSuite {
       case (q, want) =>
         val df = SparkEntry.queries(q)(spark, dir)
         df.queryExecution.toRdd.count()
-        val ns = PlanWalks.nodes(df.queryExecution.executedPlan)
+        val ns = PlanWalk.nodes(df.queryExecution.executedPlan)
         assert(!ns.exists(_.isInstanceOf[BaseJoinExec]), s"$q: a join came back")
         assert(ns.length == want, s"$q: expected $want executed-plan nodes, got ${ns.length}")
     }
@@ -327,7 +328,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // r19: the model frames are collected (model-sized) and re-enter as
     // local relations, so the vocabulary election lives in its OWN plan
     // (pinned below) and the scoring plan must scan the corpus ONCE
-    val scans = PlanWalks.nodes(df.queryExecution.executedPlan)
+    val scans = PlanWalk.nodes(df.queryExecution.executedPlan)
       .count(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
     assert(scans == 1,
       s"the LM screen must scan the corpus exactly once, saw $scans")
@@ -357,7 +358,7 @@ class PlanShapeSpec extends AnyFunSuite {
         "not a per-lang window (a dominant language would serialize it)")
     assert(!plan.contains("SortMergeJoin") && !plan.contains("Window"),
       "broadcast model joins only; no hot-key window")
-    val scans = PlanWalks.nodes(df.queryExecution.executedPlan)
+    val scans = PlanWalk.nodes(df.queryExecution.executedPlan)
       .count(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
     assert(scans == 1,
       s"the per-lang LM screen must scan the corpus exactly once, saw $scans")
@@ -400,7 +401,7 @@ class PlanShapeSpec extends AnyFunSuite {
       val df = spark.read.parquet(path)
         .filter(col("k") > 0L && col("d") > lit(java.sql.Date.valueOf("2024-02-01")))
       assert(df.count() == 1)
-      val scan = PlanWalks.nodes(df.queryExecution.executedPlan).collect {
+      val scan = PlanWalk.nodes(df.queryExecution.executedPlan).collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s
       }.head
       assert(scan.metadata("PushedFilters").contains("GreaterThan(d,"),
@@ -463,7 +464,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val refused = scala.collection.mutable.ArrayBuffer[(String, Set[String], String)]()
     val found = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
       val df = SparkEntry.queries(name)(spark, dir)
-      val scans = PlanWalks.nodes(df.queryExecution.executedPlan).collect {
+      val scans = PlanWalk.nodes(df.queryExecution.executedPlan).collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s
       }
       scans.foreach { s =>
@@ -472,11 +473,7 @@ class PlanShapeSpec extends AnyFunSuite {
           refused += ((name, missed.flatMap(_.references.map(_.name)).toSet,
             missed.map(_.sql).mkString(" AND ")))
       }
-      val hasUnpushed = scans.exists { s =>
-        s.dataFilters.nonEmpty &&
-          !s.metadata.get("PushedFilters").exists(f => f.nonEmpty && f != "[]")
-      }
-      if (hasUnpushed) Some(name) else None
+      if (scans.exists(PlanWalk.filteredUnpushed)) Some(name) else None
     }.toSet
     val gained = found.diff(allowed)
     val lost = allowed.diff(found)
@@ -503,7 +500,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val q108b = graft.operators.Dedup.releaseDedupConfirmed(
       docs, graft.operators.Dedup.ingestView(docs))
     q108b.queryExecution.toRdd.count()
-    val scans108 = PlanWalks.nodes(q108b.queryExecution.executedPlan)
+    val scans108 = PlanWalk.nodes(q108b.queryExecution.executedPlan)
       .count(_.isInstanceOf[FileSourceScanExec])
     assert(scans108 == 2,
       s"q108b: expected 2 parquet scans in the confirm plan, saw $scans108")
@@ -514,10 +511,10 @@ class PlanShapeSpec extends AnyFunSuite {
     Seq("voxelGrid" -> graft.operators.Atlas.voxelGrid(spark, n, r),
         "geoAncestors" -> graft.operators.Atlas.geoAncestors(r, n)).foreach {
       case (name, dimDf) =>
-        val ns = PlanWalks.nodes(dimDf.queryExecution.executedPlan)
+        val ns = PlanWalk.nodes(dimDf.queryExecution.executedPlan)
         assert(!ns.exists(_.isInstanceOf[FileSourceScanExec]),
           s"$name must be a local relation, not a parquet-derived plan")
-        assert(PlanWalks.shuffleExchanges(dimDf).isEmpty,
+        assert(PlanWalk.shuffleExchanges(dimDf).isEmpty,
           s"$name must carry no exchange")
     }
   }
@@ -560,9 +557,9 @@ class PlanShapeSpec extends AnyFunSuite {
     // two projections (the shared token arrays, then every feature
     // column), not a withColumn ladder; and no CodegenFallback lambda
     val ep = df.queryExecution.executedPlan
-    val projects = PlanWalks.nodes(ep).count(_.isInstanceOf[org.apache.spark.sql.execution.ProjectExec])
+    val projects = PlanWalk.nodes(ep).count(_.isInstanceOf[org.apache.spark.sql.execution.ProjectExec])
     assert(projects <= 2, s"the report frame must be at most two projections, saw $projects:\n$ep")
-    val lambdas = PlanWalks.nodes(ep).flatMap(_.expressions).flatMap(_.collect {
+    val lambdas = PlanWalk.nodes(ep).flatMap(_.expressions).flatMap(_.collect {
       case l: org.apache.spark.sql.catalyst.expressions.LambdaFunction => l })
     assert(lambdas.isEmpty, s"no lambda may break the codegen stage: $lambdas")
   }
@@ -898,10 +895,9 @@ class PlanShapeSpec extends AnyFunSuite {
     sample.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       df.queryExecution.toRdd.count() // finalize the adaptive plan
-      val flaggedScans = PlanWalks.nodes(df.queryExecution.executedPlan).collect {
+      val flaggedScans = PlanWalk.nodes(df.queryExecution.executedPlan).collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec
-          if s.dataFilters.nonEmpty &&
-            !s.metadata.get("PushedFilters").exists(f => f.nonEmpty && f != "[]") => s
+          if PlanWalk.filteredUnpushed(s) => s
       }
       flaggedScans.foreach { s =>
         val plain = s.dataFilters.filter(plainPushable)
@@ -915,7 +911,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("plan-inventory invariants: no cartesian; unpartitioned windows only at the four audited bounded sites") {
-    // the r17 executed-plan inventory (BenchPlans/PLANS_r17) audited
+    // the r17 executed-plan inventory (PlanAudit --inventory, PLANS_r17) audited
     // the whole suite: ZERO CartesianProductExec anywhere (q35's
     // brute-force contract compiles to a broadcast nested loop, never
     // a shuffle cartesian) and exactly FOUR unpartitioned WindowExecs,
@@ -935,7 +931,7 @@ class PlanShapeSpec extends AnyFunSuite {
     sample.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       df.queryExecution.toRdd.count() // finalize the adaptive plan
-      val ns = PlanWalks.nodes(df.queryExecution.executedPlan)
+      val ns = PlanWalk.nodes(df.queryExecution.executedPlan)
       assert(!ns.exists(
         _.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]),
         s"$name grew a shuffle cartesian product")

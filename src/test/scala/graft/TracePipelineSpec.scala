@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{TracePipeline, Traces}
+import graft.plans.PlanWalk
 
 /** q142: the composed trace pipeline must (a) reuse the standalone
   * operators' verdicts bit-for-bit (shared-definition discipline —
@@ -82,7 +83,7 @@ class TracePipelineSpec extends AnyFunSuite {
 
   test("decode-once plan pin: ONE blob exchange in the report build, ZERO payload binary downstream") {
     val build = Traces.traceReport(docs).toDF()
-    val nBlob = PlanWalks.blobExchanges(build)
+    val nBlob = PlanWalk.blobExchanges(build)
     assert(nBlob == 1,
       s"report build must have exactly ONE blob exchange, got $nBlob")
 
@@ -98,10 +99,10 @@ class TracePipelineSpec extends AnyFunSuite {
     Traces.traceReport(docs).write.mode("overwrite").parquet(dir)
     val updates = TracePipeline.pushUpdates(spark.read.parquet(dir),
       TracePipeline.existingStore(docs))
-    val nDownstreamBinary = PlanWalks.blobExchanges(updates)
+    val nDownstreamBinary = PlanWalk.blobExchanges(updates)
     assert(nDownstreamBinary <= 1,
       s"post-persist chain may carry binary only in the classify buffer exchange, got $nDownstreamBinary")
-    val nodes = PlanWalks.nodes(updates.queryExecution.executedPlan)
+    val nodes = PlanWalk.nodes(updates.queryExecution.executedPlan)
     val binaryScans = nodes
       .collect { case s: org.apache.spark.sql.execution.FileSourceScanExec
         if s.output.exists(_.dataType == org.apache.spark.sql.types.BinaryType) => s }
