@@ -352,13 +352,14 @@ object BenchSplit {
         r.save(Search.postingIndex(b), s"index/seg=$par")
         r.save(Search.docCount(b), s"meta/seg=$par")
       })
-      // a fresh table per rep: compaction overwrites a managed table,
-      // and re-creating it is the operation being priced
+      // a fresh table per rep: compaction overwrites a table, and
+      // re-creating it is the operation being priced
       var gen = 0
       try {
         r.phase("compact_s") {
           gen += 1
-          IndexCatalog.compactSegments(r.spark, r.path("index"), r.path("meta"), s"graft_segsplit_$gen")
+          IndexCatalog.compactSegments(r.spark, r.path("index"), r.path("meta"),
+            s"graft_segsplit_$gen", r.path("compacted"))
         }
         r.time("search_s")(IndexCatalog.searchPostings(r.spark, s"graft_segsplit_$gen"))
       } finally (1 to gen).foreach { g =>

@@ -221,7 +221,9 @@ object SparkEntry {
       // segments (the exact writes postingMaintenance's foreachBatch
       // performs, here split by doc parity), compacted to the bucketed
       // q88 layout + frozen meta, searched by catalog name — must rank
-      // identically to q87/q88 (same oracle SQL)
+      // identically to q87/q88 (same oracle SQL). The compacted tables'
+      // files sit under the pid-keyed dir, so this process's shutdown
+      // hook removes them with the segments.
       val docs = Tables.documents(s, d)
       val base = s"${System.getProperty("java.io.tmpdir")}/graft_fmt_twin/$fmtTwinToken/q88b_segs"
       Seq(0, 1).foreach { par =>
@@ -230,7 +232,8 @@ object SparkEntry {
         Search.docCount(b).write.mode("overwrite").parquet(s"$base/meta/seg=$par")
       }
       val table = s"graft_q88b_compacted_$fmtTwinToken"
-      graft.sources.IndexCatalog.compactSegments(s, s"$base/index", s"$base/meta", table)
+      graft.sources.IndexCatalog.compactSegments(s, s"$base/index", s"$base/meta", table,
+        s"$base/compacted")
       graft.sources.IndexCatalog.searchPostings(s, table)
     }),
     "q89_hybrid_rrf" -> ((s, d) =>

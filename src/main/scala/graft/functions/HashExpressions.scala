@@ -415,63 +415,6 @@ object HashExpressions {
       copy(child = newChild)
   }
 
-  /** PACKED twin of [[BucketCountVec]]: the same saturated hashed
-    * bag-of-tokens counts, one UNSIGNED BYTE per bucket in a
-    * BinaryType value (requires clamp ≤ 255 — q103's tf-saturation
-    * bound, which is also why a byte loses nothing). A `buckets`-wide
-    * vector is `buckets` bytes as binary vs ~8·buckets+16 bytes as a
-    * Tungsten long array (~8× narrower at any width);
-    * q103b's rescore shuffles millions of candidate rows
-    * carrying these vectors, and the row width was the measured 100×
-    * knee (r12 verdict item 1). Same digest, same bucket function,
-    * same counts — scores computed over the packed form are
-    * bit-identical to the long-array form. */
-  case class BucketCountVecPacked(child: Expression, salt: String, buckets: Int, clamp: Int)
-      extends UnaryExpression {
-    require(buckets > 0 && clamp > 0 && clamp <= 255,
-      s"bucket_count_vec_packed($buckets, $clamp): clamp must fit a byte")
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"bucket_count_vec_packed expects array<string>, got $t")
-    }
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "bucket_count_vec_packed"
-
-    private val saltBytes = salt.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-    def kernel(a: ArrayData): Array[Byte] = {
-      val out = new Array[Byte](buckets)
-      val md = Md5Kernels.digest()
-      val n = a.numElements()
-      var i = 0
-      while (i < n) {
-        if (!a.isNullAt(i)) {
-          md.reset()
-          md.update(saltBytes)
-          md.update(a.getUTF8String(i).getBytes)
-          val b = (Md5Kernels.first60(md.digest()) % buckets).toInt
-          if ((out(b) & 0xFF) < clamp) out(b) = ((out(b) & 0xFF) + 1).toByte
-        }
-        i += 1
-      }
-      out
-    }
-
-    override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val ref = ctx.addReferenceObj("bucketCountsPacked", this,
-          classOf[BucketCountVecPacked].getName)
-        s"${ev.value} = (byte[]) $ref.kernel($a);"
-      })
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
   /** mixer for the bigram channel of [[BucketCountVec2Packed]]: an
     * asymmetric combine of two adjacent md5-60 token hashes whose every
     * intermediate stays under 2⁶¹ — (h₁ mod 2⁵⁰)·1021 + h₂ ≤
@@ -719,9 +662,6 @@ object HashExpressions {
 
   def bucket_count_vec(tokens: Column, salt: String, buckets: Int, clamp: Int): Column =
     ColumnBridge.column(BucketCountVec(ColumnBridge.expression(tokens), salt, buckets, clamp))
-
-  def bucket_count_vec_packed(tokens: Column, salt: String, buckets: Int, clamp: Int): Column =
-    ColumnBridge.column(BucketCountVecPacked(ColumnBridge.expression(tokens), salt, buckets, clamp))
 
   def bucket_count_vec2_packed(tokens: Column, salt: String, uniBuckets: Int,
                                biBuckets: Int, clamp: Int): Column =

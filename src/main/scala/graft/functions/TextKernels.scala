@@ -24,9 +24,13 @@ import graft.functions.HashExpressions.Md5Kernels
   * [[HashExpressions.SortedLongContains]] pattern: built once, shared
   * by reference) and runs one JVM loop per row; codegen and
   * interpreted evaluation call the same Scala method, so the two
-  * cannot diverge. Every kernel returns exactly what the lambda form
-  * returned, field for field (spec-pinned against the batch operators
-  * in DocReportSpec, LmScreenSpec, DsirSpec and FrequencyCorpusSpec). */
+  * cannot diverge. The scoring kernels are the ONE scorer of their
+  * frozen model: the batch screens (q75, q100, q100b, q101, q113), the
+  * stream lookups and the report frame all call them, so their
+  * independent reference is the DuckDB oracle plus the hand fixtures
+  * (FrequencyCorpusSpec's exact q75 costs, the Scala replays in
+  * LmScreenSpec and DsirSpec); CodegenAgreementSpec checks codegen
+  * against interpreted evaluation. */
 object TextKernels {
 
   /** an expression whose codegen is one virtual call into `kernel` —
@@ -127,78 +131,101 @@ object TextKernels {
     StructField("lm_avg_mb", LongType),
     StructField("lm_keep", BooleanType, nullable = false)))
 
-  /** q100 scored against the frozen bigram model: every token folds to
-    * its vocabulary class (or `unk`), and each adjacent pair costs its
-    * pair surprisal, else its context's unseen-pair surprisal, else the
-    * unseen-context surprisal. The model's classes are numbered once,
-    * so a bigram is two array reads, not a string concatenation and a
-    * map probe. */
-  case class LmScore(child: Expression, vocab: Set[String], pairMb: Map[String, Long],
-                     ctxMb: Map[String, Long], unkMb: Long, unkTok: String,
-                     keepMaxMb: Long) extends TokenKernel {
+  /** q100 scored against a table of frozen bigram models, one per
+    * value of a string group column (the global model is a one-entry
+    * table under a constant key): every token folds to its model's
+    * vocabulary class (or `unk`), and each adjacent pair costs its pair
+    * surprisal, else its context's unseen-pair surprisal, else the
+    * unseen-context surprisal. A null group, or a group the table does
+    * not hold, has no model and costs 0 per bigram — the equi-join
+    * semantics of the per-language oracle. Each model's classes are
+    * numbered once, so a bigram is two array reads, not a string
+    * concatenation and a map probe. A null token array scores null. */
+  case class LmScore(left: Expression, right: Expression,
+                     models: Map[String, graft.operators.LmScreen.LmModel],
+                     unkTok: String, keepMaxMb: Long) extends BinaryExpression {
+    override def checkInputDataTypes(): TypeCheckResult =
+      if (right.dataType == StringType) stringArray(left, prettyName)
+      else TypeCheckResult.TypeCheckFailure(s"lm_score groups by a string, got ${right.dataType}")
     override def dataType: DataType = LmType
     override def prettyName: String = "lm_score"
-    override protected def stringArgs: Iterator[Any] =
-      Iterator(child, s"vocab[${vocab.size}]", s"pairs[${pairMb.size}]", unkMb)
+    override protected def stringArgs: Iterator[Any] = Iterator(left, right, s"models[${models.size}]")
 
-    // class numbering: vocabulary tokens, the unk class, and any class
-    // the pair/context maps name (pair keys join two classes by a space)
-    @transient private lazy val classes: IndexedSeq[String] =
-      (vocab.toSeq.sorted ++ Seq(unkTok) ++
-        pairMb.keys.flatMap(_.split(" ", 2)) ++ ctxMb.keys).distinct.toIndexedSeq
-    @transient private lazy val vocabIdx: java.util.HashMap[UTF8String, Integer] =
-      utf8Map(vocab.map(t => t -> Integer.valueOf(classes.indexOf(t))).toMap)
-    @transient private lazy val unkIdx: Int = classes.indexOf(unkTok)
-    // bigram cost per (class, class): pair, else context, else unk
-    @transient private lazy val cost: Array[Long] = {
-      val k = classes.length
-      val t = new Array[Long](k * k)
-      var i = 0
-      while (i < k) {
-        val ctx = ctxMb.getOrElse(classes(i), unkMb)
-        var j = 0
-        while (j < k) {
-          t(i * k + j) = pairMb.getOrElse(classes(i) + " " + classes(j), ctx)
-          j += 1
-        }
-        i += 1
+    /** one model's class numbering and (class, class) cost table */
+    private final class Table(m: graft.operators.LmScreen.LmModel) {
+      // vocabulary tokens, the unk class, and any class the pair/context
+      // maps name (pair keys join two classes by a space)
+      private val classes: IndexedSeq[String] =
+        (m.vocab.toSeq.sorted ++ Seq(unkTok) ++
+          m.pairMb.keys.flatMap(_.split(" ", 2)) ++ m.ctxMb.keys).distinct.toIndexedSeq
+      private val k = classes.length
+      private val vocabIdx = utf8Map(m.vocab.map(t => t -> Integer.valueOf(classes.indexOf(t))).toMap)
+      private val unkIdx = classes.indexOf(unkTok)
+      // bigram cost per (class, class): pair, else context, else unk
+      private val cost: Array[Long] = Array.tabulate(k * k) { ij =>
+        val (a, b) = (classes(ij / k), classes(ij % k))
+        m.pairMb.getOrElse(a + " " + b, m.ctxMb.getOrElse(a, m.unkMb))
       }
-      t
-    }
-
-    private def cls(a: ArrayData, i: Int): Int = {
-      val v = vocabIdx.get(a.getUTF8String(i))
-      if (v == null) unkIdx else v.intValue
-    }
-
-    def kernel(a: ArrayData): InternalRow = {
-      val n = a.numElements()
-      val nb = math.max(n - 1, 0).toLong
-      if (n < 2) row(nb, null, null, false)
-      else {
-        val k = classes.length
+      private def cls(a: ArrayData, i: Int): Int = {
+        val v = vocabIdx.get(a.getUTF8String(i))
+        if (v == null) unkIdx else v.intValue
+      }
+      def total(a: ArrayData): Long = {
         var total = 0L
         var prev = cls(a, 0)
         var i = 1
-        while (i < n) {
+        while (i < a.numElements()) {
           val c = cls(a, i)
           total = Math.addExact(total, cost(prev * k + c))
           prev = c
           i += 1
         }
+        total
+      }
+    }
+    @transient private lazy val tables: java.util.HashMap[UTF8String, Table] =
+      utf8Map(models.map { case (g, m) => g -> new Table(m) })
+
+    def kernel(a: ArrayData, group: UTF8String): InternalRow = {
+      val n = a.numElements()
+      val nb = math.max(n - 1, 0).toLong
+      if (n < 2) row(nb, null, null, false)
+      else {
+        val t = if (group == null) null else tables.get(group)
+        val total = if (t == null) 0L else t.total(a)
         val avg = total / nb
         row(nb, total, avg, avg <= keepMaxMb)
       }
     }
 
+    override def eval(input: InternalRow): Any = {
+      val a = left.eval(input)
+      if (a == null) null
+      else kernel(a.asInstanceOf[ArrayData], right.eval(input).asInstanceOf[UTF8String])
+    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val a = left.genCode(ctx)
+      val g = right.genCode(ctx)
+      val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
+      ev.copy(code = code"""
+        |${a.code}
+        |boolean ${ev.isNull} = ${a.isNull};
+        |${CodeGenerator.javaType(dataType)} ${ev.value} = null;
+        |if (!${ev.isNull}) {
+        |  ${g.code}
+        |  ${ev.value} = $ref.kernel(${a.value}, ${g.isNull} ? null : ${g.value});
+        |}""".stripMargin)
+    }
+
     override def equals(o: Any): Boolean = o match {
-      case l: LmScore => child == l.child && unkMb == l.unkMb && unkTok == l.unkTok &&
-        keepMaxMb == l.keepMaxMb && vocab == l.vocab && pairMb == l.pairMb && ctxMb == l.ctxMb
+      case l: LmScore => left == l.left && right == l.right && unkTok == l.unkTok &&
+        keepMaxMb == l.keepMaxMb && models == l.models
       case _ => false
     }
-    @transient private lazy val h = modelHash(child, vocab, pairMb, ctxMb, unkMb)
+    @transient private lazy val h = modelHash(left, right, models, unkTok, keepMaxMb)
     override def hashCode(): Int = h
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+      copy(left = l, right = r)
   }
 
   // ---------------------------------------------------------------- DSIR
@@ -435,9 +462,9 @@ object TextKernels {
                    phiBp: Int, fenceOovBp: Int): Column =
     wrap(RarityScore(ex(tokens), vocab, nTotal, phiBp, fenceOovBp))
 
-  def lm_score(tokens: Column, vocab: Set[String], pairMb: Map[String, Long],
-               ctxMb: Map[String, Long], unkMb: Long, unkTok: String, keepMaxMb: Long): Column =
-    wrap(LmScore(ex(tokens), vocab, pairMb, ctxMb, unkMb, unkTok, keepMaxMb))
+  def lm_score(tokens: Column, group: Column, models: Map[String, graft.operators.LmScreen.LmModel],
+               unkTok: String, keepMaxMb: Long): Column =
+    wrap(LmScore(ex(tokens), ex(group), models, unkTok, keepMaxMb))
 
   def dsir_score(tokens: Column, delta: Seq[Long], prefix: String): Column =
     wrap(DsirScore(ex(tokens), delta.toArray, prefix))

@@ -1029,8 +1029,8 @@ object Dedup {
       .select(col("doc_id"), col("pos"), md5_60(col("col")).as("h"))
 
   /** the ONE interval-merge fold over a sorted int-array expression —
-    * shared by the batch aggregates and the row-local stream lookup so
-    * the merge rule cannot drift: a position p merges into the open
+    * the span-cut aggregates' merge rule, the one the `window_spans`
+    * kernel also implements: a position p merges into the open
     * interval while p ≤ its end (overlap or exact adjacency), else the
     * interval closes and a new one opens. */
   private def mergeSpansFoldSql(posArr: String, w: Int): String =
@@ -1047,12 +1047,6 @@ object Dedup {
        |      'cs', p, 'ce', p + $w) END,
        |  a -> CASE WHEN a.ce < 0 THEN a.sp
        |    ELSE concat(a.sp, array(named_struct('s', a.cs, 'e', a.ce))) END)""".stripMargin
-
-  /** aggregate expression merging collected 0-based window positions
-    * into maximal half-open [s, e) intervals — positions are distinct
-    * per doc (one window per offset). */
-  private def mergedSpansAgg(w: Int): Column =
-    expr(mergeSpansFoldSql("array_sort(collect_list(pos))", w))
 
   /** explode a (doc_id, spans) frame into the ordered interval list. */
   private def spanList(perDoc: DataFrame): DataFrame =
@@ -1094,7 +1088,9 @@ object Dedup {
     val cutPos = byH.join(owners, Seq("h"))
       .filter(col("doc_id") =!= col("owner"))
       .select("doc_id", "pos")
-    cutPos.groupBy("doc_id").agg(mergedSpansAgg(w).as("spans"))
+    // collected cut positions are distinct per doc (one window per offset)
+    cutPos.groupBy("doc_id")
+      .agg(expr(mergeSpansFoldSql("array_sort(collect_list(pos))", w)).as("spans"))
   }
 
   /** q107: SPAN-CUT summary — the APPLY step of exact substring dedup
@@ -1141,19 +1137,23 @@ object Dedup {
     * columns as q107b — the two cut lists compose downstream).
     *
     * Scale shape: STRONGER than q107 — the benchmark window set is
-    * eval-suite-sized and BROADCASTS (the q58 discipline), so the
-    * corpus pays ONE row-local window scan + broadcast semi probe +
-    * one map-side doc-keyed aggregate; the corpus never exchanges on
-    * the window key at all. */
-  def contaminationSpans(docs: DataFrame, windowTokens: Int = 8): DataFrame = {
-    val w = windowTokens
-    require(w >= 1, s"windowTokens must be >= 1, got $w")
-    val benchWins = windowHashes(docs.filter(isBenchmark(col("doc_id"))), w)
-      .select("h").distinct()
-    val hits = windowHashes(docs.filter(!isBenchmark(col("doc_id"))), w)
-      .join(broadcast(benchWins), Seq("h"), "left_semi")
-    spanList(hits.groupBy("doc_id").agg(mergedSpansAgg(w).as("spans")))
-  }
+    * eval-suite-sized and collects into a FROZEN sorted set
+    * ([[benchmarkWindowHashes]], guarded), so the corpus pays ONE
+    * row-local scan: window hashes, set probe and the interval merge
+    * in the one `window_spans` kernel per document, then the span
+    * explode — no join, no broadcast, and the only exchange is the
+    * output sort. The q114 apply, the stream door and the report view
+    * score through the same kernel. */
+  def contaminationSpans(docs: DataFrame, windowTokens: Int = 8): DataFrame =
+    contamSpansView(withContamSpans(docs, benchmarkWindowHashes(docs, windowTokens), windowTokens))
+      .orderBy("doc_id", "start_pos")
+
+  /** the q113 span rows of the CORPUS documents of a frame carrying
+    * `contam_spans` (benchmark rows excluded: their self-matching spans
+    * are vacuous by definition), unordered — the one output projection
+    * of batch q113 (which sorts it) and the report view. */
+  private[graft] def contamSpansView(scored: DataFrame): DataFrame =
+    explodeSpans(scored.filter(!isBenchmark(col("doc_id"))), "contam_spans")
 
   /** the interval-union fold over a sorted array<struct<s,e>> — the
     * [[mergeSpansFoldSql]] rule lifted from positions to intervals
@@ -1253,20 +1253,34 @@ object Dedup {
         col("__cl.clean_hash"))
       .orderBy("doc_id")
 
+  /** ceiling on the distinct benchmark windows [[benchmarkWindowHashes]]
+    * collects. The set rides inside the `window_spans` kernel of every
+    * task that scores documents against it (q113, q114, q118, q122 and
+    * the stream doors), so it is serialized into each task: 2¹⁶ longs
+    * are 512 KB per task. A real eval suite is fixed-size, far below
+    * this (the sf0.1 stand-in has under 3,000 windows); a larger
+    * benchmark side needs a broadcast variable, not a wider literal. */
+  val MaxBenchmarkWindows: Int = 1 << 16
+
   /** the benchmark window-hash set COLLECTED — eval-suite-sized by
     * construction (the bounded-model discipline: q75 vocabulary, bloom
-    * bytes, PQ codebooks). Train batch-side on the released benchmark,
-    * freeze, probe at ingest with [[contaminationSpansRowLocal]]. */
-  def benchmarkWindowHashes(docs: DataFrame, windowTokens: Int = 8): Seq[Long] =
-    windowHashes(docs.filter(isBenchmark(col("doc_id"))), windowTokens)
-      .select("h").distinct().collect().map(_.getLong(0)).toSeq
+    * bytes, PQ codebooks), guarded at [[MaxBenchmarkWindows]]. Train
+    * batch-side on the released benchmark, freeze, probe at ingest
+    * with [[contaminationSpansRowLocal]]. */
+  def benchmarkWindowHashes(docs: DataFrame, windowTokens: Int = 8): Seq[Long] = {
+    require(windowTokens >= 1, s"windowTokens must be >= 1, got $windowTokens")
+    Scale.bounded(windowHashes(docs.filter(isBenchmark(col("doc_id"))), windowTokens)
+        .select("h").distinct(), MaxBenchmarkWindows, "Dedup.benchmarkWindowHashes")
+      .map(_.getLong(0)).toSeq
+  }
 
   /** row-local q113 against a FROZEN collected benchmark set — the
     * ingest-door form ([[graft.streaming.DocStreams.contaminationLookup]]):
     * window hashes, set probe and the interval merge all evaluate in
-    * one kernel over the token array (the batch aggregate's merge rule,
-    * spec-pinned equal to q113) — no join, no state, no shuffle. Emits the q113 columns, unordered (streams
-    * don't sort); docs with nothing contaminated emit no rows. */
+    * one kernel over the token array — no join, no state, no shuffle.
+    * Batch q113 is the same kernel and explode over the corpus
+    * documents ([[contamSpansView]]), sorted. Emits the q113 columns, unordered (streams don't sort); docs with
+    * nothing contaminated emit no rows. */
   def contaminationSpansRowLocal(docs: DataFrame, benchHashes: Seq[Long],
                                  windowTokens: Int = 8): DataFrame =
     explodeSpans(withContamSpans(docs, benchHashes, windowTokens), "contam_spans")
@@ -1364,8 +1378,13 @@ object Dedup {
     * against itself is vacuous by definition, exactly as in q113). */
   def decontamApplyRowLocal(docs: DataFrame, benchHashes: Seq[Long],
                             windowTokens: Int = 8): DataFrame =
-    withContamApplyCols(docs.filter(!isBenchmark(col("doc_id"))), benchHashes,
-        windowTokens)
+    decontamView(withContamApplyCols(docs, benchHashes, windowTokens))
+
+  /** the q114 manifest columns of the CORPUS documents of a frame
+    * carrying the [[contamApplyCols]], unordered — the one output
+    * projection of q114 (which sorts it), its door and the report view. */
+  private[graft] def decontamView(scored: DataFrame): DataFrame =
+    scored.filter(!isBenchmark(col("doc_id")))
       .select(col("doc_id"),
         col("contam_n_tokens").as("n_tokens"),
         size(col("contam_spans")).cast("long").as("n_cut_spans"),

@@ -55,13 +55,15 @@ import org.apache.spark.sql.functions._
   * Scale shape: model pass = one corpus scan → map-side-combined
   * groupBy over the [[Buckets]]-sized key domain (partial aggregation
   * collapses each task's stream to ≤ B rows before the exchange — a
-  * hot bucket cannot serialize a task) → constant-sized totals cross
-  * join → the kernel on B-row frames. Scoring pass = one corpus scan,
-  * a BROADCAST join of the B-row delta model, one map-side-combined
-  * (doc_id, lang) aggregate. The resample election is a K-bounded
-  * TakeOrdered (per-partition heaps, K rows to the driver) — never a
-  * global sort. Nothing data-sized ever shuffles on a token or bucket
-  * key; plan-pinned in PlanShapeSpec.
+  * hot bucket cannot serialize a task), the deltas driver arithmetic
+  * over the collected B counts ([[TextModels]]). Scoring pass = one
+  * corpus scan with the row-local `dsir_score` kernel per document
+  * (the collected B deltas ride inside it) — no join, no broadcast,
+  * no aggregate; the same kernel scores the stream door and the
+  * report frame. The resample election is a K-bounded TakeOrdered
+  * (per-partition heaps, K rows to the driver) — never a global sort.
+  * Nothing data-sized ever shuffles on a token or bucket key;
+  * plan-pinned in PlanShapeSpec.
   */
 object Dsir {
 
@@ -95,32 +97,12 @@ object Dsir {
   private[operators] def bucketCol(t: Column): Column =
     pmod(Dedup.md5_60(concat(lit(FeatPrefix), t)), lit(Buckets.toLong))
 
-  /** The per-bucket delta model as a LOCAL frame: (f, delta_mb),
-    * EXACTLY [[Buckets]] rows (absent buckets carry their smoothed
-    * prior). delta_mb = mb_raw − mb_target ⇒ positive when the bucket
-    * is relatively more frequent in the target slice. Trained by
-    * [[TextModels]] in one corpus read at construction; the deltas are
-    * driver arithmetic. */
-  private[operators] def deltaModel(docs: DataFrame): DataFrame =
-    TextModels.dsirFrame(docs, TextModels.train(docs, TextModels.DsirOnly).dsir.get)
-
-  /** unordered weight core — the scoring scan: every document has ≥ 1
-    * token (the empty text canonicalizes to one empty token), so one
-    * inner broadcast join + one map-side-combined aggregate surfaces
-    * every document with no join-back. */
-  private def weightsUnordered(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("lang"), explode(TextModels.wsTokens).as("t"))
-      .select(col("doc_id"), col("lang"), bucketCol(col("t")).as("f"))
-      .join(broadcast(deltaModel(docs)), Seq("f"))
-      .groupBy("doc_id", "lang")
-      .agg(count(lit(1)).as("n_tokens"), sum("delta_mb").as("weight_mb"))
-
-  /** q101: per-document DSIR importance weight. Columns: doc_id, lang,
-    * n_tokens, weight_mb, keep (weight_mb > 0 — more target-like than
-    * pool-like). */
+  /** q101: per-document DSIR importance weight — the model trained by
+    * [[TextModels]] at construction, scored by the row-local kernel,
+    * sorted. Columns: doc_id, lang, n_tokens, weight_mb, keep
+    * (weight_mb > 0 — more target-like than pool-like). */
   def dsirWeights(docs: DataFrame): DataFrame =
-    weightsUnordered(docs)
-      .withColumn("keep", col("weight_mb") > 0L)
+    dsirView(dsirScoreRowLocal(docs, TextModels.train(docs, TextModels.DsirOnly).dsir.get))
       .orderBy("doc_id")
 
   /** q101b: the deterministic importance-resampling draw — the
@@ -128,7 +110,8 @@ object Dsir {
     * (weighted sampling without replacement; see object doc). Columns:
     * doc_id, lang, weight_mb, race_mb. */
   def dsirResample(docs: DataFrame): DataFrame =
-    resampleFromWeights(weightsUnordered(docs))
+    resampleFromWeights(
+      dsirView(dsirScoreRowLocal(docs, TextModels.train(docs, TextModels.DsirOnly).dsir.get)))
 
   /** The race election over an ALREADY-COMPUTED weights frame (the
     * q101 output, or its persisted parquet / docReport-derived view):
@@ -164,18 +147,33 @@ object Dsir {
     * `dsir_n_tokens` / `dsir_weight_mb` / `dsir_keep` over a whitespace
     * token array: each token hashes into its bucket and the bucket
     * deltas sum, one kernel per row
-    * ([[graft.functions.TextKernels.DsirScore]]). The column list both
-    * [[dsirScoreRowLocal]] and [[TextAnalysis.docReport]] select. */
+    * ([[graft.functions.TextKernels.DsirScore]]). The column list
+    * [[TextAnalysis.docReport]] selects. */
   def dsirCols(wsToks: Column, model: DsirModel): Seq[Column] = {
-    val k = graft.functions.TextKernels.dsir_score(wsToks,
-      (0L until Buckets.toLong).map(model.delta), FeatPrefix)
+    val k = dsirKernel(wsToks, model)
     graft.functions.TextKernels.DsirType.fieldNames.toSeq.map(f => k.getField(f).as(f))
   }
 
+  private def dsirKernel(wsToks: Column, model: DsirModel): Column =
+    graft.functions.TextKernels.dsir_score(wsToks, (0L until Buckets.toLong).map(model.delta),
+      FeatPrefix)
+
   /** Row-local scoring against a FROZEN collected model, appended as the
-    * [[dsirCols]] (all other columns ride through) — no explode, no
-    * state, no shuffle. The stream twin
+    * [[dsirCols]] fields (all other columns ride through) — no state,
+    * no shuffle. The struct leaves through `inline` of a one-element
+    * array, so q101b's weight > 0 filter stays above the Generate and
+    * each row is scored once (see [[Frequency.rarityScoreRowLocal]]).
+    * The batch q101/q101b and the stream twin
     * [[graft.streaming.DocStreams.dsirLookup]]. */
   def dsirScoreRowLocal(docs: DataFrame, model: DsirModel): DataFrame =
-    docs.select(col("*") +: dsirCols(TextModels.wsTokens, model): _*)
+    docs.select(col("*"), inline(array(dsirKernel(TextModels.wsTokens, model))))
+
+  /** the q101 columns (doc_id, lang, n_tokens, weight_mb, keep) over a
+    * frame carrying the [[dsirCols]], unordered — the one output
+    * projection of the batch screen (which sorts it), the resample
+    * draw, the stream lookup and the report view. */
+  def dsirView(scored: DataFrame): DataFrame =
+    scored.select(col("doc_id"), col("lang"),
+      col("dsir_n_tokens").as("n_tokens"),
+      col("dsir_weight_mb").as("weight_mb"), col("dsir_keep").as("keep"))
 }

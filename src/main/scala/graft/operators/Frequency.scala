@@ -127,8 +127,8 @@ object Frequency {
     * against a model trained on the corpus ITSELF, cut the tail). The
     * "model" is the exact heavy-hitter vocabulary (token share >
     * `phiBp` of the whole token stream — the two-pass sketch+verify
-    * discipline above, so the token domain never shuffles), broadcast
-    * back onto a third row-local pass that scores every token:
+    * discipline above, so the token domain never shuffles), collected
+    * and carried into a third row-local pass that scores every token:
     *
     *   cost(tok) = N·10⁴ DIV count(tok)        (inverse frequency —
     *     a Zipf surprisal proxy; same RANKING as −log p, chosen
@@ -141,31 +141,17 @@ object Frequency {
     * Output per document (docs with ≥1 token): token count, OOV count
     * and share, mean token cost, and the `is_tail` flag (OOV share >
     * `fenceOovBp`). Plan: the model trains in two linear passes
-    * ([[TextModels]]: sketch, then verify — run at construction, the
-    * vocabulary re-entering as a local relation), then one scoring pass
-    * with two broadcast joins and one map-side-combined doc aggregate —
-    * nothing keyed by token ever crosses the wire.
+    * ([[TextModels]]: sketch, then verify — run at construction), then
+    * one scoring pass: the `rarity_score` kernel per document over the
+    * collected vocabulary ([[rarityScoreRowLocal]]) and [[rarityView]],
+    * sorted — one scan, no join, no broadcast, and the only exchange is
+    * the output sort; nothing keyed by token ever crosses the wire.
     * N·10⁴ must fit BIGINT: fine to ~10¹⁵ tokens (≈ 4 PB of text),
     * beyond the 100 TB design point. */
   def rarityScreen(docs: DataFrame, phiBp: Int = 10, capacity: Int = 1024,
                    fenceOovBp: Int = 5000): DataFrame = {
-    val model = TextModels.train(docs, TextModels.RarityOnly, phiBp, capacity).rarity.get
-    val (vocab, total) = TextModels.rarityFrames(docs, model)
-    val keyed = docs.select(col("doc_id"), explode(TextModels.regexTokens).as("tok"))
-    keyed.join(broadcast(vocab), Seq("tok"), "left")
-      .crossJoin(broadcast(total))
-      .withColumn("cost", when(col("cnt").isNotNull,
-          expr("(n_total * 10000) DIV cnt"))
-        .otherwise(expr(s"(n_total * 10000) DIV ((n_total * $phiBp) DIV 10000 + 1)")))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("cnt").isNull, 1L).otherwise(0L)).as("n_oov"),
-        sum(col("cost")).as("sum_cost"))
-      .select(col("doc_id"), col("n_tokens"), col("n_oov"),
-        expr("(10000 * n_oov) DIV n_tokens").as("oov_bp"),
-        expr("sum_cost DIV n_tokens").as("mean_cost"),
-        (expr("(10000 * n_oov) DIV n_tokens") > fenceOovBp).as("is_tail"))
-      .orderBy("doc_id")
+    val (vocab, nTotal) = TextModels.train(docs, TextModels.RarityOnly, phiBp, capacity).rarity.get
+    rarityView(rarityScoreRowLocal(docs, vocab, nTotal, phiBp, fenceOovBp)).orderBy("doc_id")
   }
 
   /** The q75 vocabulary MODEL, collected to the driver: (token → exact
@@ -186,8 +172,7 @@ object Frequency {
     * null text: every field null; the oov/cost fields are null for
     * token-less documents). Same integer formulas as [[rarityScreen]],
     * one kernel per row ([[graft.functions.TextKernels.RarityScore]]).
-    * The column list both [[rarityScoreRowLocal]] and
-    * [[TextAnalysis.docReport]] select. */
+    * The column list [[TextAnalysis.docReport]] selects. */
   def rarityCols(regexToks: Column, model: Map[String, Long], nTotal: Long,
                  phiBp: Int = 10, fenceOovBp: Int = 5000): Seq[Column] = {
     val k = graft.functions.TextKernels.rarity_score(regexToks, model, nTotal, phiBp, fenceOovBp)
@@ -195,13 +180,29 @@ object Frequency {
   }
 
   /** Row-local scoring against the FROZEN collected q75 vocabulary,
-    * appended as the [[rarityCols]] (all other columns ride through;
-    * callers wanting the batch screen's contract filter on
-    * rar_n_tokens > 0) — no explode, no state, no shuffle. The stream
-    * twin [[graft.streaming.DocStreams.rarityLookup]]. */
+    * appended as the [[rarityCols]] fields (all other columns ride
+    * through; [[rarityView]] applies the batch screen's rar_n_tokens > 0
+    * contract) — no state, no shuffle. The kernel's struct leaves
+    * through `inline` of a one-element array: a filter on its fields
+    * then stays above the Generate, where Catalyst would otherwise push
+    * it below the projection and tokenize and score every row twice
+    * (once in the Filter, once in the Project). The batch q75 and the
+    * stream twin [[graft.streaming.DocStreams.rarityLookup]]. */
   def rarityScoreRowLocal(docs: DataFrame, model: Map[String, Long], nTotal: Long,
                           phiBp: Int = 10, fenceOovBp: Int = 5000): DataFrame =
-    docs.select(col("*") +: rarityCols(TextModels.regexTokens, model, nTotal, phiBp, fenceOovBp): _*)
+    docs.select(col("*"), inline(array(graft.functions.TextKernels.rarity_score(
+      TextModels.regexTokens, model, nTotal, phiBp, fenceOovBp))))
+
+  /** the q75 columns (doc_id, n_tokens, n_oov, oov_bp, mean_cost,
+    * is_tail) over a frame carrying the [[rarityCols]], documents with
+    * at least one token only, unordered — the one output projection of
+    * the batch screen (which sorts it), the stream lookup and the
+    * report view. */
+  def rarityView(scored: DataFrame): DataFrame =
+    scored.filter(col("rar_n_tokens") > 0)
+      .select(col("doc_id"), col("rar_n_tokens").as("n_tokens"),
+        col("rar_n_oov").as("n_oov"), col("rar_oov_bp").as("oov_bp"),
+        col("rar_mean_cost").as("mean_cost"), col("rar_is_tail").as("is_tail"))
 
   /** q68 instance: the per-source TOP-TERMS report over the corpus
     * (tokens with share > 2% within their source) — the vocabulary-

@@ -34,15 +34,18 @@ import org.apache.spark.sql.functions._
   * that would overflow int64). The DuckDB oracle carries the same
   * unrolled steps as chained CTEs ([[log2mbSqlCtes]]).
   *
-  * Scale shape: the kernel runs on the driver over MODEL-sized
+  * Scale shape: the log2 kernel runs on the driver over MODEL-sized
   * collections only (≤ (K+1)² bigram counts + K+1 contexts + 1,
   * [[TextModels]]), never on the document stream. Train token counts
   * hash-shuffle a bounded token domain with map-side combine; the
   * vocabulary election is a K-bounded TakeOrdered (the distributed
   * top-K plan: per-partition heaps, K rows to the driver); mapped
-  * bigram counts collapse map-side to ≤ (K+1)² rows. Scoring = vocab/model broadcast joins + one
-  * map-side-combined doc_id aggregate — nothing data-sized ever
-  * shuffles on a token key.
+  * bigram counts collapse map-side to ≤ (K+1)² rows. Scoring is one
+  * row-local `lm_score` kernel per document over the collected model
+  * (the per-language form: a table of models keyed by `lang`) — one
+  * corpus scan, no join, no broadcast, and the only exchange is the
+  * output sort. The same kernel scores the stream door and the report
+  * frame.
   */
 object LmScreen {
 
@@ -75,12 +78,6 @@ object LmScreen {
 
   /** restoring-division steps: bits of the Q0.30 mantissa fraction. */
   val DivBits = 30
-
-  /** floor-semantics fixed-point log2(b/a) in 1/1024-bit units,
-    * appended as column `out` — the codegen kernel
-    * [[graft.functions.LogExpressions.log2mb]]. */
-  def withLog2mb(df: DataFrame, a: Column, b: Column, out: String): DataFrame =
-    df.withColumn(out, graft.functions.LogExpressions.log2mb(a, b))
 
   // ---------------------------------------------------------------
   // the kernel, oracle side: chained-CTE text over a source CTE that
@@ -132,89 +129,64 @@ object LmScreen {
   /** bigram pair structs: an index transform over the token array —
     * ascending sequence sliced so 0/1-token docs yield no pairs. */
   private val BigramsExpr =
-    "transform(slice(sequence(0, size(tk)), 1, greatest(size(tk) - 1, 0)), i -> struct(tk[i] AS t1, tk[i + 1] AS t2, false AS is_doc))"
+    "transform(slice(sequence(0, size(tk)), 1, greatest(size(tk) - 1, 0)), i -> struct(tk[i] AS t1, tk[i + 1] AS t2))"
 
-  /** one sentinel struct per document, prepended to the pair array —
-    * it carries the document through the explode+aggregate so the
-    * 0-bigram docs surface WITHOUT a join-back to the corpus (one scan
-    * instead of two scans + a data-sized doc_id join). */
-  private val SentinelExpr =
-    "struct(CAST(NULL AS STRING) AS t1, CAST(NULL AS STRING) AS t2, true AS is_doc)"
-
-  /** (doc_id [, carry...], m1, m2, is_doc) mapped-bigram stream with
-    * the per-doc sentinel row; the vocab joins are broadcast (one
-    * exchange, reused for both sides), the explode row-local. `gk` =
-    * model grouping columns (empty: one global model; Seq("lang"):
-    * one model per language — vocab membership is then per-group). */
-  private def mappedBigrams(docs: DataFrame, vocab: DataFrame, gk: Seq[String],
-                            carry: Seq[String] = Nil, sentinel: Boolean = false): DataFrame = {
-    val pairs = if (sentinel) s"concat(array($SentinelExpr), $BigramsExpr)" else BigramsExpr
-    val keep = (gk ++ carry.filterNot(gk.contains)).distinct
-    docs.select(col("doc_id") +: keep.map(col) :+ TextModels.wsTokens.as("tk"): _*)
-      .select(col("doc_id") +: keep.map(col) :+ explode(expr(pairs)).as("bg"): _*)
-      .select(col("doc_id") +: keep.map(col) :+ col("bg.t1").as("t1") :+
-        col("bg.t2").as("t2") :+ col("bg.is_doc").as("is_doc"): _*)
-      .join(broadcast(vocab.select(gk.map(col) :+ col("tok").as("t1") :+ lit(1).as("__v1"): _*)),
-        gk :+ "t1", "left")
-      .join(broadcast(vocab.select(gk.map(col) :+ col("tok").as("t2") :+ lit(1).as("__v2"): _*)),
-        gk :+ "t2", "left")
-      .select(col("doc_id") +: keep.map(col) :+
-        when(col("__v1").isNotNull, col("t1")).otherwise(lit(UnkTok)).as("m1") :+
-        when(col("__v2").isNotNull, col("t2")).otherwise(lit(UnkTok)).as("m2") :+
-        col("is_doc"): _*)
-  }
+  /** (group, m1, m2) mapped-bigram stream of the per-group training
+    * read; the vocab joins are broadcast (one exchange, reused for both
+    * sides), the explode row-local. Vocabulary membership is per group. */
+  private def mappedBigrams(docs: DataFrame, vocab: DataFrame, group: String): DataFrame =
+    docs.select(col(group), TextModels.wsTokens.as("tk"))
+      .select(col(group), explode(expr(BigramsExpr)).as("bg"))
+      .select(col(group), col("bg.t1").as("t1"), col("bg.t2").as("t2"))
+      .join(broadcast(vocab.select(col(group), col("tok").as("t1"), lit(1).as("__v1"))),
+        Seq(group, "t1"), "left")
+      .join(broadcast(vocab.select(col(group), col("tok").as("t2"), lit(1).as("__v2"))),
+        Seq(group, "t2"), "left")
+      .select(col(group),
+        when(col("__v1").isNotNull, col("t1")).otherwise(lit(UnkTok)).as("m1"),
+        when(col("__v2").isNotNull, col("t2")).otherwise(lit(UnkTok)).as("m2"))
 
   /** the LAZY per-group vocabulary-election frame — each group's
     * top-[[VocabK]] train tokens under the total (count desc, token
     * asc) order, on the bounded-heap TopKPerKey. Exposed so PlanShapeSpec
     * can pin the election shape now that [[model]] collects its result
     * (the global election is [[TextModels.firstRead]]'s). */
-  private[graft] def vocabElection(docs: DataFrame, gk: Seq[String]): DataFrame = {
-    require(gk.nonEmpty, "the global vocabulary is elected by TextModels.firstRead")
+  private[graft] def vocabElection(docs: DataFrame, group: String): DataFrame = {
     val counts = docs.filter(pmod(col("doc_id"), lit(TrainMod.toLong)) === 0)
-      .select(gk.map(col) :+ explode(TextModels.wsTokens).as("tok"): _*)
-      .groupBy(gk :+ "tok" map col: _*).agg(count(lit(1)).as("cnt"))
-    graft.plans.TopKPerKey(counts, gk.map(col), Seq(col("cnt").desc, col("tok").asc), VocabK)
-      .select(gk :+ "tok" map col: _*)
+      .select(col(group), explode(TextModels.wsTokens).as("tok"))
+      .groupBy(group, "tok").agg(count(lit(1)).as("cnt"))
+    graft.plans.TopKPerKey(counts, Seq(col(group)), Seq(col("cnt").desc, col("tok").asc), VocabK)
+      .select(group, "tok")
   }
 
-  /** the trained model as LOCAL frames: (vocab, pair surprisal, context
-    * surprisal for unseen pairs, unseen-context surprisal) — all
-    * model-sized (each frame gains the `gk` columns when grouped);
-    * callers broadcast. The global model is [[TextModels.train]]'s; the
-    * per-group one elects each group's vocabulary on the repo's
-    * bounded-heap TopKPerKey operator and counts its mapped train
-    * bigrams in a second read. Either way the surprisals come from the
-    * ONE driver-side arithmetic ([[TextModels.lmModel]]).
+  /** one collected model per value of the string column `group`: each
+    * group elects its vocabulary on the repo's bounded-heap TopKPerKey
+    * operator ([[vocabElection]]) and counts its mapped train bigrams in
+    * a second read; the surprisals come from the ONE driver-side
+    * arithmetic ([[TextModels.lmModel]]) the global model also uses.
+    * Documents with a null group train nothing: the oracle's equi-join
+    * on the group never matches a null, so no null model exists.
     *
-    * NOTE (r19 semantics): building the model EXECUTES Spark jobs at
+    * NOTE (r19 semantics): building the models EXECUTES Spark jobs at
     * construction time — callers pay the training scans when they call
-    * this, not at first action, and the frames snapshot source state
+    * this, not at first action, and the models snapshot source state
     * as of the build. */
-  private[operators] def model(docs: DataFrame, gk: Seq[String] = Nil)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val models =
-      if (gk.isEmpty)
-        Seq(Seq.empty[Any] -> TextModels.train(docs, TextModels.LmOnly).lm.get)
-      else {
-        val election = vocabElection(docs, gk)
-        val vocabRows = Scale.bounded(election, VocabK * Corpus.MaxLanguages,
-          "LmScreen.vocabElection")
-        val vocab = docs.sparkSession.createDataFrame(
-          java.util.Arrays.asList(vocabRows: _*), election.schema)
-        val train = docs.filter(pmod(col("doc_id"), lit(TrainMod.toLong)) === 0)
-        val pairRows = Scale.bounded(mappedBigrams(train, vocab, gk)
-            .filter(!col("is_doc"))
-            .groupBy(gk ++ Seq("m1", "m2") map col: _*).agg(count(lit(1)).as("c2")),
-          (VocabK + 1) * (VocabK + 1) * Corpus.MaxLanguages, "LmScreen.pairCounts")
-        val n = gk.length
-        val pairsBy = pairRows.toSeq.groupBy(r => (0 until n).map(r.get))
-        vocabRows.toSeq.groupBy(r => (0 until n).map(r.get)).toSeq.map { case (k, vs) =>
-          k -> TextModels.lmModel(vs.map(_.getString(n)),
-            pairsBy.getOrElse(k, Nil).map(r => (r.getString(n), r.getString(n + 1), r.getLong(n + 2))))
-        }
-      }
-    TextModels.lmFrames(docs, gk, models)
+  private[operators] def model(docs: DataFrame, group: String): Map[String, LmModel] = {
+    val keyed = docs.filter(col(group).isNotNull)
+    val election = vocabElection(keyed, group)
+    val vocabRows = Scale.bounded(election, VocabK * Corpus.MaxLanguages,
+      "LmScreen.vocabElection")
+    val vocab = docs.sparkSession.createDataFrame(
+      java.util.Arrays.asList(vocabRows: _*), election.schema)
+    val train = keyed.filter(pmod(col("doc_id"), lit(TrainMod.toLong)) === 0)
+    val pairRows = Scale.bounded(mappedBigrams(train, vocab, group)
+        .groupBy(group, "m1", "m2").agg(count(lit(1)).as("c2")),
+      (VocabK + 1) * (VocabK + 1) * Corpus.MaxLanguages, "LmScreen.pairCounts")
+    val pairsBy = pairRows.toSeq.groupBy(_.getString(0))
+    vocabRows.toSeq.groupBy(_.getString(0)).map { case (g, vs) =>
+      g -> TextModels.lmModel(vs.map(_.getString(1)),
+        pairsBy.getOrElse(g, Nil).map(r => (r.getString(1), r.getString(2), r.getLong(3))))
+    }
   }
 
   /** The collected LM model — bounded ((K+1)² pairs + K+1 contexts +
@@ -227,15 +199,24 @@ object LmScreen {
   case class LmModel(vocab: Set[String], pairMb: Map[String, Long],
                      ctxMb: Map[String, Long], unkMb: Long)
 
+  /** the global model's key in the one-entry table [[lmCols]] scores
+    * against */
+  private val GlobalKey = ""
+
   /** the q100 per-document fields against a FROZEN collected model —
     * `lm_n_bigrams` / `lm_total_mb` / `lm_avg_mb` / `lm_keep` over a
     * whitespace token array: vocabulary fold, pair / context / unseen
     * surprisal lookups and the per-doc mean in one kernel per row
-    * ([[graft.functions.TextKernels.LmScore]]). The column list both
+    * ([[graft.functions.TextKernels.LmScore]], the global model a
+    * one-entry table under a constant key). The column list both
     * [[lmScoreRowLocal]] and [[TextAnalysis.docReport]] select. */
-  def lmCols(wsToks: Column, model: LmModel): Seq[Column] = {
-    val k = graft.functions.TextKernels.lm_score(wsToks, model.vocab, model.pairMb,
-      model.ctxMb, model.unkMb, UnkTok, KeepMaxMb)
+  def lmCols(wsToks: Column, model: LmModel): Seq[Column] =
+    lmCols(wsToks, lit(GlobalKey), Map(GlobalKey -> model))
+
+  /** [[lmCols]] against one model per value of the string column
+    * `group` (a null or untrained group scores 0 per bigram) */
+  private def lmCols(wsToks: Column, group: Column, models: Map[String, LmModel]): Seq[Column] = {
+    val k = graft.functions.TextKernels.lm_score(wsToks, group, models, UnkTok, KeepMaxMb)
     graft.functions.TextKernels.LmType.fieldNames.toSeq.map(f => k.getField(f).as(f))
   }
 
@@ -246,59 +227,42 @@ object LmScreen {
   def lmScoreRowLocal(docs: DataFrame, model: LmModel): DataFrame =
     docs.select(col("*") +: lmCols(TextModels.wsTokens, model): _*)
 
+  /** the q100 columns (doc_id, lang, n_bigrams, total_mb, avg_mb, keep)
+    * over a frame carrying the [[lmCols]], unordered — the one output
+    * projection of the batch screens (which sort it), the stream lookup
+    * and the report view. */
+  def lmView(scored: DataFrame): DataFrame =
+    scored.select(col("doc_id"), col("lang"),
+      col("lm_n_bigrams").as("n_bigrams"), col("lm_total_mb").as("total_mb"),
+      col("lm_avg_mb").as("avg_mb"), col("lm_keep").as("keep"))
+
   /** the collected global model — trained by [[TextModels]] together
     * with the release's rarity and DSIR models (the first of the three
     * builders trains all three). */
   def lmModel(docs: DataFrame): LmModel =
     TextModels.forRelease(docs, 10, 1024, TextModels.LmOnly)(_.lm, _.copy(lm = None))
 
-  /** q100: the per-document LM screen (see object doc). Columns:
-    * doc_id, lang, n_bigrams, total_mb, avg_mb (total_mb/avg_mb null
-    * when the document has < 2 tokens), keep. */
+  /** q100: the per-document LM screen (see object doc): the global
+    * model scored by the row-local kernel, sorted. Columns: doc_id,
+    * lang, n_bigrams, total_mb, avg_mb (total_mb/avg_mb null when the
+    * document has < 2 tokens), keep. */
   def lmScreen(docs: DataFrame): DataFrame =
-    lmScreenScored(docs, Nil)
-      .withColumn("keep",
-        col("n_bigrams") > 0 && col("avg_mb") <= KeepMaxMb)
+    lmView(lmScoreRowLocal(docs, TextModels.train(docs, TextModels.LmOnly).lm.get))
       .orderBy("doc_id")
 
   /** q100b: the PER-LANGUAGE screen — the deployed CCNet shape: one
     * bigram model per language (per-language vocabulary via the
     * bounded-heap TopKPerKey election, per-language counts and
     * smoothing domain), each document scored against ITS language's
-    * model. A multilingual corpus scored against one global model
-    * conflates "rare language" with "low quality"; per-language models
-    * make the fence comparable across languages. Documents of a
-    * language absent from the train slice score 0 (an empty model has
-    * nothing to be surprised by — they pass, flagged by n_bigrams as
-    * usual). Same columns as q100. */
+    * model by the same kernel. A multilingual corpus scored against
+    * one global model conflates "rare language" with "low quality";
+    * per-language models make the fence comparable across languages.
+    * Documents of a language absent from the train slice, and
+    * documents with a null language, score 0 (no model has nothing to
+    * be surprised by — they pass, flagged by n_bigrams as usual). Same
+    * columns as q100. */
   def lmScreenPerLang(docs: DataFrame): DataFrame =
-    lmScreenScored(docs, Seq("lang"))
-      .withColumn("keep",
-        col("n_bigrams") > 0 && col("avg_mb") <= KeepMaxMb)
+    lmView(docs.select(col("*") +:
+        lmCols(TextModels.wsTokens, col("lang"), model(docs, "lang")): _*))
       .orderBy("doc_id")
-
-  /** the unordered scoring core — ONE corpus scan: the per-doc
-    * sentinel row rides the bigram explode, so 0-bigram documents
-    * surface from the same map-side-combined aggregate (no join-back,
-    * no second scan). `gk` keys the model (empty = global). */
-  private def lmScreenScored(docs: DataFrame, gk: Seq[String]): DataFrame = {
-    val (vocab, pairModel, ctxModel, unkModel) = model(docs, gk)
-    val joined = mappedBigrams(docs, vocab, gk, carry = Seq("lang"), sentinel = true)
-      .join(broadcast(pairModel), gk ++ Seq("m1", "m2"), "left")
-      .join(broadcast(ctxModel), gk :+ "m1", "left")
-    val withUnk =
-      if (gk.isEmpty) joined.crossJoin(broadcast(unkModel))
-      else joined.join(broadcast(unkModel), gk, "left")
-    withUnk
-      .select(col("doc_id"), col("lang"),
-        when(col("is_doc"), lit(null).cast("long"))
-          // the final 0: a group with no trained model at all (possible
-          // only in the grouped form) — surprisal 0 by definition
-          .otherwise(coalesce(col("mb"), col("ctx_mb"), col("unk_mb"), lit(0L)))
-          .as("s_mb"))
-      .groupBy("doc_id", "lang")
-      .agg(count(col("s_mb")).as("n_bigrams"), sum("s_mb").as("total_mb"))
-      .select(col("doc_id"), col("lang"), col("n_bigrams"), col("total_mb"),
-        when(col("n_bigrams") > 0, expr("total_mb DIV n_bigrams")).as("avg_mb"))
-  }
 }

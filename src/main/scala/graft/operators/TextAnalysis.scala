@@ -538,8 +538,8 @@ object TextAnalysis {
     val arrays = documents.select(col("*"),
       TextModels.regexTokens.as("__rt"), TextModels.wsTokens.as("__wt"),
       Dedup.tokens(col("text")).as("__tx"), split(trim(col("text")), " +").as("__st"))
-    // projection 2: every feature column, the same column lists the
-    // standalone operators select
+    // projection 2: every feature column, over the same kernels the
+    // standalone operators score with
     val features =
       (predictedLangCol.as("predicted_lang") +: qualityCols) ++
         tokenCountCols(col("__st"), col("__rt")) ++
@@ -638,18 +638,11 @@ object TextAnalysis {
 
   /** q75 over the frame (the batch screen's ≥1-token contract). */
   def reportRarity(report: DataFrame): DataFrame =
-    report.filter(col("rar_n_tokens") > 0)
-      .select(col("doc_id"), col("rar_n_tokens").as("n_tokens"),
-        col("rar_n_oov").as("n_oov"), col("rar_oov_bp").as("oov_bp"),
-        col("rar_mean_cost").as("mean_cost"), col("rar_is_tail").as("is_tail"))
-      .orderBy("doc_id")
+    Frequency.rarityView(report).orderBy("doc_id")
 
   /** q100 over the frame. */
   def reportLmScreen(report: DataFrame): DataFrame =
-    report.select(col("doc_id"), col("lang"),
-        col("lm_n_bigrams").as("n_bigrams"), col("lm_total_mb").as("total_mb"),
-        col("lm_avg_mb").as("avg_mb"), col("lm_keep").as("keep"))
-      .orderBy("doc_id")
+    LmScreen.lmView(report).orderBy("doc_id")
 
   /** q102 over the frame — the nested chunk array explodes back to
     * the span rows. */
@@ -661,29 +654,18 @@ object TextAnalysis {
 
   /** q101 over the frame. */
   def reportDsir(report: DataFrame): DataFrame =
-    report.select(col("doc_id"), col("lang"),
-        col("dsir_n_tokens").as("n_tokens"),
-        col("dsir_weight_mb").as("weight_mb"), col("dsir_keep").as("keep"))
-      .orderBy("doc_id")
+    Dsir.dsirView(report).orderBy("doc_id")
+
+  /** q114 over the frame: the cut manifest reads straight off the
+    * persisted columns (spans → counts, the stored clean hash) —
+    * benchmark rows filtered at view time, exactly like q113's view. */
+  def reportDecontamApply(report: DataFrame): DataFrame =
+    Dedup.decontamView(report).orderBy("doc_id")
 
   /** q113 over the frame (frame built with the frozen benchmark window
     * set): explode the nested spans of CORPUS docs — the frame holds
     * every doc, including the benchmark split, whose self-matching
     * spans q113 by definition excludes. */
-  /** q114 over the frame: the cut manifest reads straight off the
-    * persisted columns (spans → counts, the stored clean hash) —
-    * benchmark rows filtered at view time, exactly like q113's view. */
-  def reportDecontamApply(report: DataFrame): DataFrame =
-    report.filter(!Dedup.isBenchmark(col("doc_id")))
-      .select(col("doc_id"),
-        col("contam_n_tokens").as("n_tokens"),
-        size(col("contam_spans")).cast("long").as("n_cut_spans"),
-        Dedup.spanTokensSumCol("contam_spans").as("tokens_cut"),
-        col("clean_n_tokens"), col("clean_hash"))
-      .orderBy("doc_id")
-
   def reportContamSpans(report: DataFrame): DataFrame =
-    Dedup.explodeSpans(report.filter(!Dedup.isBenchmark(col("doc_id"))),
-        "contam_spans")
-      .orderBy("doc_id", "start_pos")
+    Dedup.contamSpansView(report).orderBy("doc_id", "start_pos")
 }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,9 +25,9 @@ import graft.functions.LogExpressions.log2mbKernel
   *    arithmetic over model-sized collections, each collected once
   *    through [[Scale.bounded]] under its model's own ceiling.
   *
-  * The lazy q75/q100/q100b/q101 frames enter these driver results as
-  * local relations ([[rarityFrames]], [[lmFrames]], [[dsirFrame]]), so
-  * each model has one definition whether it is collected or joined. */
+  * Every consumer scores a collected model with its row-local kernel
+  * ([[graft.functions.TextKernels]]): the batch screens, the stream
+  * lookups and the release report share one scorer per model. */
 object TextModels {
 
   /** the whitespace tokenizer every LM/DSIR token comes from (null text
@@ -230,40 +228,5 @@ object TextModels {
     parked = rest
     parkedKey = if (rest == NoModels) None else key
     model
-  }
-
-  // ------------------------------------ the lazy frames over the results
-
-  private def local(docs: DataFrame, schema: StructType, rows: Seq[Row]): DataFrame =
-    docs.sparkSession.createDataFrame(rows.asJava, schema)
-
-  /** q75's (tok, cnt) vocabulary and 1-row (n_total) frames */
-  private[operators] def rarityFrames(docs: DataFrame, model: (Map[String, Long], Long))
-      : (DataFrame, DataFrame) =
-    (local(docs, StructType(Seq(StructField("tok", StringType), StructField("cnt", LongType))),
-      model._1.toSeq.map { case (t, c) => Row(t, c) }),
-     local(docs, StructType(Seq(StructField("n_total", LongType))), Seq(Row(model._2))))
-
-  /** q101's (f, delta_mb) frame */
-  private[operators] def dsirFrame(docs: DataFrame, model: Dsir.DsirModel): DataFrame =
-    local(docs, StructType(Seq(StructField("f", LongType), StructField("delta_mb", LongType))),
-      model.delta.toSeq.sortBy(_._1).map { case (f, d) => Row(f, d) })
-
-  /** q100/q100b's (vocab, pair, context, unk) frames, one model per
-    * group (`gk` empty: one global model, keyed by the empty group) */
-  private[operators] def lmFrames(docs: DataFrame, gk: Seq[String],
-                                  models: Seq[(Seq[Any], LmScreen.LmModel)])
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val g = gk.map(k => StructField(k, docs.schema(k).dataType))
-    def schema(fs: (String, DataType)*) = StructType(g ++ fs.map { case (n, t) => StructField(n, t) })
-    (local(docs, schema("tok" -> StringType),
-      models.flatMap { case (k, m) => m.vocab.toSeq.map(t => Row.fromSeq(k :+ t)) }),
-     local(docs, schema("m1" -> StringType, "m2" -> StringType, "mb" -> LongType),
-      models.flatMap { case (k, m) => m.pairMb.toSeq.map { case (p, mb) =>
-        val Array(a, b) = p.split(" ", 2); Row.fromSeq(k ++ Seq(a, b, mb)) } }),
-     local(docs, schema("m1" -> StringType, "ctx_mb" -> LongType),
-      models.flatMap { case (k, m) => m.ctxMb.toSeq.map { case (a, mb) => Row.fromSeq(k ++ Seq(a, mb)) } }),
-     local(docs, schema("unk_mb" -> LongType),
-      models.map { case (k, m) => Row.fromSeq(k :+ m.unkMb) }))
   }
 }

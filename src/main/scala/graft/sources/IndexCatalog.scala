@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Search, Similarity}
@@ -101,16 +101,22 @@ object IndexCatalog {
     * per-segment n_docs; a re-ingested doc appearing in TWO segments
     * would double-count N and skew idf ranking after compaction — an
     * update-capable segment model must dedup doc versions before
-    * compacting (or derive N from the distinct doc domain). */
+    * compacting (or derive N from the distinct doc domain).
+    *
+    * Both tables are EXTERNAL, their files under `<dataDir>/<table>`
+    * and `<dataDir>/<table>_meta`: the caller's directory owns their
+    * lifetime (dropping a table leaves its files), so no run leaves
+    * table data under the warehouse dir. */
   def compactSegments(spark: SparkSession, indexPath: String, metaPath: String,
-                      table: String, buckets: Int = 16): Unit = {
-    graft.Tables.read(spark, indexPath).drop("seg")
+                      table: String, dataDir: String, buckets: Int = 16): Unit = {
+    def save(w: DataFrameWriter[Row], t: String): Unit =
+      w.option("path", s"$dataDir/$t").saveAsTable(t)
+    save(graft.Tables.read(spark, indexPath).drop("seg")
       .write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "term").sortBy("term")
-      .saveAsTable(table)
-    graft.Tables.read(spark, metaPath)
+      .bucketBy(buckets, "term").sortBy("term"), table)
+    save(graft.Tables.read(spark, metaPath)
       .agg(sum("n_docs").cast("long").as("n_docs"))
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_meta")
+      .write.mode("overwrite").format("parquet"), s"${table}_meta")
   }
 
   /** External-reader search path: q87's ranking through the

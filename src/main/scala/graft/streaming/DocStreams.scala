@@ -166,15 +166,13 @@ object DocStreams {
     * batch-side on the released corpus and rides inside the
     * `rarity_score` kernel as a hash map; scoring is the same integer
     * cost formulas, one kernel call per row — STATELESS, so it runs at
-    * any ingest rate with zero state store. Docs with zero tokens are
-    * dropped, same contract as the batch screen. */
+    * any ingest rate with zero state store. The batch screen's own
+    * scorer and view unsorted ([[graft.operators.Frequency.rarityView]]):
+    * docs with zero tokens are dropped. */
   def rarityLookup(docs: DataFrame, model: Map[String, Long], nTotal: Long,
                    phiBp: Int = 10, fenceOovBp: Int = 5000): DataFrame =
-    graft.operators.Frequency.rarityScoreRowLocal(docs, model, nTotal, phiBp, fenceOovBp)
-      .filter(col("rar_n_tokens") > 0)
-      .select(col("doc_id"), col("rar_n_tokens").as("n_tokens"),
-        col("rar_n_oov").as("n_oov"), col("rar_oov_bp").as("oov_bp"),
-        col("rar_mean_cost").as("mean_cost"), col("rar_is_tail").as("is_tail"))
+    graft.operators.Frequency.rarityView(
+      graft.operators.Frequency.rarityScoreRowLocal(docs, model, nTotal, phiBp, fenceOovBp))
 
   /** Ingest-time LM perplexity screen (q100's stream twin): score each
     * arriving document against the FROZEN collected bigram model
@@ -183,12 +181,10 @@ object DocStreams {
     * the one row-local `lm_score` kernel over the token array (no
     * explode, no state, no shuffle). Retraining belongs batch-side
     * (the rarity/BPE discipline: a silently drifting model would
-    * re-score the corpus); spec-equal to the batch q100. */
+    * re-score the corpus). The batch q100's own scorer and view
+    * ([[graft.operators.LmScreen.lmView]]), unsorted. */
   def lmLookup(docs: DataFrame, model: graft.operators.LmScreen.LmModel): DataFrame =
-    graft.operators.LmScreen.lmScoreRowLocal(docs, model)
-      .select(col("doc_id"), col("lang"),
-        col("lm_n_bigrams").as("n_bigrams"), col("lm_total_mb").as("total_mb"),
-        col("lm_avg_mb").as("avg_mb"), col("lm_keep").as("keep"))
+    graft.operators.LmScreen.lmView(graft.operators.LmScreen.lmScoreRowLocal(docs, model))
 
   /** Ingest-time DSIR relevance screen (q101's stream twin): score
     * each arriving document against the FROZEN collected delta model
@@ -198,12 +194,10 @@ object DocStreams {
     * bucket, read the bucket's delta, sum. No explode,
     * no state, no shuffle; retraining is batch-side (the frozen-model
     * contract — a drifting model would silently re-score the corpus).
-    * Spec-equal to the batch q101. */
+    * The batch q101's own scorer and view
+    * ([[graft.operators.Dsir.dsirView]]), unsorted. */
   def dsirLookup(docs: DataFrame, model: graft.operators.Dsir.DsirModel): DataFrame =
-    graft.operators.Dsir.dsirScoreRowLocal(docs, model)
-      .select(col("doc_id"), col("lang"),
-        col("dsir_n_tokens").as("n_tokens"),
-        col("dsir_weight_mb").as("weight_mb"), col("dsir_keep").as("keep"))
+    graft.operators.Dsir.dsirView(graft.operators.Dsir.dsirScoreRowLocal(docs, model))
 
   /** Ingest-time retrieval percolation (q103's stream twin): every
     * arriving document is chunked by the ONE shared geometry and each
@@ -361,9 +355,10 @@ object DocStreams {
     * arriving documents probe the FROZEN collected benchmark window
     * set ([[graft.operators.Dedup.benchmarkWindowHashes]],
     * eval-suite-sized — the freeze discipline) entirely row-locally:
-    * window hashes, set probe and the interval merge run inside one
-    * projection sharing the batch fold SQL, so the emitted spans are
-    * bit-equal to batch q113 (spec-proven). Stateless, no join — runs
+    * window hashes, set probe and the interval merge run inside the
+    * one `window_spans` kernel batch q113 also scores with, and the
+    * spans leave through the same explode view, unsorted. Stateless,
+    * no join — runs
     * at any ingest rate. */
   def contaminationLookup(docs: DataFrame, benchHashes: Seq[Long],
                           windowTokens: Int = 8): DataFrame =

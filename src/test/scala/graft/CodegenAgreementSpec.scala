@@ -60,7 +60,6 @@ class CodegenAgreementSpec extends AnyFunSuite {
         HashExpressions.affine_minhash(
           HashExpressions.md5_shingle_hashes(col("toks"), 3), params).as("mh"),
         HashExpressions.bucket_count_vec(col("toks"), "agr:", 32, 255).as("bcv"),
-        HashExpressions.bucket_count_vec_packed(col("toks"), "agr:", 32, 255).as("bcvp"),
         HashExpressions.bucket_count_vec2_packed(col("toks"), "agr:", 32, 16, 255).as("bcv2"),
         HashExpressions.sorted_long_contains(col("a"), Seq(3L, 17L, 42L, 90L)).as("slc"),
         LogExpressions.log2mb(col("a"), col("b")).as("lg"),
@@ -128,7 +127,10 @@ class CodegenAgreementSpec extends AnyFunSuite {
           Array("a", "b").map(org.apache.spark.unsafe.types.UTF8String.fromString)), 0, 2)), 2)
     df.select(col("id"),
         TextKernels.rarity_score(rx, Map("the" -> 3L, "a" -> 3L, "b" -> 3L), 40L, 10, 5000).as("rar"),
-        TextKernels.lm_score(ws, lm.vocab, lm.pairMb, lm.ctxMb, lm.unkMb, "<unk>", 3400L).as("lm"),
+        TextKernels.lm_score(ws, lit(""), Map("" -> lm), "<unk>", 3400L).as("lm"),
+        // a per-group table: a trained group, an untrained one, a null one
+        TextKernels.lm_score(ws, when(col("id") % 3 === 0, "de").when(col("id") % 3 === 1, "xx"),
+          Map("de" -> lm, "en" -> lm.copy(unkMb = 9000L)), "<unk>", 3400L).as("lmg"),
         TextKernels.dsir_score(ws, (0 until 64).map(i => (i % 7 - 3).toLong), "dsir:").as("ds"),
         TextKernels.word_class_counts(ws, Seq("the", "and", "a")).as("wc"),
         spans.as("sp"),

@@ -517,10 +517,31 @@ class DedupSpec extends AnyFunSuite {
     assert(s.getAs[Long]("start_pos") == 3L && s.getAs[Long]("end_pos") == 13L
       && s.getAs[Long]("span_tokens") == 10L,
       s"expected the quoted span [3,13), got $s")
-    val plan = Dedup.contaminationSpans(docs).queryExecution.executedPlan.toString()
-    assert(plan.contains("LeftSemi") && !plan.contains("CartesianProduct")
-      && !plan.contains("Window"),
-      "benchmark windows broadcast; the corpus never exchanges on the window key")
+    // the benchmark windows are a frozen set inside the window_spans
+    // kernel: no join, no broadcast, no window, and the output sort's
+    // range exchange the only exchange
+    val df = Dedup.contaminationSpans(docs)
+    df.queryExecution.toRdd.count()
+    val ns = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
+    assert(!ns.exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec]),
+      "the benchmark set is probed in the kernel, never joined")
+    assert(!ns.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeLike]))
+    assert(!ns.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]))
+    val shuffles = graft.plans.PlanWalk.shuffleExchanges(df).map(_.outputPartitioning)
+    assert(shuffles.length <= 1 && shuffles.forall(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RangePartitioning]),
+      s"the corpus never exchanges on the window key: $shuffles")
+  }
+
+  test("the benchmark window-set collect fails one window past its ceiling, naming itself and the count") {
+    val max = Dedup.MaxBenchmarkWindows
+    // n distinct tokens hold n − 7 distinct 8-token windows
+    def bench(windows: Int) = Seq((0L, (0 until windows + 7).map(i => s"t$i").mkString(" ")),
+      (1001L, "a corpus document")).toDF("doc_id", "text")
+    assert(Dedup.benchmarkWindowHashes(bench(max)).size == max)
+    val e = intercept[IllegalArgumentException](Dedup.benchmarkWindowHashes(bench(max + 1)))
+    assert(e.getMessage.contains("Dedup.benchmarkWindowHashes") &&
+      e.getMessage.contains(s"saw ${max + 1}"), e.getMessage)
   }
 
   test("contamination spans imply q58 contamination on real data") {

@@ -18,7 +18,7 @@ class LmScreenSpec extends AnyFunSuite {
   /** run the kernel on literal (a, b) pairs. */
   private def kernel(pairs: Seq[(Long, Long)]): Map[(Long, Long), Long] = {
     val df = pairs.toDF("a", "b")
-    LmScreen.withLog2mb(df, col("a"), col("b"), "mb")
+    df.withColumn("mb", graft.functions.LogExpressions.log2mb(col("a"), col("b")))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
   }
 
@@ -114,6 +114,84 @@ class LmScreenSpec extends AnyFunSuite {
     // cuts) everything is mis-tuned
     val kept = out.filter(col("keep")).count()
     assert(kept > 0 && kept < out.count(), s"fence partitions: kept=$kept")
+  }
+
+  /** q100/q100b replayed in plain Scala, independent of the kernels:
+    * the train slice, the top-K election under (count desc, token asc),
+    * the Laplace surprisals from the reference log2mbKernel and the
+    * per-document sums. `byLang`: one model per non-null language; a
+    * null or untrained language costs 0 per bigram. Values: (n_bigrams,
+    * total_mb, avg_mb, keep). */
+  private def replay(rows: Seq[(Long, String, String)], byLang: Boolean)
+      : Map[Long, (Long, Option[Long], Option[Long], Boolean)] = {
+    import graft.functions.LogExpressions.log2mbKernel
+    def toks(t: String): Seq[String] = Option(t).getOrElse("").toLowerCase.trim.split(" +", -1).toSeq
+    def group(lang: String): Option[String] = if (byLang) Option(lang) else Some("")
+    def bigrams(ts: Seq[String]): Seq[(String, String)] = ts.zip(ts.drop(1))
+    val models: Map[String, (String, String) => Long] =
+      rows.filter(_._1 % LmScreen.TrainMod == 0).groupBy(r => group(r._3)).collect {
+        case (Some(g), train) =>
+          val counts = train.flatMap(r => toks(r._2)).groupBy(identity).view.mapValues(_.size.toLong)
+          val vocab = counts.toSeq.sortBy { case (t, c) => (-c, t) }.take(LmScreen.VocabK).map(_._1).toSet
+          def cls(t: String) = if (vocab(t)) t else LmScreen.UnkTok
+          val pairs = train.flatMap(r => bigrams(toks(r._2).map(cls)))
+            .groupBy(identity).view.mapValues(_.size.toLong).toMap
+          val ctx = pairs.toSeq.groupMapReduce(_._1._1)(_._2)(_ + _)
+          val vd = vocab.size + 1L
+          g -> ((a: String, b: String) => {
+            val p = (cls(a), cls(b))
+            log2mbKernel(pairs.getOrElse(p, 0L) + 1L, ctx.getOrElse(p._1, 0L) + vd)
+          })
+      }
+    rows.map { case (id, text, lang) =>
+      val bs = bigrams(toks(text))
+      if (bs.isEmpty) id -> ((0L, None, None, false))
+      else {
+        val cost = group(lang).flatMap(models.get)
+        val total = bs.map { case (a, b) => cost.fold(0L)(_(a, b)) }.sum
+        val avg = total / bs.size
+        id -> ((bs.size.toLong, Some(total), Some(avg), avg <= LmScreen.KeepMaxMb))
+      }
+    }.toMap
+  }
+
+  test("q100 and q100b equal a Scala replay of the surprisals, null and untrained languages included") {
+    val rows = Seq[(Long, String, String)](
+      (0L, "the cat sat on the mat the cat ran", "en"),
+      (5L, "a dog and a cat and the dog sat", "en"),
+      (10L, "der hund und die katze und der hund", "de"),
+      (15L, "the end of the story is the end", "en"),
+      (20L, "null lang train text and the cat", null),   // trains no per-language model
+      (25L, "die katze sitzt auf der matte", "de"),
+      (30L, null, "en"),
+      (35L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu", "en"),
+      (1L, "the cat sat on the mat", "en"),
+      (2L, "der hund sitzt", "de"),
+      (3L, "the quick brown fox and the cat", null),    // null language
+      (4L, "un deux trois quatre", "fr"),               // untrained language
+      (6L, "word", "en"),
+      (7L, "", "en"),
+      (8L, "the the the the", "en"),
+      (9L, "and the cat and the dog", "de"),
+      (11L, "  Spaced    OUT words  ", "en"),
+      (12L, null, null))
+    val d = rows.map { case (id, t, l) => (id, t, l, "s0", 0L) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    def got(df: DataFrame) = df.collect().map(r => r.getLong(0) -> ((r.getLong(2),
+      Option(r.get(3)).map(_.asInstanceOf[Long]), Option(r.get(4)).map(_.asInstanceOf[Long]),
+      r.getBoolean(5)))).toMap
+    val global = replay(rows, byLang = false)
+    val perLang = replay(rows, byLang = true)
+    assert(got(LmScreen.lmScreen(d)) === global)
+    assert(got(LmScreen.lmScreenPerLang(d)) === perLang)
+    // the fixture exercises what it claims: an unk class in the global
+    // vocabulary, zero-cost null and untrained languages, and a
+    // per-language score that differs from the global one
+    assert(rows.filter(_._1 % 5 == 0).flatMap(r => Option(r._2).toSeq.flatMap(_.split(" +")))
+      .distinct.size > LmScreen.VocabK)
+    assert(perLang(3L)._2 === Some(0L) && perLang(4L)._2 === Some(0L))
+    assert(global(3L)._2.exists(_ > 0L) && global(4L)._2.exists(_ > 0L))
+    assert(perLang(1L) != global(1L))
   }
 
   test("per-language models are independent: one language's train text cannot move another's scores") {

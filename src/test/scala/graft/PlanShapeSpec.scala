@@ -298,13 +298,32 @@ class PlanShapeSpec extends AnyFunSuite {
       "MG sketch must run as a map-side-combined imperative aggregate")
   }
 
-  test("rarity screen: model rides broadcasts, token domain never shuffle-joins") {
-    val plan = graft.operators.Frequency.rarityScreen(Tables.documents(spark, dir))
-      .queryExecution.executedPlan.toString()
-    assert(plan.contains("BroadcastHashJoin"),
-      "vocabulary and total must broadcast back onto the scoring scan")
-    assert(!plan.contains("SortMergeJoin"),
-      "a shuffle join on tokens would be the 100 TB killer the sketch plan avoids")
+  /** the one-scorer shape of a frozen-model screen, after executing it:
+    * the corpus scanned once, scored row-locally by its kernel — no
+    * join, no broadcast — and the output sort's range exchange the only
+    * exchange. */
+  private def assertKernelScored(name: String, df: org.apache.spark.sql.DataFrame,
+                                 kernel: String): Unit = {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    df.queryExecution.toRdd.count()
+    val ns = PlanWalk.nodes(df.queryExecution.executedPlan)
+    val scans = ns.count(_.isInstanceOf[FileSourceScanExec])
+    assert(scans == 1, s"$name must scan the corpus exactly once, saw $scans")
+    assert(!ns.exists(_.isInstanceOf[BaseJoinExec]), s"$name: the frozen model is a kernel, not a join")
+    assert(!ns.exists(_.isInstanceOf[BroadcastExchangeLike]), s"$name broadcasts")
+    val shuffles = ns.collect { case x: ShuffleExchangeLike => x.outputPartitioning }
+    assert(shuffles.length <= 1 && shuffles.forall(_.isInstanceOf[RangePartitioning]),
+      s"$name: only the output sort may exchange, saw $shuffles")
+    assert(df.queryExecution.executedPlan.toString().contains(kernel),
+      s"$name must score with $kernel")
+  }
+
+  test("rarity screen: one kernel-scored scan, token domain never shuffles") {
+    assertKernelScored("q75", graft.operators.Frequency.rarityScreen(Tables.documents(spark, dir)),
+      "rarity_score")
     // the model trains at construction (TextModels): its first read is
     // the map-side-combined sketch, the LM election on the K-bounded
     // TakeOrdered, and no join at all
@@ -317,53 +336,28 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!tplan.contains("Join"), "the training read joins nothing")
   }
 
-  test("LM screen: one scoring scan, broadcast model, no token shuffle-join") {
+  test("LM screen: one kernel-scored scan, no join, no window") {
     val df = graft.operators.LmScreen.lmScreen(Tables.documents(spark, dir))
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString()
-    assert(!plan.contains("SortMergeJoin"),
-      "a shuffle join on tokens/doc_id would be the 100 TB killer — the " +
-        "sentinel row exists precisely so no join-back is needed")
-    assert(!plan.contains("Window"), "no hot-key window anywhere")
-    // r19: the model frames are collected (model-sized) and re-enter as
-    // local relations, so the vocabulary election lives in its OWN plan
-    // (pinned below) and the scoring plan must scan the corpus ONCE
-    val scans = PlanWalk.nodes(df.queryExecution.executedPlan)
-      .count(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
-    assert(scans == 1,
-      s"the LM screen must scan the corpus exactly once, saw $scans")
+    assertKernelScored("q100", df, "lm_score")
+    assert(!df.queryExecution.executedPlan.toString().contains("Window"), "no hot-key window anywhere")
     // the global vocabulary is elected in the models' first training
-    // read, the one LmScreen.model runs
+    // read
     val vplan = graft.operators.TextModels.firstRead(Tables.documents(spark, dir),
       graft.operators.TextModels.LmOnly, 1024).queryExecution.executedPlan.toString()
     assert(vplan.contains(s"TakeOrderedAndProject(limit=${graft.operators.TextModels.firstReadRows}"),
       "the vocabulary election must be the K-bounded distributed top-K")
-    // the sentinel row surfaces 0-bigram docs from the scoring
-    // aggregate itself — no join keyed on doc_id may exist anywhere
-    // (the join-back it replaces was a second corpus scan + a
-    // data-sized doc_id join)
-    assert(!plan.contains("Join [doc_id"),
-      "no doc_id join-back: the sentinel row carries 0-bigram docs")
   }
 
   test("per-language LM screen: vocabulary election is the bounded heap, still no shuffle join") {
     val df = graft.operators.LmScreen.lmScreenPerLang(Tables.documents(spark, dir))
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString()
     val vplan = graft.operators.LmScreen
-      .vocabElection(Tables.documents(spark, dir), Seq("lang"))
+      .vocabElection(Tables.documents(spark, dir), "lang")
       .queryExecution.executedPlan.toString()
     assert(vplan.contains("TopKPerKey"),
       "per-language vocab must run on the two-phase bounded-heap operator, " +
         "not a per-lang window (a dominant language would serialize it)")
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("Window"),
-      "broadcast model joins only; no hot-key window")
-    val scans = PlanWalk.nodes(df.queryExecution.executedPlan)
-      .count(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
-    assert(scans == 1,
-      s"the per-lang LM screen must scan the corpus exactly once, saw $scans")
-    assert(!plan.contains("Join [doc_id"),
-      "sentinel row carries 0-bigram docs — no doc_id join-back")
+    assertKernelScored("q100b", df, "lm_score")
+    assert(!df.queryExecution.executedPlan.toString().contains("Window"), "no hot-key window")
   }
 
   /** the dataFilters of a parquet scan that pushed something which
@@ -519,16 +513,10 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  test("DSIR weights: broadcast model join, map-side-combined agg, no window") {
+  test("DSIR weights: one kernel-scored scan, no join, no window") {
     val df = graft.operators.Dsir.dsirWeights(Tables.documents(spark, dir))
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString()
-    assert(plan.contains("BroadcastHashJoin"),
-      "the B-row delta model must broadcast onto the token stream")
-    assert(!plan.contains("SortMergeJoin"),
-      "nothing data-sized may shuffle-join on a token/bucket key")
-    assert(!plan.contains("Window") && !plan.contains("CartesianProduct"),
-      "no hot-key window; the only cross join broadcasts a 1-row total")
+    assertKernelScored("q101", df, "dsir_score")
+    assert(!df.queryExecution.executedPlan.toString().contains("Window"), "no hot-key window")
   }
 
   test("DSIR resample: the draw is a K-bounded TakeOrdered, never a global sort") {

@@ -154,6 +154,21 @@ class SearchSpec extends AnyFunSuite {
     }
   }
 
+  test("q88b keeps its compacted tables under the process's scratch dir, not the warehouse") {
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
+    val docs = Tables.documents(spark, sf)
+    try {
+      val got = SparkEntry.queries("q88b_compacted_search")(spark, sf)
+      assert(got.collect().toSeq == Search.keywordSearch(docs).collect().toSeq,
+        "the compacted index must stay readable and rank like the scan path")
+      val left = Option(new java.io.File(wh).listFiles()).toSeq.flatten.map(_.getName)
+        .filter(_.startsWith("graft_q88b_"))
+      assert(left.isEmpty, s"q88b left table data under the warehouse dir $wh: $left")
+    } finally
+      spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_q88b_"))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("hybrid RRF equals a by-hand fusion of the two rankings") {
     val dir = "/root/testdata/sf0.001"
     val docs = Tables.documents(spark, dir)
