@@ -16,7 +16,7 @@ import graft.functions.HashExpressions.Md5Kernels
 /** Row-local text kernels over a token array: the frozen-model scores
   * of the release report (rarity, bigram LM, DSIR) and the per-document
   * passes that used to be `filter`/`transform`/`aggregate` lambdas
-  * (Gopher word classes, contamination spans and their cut, chunk
+  * (Gopher word classes, contamination spans, their merge and cut, chunk
   * geometry). Lambdas are `CodegenFallback`: each one split the
   * whole-stage codegen stage and evaluated element by element in the
   * interpreter, and each frozen model rode as a literal map probed by a
@@ -54,6 +54,13 @@ object TextKernels {
     override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, a => genCall(ctx, ev, a))
+  }
+
+  private def spanArray(e: Expression, fn: String): TypeCheckResult = e.dataType match {
+    case ArrayType(st: StructType, _)
+        if st.map(f => f.name -> f.dataType) == Seq("s" -> IntegerType, "e" -> IntegerType) =>
+      TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"$fn expects ${SpanArrayType.simpleString}, got $t")
   }
 
   private def row(vs: Any*): InternalRow = new GenericInternalRow(vs.toArray)
@@ -312,34 +319,37 @@ object TextKernels {
   val SpanArrayType: ArrayType =
     ArrayType(StructType(Seq(StructField("s", IntegerType), StructField("e", IntegerType))))
 
+  /** THE interval-merge rule of every cut list: intervals [s, e) in
+    * ascending start order merge while the next one starts at or before
+    * the open end (overlap or touch); the end advances by max, since an
+    * interval can nest. */
+  private def mergeSorted(ivs: IndexedSeq[(Int, Int)]): ArrayData = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    var i = 0
+    while (i < ivs.length) {
+      val cs = ivs(i)._1
+      var ce = ivs(i)._2
+      i += 1
+      while (i < ivs.length && ivs(i)._1 <= ce) { ce = math.max(ce, ivs(i)._2); i += 1 }
+      out += row(cs, ce)
+    }
+    new GenericArrayData(out.toArray)
+  }
+
   /** q113's merged contamination intervals over one token array: every
     * window start i (0 ≤ i ≤ n − w) whose w-token 60-bit md5 is in the
-    * frozen sorted set marks [i, i + w); marks merge while the next
-    * start is at or before the open end. Arrays shorter than `w` have
-    * no window. */
+    * frozen sorted set marks [i, i + w); the marks merge by
+    * [[mergeSorted]]. Arrays shorter than `w` have no window. */
   case class WindowSpans(child: Expression, set: Array[Long], w: Int) extends TokenKernel {
     require(w >= 1, s"windowTokens must be >= 1, got $w")
     override def dataType: DataType = SpanArrayType
     override def prettyName: String = "window_spans"
     override protected def stringArgs: Iterator[Any] = Iterator(child, s"set[${set.length}]", w)
 
-    def kernel(a: ArrayData): ArrayData = {
-      val n = a.numElements()
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var cs = -1
-      var ce = -1
-      var p = 0
-      while (p + w <= n) {
-        if (java.util.Arrays.binarySearch(set, Md5Kernels.hashRange(a, p, p + w)) >= 0) {
-          if (ce < 0) cs = p
-          else if (p > ce) { out += row(cs, ce); cs = p }
-          ce = p + w
-        }
-        p += 1
-      }
-      if (ce >= 0) out += row(cs, ce)
-      new GenericArrayData(out.toArray)
-    }
+    def kernel(a: ArrayData): ArrayData =
+      mergeSorted((0 to a.numElements() - w)
+        .filter(p => java.util.Arrays.binarySearch(set, Md5Kernels.hashRange(a, p, p + w)) >= 0)
+        .map(p => (p, p + w)))
 
     override def equals(o: Any): Boolean = o match {
       case s: WindowSpans => child == s.child && w == s.w &&
@@ -348,6 +358,24 @@ object TextKernels {
     }
     @transient private lazy val setHash: Int = java.util.Arrays.hashCode(set)
     override def hashCode(): Int = 31 * (31 * child.hashCode() + setHash) + w
+    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  }
+
+  /** a span array's maximal intervals: the spans, in any order, merge
+    * by [[mergeSorted]] (null elements are skipped) — the merge of the
+    * collected q107 window cuts and of q118's two unioned cut lists. */
+  case class MergeSpans(child: Expression) extends UnaryExpression with KernelCodegen {
+    override def checkInputDataTypes(): TypeCheckResult = spanArray(child, prettyName)
+    override def dataType: DataType = SpanArrayType
+    override def prettyName: String = "merge_spans"
+
+    def kernel(a: ArrayData): ArrayData =
+      mergeSorted((0 until a.numElements()).filterNot(a.isNullAt)
+        .map { i => val sp = a.getStruct(i, 2); (sp.getInt(0), sp.getInt(1)) }.sorted)
+
+    override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => genCall(ctx, ev, a))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -362,11 +390,7 @@ object TextKernels {
       extends BinaryExpression with KernelCodegen {
     override def checkInputDataTypes(): TypeCheckResult =
       if (!stringArray(left, prettyName).isSuccess) stringArray(left, prettyName)
-      else right.dataType match {
-        case ArrayType(st: StructType, _) if st.fieldNames.toSeq == Seq("s", "e") =>
-          TypeCheckResult.TypeCheckSuccess
-        case t => TypeCheckResult.TypeCheckFailure(s"cut_tokens expects span structs, got $t")
-      }
+      else spanArray(right, prettyName)
     override def dataType: DataType = CutType
     override def prettyName: String = "cut_tokens"
 
@@ -474,6 +498,8 @@ object TextKernels {
 
   def window_spans(tokens: Column, set: Seq[Long], w: Int): Column =
     wrap(WindowSpans(ex(tokens), set.toArray.sorted, w))
+
+  def merge_spans(spans: Column): Column = wrap(MergeSpans(ex(spans)))
 
   def cut_tokens(tokens: Column, spans: Column): Column =
     wrap(CutTokens(ex(tokens), ex(spans)))

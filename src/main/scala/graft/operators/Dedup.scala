@@ -956,40 +956,17 @@ object Dedup {
     * duplicated windows certify a verbatim cross-doc span of
     * r + w − 1 tokens, the number a curation team acts on.
     *
-    * Scale shape: the window stream (≈ token stream sized) is
-    * hash-partitioned on the window hash ONCE and that exchange
-    * feeds BOTH consumers — the distinct-doc election and the
-    * flag-back join (the q47 shared-exchange discipline; plan-pinned
-    * ReusedExchange) — so the corpus pays one window-keyed and one
-    * doc-keyed exchange total. The max-run is computed row-locally
-    * from the collected duplicated positions (bounded by doc length)
-    * inside the one doc-keyed aggregate — never a second per-doc
-    * window pass. Short docs (< w tokens) produce no windows and
-    * re-enter with zeros via the doc-side left join. */
+    * Scale shape: the window stream (≈ token stream sized) pays the
+    * one window-keyed exchange of [[electedWindows]] and one doc-keyed
+    * exchange. The max-run is computed row-locally from the collected
+    * duplicated positions (bounded by doc length) inside the one
+    * doc-keyed aggregate — never a second per-doc window pass. Short
+    * docs (< w tokens) produce no windows and re-enter with zeros via
+    * the doc-side left join. */
   def spanDedup(docs: DataFrame, windowTokens: Int = 8): DataFrame = {
     val w = windowTokens
-    require(w >= 1, s"windowTokens must be >= 1, got $w")
-    val wins = windowHashes(docs, w)
-      // the joins push isnotnull(doc_id) / isnotnull(h) into ONE
-      // consumer's subtree each; both are no-ops on this data (md5 of a
-      // coalesced string is never null) — stating them here keeps the
-      // two subtrees canonically equal so the exchange below is planned
-      // once (see the __prune_guard note)
-      .filter(col("doc_id").isNotNull && col("h").isNotNull)
-    val byH = wins.repartition(col("h"))
-    // the throwaway max(pos) keeps the election's column set identical
-    // to the flag join's — column pruning would otherwise make the two
-    // exchange subtrees canonicalize UNEQUAL and Spark would scan and
-    // shuffle the window stream twice instead of reusing it
-    val dup = byH.groupBy("h")
-      .agg(countDistinct("doc_id").as("nd"), max("pos").as("__prune_guard"))
-      // the >= 0 conjunct is vacuous (posexplode positions start at 0)
-      // but the optimizer cannot prove it, so the guard aggregate — and
-      // with it the pos column — survives pruning in this branch
-      .filter(col("nd") >= 2 && col("__prune_guard") >= 0)
-      .select(col("h"), lit(true).as("isdup"))
-    val flagged = byH.join(dup, Seq("h"), "left")
-      .select(col("doc_id"), col("pos"), coalesce(col("isdup"), lit(false)).as("isdup"))
+    val flagged = electedWindows(docs, w)
+      .select(col("doc_id"), col("pos"), coalesce(col("nd") >= 2, lit(false)).as("isdup"))
     val perDoc = flagged.groupBy("doc_id")
       .agg(count(lit(1)).as("n_windows"),
         sum(when(col("isdup"), 1L).otherwise(0L)).as("n_dup_windows"),
@@ -1017,36 +994,51 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** (doc_id, pos, h): the w-token window stream — one row per offset,
-    * 0-based, 60-bit content hash. Shared by [[spanDedup]], the
-    * span-cut pair and the contamination-span screen. */
-  private def windowHashes(docs: DataFrame, w: Int): DataFrame =
+  /** (doc_id, tk, pos, h): the ONE w-token window stream — per 0-based
+    * offset the token array and the window's 60-bit `md5_shingle_hashes`
+    * hash. The kernel emits one short shingle for an array shorter than
+    * w, where the span family has no window, hence the size guard. */
+  private def windowStream(docs: DataFrame, w: Int): DataFrame =
     docs
       .select(col("doc_id"), tokens(coalesce(col("text"), lit(""))).as("tk"))
-      .select(col("doc_id"), posexplode(expr(
-        s"CASE WHEN size(tk) >= $w THEN transform(sequence(1, size(tk) - ${w - 1})," +
-          s" i -> array_join(slice(tk, i, $w), ' ')) ELSE array() END")))
-      .select(col("doc_id"), col("pos"), md5_60(col("col")).as("h"))
+      .select(col("doc_id"), col("tk"), posexplode(when(size(col("tk")) >= w,
+        graft.functions.HashExpressions.md5_shingle_hashes(col("tk"), w))).as(Seq("pos", "h")))
 
-  /** the ONE interval-merge fold over a sorted int-array expression —
-    * the span-cut aggregates' merge rule, the one the `window_spans`
-    * kernel also implements: a position p merges into the open
-    * interval while p ≤ its end (overlap or exact adjacency), else the
-    * interval closes and a new one opens. */
-  private def mergeSpansFoldSql(posArr: String, w: Int): String =
-    s"""aggregate(
-       |  $posArr,
-       |  named_struct(
-       |    'sp', cast(array() as array<struct<s:int,e:int>>),
-       |    'cs', -1, 'ce', -1),
-       |  (a, p) -> CASE
-       |    WHEN a.ce < 0 THEN named_struct('sp', a.sp, 'cs', p, 'ce', p + $w)
-       |    WHEN p <= a.ce THEN named_struct('sp', a.sp, 'cs', a.cs, 'ce', p + $w)
-       |    ELSE named_struct(
-       |      'sp', concat(a.sp, array(named_struct('s', a.cs, 'e', a.ce))),
-       |      'cs', p, 'ce', p + $w) END,
-       |  a -> CASE WHEN a.ce < 0 THEN a.sp
-       |    ELSE concat(a.sp, array(named_struct('s', a.cs, 'e', a.ce))) END)""".stripMargin
+  /** (doc_id, pos, h): [[windowStream]] without the token array. Shared
+    * by the span election, the contamination-span screen and q115. */
+  private[graft] def windowHashes(docs: DataFrame, w: Int): DataFrame =
+    windowStream(docs, w).select("doc_id", "pos", "h")
+
+  /** the ONE owner election of the span family (q91, q107, q107b): each
+    * window row (doc_id, pos, h) with its content's distinct-doc count
+    * `nd` and smallest holder `owner`, both null unless the content
+    * occurs in ≥ 2 distinct documents. The window stream is
+    * hash-partitioned on h ONCE and that exchange feeds BOTH the
+    * election and the flag-back join (plan-pinned ReusedExchange). */
+  private def electedWindows(docs: DataFrame, w: Int): DataFrame = {
+    require(w >= 1, s"windowTokens must be >= 1, got $w")
+    val byH = windowHashes(docs, w)
+      // the joins push isnotnull(doc_id) / isnotnull(h) into ONE
+      // consumer's subtree each; both are no-ops on this data (the
+      // kernel's hashes are never null) — stating them here keeps the
+      // two subtrees canonically equal so the exchange below is planned
+      // once (see the __prune_guard note)
+      .filter(col("doc_id").isNotNull && col("h").isNotNull)
+      .repartition(col("h"))
+    // the throwaway max(pos) keeps the election's column set identical
+    // to the flag join's — column pruning would otherwise make the two
+    // exchange subtrees canonicalize UNEQUAL and Spark would scan and
+    // shuffle the window stream twice instead of reusing it
+    val elected = byH.groupBy("h")
+      .agg(countDistinct("doc_id").as("nd"), min("doc_id").as("owner"),
+        max("pos").as("__prune_guard"))
+      // the >= 0 conjunct is vacuous (posexplode positions start at 0)
+      // but the optimizer cannot prove it, so the guard aggregate — and
+      // with it the pos column — survives pruning in this branch
+      .filter(col("nd") >= 2 && col("__prune_guard") >= 0)
+      .select(col("h"), col("nd"), col("owner"))
+    byH.join(elected, Seq("h"), "left")
+  }
 
   /** explode a (doc_id, spans) frame into the ordered interval list. */
   private def spanList(perDoc: DataFrame): DataFrame =
@@ -1061,37 +1053,22 @@ object Dedup {
     * containing it; every other doc cuts every occurrence (within-doc
     * repetition inside the owner stays q54's screen, the q91 scoping).
     *
-    * Scale shape: identical to [[spanDedup]] — the window stream is
-    * hash-partitioned on the window hash ONCE and that exchange feeds
-    * BOTH the owner election and the cut join (plan-pinned
-    * ReusedExchange; the election keeps the same column set via the
-    * max(pos) prune guard so the two subtrees canonicalize equal).
-    * The interval merge folds row-locally over the collected cut
-    * positions (bounded by doc length) inside the one doc-keyed
-    * aggregate — gaps-and-islands without a per-doc window pass. */
-  private def spanCutPerDoc(docs: DataFrame, w: Int): DataFrame = {
-    require(w >= 1, s"windowTokens must be >= 1, got $w")
-    val wins = windowHashes(docs, w)
-      // canonical-equality discipline (see spanDedup): state the no-op
-      // null guards so both exchange subtrees stay equal
-      .filter(col("doc_id").isNotNull && col("h").isNotNull)
-    val byH = wins.repartition(col("h"))
-    // owner election per window CONTENT: min doc_id over ≥2 distinct
-    // docs. The vacuous max(pos) guard keeps pos alive in this branch
-    // (see spanDedup's __prune_guard note) so the shuffle is planned
-    // once and reused by the cut join below.
-    val owners = byH.groupBy("h")
-      .agg(countDistinct("doc_id").as("nd"), min("doc_id").as("owner"),
-        max("pos").as("__prune_guard"))
-      .filter(col("nd") >= 2 && col("__prune_guard") >= 0)
-      .select(col("h"), col("owner"))
-    val cutPos = byH.join(owners, Seq("h"))
-      .filter(col("doc_id") =!= col("owner"))
-      .select("doc_id", "pos")
-    // collected cut positions are distinct per doc (one window per offset)
-    cutPos.groupBy("doc_id")
-      .agg(expr(mergeSpansFoldSql("array_sort(collect_list(pos))", w)).as("spans"))
-  }
+    * Scale shape: identical to [[spanDedup]] — the one
+    * [[electedWindows]] exchange feeds both the owner election and the
+    * cut join. The collected [pos, pos + w) windows merge row-locally
+    * in the `merge_spans` kernel (bounded by doc length) inside the one
+    * doc-keyed aggregate — gaps-and-islands without a per-doc window
+    * pass. */
+  private def spanCutPerDoc(docs: DataFrame, w: Int): DataFrame =
+    electedWindows(docs, w)
+      .filter(col("nd") >= 2 && col("doc_id") =!= col("owner"))
+      .groupBy("doc_id")
+      .agg(mergeSpansCol(col("pos"), col("pos") + w).as("spans"))
+
+  /** the merged intervals of a group's collected [start, end) pairs. */
+  private def mergeSpansCol(start: Column, end: Column): Column =
+    graft.functions.TextKernels.merge_spans(
+      collect_list(struct(start.cast("int").as("s"), end.cast("int").as("e"))))
 
   /** q107: SPAN-CUT summary — the APPLY step of exact substring dedup
     * (Lee et al. 2022: remove every repeated-substring occurrence but
@@ -1105,8 +1082,7 @@ object Dedup {
     val perDoc = spanCutPerDoc(docs, windowTokens)
       .select(col("doc_id"),
         size(col("spans")).cast("long").as("n_cut_spans"),
-        expr("aggregate(spans, CAST(0 AS BIGINT), (acc, s) -> acc + (s.e - s.s))")
-          .as("tokens_cut"))
+        spanTokensSumCol("spans").as("tokens_cut"))
     docs.select(col("doc_id"),
         size(tokens(coalesce(col("text"), lit("")))).cast("long").as("n_tokens"))
       .join(perDoc, Seq("doc_id"), "left")
@@ -1155,25 +1131,6 @@ object Dedup {
   private[graft] def contamSpansView(scored: DataFrame): DataFrame =
     explodeSpans(scored.filter(!isBenchmark(col("doc_id"))), "contam_spans")
 
-  /** the interval-union fold over a sorted array<struct<s,e>> — the
-    * [[mergeSpansFoldSql]] rule lifted from positions to intervals
-    * (merge while the next interval starts at or before the open end;
-    * the end advances by greatest, since an interval can nest). */
-  private[graft] def mergeIntervalsFoldSql(ivArr: String): String =
-    s"""aggregate(
-       |  $ivArr,
-       |  named_struct(
-       |    'sp', cast(array() as array<struct<s:int,e:int>>),
-       |    'cs', -1, 'ce', -1),
-       |  (a, iv) -> CASE
-       |    WHEN a.ce < 0 THEN named_struct('sp', a.sp, 'cs', iv.s, 'ce', iv.e)
-       |    WHEN iv.s <= a.ce THEN named_struct('sp', a.sp, 'cs', a.cs, 'ce', greatest(a.ce, iv.e))
-       |    ELSE named_struct(
-       |      'sp', concat(a.sp, array(named_struct('s', a.cs, 'e', a.ce))),
-       |      'cs', iv.s, 'ce', iv.e) END,
-       |  a -> CASE WHEN a.ce < 0 THEN a.sp
-       |    ELSE concat(a.sp, array(named_struct('s', a.cs, 'e', a.ce))) END)""".stripMargin
-
   /** q118: the COMBINED CUT — the one rewrite plan a curation run
     * actually hands the rewriter: exact-substring duplication cuts
     * (q107b) and benchmark contamination cuts (q113) unioned per doc
@@ -1185,18 +1142,22 @@ object Dedup {
     *
     * Scale shape: both inputs are cut-sized (≪ corpus) by
     * construction, so the union, the doc-keyed aggregate and the
-    * row-local interval fold all run on span rows; the corpus-sized
-    * work is exactly the two upstream scans, each already
-    * plan-disciplined. */
+    * row-local `merge_spans` kernel all run on span rows; the
+    * corpus-sized work is exactly the two upstream scans, each already
+    * plan-disciplined. The two inputs compose UNORDERED (the merge
+    * takes spans in any order), so the output sort is the plan's one
+    * global sort. */
   def combinedCutSpans(docs: DataFrame, windowTokens: Int = 8): DataFrame =
     spanList(combinedCutPerDoc(docs, windowTokens))
 
   /** the q118 plan as a per-doc (doc_id, spans) frame — shared by the
     * span-list surface and [[combinedCutApply]] so the two cannot
-    * disagree about what gets cut. */
+    * disagree about what gets cut; the same union-and-merge core as the
+    * persisted-list form [[combineCutLists]]. */
   private def combinedCutPerDoc(docs: DataFrame, windowTokens: Int): DataFrame =
-    combineCutListsPerDoc(spanCutSpans(docs, windowTokens),
-      contaminationSpans(docs, windowTokens))
+    combineCutListsPerDoc(explodeSpans(spanCutPerDoc(docs, windowTokens), "spans"),
+      contamSpansView(withContamSpans(docs, benchmarkWindowHashes(docs, windowTokens),
+        windowTokens)))
 
   /** the COMPOSE form of q118 — the union+fold alone, over two already
     * materialized cut-list frames (q107b and q113 columns). This is
@@ -1212,9 +1173,7 @@ object Dedup {
                                     contamSpans: DataFrame): DataFrame = {
     val u = dupSpans.select(col("doc_id"), col("start_pos"), col("end_pos"))
       .unionByName(contamSpans.select(col("doc_id"), col("start_pos"), col("end_pos")))
-    u.groupBy("doc_id").agg(expr(mergeIntervalsFoldSql(
-      "array_sort(collect_list(named_struct('s', CAST(start_pos AS INT), 'e', CAST(end_pos AS INT))))"))
-      .as("spans"))
+    u.groupBy("doc_id").agg(mergeSpansCol(col("start_pos"), col("end_pos")).as("spans"))
   }
 
   /** q118b: the COMBINED CUT APPLIED — the rewrite q118 plans,
@@ -1279,8 +1238,9 @@ object Dedup {
     * window hashes, set probe and the interval merge all evaluate in
     * one kernel over the token array — no join, no state, no shuffle.
     * Batch q113 is the same kernel and explode over the corpus
-    * documents ([[contamSpansView]]), sorted. Emits the q113 columns, unordered (streams don't sort); docs with
-    * nothing contaminated emit no rows. */
+    * documents ([[contamSpansView]]), sorted. This form emits the q113
+    * columns unordered (streams don't sort); docs with nothing
+    * contaminated emit no rows. */
   def contaminationSpansRowLocal(docs: DataFrame, benchHashes: Seq[Long],
                                  windowTokens: Int = 8): DataFrame =
     explodeSpans(withContamSpans(docs, benchHashes, windowTokens), "contam_spans")
@@ -1296,9 +1256,9 @@ object Dedup {
 
   /** the merged contamination intervals of a whitespace token array —
     * window hashes, sorted-set probe and the interval merge in one
-    * kernel ([[graft.functions.TextKernels.WindowSpans]]); the merge
-    * rule is [[mergeSpansFoldSql]]'s: a position merges into the open
-    * interval while it is at or before the interval's end. */
+    * kernel ([[graft.functions.TextKernels.WindowSpans]]), which merges
+    * by the same rule as `merge_spans`: a window merges into the open
+    * interval while it starts at or before the interval's end. */
   private def contamSpansCol(wsToks: Column, benchHashes: Seq[Long], w: Int): Column =
     graft.functions.TextKernels.window_spans(wsToks, benchHashes, w)
 
@@ -1492,23 +1452,23 @@ object Dedup {
     * count, total occurrences, and the span text itself, top-K by
     * (n_docs desc, n_occ desc, window asc).
     *
-    * Scale shape: ONE window scan; the (hash → stats+text) aggregate
-    * combines map-side (min(text) carries the span's one spelling —
-    * all rows in a hash group share it), so the exchange moves ≤1 row
-    * per distinct window content; the election is a K-bounded
-    * TakeOrdered, never a global sort of the span domain. */
+    * Scale shape: ONE scan of the span family's [[windowStream]],
+    * each row's span text cut from its token array; the (hash →
+    * stats+text) aggregate combines map-side (min(text) carries the
+    * span's one spelling — all rows in a hash group share it), so the
+    * exchange moves ≤1 row per distinct window content; the election
+    * is a K-bounded TakeOrdered, never a global sort of the span
+    * domain, and the rank window reads its ≤ K rows (spec-pinned). */
   def boilerplateTopK(docs: DataFrame, windowTokens: Int = 8, k: Int = 32): DataFrame = {
     val w = windowTokens
-    require(w >= 1 && k >= 1)
-    val wins = docs
-      .select(col("doc_id"), tokens(coalesce(col("text"), lit(""))).as("tk"))
-      .select(col("doc_id"), explode(expr(
-        s"CASE WHEN size(tk) >= $w THEN transform(sequence(1, size(tk) - ${w - 1})," +
-          s" i -> array_join(slice(tk, i, $w), ' ')) ELSE array() END")).as("win"))
-    val top = wins
-      .groupBy(md5_60(col("win")).as("h"))
+    require(w >= 1 && k >= 1,
+      s"Dedup.boilerplateTopK needs windowTokens >= 1 and k >= 1, got w = $w, k = $k")
+    val top = windowStream(docs, w)
+      .select(col("doc_id"), col("h"),
+        array_join(slice(col("tk"), col("pos") + 1, lit(w)), " ").as("span_text"))
+      .groupBy("h")
       .agg(countDistinct("doc_id").as("n_docs"), count(lit(1)).as("n_occ"),
-        min("win").as("span_text"))
+        min("span_text").as("span_text"))
       .filter(col("n_docs") >= 2)
       .orderBy(col("n_docs").desc, col("n_occ").desc, col("span_text").asc)
       .limit(k)

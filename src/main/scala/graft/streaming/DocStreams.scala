@@ -368,7 +368,7 @@ object DocStreams {
     * arriving document is cut against the same frozen benchmark window
     * set and lands already clean (counts + clean hash), so nothing
     * downstream ever sees the leaked spans. One projection, stateless,
-    * no join — the probe, interval fold and cut share the batch
+    * no join — the probe, interval merge and cut share the batch
     * kernels verbatim (spec-proven bit-equal to batch q114). */
   def decontamLookup(docs: DataFrame, benchHashes: Seq[Long],
                      windowTokens: Int = 8): DataFrame =

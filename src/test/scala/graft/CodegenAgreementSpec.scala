@@ -136,9 +136,25 @@ class CodegenAgreementSpec extends AnyFunSuite {
         spans.as("sp"),
         TextKernels.cut_tokens(ws, spans).as("cut"),
         TextKernels.chunk_spans(rx, 4, 1).as("ch"),
-        nearest(col("emb"), col("norm"), withCells).as("nc"))
+        nearest(col("emb"), col("norm"), withCells).as("nc"),
+        TextKernels.merge_spans(mergeInput).as("ms"))
       .orderBy("id").collect().map(_.toSeq)
   }
+
+  /** merge_spans input per battery row: an empty array, one span, a
+    * null array, nested, touching, overlapping and unsorted spans */
+  private val mergeInput = expr("""CASE id
+    WHEN 0 THEN CAST(array() AS ARRAY<STRUCT<s:INT,e:INT>>)
+    WHEN 1 THEN array(named_struct('s', 2, 'e', 5))
+    WHEN 3 THEN array(named_struct('s', 1, 'e', 10), named_struct('s', 3, 'e', 4))
+    WHEN 4 THEN array(named_struct('s', 0, 'e', 3), named_struct('s', 3, 'e', 6))
+    WHEN 5 THEN array(named_struct('s', 0, 'e', 4), named_struct('s', 2, 'e', 7),
+      named_struct('s', 9, 'e', 12))
+    WHEN 6 THEN array(named_struct('s', 9, 'e', 12), named_struct('s', 0, 'e', 4),
+      named_struct('s', 5, 'e', 6), named_struct('s', 2, 'e', 7))
+    END""")
+  private val mergeExpected = Seq(Seq(), Seq((2, 5)), null, Seq((1, 10)), Seq((0, 6)),
+    Seq((0, 7), (9, 12)), Seq((0, 7), (9, 12)))
 
   private def interpreted = {
     val interp = spark.newSession()
@@ -152,6 +168,11 @@ class CodegenAgreementSpec extends AnyFunSuite {
     val int = kernelBattery(interpreted, cells)
     assert(gen.length == 7)
     gen.zip(int).foreach { case (g, i) => assert(g.toString == i.toString, s"$g vs $i") }
+    assert(gen.map(_.last match {
+      case null => null
+      case ms: scala.collection.Seq[_] =>
+        ms.toSeq.map { case r: org.apache.spark.sql.Row => (r.getInt(0), r.getInt(1)) }
+    }).toSeq == mergeExpected)
   }
 
   test("nearest_cell keeps greatest's order: null lowest, NaN highest, ties to the larger cell") {

@@ -421,6 +421,37 @@ class DedupSpec extends AnyFunSuite {
       "short docs re-enter with zeros")
   }
 
+  test("the kernel window stream equals the SQL-lambda window definition per (doc_id, pos, h)") {
+    // the reference: every window built as a string by a SQL lambda,
+    // then hashed with md5_60
+    def reference(docs: org.apache.spark.sql.DataFrame, w: Int) = docs
+      .select(col("doc_id"), Dedup.tokens(coalesce(col("text"), lit(""))).as("tk"))
+      .select(col("doc_id"), posexplode(expr(
+        s"CASE WHEN size(tk) >= $w THEN transform(sequence(1, size(tk) - ${w - 1})," +
+          s" i -> array_join(slice(tk, i, $w), ' ')) ELSE array() END")))
+      .select(col("doc_id"), col("pos"), Dedup.md5_60(col("col")).as("h"))
+    val docs = Seq[(Long, String)](
+      (1L, null),
+      (2L, ""),
+      (3L, "two words"),                        // fewer than w = 3 tokens
+      (4L, "exactly three words"),              // exactly w = 3 tokens
+      (5L, "  Repeated   spaces  and Case here  now "),
+      (6L, "a b a b a b c a b")
+    ).toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+    Seq(1, 3).foreach { w =>
+      val got = rows(Dedup.windowHashes(docs, w))
+      assert(got == rows(reference(docs, w)), s"w = $w")
+      assert(got.nonEmpty)
+    }
+    val w3 = rows(Dedup.windowHashes(docs, 3)).map(_._1).toSet
+    assert(!w3.contains(3L) && w3.contains(4L) && !w3.contains(1L) && !w3.contains(2L),
+      "a document shorter than w has no window; one of exactly w tokens has one")
+    assert(rows(Dedup.windowHashes(docs, 1)).count(_._1 == 1L) == 1,
+      "at w = 1 a null text is the one-token empty stream, like ''")
+  }
+
   test("span dedup shares ONE window-keyed exchange between election and flag join") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val df = Dedup.spanDedup(docs)
@@ -691,18 +722,20 @@ class DedupSpec extends AnyFunSuite {
           case _ => (s, e) :: acc
         }
       }.reverse
+    // the spans reach merge_spans in their random order and sorted
+    val spans = expr("transform(arrays_zip(ss, es), x -> named_struct('s', x.ss, 'e', x.es))")
     val df = cases.map { case (id, ivs) => (id, ivs.map(_._1), ivs.map(_._2)) }
       .toDF("id", "ss", "es")
-      .withColumn("merged", expr(Dedup.mergeIntervalsFoldSql(
-        "array_sort(transform(arrays_zip(ss, es), x -> named_struct('s', x.ss, 'e', x.es)))")))
-      .select(col("id"), expr("transform(merged, m -> named_struct('s', m.s, 'e', m.e))").as("merged"))
+      .select(col("id"), graft.functions.TextKernels.merge_spans(spans).as("unsorted"),
+        graft.functions.TextKernels.merge_spans(array_sort(spans)).as("sorted"))
     val got = df.collect().map { r =>
-      r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)
-        .map(m => (m.getInt(0), m.getInt(1)))
+      def merged(i: Int) = r.getSeq[org.apache.spark.sql.Row](i).map(m => (m.getInt(0), m.getInt(1)))
+      r.getLong(0) -> (merged(1), merged(2))
     }.toMap
+    assert(cases.exists { case (_, ivs) => ivs != ivs.sorted }, "some cases arrive unsorted")
     cases.foreach { case (id, ivs) =>
-      assert(got(id).toSeq == refMerge(ivs),
-        s"fold disagrees with the reference merge for $ivs: ${got(id)}")
+      assert(got(id)._1.toSeq == refMerge(ivs) && got(id)._2.toSeq == refMerge(ivs),
+        s"merge_spans disagrees with the reference merge for $ivs: ${got(id)}")
     }
   }
 
@@ -856,6 +889,38 @@ class DedupSpec extends AnyFunSuite {
     }, "reach-ordered: widest-spread boilerplate first")
     val ranks = out.map(_.getAs[Long]("rank"))
     assert(ranks.toSeq == (1L to out.length).toSeq)
+    Seq((0, 32), (8, 0)).foreach { case (w, k) =>
+      val e = intercept[IllegalArgumentException](Dedup.boilerplateTopK(docs, w, k))
+      assert(e.getMessage.contains("Dedup.boilerplateTopK") &&
+        e.getMessage.contains(s"w = $w, k = $k"), e.getMessage)
+    }
+  }
+
+  test("the boilerplate leaderboard's unpartitioned rank window reads at most k rows") {
+    val base = "/root/testdata/sf0.001"
+    val k = 32
+    val fedRows = Seq(1, 10).map { factor =>
+      val df = Dedup.boilerplateTopK(BenchScaleCurve.scaledDocuments(spark, base, factor), k = k)
+      df.queryExecution.toRdd.count()
+      val ns = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
+      def rowsOut(p: org.apache.spark.sql.execution.SparkPlan) =
+        p.metrics.get("numOutputRows").map(_.value)
+      val windows = ns.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }
+      assert(windows.length == 1, s"x$factor: ${windows.length} windows")
+      // the window's child is the K-bounded TakeOrdered election; it
+      // keeps no row metric, so its rows are counted by running it
+      val fed = windows.head.child.executeCollect().length
+      assert(fed <= k, s"x$factor: the rank window read $fed rows, more than k = $k")
+      // non-vacuous: the duplicated span domain itself is larger than k
+      val candidates = ns.collect {
+        case f: org.apache.spark.sql.execution.FilterExec
+            if f.condition.references.exists(_.name == "n_docs") => rowsOut(f)
+      }.flatten
+      assert(candidates.length == 1 && candidates.head > k,
+        s"x$factor: the election must cut a domain wider than k: $candidates")
+      fed
+    }
+    assert(fedRows == Seq(k, k), s"the window's input must not grow with the corpus: $fedRows")
   }
 
   test("ann recall audit equals the independent intersection of the two published operators") {

@@ -202,6 +202,9 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(Dedup.leakAttribution(noDocs).isEmpty,
       "no benchmark docs → no attribution rows, not a crash")
     assert(Dedup.combinedCutSpans(noDocs).isEmpty)
+    assert(Dedup.combinedCutApply(noDocs).isEmpty)
+    assert(Dedup.spanDedup(noDocs).isEmpty)
+    assert(Dedup.boilerplateTopK(noDocs).isEmpty)
     assert(Similarity.annRecallSweep(noVecs).isEmpty,
       "sweeping an empty index is a no-op, not a crash")
     assert(TextAnalysis.gopherRules(noDocs).isEmpty)
@@ -229,6 +232,12 @@ class EdgeCaseSpec extends AnyFunSuite {
     // span cut: the null-text doc re-enters with zeros
     val sc = Dedup.spanCut(docs).collect().map(r => r.getLong(0) -> r).toMap
     assert(sc(2L).getAs[Long]("n_cut_spans") == 0L && sc.contains(1L))
+    // span dedup: the null-text doc has no window and reports zeros
+    val sd = Dedup.spanDedup(docs).collect().map(r => r.getLong(0) -> r).toMap
+    assert(sd(2L).getAs[Long]("n_windows") == 0L && sd(2L).getAs[Long]("dup_bp") == 0L
+      && sd(1L).getAs[Long]("n_windows") == 3L)
+    // combined cut: nothing is duplicated or benchmark-quoted, so no span
+    assert(Dedup.combinedCutSpans(docs).isEmpty)
     // release dedup: every incoming doc gets a verdict, null text included
     val out = Dedup.releaseDedup(docs, Dedup.ingestView(docs)).collect()
     assert(out.length == 2, "every incoming doc gets a verdict")
