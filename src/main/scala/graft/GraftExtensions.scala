@@ -4,10 +4,9 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{HashExpressions, VectorExpressions}
-
 /** SparkSessionExtensions entry point — registers graft's native
-  * expressions for SQL users at session build time:
+  * expressions for SQL users at session build time, from the one table
+  * [[graft.functions.Kernels.sqlBuilders]]:
   *
   * {{{
   * SparkSession.builder()
@@ -19,31 +18,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => graft.plans.TopKPerKey.Strategy)
     e.injectOptimizerRule(_ => graft.plans.RewriteWindowTopK)
-    e.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo("graft", "vec_dot"),
-      exprs => VectorExpressions.ArrayDotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("vec_norm_sq"),
-      new ExpressionInfo("graft", "vec_norm_sq"),
-      exprs => VectorExpressions.ArrayNormSq(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("lvec_dot"),
-      new ExpressionInfo("graft", "lvec_dot"),
-      exprs => VectorExpressions.LongArrayDot(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("lvec_norm_sq"),
-      new ExpressionInfo("graft", "lvec_norm_sq"),
-      exprs => VectorExpressions.LongArrayNormSq(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("log2mb"),
-      new ExpressionInfo("graft", "log2mb"),
-      exprs => graft.functions.LogExpressions.Log2FixedMb(exprs(0), exprs(1))))
-    HashExpressions.sqlBuilders.foreach { case (name, builder) =>
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft", name),
-        builder))
+    graft.functions.Kernels.sqlBuilders.foreach { case (name, builder) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft", name), builder))
     }
   }
 }

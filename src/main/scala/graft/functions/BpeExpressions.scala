@@ -2,12 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
+
+import graft.functions.Kernels.{TokenKernel, UnaryKernel, expect}
 
 /** Byte-pair-encoding application kernel (SURVEY.md §2C, q85 family).
   *
@@ -19,7 +20,7 @@ import org.apache.spark.sql.types._
   * the per-resource feature-extraction loops, e.g.
   * /root/reference/src/kg_construction/text_processing.py). Row-local,
   * zero shuffles, whole-stage-codegen-friendly via one kernel call per
-  * row (the Md5ShingleHashes pattern).
+  * row (the [[Kernels]] shape).
   */
 object BpeExpressions {
 
@@ -89,12 +90,8 @@ object BpeExpressions {
     * never produces them; SQL callers get array_to_string-like
     * behavior, consistent with the other kernels). */
   case class BpeStats(child: Expression, merges: Seq[(String, String)])
-      extends UnaryExpression {
+      extends TokenKernel {
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"bpe_stats expects array<string>, got $t")
-    }
     override def dataType: DataType = StructType(Seq(
       StructField("n_words", LongType, nullable = false),
       StructField("n_syms", LongType, nullable = false),
@@ -122,14 +119,6 @@ object BpeExpressions {
       InternalRow(words, syms0, bpe)
     }
 
-    override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val ref = ctx.addReferenceObj("bpeStats", this, classOf[BpeStats].getName)
-        s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.kernel($a);"
-      })
-
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -142,11 +131,9 @@ object BpeExpressions {
     * it uses [[BpeStats]]; this is the API a training-data exporter
     * calls, spec-pinned against the driver-side [[tokenize]]). */
   case class BpeTokens(child: Expression, merges: Seq[(String, String)])
-      extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"bpe_tokens expects string, got $t")
-    }
+      extends UnaryKernel {
+    override def checkInputDataTypes(): TypeCheckResult =
+      expect(prettyName, "string", child) { case StringType => }
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
     override def prettyName: String = "bpe_tokens"
     private val mergeArr: Array[(String, String)] = merges.toArray
@@ -157,12 +144,6 @@ object BpeExpressions {
 
     override def nullSafeEval(a: Any): Any =
       kernel(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val ref = ctx.addReferenceObj("bpeTokens", this, classOf[BpeTokens].getName)
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.kernel($a);"
-      })
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)

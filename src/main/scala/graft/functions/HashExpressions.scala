@@ -3,11 +3,11 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.UnaryExpression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
+
+import graft.functions.Kernels.{TokenKernel, UnaryKernel, expect, longArray}
 
 /** Native hash-sketch expressions. */
 object HashExpressions {
@@ -16,18 +16,14 @@ object HashExpressions {
     * sign-packed. The nested higher-order formulation
     * (aggregate(zip_with(..., transform(sequence(0,63),...)))) builds a
     * 64-element array per token interpreted; this is the same
-    * computation as two tight codegen loops. */
-  case class ArraySimhash(child: Expression) extends UnaryExpression {
+    * computation as two tight loops in one kernel. */
+  case class ArraySimhash(child: Expression) extends UnaryKernel {
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"simhash expects array<bigint>, got $t")
-    }
+    override def checkInputDataTypes(): TypeCheckResult = longArray(prettyName, child)
     override def dataType: DataType = LongType
     override def prettyName: String = "simhash64"
 
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
+    def kernel(x: ArrayData): Long = {
       val votes = new Array[Int](64)
       var i = 0
       while (i < x.numElements()) {
@@ -44,29 +40,7 @@ object HashExpressions {
       while (b < 64) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
       sig
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val votes = ctx.freshName("votes")
-        val i = ctx.freshName("i")
-        val b = ctx.freshName("b")
-        val h = ctx.freshName("h")
-        val sig = ctx.freshName("sig")
-        s"""
-           |int[] $votes = new int[64];
-           |for (int $i = 0; $i < $a.numElements(); $i++) {
-           |  long $h = $a.getLong($i);
-           |  for (int $b = 0; $b < 64; $b++) {
-           |    $votes[$b] += ((($h >>> $b) & 1L) == 1L) ? 1 : -1;
-           |  }
-           |}
-           |long $sig = 0L;
-           |for (int $b = 0; $b < 64; $b++) {
-           |  if ($votes[$b] > 0) $sig |= (1L << $b);
-           |}
-           |${ev.value} = $sig;
-         """.stripMargin
-      })
+    override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -120,12 +94,7 @@ object HashExpressions {
     * shorter than k yield one shingle over all tokens. The digest is
     * fed incrementally (no concatenated-string allocation per shingle).
     */
-  case class Md5ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"md5_shingle_hashes expects array<string>, got $t")
-    }
+  case class Md5ShingleHashes(child: Expression, k: Int) extends TokenKernel {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "md5_shingle_hashes"
 
@@ -141,18 +110,8 @@ object HashExpressions {
         out(i) = Md5Kernels.hashRange(a, i, math.min(i + k, n))
         i += 1
       }
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
+      ArrayData.toArrayData(out)
     }
-
-    override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        // one virtual call per row into the md5 kernel keeps the operator
-        // inside whole-stage codegen without generating digest plumbing
-        val ref = ctx.addReferenceObj("md5Shingles", this, classOf[Md5ShingleHashes].getName)
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.kernel($a);"
-      })
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -165,7 +124,7 @@ object HashExpressions {
     * makes the 122-bit product reducible with two shift-add folds
     * (2^61 ≡ 1), exact in plain long arithmetic via multiplyHigh — and
     * exactly reproducible in DuckDB HUGEINT arithmetic, so banded
-    * candidates are oracle-checkable. One codegen loop: no explode, no
+    * candidates are oracle-checkable. One kernel loop: no explode, no
     * per-permutation expression duplication, no shuffle.
     *
     * The shift-fold reduction is only valid for h ∈ [0, 2^60) — the
@@ -176,74 +135,46 @@ object HashExpressions {
     * "hash of the low 60 bits" semantics instead of silently leaving
     * the (a·h+b) mod M contract. */
   case class AffineMinHash(child: Expression, as: Seq[Long], bs: Seq[Long])
-      extends UnaryExpression {
+      extends UnaryKernel {
     require(as.length == bs.length, "one (a,b) pair per permutation")
 
-    private val Mask60 = (1L << 60) - 1
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"affine_minhash expects array<bigint>, got $t")
-    }
+    override def checkInputDataTypes(): TypeCheckResult = longArray(prettyName, child)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "affine_minhash"
 
-    private val M = (1L << 61) - 1
+    private val aArr = as.toArray
+    private val bArr = bs.toArray
 
-    override def nullSafeEval(x: Any): Any = {
-      val arr = x.asInstanceOf[ArrayData]
-      val mins = Array.fill(as.length)(Long.MaxValue)
+    def kernel(arr: ArrayData): ArrayData = {
+      val mins = new Array[Long](aArr.length)
+      java.util.Arrays.fill(mins, Long.MaxValue)
       var i = 0
       while (i < arr.numElements()) {
         val h = arr.getLong(i) & Mask60
         var p = 0
-        while (p < as.length) {
-          val hi = Math.multiplyHigh(as(p), h)
-          val lo = as(p) * h
-          var r = ((hi << 3) | (lo >>> 61)) + (lo & M)
-          r = (r & M) + (r >>> 61)
-          if (r >= M) r -= M
-          r += bs(p)
-          if (r >= M) r -= M
+        while (p < aArr.length) {
+          val hi = Math.multiplyHigh(aArr(p), h)
+          val lo = aArr(p) * h
+          var r = ((hi << 3) | (lo >>> 61)) + (lo & M61)
+          r = (r & M61) + (r >>> 61)
+          if (r >= M61) r -= M61
+          r += bArr(p)
+          if (r >= M61) r -= M61
           if (r < mins(p)) mins(p) = r
           p += 1
         }
         i += 1
       }
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(mins)
+      ArrayData.toArrayData(mins)
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val aArr = ctx.addReferenceObj("affineA", as.toArray, "long[]")
-        val bArr = ctx.addReferenceObj("affineB", bs.toArray, "long[]")
-        val mins = ctx.freshName("mins"); val i = ctx.freshName("i")
-        val p = ctx.freshName("p"); val h = ctx.freshName("h")
-        val hi = ctx.freshName("hi"); val lo = ctx.freshName("lo")
-        val r = ctx.freshName("r")
-        s"""
-           |long[] $mins = new long[$aArr.length];
-           |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-           |for (int $i = 0; $i < $a.numElements(); $i++) {
-           |  long $h = $a.getLong($i) & ${Mask60}L;
-           |  for (int $p = 0; $p < $aArr.length; $p++) {
-           |    long $hi = Math.multiplyHigh($aArr[$p], $h);
-           |    long $lo = $aArr[$p] * $h;
-           |    long $r = (($hi << 3) | ($lo >>> 61)) + ($lo & ${M}L);
-           |    $r = ($r & ${M}L) + ($r >>> 61);
-           |    if ($r >= ${M}L) $r -= ${M}L;
-           |    $r += $bArr[$p];
-           |    if ($r >= ${M}L) $r -= ${M}L;
-           |    if ($r < $mins[$p]) $mins[$p] = $r;
-           |  }
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($mins);
-         """.stripMargin
-      })
+    override def nullSafeEval(x: Any): Any = kernel(x.asInstanceOf[ArrayData])
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
+
+  private final val Mask60 = (1L << 60) - 1
+  private final val M61 = (1L << 61) - 1
 
   /** Frequency stats of an array<bigint> in one row-local pass:
     * `[n, n_distinct, max_count]` over the non-null elements — the
@@ -253,12 +184,9 @@ object HashExpressions {
     * them with higher-order aggregate lambdas evaluates interpreted
     * (the measured 100×-slowdown trap the minhash kernel hit) — this
     * is a sort+run-scan inside whole-stage codegen instead. */
-  case class ArrayFreqStats(child: Expression) extends UnaryExpression {
+  case class ArrayFreqStats(child: Expression) extends UnaryKernel {
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"array_freq_stats expects array<bigint>, got $t")
-    }
+    override def checkInputDataTypes(): TypeCheckResult = longArray(prettyName, child)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "array_freq_stats"
 
@@ -294,12 +222,6 @@ object HashExpressions {
 
     override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val ref = ctx.addReferenceObj("freqStats", this, classOf[ArrayFreqStats].getName)
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.kernel($a);"
-      })
-
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -313,12 +235,9 @@ object HashExpressions {
     * SAME [[LogExpressions.log2mbKernel]] the q100/q136 families
     * replay digit-for-digit in the oracle. Empty array → [0, 0, 0];
     * null (null text upstream) stays null. */
-  case class ArrayEntropyStats(child: Expression) extends UnaryExpression {
+  case class ArrayEntropyStats(child: Expression) extends UnaryKernel {
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"array_entropy_stats expects array<bigint>, got $t")
-    }
+    override def checkInputDataTypes(): TypeCheckResult = longArray(prettyName, child)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "array_entropy_stats"
 
@@ -353,12 +272,6 @@ object HashExpressions {
 
     override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val ref = ctx.addReferenceObj("entropyStats", this, classOf[ArrayEntropyStats].getName)
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.kernel($a);"
-      })
-
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -373,13 +286,9 @@ object HashExpressions {
     * skipped (the SQL version maps them to a null bucket that
     * matches nothing — same absence). */
   case class BucketCountVec(child: Expression, salt: String, buckets: Int, clamp: Int)
-      extends UnaryExpression {
+      extends TokenKernel {
     require(buckets > 0 && clamp > 0, s"bucket_count_vec($buckets, $clamp)")
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"bucket_count_vec expects array<string>, got $t")
-    }
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "bucket_count_vec"
 
@@ -402,14 +311,6 @@ object HashExpressions {
       }
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
     }
-
-    override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val ref = ctx.addReferenceObj("bucketCounts", this, classOf[BucketCountVec].getName)
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.kernel($a);"
-      })
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -439,15 +340,10 @@ object HashExpressions {
     * spans a null). */
   case class BucketCountVec2Packed(child: Expression, salt: String,
                                    uniBuckets: Int, biBuckets: Int, clamp: Int)
-      extends UnaryExpression {
+      extends TokenKernel {
     require(uniBuckets > 0 && biBuckets > 0 && clamp > 0 && clamp <= 255,
       s"bucket_count_vec2_packed($uniBuckets, $biBuckets, $clamp): clamp must fit a byte")
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"bucket_count_vec2_packed expects array<string>, got $t")
-    }
     override def dataType: DataType = BinaryType
     override def prettyName: String = "bucket_count_vec2_packed"
 
@@ -480,29 +376,8 @@ object HashExpressions {
       out
     }
 
-    override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val ref = ctx.addReferenceObj("bucketCountsVec2", this,
-          classOf[BucketCountVec2Packed].getName)
-        s"${ev.value} = (byte[]) $ref.kernel($a);"
-      })
-
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
-  }
-
-  private def literalInt(e: Expression, fn: String): Int =
-    if (e.foldable) e.eval().asInstanceOf[Number].intValue
-    else throw new IllegalArgumentException(
-      s"$fn: second argument must be a literal integer")
-
-  private def literalString(e: Expression, fn: String): String = {
-    val v = if (e.foldable && e.dataType == StringType) e.eval() else null
-    if (v == null) throw new IllegalArgumentException(
-      s"$fn: argument must be a non-null literal string")
-    v.toString
   }
 
   /** Content-defined chunking in ONE kernel pass (q102c): boundary
@@ -516,13 +391,9 @@ object HashExpressions {
     * at sf0.1); the kernel is sub-second (the q103 bucket_count_vec
     * lesson, applied again). Null tokens are skipped like
     * array_to_string, so the oracle's join semantics hold. */
-  case class CdcChunks(child: Expression, k: Int, mod: Int) extends UnaryExpression {
+  case class CdcChunks(child: Expression, k: Int, mod: Int) extends TokenKernel {
     require(k >= 1 && mod >= 1, s"cdc_chunks needs k >= 1, mod >= 1: k=$k mod=$mod")
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"cdc_chunks expects array<string>, got $t")
-    }
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("chunk_idx", LongType, nullable = false),
       StructField("start_tok", LongType, nullable = false),
@@ -556,14 +427,6 @@ object HashExpressions {
       new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
     }
 
-    override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val ref = ctx.addReferenceObj("cdcChunks", this, classOf[CdcChunks].getName)
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.kernel($a);"
-      })
-
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -579,21 +442,14 @@ object HashExpressions {
     * at construction (idempotent if already sorted) and referenced,
     * never copied per row. */
   case class SortedLongContains(child: Expression, set: Array[Long])
-      extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case LongType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"needs bigint, got ${t.sql}")
-    }
+      extends UnaryKernel {
+    override def checkInputDataTypes(): TypeCheckResult =
+      expect(prettyName, "bigint", child) { case LongType => }
     override def dataType: DataType = BooleanType
     override def prettyName: String = "sorted_long_contains"
 
-    override def nullSafeEval(v: Any): Any =
-      java.util.Arrays.binarySearch(set, v.asInstanceOf[Long]) >= 0
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("sortedLongSet", set, "long[]")
-      defineCodeGen(ctx, ev, c => s"java.util.Arrays.binarySearch($ref, $c) >= 0")
-    }
+    def kernel(v: Long): Boolean = java.util.Arrays.binarySearch(set, v) >= 0
+    override def nullSafeEval(v: Any): Any = kernel(v.asInstanceOf[Long])
 
     // value equality over the array contents: the case-class default
     // compares Array[Long] by REFERENCE, so two semantically identical
@@ -614,35 +470,6 @@ object HashExpressions {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
-
-  /** The ONE definition of each SQL function builder — referenced by
-    * both GraftExtensions (spark.sql.extensions) and the session-local
-    * [[registerSql]], so the two registration paths can't drift. */
-  val sqlBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "simhash64" -> ((exprs: Seq[Expression]) => ArraySimhash(exprs.head)),
-    "array_freq_stats" -> ((exprs: Seq[Expression]) => ArrayFreqStats(exprs.head)),
-    "md5_shingle_hashes" -> ((exprs: Seq[Expression]) =>
-      Md5ShingleHashes(exprs(0), literalInt(exprs(1), "md5_shingle_hashes"))),
-    "affine_minhash" -> ((exprs: Seq[Expression]) => {
-      val params = graft.operators.Dedup.affineParams(
-        literalInt(exprs(1), "affine_minhash"))
-      AffineMinHash(exprs(0), params.map(_._1), params.map(_._2))
-    }),
-    "bucket_count_vec" -> ((exprs: Seq[Expression]) =>
-      BucketCountVec(exprs(0), literalString(exprs(1), "bucket_count_vec"),
-        literalInt(exprs(2), "bucket_count_vec"),
-        literalInt(exprs(3), "bucket_count_vec"))),
-    "cdc_chunks" -> ((exprs: Seq[Expression]) =>
-      CdcChunks(exprs(0), literalInt(exprs(1), "cdc_chunks"),
-        literalInt(exprs(2), "cdc_chunks"))))
-
-  /** SQL registration (session-local twin of the GraftExtensions
-    * entries): simhash64(arr), md5_shingle_hashes(tokens, k),
-    * affine_minhash(hashes, numPerms). */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit =
-    sqlBuilders.foreach { case (name, builder) =>
-      ColumnBridge.registerFunction(spark, name, builder)
-    }
 
   def array_freq_stats(hashes: Column): Column =
     ColumnBridge.column(ArrayFreqStats(ColumnBridge.expression(hashes)))

@@ -2,10 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType}
+
+import graft.functions.Kernels.{BinaryKernel, expect}
 
 /** Fixed-point base-2 logarithm — the exactness backbone of the q100
   * LM screen ([[graft.operators.LmScreen]]).
@@ -27,12 +28,13 @@ import org.apache.spark.sql.types.{DataType, LongType}
   *
   * Exact at every power of two; ≤ 2/1024 bit below the true log
   * elsewhere (each squaring floors, so the error is one-sided).
-  * A codegen Expression rather than a 46-step projection chain: the
-  * kernel is one generated loop, the plan one expression.
+  * One expression rather than a 46-step projection chain: the plan
+  * holds one node, and generated code and interpreted evaluation both
+  * run [[log2mbKernel]].
   */
 object LogExpressions {
 
-  /** reference kernel — shared by interpreted eval and the spec. */
+  /** THE kernel — run by both evaluation modes and by the specs. */
   def log2mbKernel(a: Long, b: Long): Long = {
     require(a >= 1 && b >= a && b < (1L << 62),
       s"log2mb domain: 1 <= a <= b < 2^62, got ($a, $b)")
@@ -58,53 +60,16 @@ object LogExpressions {
     k.toLong * 1024 + acc
   }
 
-  case class Log2FixedMb(left: Expression, right: Expression) extends BinaryExpression {
+  case class Log2FixedMb(left: Expression, right: Expression) extends BinaryKernel {
 
     override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (LongType, LongType) => TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"log2mb expects (bigint, bigint), got ($l, $r)")
-      }
+      expect(prettyName, "(bigint, bigint)", left, right) { case LongType => }
     override def dataType: DataType = LongType
     override def prettyName: String = "log2mb"
 
+    def kernel(a: Long, b: Long): Long = log2mbKernel(a, b)
     override def nullSafeEval(a: Any, b: Any): Any =
-      log2mbKernel(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val k = ctx.freshName("k")
-        val dd = ctx.freshName("dd")
-        val rem = ctx.freshName("rem")
-        val facc = ctx.freshName("facc")
-        val r = ctx.freshName("r")
-        val acc = ctx.freshName("acc")
-        val sq = ctx.freshName("sq")
-        val i = ctx.freshName("i")
-        s"""
-           |if (!($a >= 1L && $b >= $a && $b < (1L << 62))) {
-           |  throw new IllegalArgumentException(
-           |    "log2mb domain: 1 <= a <= b < 2^62, got (" + $a + ", " + $b + ")");
-           |}
-           |int $k = 63 - java.lang.Long.numberOfLeadingZeros($b / $a);
-           |long $dd = $a << $k;
-           |long $rem = $b - $dd;
-           |long $facc = 0L;
-           |for (int $i = 0; $i < 30; $i++) {
-           |  $rem <<= 1;
-           |  if ($rem >= $dd) { $rem -= $dd; $facc = $facc * 2L + 1L; } else { $facc *= 2L; }
-           |}
-           |long $r = (1L << 30) + $facc;
-           |long $acc = 0L;
-           |for (int $i = 0; $i < 10; $i++) {
-           |  long $sq = ($r * $r) >> 30;
-           |  if ($sq >= (1L << 31)) { $sq >>= 1; $acc = $acc * 2L + 1L; } else { $acc *= 2L; }
-           |  $r = $sq;
-           |}
-           |${ev.value} = (long) $k * 1024L + $acc;
-         """.stripMargin
-      })
+      kernel(a.asInstanceOf[Long], b.asInstanceOf[Long])
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -114,11 +79,4 @@ object LogExpressions {
   def log2mb(a: Column, b: Column): Column =
     ColumnBridge.column(Log2FixedMb(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** SQL registration (session-local twin of the GraftExtensions
-    * entry): log2mb(a, b) = ⌊log2(b/a)·1024⌋, the exact fixed-point
-    * surprisal kernel. */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit =
-    ColumnBridge.registerFunction(spark, "log2mb",
-      exprs => Log2FixedMb(exprs(0), exprs(1)))
 }

@@ -12,6 +12,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.HashExpressions.Md5Kernels
+import graft.functions.Kernels.{BinaryKernel, KernelCodegen, TokenKernel, UnaryKernel, stringArray}
 
 /** Row-local text kernels over a token array: the frozen-model scores
   * of the release report (rarity, bigram LM, DSIR) and the per-document
@@ -20,11 +21,9 @@ import graft.functions.HashExpressions.Md5Kernels
   * geometry). Lambdas are `CodegenFallback`: each one split the
   * whole-stage codegen stage and evaluated element by element in the
   * interpreter, and each frozen model rode as a literal map probed by a
-  * linear `element_at`. A kernel holds its model as a hash map (the
-  * [[HashExpressions.SortedLongContains]] pattern: built once, shared
-  * by reference) and runs one JVM loop per row; codegen and
-  * interpreted evaluation call the same Scala method, so the two
-  * cannot diverge. The scoring kernels are the ONE scorer of their
+  * linear `element_at`. A kernel holds its model as a hash map (built
+  * once, shared by reference) and runs one JVM loop per row, in the
+  * [[Kernels]] shape. The scoring kernels are the ONE scorer of their
   * frozen model: the batch screens (q75, q100, q100b, q101, q113), the
   * stream lookups and the report frame all call them, so their
   * independent reference is the DuckDB oracle plus the hand fixtures
@@ -33,30 +32,7 @@ import graft.functions.HashExpressions.Md5Kernels
   * against interpreted evaluation. */
 object TextKernels {
 
-  /** an expression whose codegen is one virtual call into `kernel` —
-    * the md5-shingle / CDC pattern */
-  sealed trait KernelCodegen extends Expression {
-    protected def genCall(ctx: CodegenContext, ev: ExprCode, args: String*): String = {
-      val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
-      s"${ev.value} = (${CodeGenerator.javaType(dataType)}) $ref.kernel(${args.mkString(", ")});"
-    }
-  }
-
-  private def stringArray(e: Expression, fn: String): TypeCheckResult = e.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$fn expects array<string>, got $t")
-  }
-
-  /** a unary kernel over array<string> */
-  abstract class TokenKernel extends UnaryExpression with KernelCodegen {
-    def kernel(a: ArrayData): Any
-    override def checkInputDataTypes(): TypeCheckResult = stringArray(child, prettyName)
-    override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => genCall(ctx, ev, a))
-  }
-
-  private def spanArray(e: Expression, fn: String): TypeCheckResult = e.dataType match {
+  private def spanArray(fn: String, e: Expression): TypeCheckResult = e.dataType match {
     case ArrayType(st: StructType, _)
         if st.map(f => f.name -> f.dataType) == Seq("s" -> IntegerType, "e" -> IntegerType) =>
       TypeCheckResult.TypeCheckSuccess
@@ -150,9 +126,9 @@ object TextKernels {
     * concatenation and a map probe. A null token array scores null. */
   case class LmScore(left: Expression, right: Expression,
                      models: Map[String, graft.operators.LmScreen.LmModel],
-                     unkTok: String, keepMaxMb: Long) extends BinaryExpression {
+                     unkTok: String, keepMaxMb: Long) extends BinaryExpression with KernelCodegen {
     override def checkInputDataTypes(): TypeCheckResult =
-      if (right.dataType == StringType) stringArray(left, prettyName)
+      if (right.dataType == StringType) stringArray(prettyName, left)
       else TypeCheckResult.TypeCheckFailure(s"lm_score groups by a string, got ${right.dataType}")
     override def dataType: DataType = LmType
     override def prettyName: String = "lm_score"
@@ -213,14 +189,14 @@ object TextKernels {
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val a = left.genCode(ctx)
       val g = right.genCode(ctx)
-      val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
+      val call = genCall(ctx, a.value, s"${g.isNull} ? null : ${g.value}")
       ev.copy(code = code"""
         |${a.code}
         |boolean ${ev.isNull} = ${a.isNull};
         |${CodeGenerator.javaType(dataType)} ${ev.value} = null;
         |if (!${ev.isNull}) {
         |  ${g.code}
-        |  ${ev.value} = $ref.kernel(${a.value}, ${g.isNull} ? null : ${g.value});
+        |  ${ev.value} = $call;
         |}""".stripMargin)
     }
 
@@ -347,7 +323,8 @@ object TextKernels {
     override protected def stringArgs: Iterator[Any] = Iterator(child, s"set[${set.length}]", w)
 
     def kernel(a: ArrayData): ArrayData =
-      mergeSorted((0 to a.numElements() - w)
+      if (set.isEmpty) new GenericArrayData(Array.empty[Any])  // no window can match
+      else mergeSorted((0 to a.numElements() - w)
         .filter(p => java.util.Arrays.binarySearch(set, Md5Kernels.hashRange(a, p, p + w)) >= 0)
         .map(p => (p, p + w)))
 
@@ -364,8 +341,8 @@ object TextKernels {
   /** a span array's maximal intervals: the spans, in any order, merge
     * by [[mergeSorted]] (null elements are skipped) — the merge of the
     * collected q107 window cuts and of q118's two unioned cut lists. */
-  case class MergeSpans(child: Expression) extends UnaryExpression with KernelCodegen {
-    override def checkInputDataTypes(): TypeCheckResult = spanArray(child, prettyName)
+  case class MergeSpans(child: Expression) extends UnaryKernel {
+    override def checkInputDataTypes(): TypeCheckResult = spanArray(prettyName, child)
     override def dataType: DataType = SpanArrayType
     override def prettyName: String = "merge_spans"
 
@@ -374,8 +351,6 @@ object TextKernels {
         .map { i => val sp = a.getStruct(i, 2); (sp.getInt(0), sp.getInt(1)) }.sorted)
 
     override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => genCall(ctx, ev, a))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -386,11 +361,11 @@ object TextKernels {
   /** THE cut rule: a token survives iff no [s, e) span covers its
     * index; returns the survivors' count and the 60-bit md5 of the
     * survivors joined by one space (md5_60(array_join(clean, ' '))). */
-  case class CutTokens(left: Expression, right: Expression)
-      extends BinaryExpression with KernelCodegen {
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (!stringArray(left, prettyName).isSuccess) stringArray(left, prettyName)
-      else spanArray(right, prettyName)
+  case class CutTokens(left: Expression, right: Expression) extends BinaryKernel {
+    override def checkInputDataTypes(): TypeCheckResult = {
+      val tokens = stringArray(prettyName, left)
+      if (tokens.isSuccess) spanArray(prettyName, right) else tokens
+    }
     override def dataType: DataType = CutType
     override def prettyName: String = "cut_tokens"
 
@@ -420,8 +395,6 @@ object TextKernels {
 
     override def nullSafeEval(a: Any, s: Any): Any =
       kernel(a.asInstanceOf[ArrayData], s.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, s) => genCall(ctx, ev, a, s))
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
   }
@@ -443,7 +416,7 @@ object TextKernels {
   case class ChunkSpans(child: Expression, width: Int, overlap: Int)
       extends UnaryExpression with KernelCodegen {
     require(width > overlap && overlap >= 0, s"chunk width $width must exceed overlap $overlap")
-    override def checkInputDataTypes(): TypeCheckResult = stringArray(child, prettyName)
+    override def checkInputDataTypes(): TypeCheckResult = stringArray(prettyName, child)
     override def dataType: DataType = ChunkArrayType
     override def nullable: Boolean = false
     override def prettyName: String = "chunk_spans"
@@ -469,11 +442,10 @@ object TextKernels {
       kernel(child.eval(input).asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val c = child.genCode(ctx)
-      val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
+      val call = genCall(ctx, s"${c.isNull} ? null : ${c.value}")
       ev.copy(code = code"""
         |${c.code}
-        |${CodeGenerator.javaType(dataType)} ${ev.value} =
-        |  $ref.kernel(${c.isNull} ? null : ${c.value});""".stripMargin,
+        |${CodeGenerator.javaType(dataType)} ${ev.value} = $call;""".stripMargin,
         isNull = FalseLiteral)
     }
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)

@@ -1,118 +1,81 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
+
+import graft.functions.Kernels.{BinaryKernel, KernelCodegen, UnaryKernel, binary, longArray, vector}
 
 /** Native Catalyst expressions for the vector hot path.
   *
   * The higher-order-function formulation of a dot product
   * (`aggregate(zip_with(a,b,*),0,+)`) evaluates its lambda interpreted,
   * one element at a time — fine for a few thousand rows, hopeless for
-  * the O(n·k) inner loop of similarity search at scale. These are tight
-  * codegen'd loops over the array data, usable from whole-stage
-  * codegen.
+  * the O(n·k) inner loop of similarity search at scale. These are
+  * [[Kernels]]: one Scala loop per row over the array data, called from
+  * whole-stage codegen and interpreted evaluation alike. A float or
+  * double vector's element type is resolved once per expression, not
+  * per element.
   */
 object VectorExpressions {
 
-  private def getter(e: Expression): String =
-    e.dataType.asInstanceOf[ArrayType].elementType match {
-      case FloatType  => "getFloat"
-      case DoubleType => "getDouble"
-      case t => throw new IllegalArgumentException(s"vec op on array<$t>")
-    }
+  /** true iff `e` is array<float>; a vector kernel's other input type
+    * is array<double> */
+  private def floats(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  private def read(x: ArrayData, g: String, i: Int): Double =
-    if (g == "getFloat") x.getFloat(i).toDouble else x.getDouble(i)
+  /** element i of a float (`float`) or double vector, as a double */
+  @inline private def read(x: ArrayData, float: Boolean, i: Int): Double =
+    if (float) x.getFloat(i).toDouble else x.getDouble(i)
 
   /** Σ aᵢ·bᵢ over two float/double arrays (shorter length wins).
     * Element types are read natively — no array-wide cast copy per row,
     * which matters when the same vector participates in thousands of
     * pair comparisons. */
-  case class ArrayDotProduct(left: Expression, right: Expression)
-      extends BinaryExpression {
+  case class ArrayDotProduct(left: Expression, right: Expression) extends BinaryKernel {
 
-    override def checkInputDataTypes() = {
-      def ok(e: Expression) = e.dataType match {
-        case ArrayType(FloatType | DoubleType, _) => true
-        case _ => false
-      }
-      if (ok(left) && ok(right))
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"vec_dot expects array<float|double>, got ${left.dataType}, ${right.dataType}")
-    }
+    override def checkInputDataTypes() = vector(prettyName, left, right)
     override def dataType: DataType = DoubleType
     override def prettyName: String = "vec_dot"
+    @transient private lazy val floatLeft = floats(left)
+    @transient private lazy val floatRight = floats(right)
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val (gx, gy) = (getter(left), getter(right))
+    def kernel(x: ArrayData, y: ArrayData): Double = {
+      val fx = floatLeft
+      val fy = floatRight
       val n = math.min(x.numElements(), y.numElements())
       var s = 0.0
       var i = 0
-      while (i < n) { s += read(x, gx, i) * read(y, gy, i); i += 1 }
+      while (i < n) { s += read(x, fx, i) * read(y, fy, i); i += 1 }
       s
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double ${ev.value}_s = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  ${ev.value}_s += (double) $a.${getter(left)}($i) * (double) $b.${getter(right)}($i);
-           |}
-           |${ev.value} = ${ev.value}_s;
-         """.stripMargin
-      })
+    override def nullSafeEval(a: Any, b: Any): Any =
+      kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
   }
 
-  /** Σ aᵢ² — squared L2 norm, same codegen shape. */
-  case class ArrayNormSq(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  /** Σ aᵢ² — squared L2 norm, the same fold. */
+  case class ArrayNormSq(child: Expression) extends UnaryKernel {
 
-    override def checkInputDataTypes() = child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"vec_norm_sq expects array<float|double>, got $t")
-    }
+    override def checkInputDataTypes() = vector(prettyName, child)
     override def dataType: DataType = DoubleType
     override def prettyName: String = "vec_norm_sq"
+    @transient private lazy val float = floats(child)
 
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val g = getter(child)
+    def kernel(x: ArrayData): Double = {
+      val f = float
       var s = 0.0
       var i = 0
-      while (i < x.numElements()) { val v = read(x, g, i); s += v * v; i += 1 }
+      while (i < x.numElements()) { val v = read(x, f, i); s += v * v; i += 1 }
       s
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val i = ctx.freshName("i")
-        s"""
-           |double ${ev.value}_s = 0.0;
-           |for (int $i = 0; $i < $a.numElements(); $i++) {
-           |  double v = (double) $a.${getter(child)}($i);
-           |  ${ev.value}_s += v * v;
-           |}
-           |${ev.value} = ${ev.value}_s;
-         """.stripMargin
-      })
+    override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -123,42 +86,21 @@ object VectorExpressions {
     * whose HOF form (`aggregate(zip_with(...))`) evaluates an
     * interpreted lambda per element per candidate pair. Callers
     * guarantee no-overflow via saturation bounds. */
-  case class LongArrayDot(left: Expression, right: Expression)
-      extends BinaryExpression {
+  case class LongArrayDot(left: Expression, right: Expression) extends BinaryKernel {
 
-    override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (a, b) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"lvec_dot expects array<bigint>, got $a, $b")
-    }
+    override def checkInputDataTypes() = longArray(prettyName, left, right)
     override def dataType: DataType = LongType
     override def prettyName: String = "lvec_dot"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
+    def kernel(x: ArrayData, y: ArrayData): Long = {
       val n = math.min(x.numElements(), y.numElements())
       var s = 0L
       var i = 0
       while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
       s
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |long ${ev.value}_s = 0L;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  ${ev.value}_s += $a.getLong($i) * $b.getLong($i);
-           |}
-           |${ev.value} = ${ev.value}_s;
-         """.stripMargin
-      })
+    override def nullSafeEval(a: Any, b: Any): Any =
+      kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -166,39 +108,19 @@ object VectorExpressions {
   }
 
   /** Σ aᵢ² over a long array, exact int64. */
-  case class LongArrayNormSq(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  case class LongArrayNormSq(child: Expression) extends UnaryKernel {
 
-    override def checkInputDataTypes() = child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"lvec_norm_sq expects array<bigint>, got $t")
-    }
+    override def checkInputDataTypes() = longArray(prettyName, child)
     override def dataType: DataType = LongType
     override def prettyName: String = "lvec_norm_sq"
 
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
+    def kernel(x: ArrayData): Long = {
       var s = 0L
       var i = 0
       while (i < x.numElements()) { val v = x.getLong(i); s += v * v; i += 1 }
       s
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val i = ctx.freshName("i")
-        s"""
-           |long ${ev.value}_s = 0L;
-           |for (int $i = 0; $i < $a.numElements(); $i++) {
-           |  long v = $a.getLong($i);
-           |  ${ev.value}_s += v * v;
-           |}
-           |${ev.value} = ${ev.value}_s;
-         """.stripMargin
-      })
+    override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -206,7 +128,8 @@ object VectorExpressions {
 
   /** All LSH sign-buckets for a vector in ONE expression: for table t,
     * bucket(t) = Σ_j [dot(v, planes(t)(j)) > 0]·2^j. The plane matrix
-    * rides along as a codegen reference object — one tree node where
+    * is a field of the expression, which the generated code calls by
+    * reference — one tree node where
     * the per-plane `vec_dot(v, typedLit(plane))` formulation needs
     * tables×planes separate subtrees holding tables×planes×dim literal
     * nodes, which dominates analysis+codegen time for every
@@ -214,21 +137,15 @@ object VectorExpressions {
     * [[ArrayDotProduct]], so the sign bits (and the DuckDB oracle
     * parity built on them) are unchanged. */
   case class LshBucketsExpr(child: Expression, planes: Array[Array[Array[Double]]])
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel {
 
-    override def checkInputDataTypes() = child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"lsh_buckets expects array<float|double>, got $t")
-    }
+    override def checkInputDataTypes() = vector(prettyName, child)
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
     override def prettyName: String = "lsh_buckets"
+    @transient private lazy val float = floats(child)
 
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val g = getter(child)
+    def kernel(x: ArrayData): ArrayData = {
+      val f = float
       val out = new Array[Int](planes.length)
       var t = 0
       while (t < planes.length) {
@@ -239,7 +156,7 @@ object VectorExpressions {
           val n = math.min(x.numElements(), p.length)
           var s = 0.0
           var i = 0
-          while (i < n) { s += read(x, g, i) * p(i); i += 1 }
+          while (i < n) { s += read(x, f, i) * p(i); i += 1 }
           if (s > 0) bucket |= 1 << j
           j += 1
         }
@@ -248,32 +165,7 @@ object VectorExpressions {
       }
       ArrayData.toArrayData(out)
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val pl = ctx.addReferenceObj("lshPlanes", planes, "double[][][]")
-        val out = ctx.freshName("out"); val t = ctx.freshName("t")
-        val j = ctx.freshName("j"); val i = ctx.freshName("i")
-        val p = ctx.freshName("p"); val s = ctx.freshName("s")
-        val n = ctx.freshName("n"); val bucket = ctx.freshName("bucket")
-        s"""
-           |int[] $out = new int[$pl.length];
-           |for (int $t = 0; $t < $pl.length; $t++) {
-           |  int $bucket = 0;
-           |  for (int $j = 0; $j < $pl[$t].length; $j++) {
-           |    double[] $p = $pl[$t][$j];
-           |    int $n = java.lang.Math.min($a.numElements(), $p.length);
-           |    double $s = 0.0;
-           |    for (int $i = 0; $i < $n; $i++) {
-           |      $s += (double) $a.${getter(child)}($i) * $p[$i];
-           |    }
-           |    if ($s > 0) $bucket |= 1 << $j;
-           |  }
-           |  $out[$t] = $bucket;
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-         """.stripMargin
-      })
+    override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -288,42 +180,21 @@ object VectorExpressions {
     * exchange the candidate rows cross carries ~8× fewer bytes — the
     * r12 verdict's measured 100× knee was exactly this row width. Counts ≤ 255 ⇒ every
     * product < 2¹⁶ and any realistic sum is int64-exact. */
-  case class ByteVecDot(left: Expression, right: Expression)
-      extends BinaryExpression {
+  case class ByteVecDot(left: Expression, right: Expression) extends BinaryKernel {
 
-    override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-      case (BinaryType, BinaryType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (a, b) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bvec_dot expects binary, got $a, $b")
-    }
+    override def checkInputDataTypes() = binary(prettyName, left, right)
     override def dataType: DataType = LongType
     override def prettyName: String = "bvec_dot"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[Array[Byte]]
-      val y = b.asInstanceOf[Array[Byte]]
+    def kernel(x: Array[Byte], y: Array[Byte]): Long = {
       val n = math.min(x.length, y.length)
       var s = 0L
       var i = 0
       while (i < n) { s += (x(i) & 0xFF).toLong * (y(i) & 0xFF).toLong; i += 1 }
       s
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        s"""
-           |int $n = java.lang.Math.min($a.length, $b.length);
-           |long ${ev.value}_s = 0L;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  ${ev.value}_s += (long) ($a[$i] & 0xFF) * (long) ($b[$i] & 0xFF);
-           |}
-           |${ev.value} = ${ev.value}_s;
-         """.stripMargin
-      })
+    override def nullSafeEval(a: Any, b: Any): Any =
+      kernel(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -331,39 +202,19 @@ object VectorExpressions {
   }
 
   /** Σ (aᵢ & 0xFF)² over a packed byte-count vector, exact int64. */
-  case class ByteVecNormSq(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  case class ByteVecNormSq(child: Expression) extends UnaryKernel {
 
-    override def checkInputDataTypes() = child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bvec_norm_sq expects binary, got $t")
-    }
+    override def checkInputDataTypes() = binary(prettyName, child)
     override def dataType: DataType = LongType
     override def prettyName: String = "bvec_norm_sq"
 
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[Array[Byte]]
+    def kernel(x: Array[Byte]): Long = {
       var s = 0L
       var i = 0
       while (i < x.length) { val v = (x(i) & 0xFF).toLong; s += v * v; i += 1 }
       s
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val i = ctx.freshName("i")
-        s"""
-           |long ${ev.value}_s = 0L;
-           |for (int $i = 0; $i < $a.length; $i++) {
-           |  long v = (long) ($a[$i] & 0xFF);
-           |  ${ev.value}_s += v * v;
-           |}
-           |${ev.value} = ${ev.value}_s;
-         """.stripMargin
-      })
+    override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[Array[Byte]])
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -376,16 +227,9 @@ object VectorExpressions {
     * unpacks row-locally ABOVE the exchange ([[BinaryToLongs]]).
     * Null elements are disallowed (callers pack hash lists, which
     * never carry nulls). */
-  case class LongsToBinary(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  case class LongsToBinary(child: Expression) extends UnaryKernel {
 
-    override def checkInputDataTypes() = child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pack_longs expects array<bigint>, got $t")
-    }
+    override def checkInputDataTypes() = longArray(prettyName, child)
     override def dataType: DataType = BinaryType
     override def prettyName: String = "pack_longs"
 
@@ -402,27 +246,15 @@ object VectorExpressions {
       out
     }
     override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val ref = ctx.addReferenceObj("packLongs", this, classOf[LongsToBinary].getName)
-        s"${ev.value} = (byte[]) $ref.kernel($a);"
-      })
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
 
   /** packed big-endian binary → array<bigint> (inverse of
     * [[LongsToBinary]]). */
-  case class BinaryToLongs(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  case class BinaryToLongs(child: Expression) extends UnaryKernel {
 
-    override def checkInputDataTypes() = child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"unpack_longs expects binary, got $t")
-    }
+    override def checkInputDataTypes() = binary(prettyName, child)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "unpack_longs"
 
@@ -440,11 +272,6 @@ object VectorExpressions {
       ArrayData.toArrayData(out)
     }
     override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val ref = ctx.addReferenceObj("unpackLongs", this, classOf[BinaryToLongs].getName)
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.kernel($a);"
-      })
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -454,24 +281,18 @@ object VectorExpressions {
       planes.map(_.map(_.toArray).toArray).toArray))
 
   /** dot(v, mᵢ) for every row mᵢ of a broadcast-sized matrix (IVF
-    * centroids), one expression — same reference-object trick as
-    * [[LshBucketsExpr]], same fold order as [[ArrayDotProduct]]. */
-  case class CellDotsExpr(child: Expression, cells: Array[Array[Double]])
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    * centroids), one expression — the matrix is a field of the
+    * expression, as in [[LshBucketsExpr]], and the fold order is
+    * [[ArrayDotProduct]]'s. */
+  case class CellDotsExpr(child: Expression, cells: Array[Array[Double]]) extends UnaryKernel {
 
-    override def checkInputDataTypes() = child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"vec_cell_dots expects array<float|double>, got $t")
-    }
+    override def checkInputDataTypes() = vector(prettyName, child)
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
     override def prettyName: String = "vec_cell_dots"
+    @transient private lazy val float = floats(child)
 
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val g = getter(child)
+    def kernel(x: ArrayData): ArrayData = {
+      val f = float
       val out = new Array[Double](cells.length)
       var c = 0
       while (c < cells.length) {
@@ -479,33 +300,13 @@ object VectorExpressions {
         val n = math.min(x.numElements(), m.length)
         var s = 0.0
         var i = 0
-        while (i < n) { s += read(x, g, i) * m(i); i += 1 }
+        while (i < n) { s += read(x, f, i) * m(i); i += 1 }
         out(c) = s
         c += 1
       }
       ArrayData.toArrayData(out)
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val cl = ctx.addReferenceObj("cellMatrix", cells, "double[][]")
-        val out = ctx.freshName("out"); val c = ctx.freshName("c")
-        val i = ctx.freshName("i"); val m = ctx.freshName("m")
-        val s = ctx.freshName("s"); val n = ctx.freshName("n")
-        s"""
-           |double[] $out = new double[$cl.length];
-           |for (int $c = 0; $c < $cl.length; $c++) {
-           |  double[] $m = $cl[$c];
-           |  int $n = java.lang.Math.min($a.numElements(), $m.length);
-           |  double $s = 0.0;
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    $s += (double) $a.${getter(child)}($i) * $m[$i];
-           |  }
-           |  $out[$c] = $s;
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-         """.stripMargin
-      })
+    override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -530,7 +331,7 @@ object VectorExpressions {
     * under ANSI (`failOnError`, the session's mode when the expression
     * is built) and gives null otherwise. */
   case class NearestCell(left: Expression, right: Expression, cellNorms: Array[Double],
-                         failOnError: Boolean) extends BinaryExpression {
+                         failOnError: Boolean) extends BinaryExpression with KernelCodegen {
     require(cellNorms.nonEmpty, "nearest_cell needs at least one centroid")
     override def checkInputDataTypes() = (left.dataType, right.dataType) match {
       case (ArrayType(DoubleType, _), DoubleType) =>
@@ -581,12 +382,12 @@ object VectorExpressions {
       import org.apache.spark.sql.catalyst.expressions.codegen.Block._
       val l = left.genCode(ctx)
       val r = right.genCode(ctx)
-      val ref = ctx.addReferenceObj("nearestCell", this, classOf[NearestCell].getName)
+      val call = genCall(ctx, s"${l.isNull} ? null : ${l.value}",
+        s"${r.isNull} ? null : Double.valueOf(${r.value})")
       ev.copy(code = code"""
         |${l.code}
         |${r.code}
-        |InternalRow ${ev.value} = $ref.kernel(${l.isNull} ? null : ${l.value},
-        |  ${r.isNull} ? null : Double.valueOf(${r.value}));""".stripMargin,
+        |InternalRow ${ev.value} = $call;""".stripMargin,
         isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
     }
 
@@ -612,8 +413,8 @@ object VectorExpressions {
       ColumnBridge.expression(norm), cellNorms.toArray,
       org.apache.spark.sql.internal.SQLConf.get.ansiEnabled))
 
-  /** Column API: codegen'd dot product (inputs auto-cast to
-    * array<double>). */
+  /** Column API: Σ aᵢ·bᵢ over two float/double arrays, see
+    * [[ArrayDotProduct]]. */
   def vec_dot(a: Column, b: Column): Column =
     ColumnBridge.column(ArrayDotProduct(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
@@ -638,17 +439,4 @@ object VectorExpressions {
 
   def vec_norm_sq(a: Column): Column =
     ColumnBridge.column(ArrayNormSq(ColumnBridge.expression(a)))
-
-  /** make vec_dot / vec_norm_sq / lvec_dot / lvec_norm_sq available
-    * to spark.sql(...) texts. */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit = {
-    ColumnBridge.registerFunction(spark, "vec_dot",
-      exprs => ArrayDotProduct(exprs(0), exprs(1)))
-    ColumnBridge.registerFunction(spark, "vec_norm_sq",
-      exprs => ArrayNormSq(exprs.head))
-    ColumnBridge.registerFunction(spark, "lvec_dot",
-      exprs => LongArrayDot(exprs(0), exprs(1)))
-    ColumnBridge.registerFunction(spark, "lvec_norm_sq",
-      exprs => LongArrayNormSq(exprs.head))
-  }
 }

@@ -9,14 +9,14 @@ import org.apache.spark.sql.functions._
   * random-hyperplane-LSH bucketed variant (the 100 TB path: equality
   * join on bucket id instead of a cartesian product).
   *
-  * Dot products use zip_with + aggregate over the array column —
-  * builtin higher-order functions, evaluated row-local. Vectors are
-  * L2-normalized once up front so every pair comparison is a plain dot
-  * product.
+  * Dot products are the `vec_dot` kernel over the array column
+  * ([[graft.functions.VectorExpressions.ArrayDotProduct]]), evaluated
+  * row-local. Vectors are L2-normalized once up front so every pair
+  * comparison is a plain dot product.
   */
 object Similarity {
 
-  /** codegen'd dot product (custom Catalyst expression, float-native —
+  /** the `vec_dot` kernel (custom Catalyst expression, float-native —
     * the HOF zip_with/aggregate form evaluates interpreted and is ~10×
     * slower on the all-pairs hot path). */
   def dot(a: Column, b: Column): Column =

@@ -1,20 +1,26 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{BpeExpressions, HashExpressions, LogExpressions, TextKernels, VectorExpressions}
 
 /** CODEGEN ↔ INTERPRETED agreement for every custom Catalyst
-  * expression (r15): 15 of the 22 doGenCode sites delegate to the same
-  * Scala kernel their `eval` calls (divergence impossible by
-  * construction), but the vector kernels emit hand-written Java loops
-  * that are INDEPENDENT code from their interpreted `nullSafeEval` —
+  * expression (r15). Every expression's math is one Scala kernel that
+  * both modes call ([[graft.functions.Kernels]]), so what can still
+  * diverge is the plumbing around the call: null handling, the cast of
+  * the generated call, result conversion, the float/double dispatch —
   * and the interpreted path is exactly what runs when whole-stage
   * codegen falls back at scale (generated-method-size limits, wide
-  * plans, codegen bugs), i.e. precisely when nobody is looking. This
-  * spec runs the full battery twice on the SAME inputs — once under
-  * the default codegen session, once under a child session with
+  * plans, codegen bugs), i.e. precisely when nobody is looking. A slip
+  * in the math itself shows against the naive references in
+  * KernelProperties, not here. This
+  * spec runs the full battery twice on the SAME inputs — once under a
+  * child session that must generate code (a generated call that fails
+  * to compile throws instead of falling back, and the projection must
+  * sit inside a whole-stage span), once under a child session with
   * whole-stage codegen off and the expression factory forced to
   * NO_CODEGEN — and demands bit-identical rows.
   *
@@ -24,7 +30,51 @@ import graft.functions.{BpeExpressions, HashExpressions, LogExpressions, TextKer
 class CodegenAgreementSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
-  private def battery(s: org.apache.spark.sql.SparkSession) = {
+  /** both sides keep the battery's projection a plan node: the
+    * optimizer would otherwise evaluate a projection over a local
+    * relation once on the driver, interpreted (ConvertToLocalRelation),
+    * and the codegen side would test nothing */
+  private def child(settings: (String, String)*): SparkSession = {
+    val s = spark.newSession()
+    (("spark.sql.optimizer.excludedRules",
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation") +: settings)
+      .foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  /** the codegen side: a generated call that fails to compile throws
+    * instead of quietly running interpreted */
+  private def generated = child("spark.sql.codegen.fallback" -> "false",
+    "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+
+  private def interpreted = child("spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** every plan node that evaluates a graft expression sits inside a
+    * whole-stage span, and there is at least one (run after execution,
+    * so the adaptive plan is final) */
+  private def assertWholeStage(df: DataFrame): Unit = {
+    def span(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p match { case _: InputAdapter => Nil; case _ => p.children.flatMap(span) })
+    val all = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
+    val inSpans = all.collect { case w: WholeStageCodegenExec => span(w.child) }.flatten
+    val carrying = all.filter(_.expressions.exists(_.exists(
+      _.getClass.getName.startsWith("graft.functions."))))
+    assert(carrying.nonEmpty, "no plan node evaluates a graft expression")
+    carrying.foreach(n => assert(inSpans.exists(_ eq n), s"outside whole-stage codegen: ${n.nodeName}"))
+  }
+
+  /** collects the battery; on the codegen side, also checks it ran there */
+  private def run(df: DataFrame, codegen: Boolean): Array[Seq[Any]] = {
+    val rows = df.collect()
+    if (codegen) assertWholeStage(df)
+    rows.map(_.toSeq.map {
+      case a: Array[Byte] => a.toSeq
+      case v => v
+    })
+  }
+
+  private def battery(s: SparkSession): DataFrame = {
     import s.implicits._
     val rows = (0L until 64L).map { i =>
       val toks = (0 to (i % 7).toInt).map(j => s"w${(i * 3 + j) % 11}")
@@ -66,28 +116,22 @@ class CodegenAgreementSpec extends AnyFunSuite {
         BpeExpressions.bpe_tokens(col("word"), merges).as("bpe"),
         BpeExpressions.bpe_stats(col("toks"), merges).as("bps"))
       .orderBy("id")
-      .collect()
-      .map(_.toSeq.map {
-        case a: Array[Byte] => a.toSeq
-        case v => v
-      })
   }
 
   test("every custom expression agrees between codegen and interpreted evaluation") {
-    val gen = battery(spark)
-    val interp = spark.newSession()
-    interp.conf.set("spark.sql.codegen.wholeStage", "false")
-    interp.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val gen = run(battery(generated), codegen = true)
+    val interp = interpreted
     // sanity: the child session really is in interpreted mode and the
     // parent session's conf is untouched
     assert(interp.conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN")
     assert(spark.conf.get("spark.sql.codegen.wholeStage", "true") != "false")
+    assert(spark.conf.get("spark.sql.codegen.fallback", "true") != "false")
     // non-vacuity: the child session's physical plans carry no
     // whole-stage span (codegen genuinely off, not silently ignored)
     val probe = interp.range(3).selectExpr("id + 1")
     assert(!probe.queryExecution.executedPlan.toString.contains("WholeStageCodegen"),
       "the interpreted session must not produce WholeStageCodegen spans")
-    val int = battery(interp)
+    val int = run(battery(interp), codegen = false)
     assert(gen.length == int.length && gen.nonEmpty)
     gen.zip(int).zipWithIndex.foreach { case ((g, i2), idx) =>
       assert(g == i2, s"row $idx diverges between codegen and interpreted: $g vs $i2")
@@ -103,7 +147,7 @@ class CodegenAgreementSpec extends AnyFunSuite {
                       cs: Seq[Seq[Double]]) =
     VectorExpressions.nearest_cell(VectorExpressions.vec_cell_dots(emb, cs), norm,
       cs.map(c => math.sqrt(c.map(x => x * x).sum)))
-  private def kernelBattery(s: org.apache.spark.sql.SparkSession, withCells: Seq[Seq[Double]]) = {
+  private def kernelBattery(s: SparkSession, withCells: Seq[Seq[Double]]): DataFrame = {
     import s.implicits._
     val nan = Double.NaN
     val rows = Seq[(Long, String, Seq[Double])](
@@ -137,8 +181,9 @@ class CodegenAgreementSpec extends AnyFunSuite {
         TextKernels.cut_tokens(ws, spans).as("cut"),
         TextKernels.chunk_spans(rx, 4, 1).as("ch"),
         nearest(col("emb"), col("norm"), withCells).as("nc"),
+        TextKernels.window_spans(ws, Nil, 2).as("sp0"),  // an empty frozen set
         TextKernels.merge_spans(mergeInput).as("ms"))
-      .orderBy("id").collect().map(_.toSeq)
+      .orderBy("id")
   }
 
   /** merge_spans input per battery row: an empty array, one span, a
@@ -156,16 +201,9 @@ class CodegenAgreementSpec extends AnyFunSuite {
   private val mergeExpected = Seq(Seq(), Seq((2, 5)), null, Seq((1, 10)), Seq((0, 6)),
     Seq((0, 7), (9, 12)), Seq((0, 7), (9, 12)))
 
-  private def interpreted = {
-    val interp = spark.newSession()
-    interp.conf.set("spark.sql.codegen.wholeStage", "false")
-    interp.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    interp
-  }
-
   test("the text and nearest-cell kernels agree between codegen and interpreted, edge rows included") {
-    val gen = kernelBattery(spark, cells)
-    val int = kernelBattery(interpreted, cells)
+    val gen = run(kernelBattery(generated, cells), codegen = true)
+    val int = run(kernelBattery(interpreted, cells), codegen = false)
     assert(gen.length == 7)
     gen.zip(int).foreach { case (g, i) => assert(g.toString == i.toString, s"$g vs $i") }
     assert(gen.map(_.last match {
@@ -173,6 +211,10 @@ class CodegenAgreementSpec extends AnyFunSuite {
       case ms: scala.collection.Seq[_] =>
         ms.toSeq.map { case r: org.apache.spark.sql.Row => (r.getInt(0), r.getInt(1)) }
     }).toSeq == mergeExpected)
+    assert(gen.forall(r => r(r.length - 2) match {
+      case sp: scala.collection.Seq[_] => sp.isEmpty
+      case _ => false
+    }), "an empty window set marks no span on any row")
   }
 
   test("nearest_cell keeps greatest's order: null lowest, NaN highest, ties to the larger cell") {
@@ -193,15 +235,15 @@ class CodegenAgreementSpec extends AnyFunSuite {
 
   test("nearest_cell: a zero vector or a zero centroid fails under ANSI in both modes, as the division does") {
     import spark.implicits._
-    def run(s: org.apache.spark.sql.SparkSession, emb: Seq[Double], cs: Seq[Seq[Double]]) = {
+    def eval(s: SparkSession, emb: Seq[Double], cs: Seq[Seq[Double]]) = {
       import s.implicits._
       Seq((0L, emb)).toDF("id", "emb").select(nearest(col("emb"),
         sqrt(VectorExpressions.vec_norm_sq(col("emb"))), cs)).collect()
     }
     Seq((Seq(0.0, 0.0, 0.0), cells), (Seq(1.0, 2.0, 3.0), cells :+ Seq(0.0, 0.0, 0.0))).foreach {
       case (emb, cs) =>
-        intercept[Exception](run(spark, emb, cs))
-        intercept[Exception](run(interpreted, emb, cs))
+        intercept[Exception](eval(generated, emb, cs))
+        intercept[Exception](eval(interpreted, emb, cs))
     }
   }
 }

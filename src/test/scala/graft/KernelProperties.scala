@@ -13,9 +13,11 @@ import graft.operators.Dedup
 
 /** Property tests for the pure kernels behind the dedup/sketch family —
   * the arithmetic the cross-engine oracle parity rests on. These run on
-  * the expressions' eval paths directly (no Spark session): the
-  * codegen paths emit the same statements, and the DataFrame-level
-  * specs cover those.
+  * the expressions' eval paths directly (no Spark session): generated
+  * code calls the same kernels, and CodegenAgreementSpec covers the
+  * plumbing around that call. For every kernel whose generated and
+  * interpreted paths share one method, the naive model here is its
+  * independent reference.
   */
 object KernelProperties extends Properties("graft.kernels") {
 
@@ -329,6 +331,17 @@ object KernelProperties extends Properties("graft.kernels") {
       expr.nullSafeEval(longArray(Seq(h))).asInstanceOf[Long] == h
     }
 
+  property("simhash64 equals the naive per-bit majority vote") =
+    Prop.forAll(Gen.listOf(Gen.chooseNum(Long.MinValue, Long.MaxValue))) { hs =>
+      val expr = ArraySimhash(Literal.create(null, ArrayType(LongType)))
+      val got = expr.nullSafeEval(longArray(hs)).asInstanceOf[Long]
+      val want = (0 until 64).foldLeft(0L) { (sig, b) =>
+        val ones = hs.count(h => BigInt(h).testBit(b))
+        if (ones > hs.length - ones) sig | (1L << b) else sig
+      }
+      got == want
+    }
+
   // ---- Misra-Gries: the no-miss guarantee under arbitrary splits
 
   private val streamGen: Gen[List[Long]] = for {
@@ -359,6 +372,24 @@ object KernelProperties extends Properties("graft.kernels") {
 
   private val vecGen: Gen[List[Float]] =
     Gen.listOfN(8, Gen.chooseNum(-4.0f, 4.0f))
+
+  property("vec_dot and vec_norm_sq equal the naive double fold over float and double arrays") =
+    Prop.forAll(Gen.listOf(Gen.chooseNum(-4.0, 4.0)), Gen.listOf(Gen.chooseNum(-4.0, 4.0)),
+        Gen.oneOf(FloatType, DoubleType), Gen.oneOf(FloatType, DoubleType)) { (a, b, ta, tb) =>
+      import graft.functions.VectorExpressions.{ArrayDotProduct, ArrayNormSq}
+      // the values an array of element type t holds, as doubles
+      def vals(xs: List[Double], t: DataType) = if (t == FloatType) xs.map(_.toFloat.toDouble) else xs
+      def arr(xs: List[Double], t: DataType): ArrayData =
+        if (t == FloatType) ArrayData.toArrayData(xs.map(_.toFloat).toArray)
+        else ArrayData.toArrayData(xs.toArray)
+      def typed(t: DataType) = Literal.create(null, ArrayType(t))
+      val dot = ArrayDotProduct(typed(ta), typed(tb))
+        .nullSafeEval(arr(a, ta), arr(b, tb)).asInstanceOf[Double]
+      val nsq = ArrayNormSq(typed(ta)).nullSafeEval(arr(a, ta)).asInstanceOf[Double]
+      // zip stops at the shorter array, as the kernel does
+      dot == vals(a, ta).zip(vals(b, tb)).foldLeft(0.0) { case (s, (x, y)) => s + x * y } &&
+        nsq == vals(a, ta).foldLeft(0.0)((s, x) => s + x * x)
+    }
 
   property("lsh_buckets equals the per-plane sequential-fold sign bits") =
     Prop.forAll(vecGen, Gen.listOfN(3, Gen.listOfN(4, vecGen))) { (v, tables) =>

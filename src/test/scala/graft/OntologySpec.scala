@@ -76,7 +76,7 @@ class OntologySpec extends AnyFunSuite {
   }
 
   test("vec_dot is available via SQL through GraftExtensions-style registration") {
-    graft.functions.VectorExpressions.registerSql(spark)
+    graft.functions.Kernels.registerSql(spark)
     val r = spark.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").collect()
     assert(r.head.getDouble(0) == 11.0)
     val n = spark.sql("SELECT vec_norm_sq(array(3.0d, 4.0d)) AS n").collect()
@@ -89,7 +89,7 @@ class OntologySpec extends AnyFunSuite {
   }
 
   test("log2mb is available via SQL registration") {
-    graft.functions.LogExpressions.registerSql(spark)
+    graft.functions.Kernels.registerSql(spark)
     val r = spark.sql(
       "SELECT log2mb(1L, 1024L) AS a, log2mb(7L, 7L) AS b, log2mb(3L, 7L) AS c")
       .collect().head
@@ -100,7 +100,7 @@ class OntologySpec extends AnyFunSuite {
   }
 
   test("hash-sketch expressions are available via SQL registration") {
-    graft.functions.HashExpressions.registerSql(spark)
+    graft.functions.Kernels.registerSql(spark)
     // simhash of one token hash = that hash's set bits
     val s = spark.sql("SELECT simhash64(array(5L)) AS s").collect()
     assert(s.head.getLong(0) == 5L)
@@ -123,5 +123,43 @@ class OntologySpec extends AnyFunSuite {
     // two hashes collide mod 8 — then the shared bucket stays clamped)
     assert(bc.length == 8 && bc.max == 2L && (bc.sum == 3L || bc.sum == 2L),
       s"clamped counts expected, got $bc")
+  }
+
+  test("GraftExtensions injects every function of the one SQL table, and only those") {
+    // one call per table entry, each evaluated in a session built with
+    // the extension (not through registerSql)
+    val calls = Map(
+      "simhash64" -> "simhash64(array(5L))",
+      "array_freq_stats" -> "array_freq_stats(array(1L, 1L, 2L))",
+      "md5_shingle_hashes" -> "md5_shingle_hashes(array('a', 'b', 'c'), 2)",
+      "affine_minhash" -> "affine_minhash(array(1L, 2L), 4)",
+      "bucket_count_vec" -> "bucket_count_vec(array('x', 'y'), 'ret:', 8, 2)",
+      "cdc_chunks" -> "cdc_chunks(array('a', 'b', 'c'), 2, 4)",
+      "vec_dot" -> "vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))",
+      "vec_norm_sq" -> "vec_norm_sq(array(3.0d, 4.0d))",
+      "lvec_dot" -> "lvec_dot(array(1L, 2L), array(3L, 4L))",
+      "lvec_norm_sq" -> "lvec_norm_sq(array(3L, 4L))",
+      "log2mb" -> "log2mb(1L, 1024L)")
+    val names = graft.functions.Kernels.sqlBuilders.map(_._1)
+    assert(names.distinct.length == names.length && names.toSet == calls.keySet, names)
+    // a new session over the running SparkContext
+    val ext = org.apache.spark.sql.classic.SparkSession.builder()
+      .withExtensions(new GraftExtensions).create()
+    try {
+      // only those: against a plain session over the same context, the
+      // extension adds exactly the table's names
+      def functions(s: org.apache.spark.sql.SparkSession) =
+        s.catalog.listFunctions().collect().map(_.name).toSet
+      assert(functions(ext) -- functions(spark.newSession()) == names.toSet)
+      calls.foreach { case (name, call) =>
+        assert(ext.catalog.functionExists(name), name)
+        assert(ext.sql(s"SELECT $call AS v").collect().head.get(0) != null, call)
+      }
+      assert(ext.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))").head().getDouble(0) == 11.0)
+      assert(ext.sql("SELECT log2mb(1L, 1024L)").head().getLong(0) == 10L * 1024)
+    } finally {
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+    }
   }
 }
