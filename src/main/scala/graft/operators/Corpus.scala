@@ -792,16 +792,7 @@ object Corpus {
       .select(col("doc_id"), col("c.chunk_idx"), col("c.start_tok"),
         col("c.end_tok"), col("c.chunk_hash")))
 
-  /** q102b over a persisted chunk-span frame (the q102 output, or the
-    * [[TextAnalysis.docReport]] frame's exploded chunks view): the
-    * SAME election over already-computed spans — no re-tokenization,
-    * no payload read. Requires doc_id, chunk_idx, start_tok, end_tok,
-    * chunk_hash columns. */
-  def chunkDedupFromSpans(spans: DataFrame): DataFrame =
-    chunkElection(spans.select("doc_id", "chunk_idx", "start_tok",
-      "end_tok", "chunk_hash"))
-
-  /** the shared first-occurrence election tail of q102b. */
+  /** the first-occurrence election tail of q102b. */
   private def chunkElection(ch: DataFrame): DataFrame =
     Scale.keyAggJoin(ch, Seq("chunk_hash"), Seq(
         count(lit(1)).as("n_copies"),

@@ -296,10 +296,10 @@ object EventOps {
   }
 
   /** the q135 edge set as a FROZEN bounded model for the streaming
-    * door ([[graft.streaming.EventStreams.transitionMonitor]]): every
-    * (prev, next) transition observed in the reference window.
-    * Collects — legal under the bounded-model contract: the frame is
-    * types²-sized at any corpus scale. */
+    * door ([[graft.streaming.EventStreams.transitionMonitor]]), the
+    * twin of [[rateBaseline]]: every (prev, next) transition observed
+    * in the reference window. Collects — legal under the bounded-model
+    * contract: the frame is types²-sized at any corpus scale. */
   def transitionBaseline(events: DataFrame): Seq[(String, String)] =
     eventTransitions(events).select("prev_type", "next_type")
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
@@ -503,9 +503,9 @@ object EventOps {
       .orderBy("purchase_id")
   }
 
-  /** q52: the built-in session_window operator (streaming-capable; see
-    * graft.streaming.EventStreams.sessionWindows for the incremental
-    * twin). window.end = last event + gap by definition. */
+  /** q52: the built-in session_window operator (streaming-capable;
+    * graft.streaming.EventStreams.statefulSessionize is the door's
+    * sessionizer). window.end = last event + gap by definition. */
   def sessionWindowAgg(events: DataFrame): DataFrame =
     events
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))

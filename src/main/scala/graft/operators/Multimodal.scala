@@ -362,7 +362,7 @@ object Multimodal {
         sum(col("sum_amp")).as("sum_amp"))
       .orderBy("mime")
 
-  /** q41c: the FRAME-SAMPLE manifest — [[sampleFrames]] as a checked
+  /** q41c: the FRAME-SAMPLE manifest — [[sampleFrameStats]] as a checked
     * inventory entry: one row per sampled frame (every `stride`-th
     * frame of each video payload), carrying the frame's exact pixel
     * sum. The 1→N flatMap shape of a production frame sampler (a real
@@ -399,21 +399,6 @@ object Multimodal {
       .as[MediaRow]
       .mapPartitions(_.map(resizeImage(_, newW, newH)))
       .toDF(), repartition = false)
-  }
-
-  /** resize stage: per-partition map keeping the binary column shape;
-    * images land at exactly (newW, newH), other modalities pass through. */
-  def resizeAll(documents: DataFrame, newW: Int = 8, newH: Int = 6): Dataset[MediaRow] = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    mediaFrame(documents).as[MediaRow].mapPartitions(_.map(resizeImage(_, newW, newH)))
-  }
-
-  /** frame-sample stage: 1→N flatMap per media row (videos only). */
-  def sampleFrames(documents: DataFrame, stride: Int = 2): Dataset[FrameSample] = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    mediaFrame(documents).as[MediaRow].mapPartitions(_.flatMap(sampleFrameStats(_, stride)))
   }
 
   // ------------------------------------- decode-once combined report

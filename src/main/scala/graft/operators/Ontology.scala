@@ -66,12 +66,6 @@ object Ontology {
       e.schema("child").dataType, e.schema("parent").dataType)
   }
 
-  /** descendants of a root (the reference's actual query direction). */
-  def descendantsOf(edges: DataFrame, root: String): DataFrame =
-    transitiveClosure(edges)
-      .filter(col("ancestor") === root)
-      .select(col("node"), col("depth"))
-
   /** the geography dimensions, collected once per call (25 + 5 rows at
     * every scale): the one read behind both the q29 edge rule and the
     * atlas volume ([[Atlas.voxelGrid]]). `nations` holds (nationkey,

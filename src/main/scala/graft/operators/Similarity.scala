@@ -42,21 +42,6 @@ object Similarity {
     embeddings.withColumn("norm",
       sqrt(graft.functions.VectorExpressions.vec_norm_sq(col("embedding"))))
 
-  /** ALL-PAIRS near-dup baseline — test-only recall oracle for the
-    * banded variant below. A cartesian product: never ship this shape
-    * in the inventory; at 100 TB it is the canonical scale-killer. */
-  def nearDupPairsAllPairs(embeddings: DataFrame, topN: Int = 100): DataFrame = {
-    val e = withNorm(embeddings).select(col("vec_id"), col("embedding"), col("norm"))
-    val a = e.select(col("vec_id").as("id_a"), col("embedding").as("e_a"), col("norm").as("n_a"))
-    val b = e.select(col("vec_id").as("id_b"), col("embedding").as("e_b"), col("norm").as("n_b"))
-    a.crossJoin(b)
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (dot(col("e_a"), col("e_b")) / (col("n_a") * col("n_b"))).as("cosine"))
-      .orderBy(col("cosine").desc, col("id_a"), col("id_b"))
-      .limit(topN)
-  }
-
   /** seeded hyperplanes for the banded (multi-table) LSH screen, values
     * rounded to 6 decimals: the SAME decimal literals are inlined into
     * the DuckDB oracle SQL (SparkEntry), and both engines parse a 6-dp
@@ -927,19 +912,6 @@ object Similarity {
         StructField("cos_bp", LongType), StructField("rank", LongType))))
   }
 
-  /** IVF coarse quantizer: cell assignment by nearest centroid.
-    * Centroids are driver-side by design: C×dim doubles is a
-    * legitimate broadcast-sized model, the standard IVF shape. */
-  def ivfAssign(embeddings: DataFrame, nCells: Int): DataFrame = {
-    val cents = ivfCentroids(embeddings, nCells)
-    if (cents.isEmpty) // empty corpus: keep the schema, zero rows
-      return withNorm(embeddings).withColumn("cell", lit(0))
-    val (withDots, _, best) = withCellScores(withNorm(embeddings), cents)
-    withDots
-      .withColumn("cell", best.getField("cell"))
-      .drop("__dots")
-  }
-
   /** q36b: ANN via IVF. Corpus vectors live in their nearest cell;
     * each query probes its `nProbe` nearest cells (sorted centroid
     * scores, query-side-only fan-out), so recall degrades gracefully
@@ -1473,10 +1445,6 @@ object Similarity {
 
   // Views over the (persisted) vecReport frame — each must reproduce
   // its standalone operator exactly (spec-proven).
-
-  /** the q104 assignment over the frame. */
-  def reportClusterAssign(report: DataFrame): DataFrame =
-    report.select("vec_id", "cell", "cos_bp")
 
   /** q104b over the frame. */
   def reportClusterSample(report: DataFrame, perCell: Int = 20): DataFrame =

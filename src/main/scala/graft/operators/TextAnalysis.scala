@@ -202,10 +202,6 @@ object TextAnalysis {
     col("alpha_words_ok"), col("punct_ratio_ok"), col("distinct_ratio_ok"),
     col("gopher_n_failed").as("n_failed"), col("gopher_keep").as("keep"))
 
-  /** q116 over the frame. */
-  def reportGopherRules(report: DataFrame): DataFrame =
-    report.select(gopherOutCols: _*).orderBy("doc_id")
-
   /** q38: quality scoring — length, alpha/punct ratios in integer basis
     * points, stopword presence, boolean keep-flag. */
   def qualityScore(documents: DataFrame): DataFrame =
@@ -595,10 +591,6 @@ object TextAnalysis {
     report.select("doc_id", "top_token_bp", "top_2gram_bp", "dup_3gram_bp",
         "is_repetitive")
       .orderBy("doc_id")
-
-  /** q137 over the frame. */
-  def reportTokenEntropy(report: DataFrame): DataFrame =
-    entropyView(report)
 
   /** q40 over the frame — the class-size election re-runs on the
     * PERSISTED fingerprint (same keyAggJoin shape, no text). */

@@ -49,18 +49,9 @@ object TopKInstaller {
     * idempotent. `TopKPerKey.apply` calls it, so an explicit top-k
     * plans on any session. The rewrite rule is left alone here: it
     * re-plans every `row_number` window filter, which a session opts
-    * into through [[install]] or GraftExtensions. */
+    * into through GraftExtensions. */
   def installStrategy(spark: SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(TopKPerKey.Strategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ TopKPerKey.Strategy
-
-  /** make both the rewrite rule and the planner strategy active on an
-    * existing session (GraftExtensions does the same at build time). */
-  def install(spark: SparkSession): Unit = {
-    installStrategy(spark)
-    if (!spark.experimental.extraOptimizations.contains(RewriteWindowTopK))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteWindowTopK
-  }
 }

@@ -158,15 +158,4 @@ object IndexCatalog {
       .bucketBy(buckets, "doc_id").sortBy("doc_id")
       .saveAsTable(s"${table}_docs")
   }
-
-  /** The per-batch door probe against the REGISTERED stores — what a
-    * deployment actually runs per ingest batch: two linear LEFT
-    * equi-joins against the named collapsed tables; the corpus is
-    * never re-read and the stores are never re-collapsed. Verdicts
-    * are bit-identical to the self-contained
-    * [[graft.operators.Dedup.releaseDedup]] (spec-proven). */
-  def releaseDedupFromCatalog(spark: SparkSession, table: String,
-                              incoming: DataFrame): DataFrame =
-    graft.operators.Dedup.releaseDedupWithStores(
-      spark.table(s"${table}_fp"), spark.table(s"${table}_bands"), incoming)
 }

@@ -118,6 +118,10 @@ object DocStreams {
   val docsWithTsSchema: StructType = StructType(
     docsSchema.fields :+ StructField("ingest_ts", TimestampType))
 
+  /** File-source stream over documents parquet that carries its own
+    * `ingest_ts`: the reader of the event-time doors
+    * ([[corpusScreenEventTime]], [[hourlyLangCounts]],
+    * [[sourceComposition]]), as [[readDocStream]] is for the rest. */
   def readDocStreamWithTs(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(docsWithTsSchema).parquet(dir)
 
@@ -227,14 +231,6 @@ object DocStreams {
                       benchWindowHashes: Seq[Long] = Nil): DataFrame =
     graft.operators.TextAnalysis.docReport(docs, rarityModel, lmModel, dsirModel,
       benchWindowHashes)
-
-  /** Ingest-time media report ([[graft.operators.Multimodal.mediaReport]]'s
-    * stream twin): each arriving payload is decoded once and lands as
-    * the narrow nested record (features + frame samples, no content
-    * bytes) — stateless per-partition map, same kernels as batch.
-    * Spec-equal to the batch frame through a real file source. */
-  def mediaReportStream(docs: DataFrame, stride: Int = 2): DataFrame =
-    graft.operators.Multimodal.mediaReport(docs, stride = stride).toDF()
 
   /** Ingest-time morphology validation (q79's stream twin): the same
     * SWC parser and tree walk, stateless and row-local — every arriving

@@ -4,13 +4,11 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.operators.Decimals._
-
 /** Structured Streaming twins of the batch event operators: the same
-  * logical plans run incrementally — windowed aggregation under a
-  * watermark, built-in session windows, and a custom stateful
-  * sessionizer on `flatMapGroupsWithState` for semantics the built-ins
-  * can't express.
+  * logical plans run incrementally — monitors over watermarked
+  * windows, per-user state machines on `flatMapGroupsWithState`
+  * (transitions, funnels, retention and a stateful sessionizer), and
+  * foreachBatch MERGE sinks.
   *
   * The reference's trace pipelines recompute summaries batch-per-bucket
   * (reference src/trace/...); on a live 100 TB event firehose these
@@ -46,16 +44,6 @@ object EventStreams {
       maxFilesPerTrigger.fold(rs)(n => rs.option("maxFilesPerTrigger", n))
         .parquet(dir))
   }
-
-  /** Tumbling 1-hour windows with a 2-hour watermark — the streaming
-    * form of EventOps.hourlyWindowAgg. */
-  def hourlyCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum6(col("value")).as("sum_value"))
-      .select(unix_micros(col("window.start")).as("hour_us"),
-        col("event_type"), col("n"), col("sum_value"))
 
   /** q132 at the door: the rate-burst monitor over a FROZEN per-type
     * baseline ([[graft.operators.EventOps.rateBaseline]], frozen from
@@ -133,13 +121,13 @@ object EventStreams {
     * ANY type produced no window (no data, no trigger), so TOTAL
     * collector silence — the exact incident a gap monitor exists to
     * catch — never shipped. A ticker stream (any streaming frame with
-    * a wall-clock `ts` column; [[wallClockTicks]] is the rate-source
-    * default) unions into the hour aggregate under a reserved type
-    * that is never expected: every wall-clock hour now HAS a window
-    * and advances the watermark, so a fully-silent hour ships ALL its
-    * expected types as outage rows once the watermark passes it —
-    * retroactively and unconditionally. Tick rows add one constant
-    * row per trigger to the aggregate state; output stays
+    * a wall-clock `ts` column, for example the built-in rate source's
+    * `timestamp` renamed to `ts`) unions into the hour aggregate under
+    * a reserved type that is never expected: every wall-clock hour now
+    * HAS a window and advances the watermark, so a fully-silent hour
+    * ships ALL its expected types as outage rows once the watermark
+    * passes it — retroactively and unconditionally. Tick rows add one
+    * constant row per trigger to the aggregate state; output stays
     * incident-sized.
     *
     * TIGHTENED DELIVERY CONTRACT the ticker buys its liveness with
@@ -184,14 +172,6 @@ object EventStreams {
     try Some(state.getCurrentWatermarkMs()) catch {
       case _: UnsupportedOperationException => None
     }
-
-  /** the default wall-clock ticker for [[gapMonitorTicked]]: one row
-    * per second of PROCESSING time from the built-in rate source —
-    * its `timestamp` IS wall-clock, so event time advances with the
-    * clock even when every collector is silent. */
-  def wallClockTicks(spark: SparkSession): DataFrame =
-    spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-      .select(col("timestamp").as("ts"))
 
   final case class TransSt(lastType: String, lastUs: Long)
   final case class TransOut(user_id: Long, prev_type: String,
@@ -287,44 +267,6 @@ object EventStreams {
     * of event time. */
   val TransitionIdleTimeoutMs: Long = 30L * 24 * 3600 * 1000
 
-  /** Built-in gap-based session windows (30 min), streaming-capable. */
-  def sessionWindows(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        unix_micros(col("session_window.start")).as("session_start_us"),
-        unix_micros(col("session_window.end")).as("session_end_us"),
-        col("n_events"))
-
-  /** Stream-static enrichment: the live event stream joined to a
-    * broadcastable static dimension (the reference's per-resource
-    * cross-bucket lookups, incremental form). Static side re-reads per
-    * micro-batch, so dimension updates are picked up. */
-  def enrichWithUsers(events: DataFrame, customers: DataFrame): DataFrame =
-    events.join(
-      broadcast(customers.select(col("c_custkey"), col("c_mktsegment"))),
-      events("user_id") === col("c_custkey"), "left")
-      .select(col("event_id"), col("ts"), col("event_type"),
-        col("c_mktsegment").as("segment"), col("value"))
-
-  /** Stream-stream interval join: purchases matched to the clicks that
-    * preceded them within `gapSeconds`, both sides watermarked so the
-    * join state is bounded (the streaming twin of EventOps.intervalJoin).
-    */
-  def clickToPurchaseJoin(events: DataFrame, gapSeconds: Long = 1800): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "2 hours")
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "2 hours")
-    purchases.join(clicks,
-      expr(s"c_user = p_user AND c_ts >= p_ts - INTERVAL $gapSeconds SECONDS AND c_ts <= p_ts"))
-  }
-
   /** LATE-DATA WITNESS (r13 verdict item 7): rows dropped by a door's
     * watermark are invisible in its output — the tightened delivery
     * contracts (transition/funnel/gap doors) say late rows are
@@ -344,14 +286,6 @@ object EventStreams {
     q.recentProgress.iterator
       .map(_.stateOperators.map(_.numRowsDroppedByWatermark).sum).sum
 
-  /** Streaming dedup: drop events re-sent with the same event_id while
-    * the watermark allows late arrivals (exactly the ingestion-dedup a
-    * firehose needs — state for one watermark's worth of ids). */
-  def dedupStream(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .dropDuplicatesWithinWatermark("event_id")
-
   /** Streaming upsert sink: every micro-batch is MERGEd into the
     * parquet table at `path` by key (insert-or-update, optional delete
     * flag) via [[graft.operators.MergeWriter]] — the streaming form of
@@ -359,7 +293,11 @@ object EventStreams {
     * continuously-updated serving table from a changelog stream
     * (foreachBatch + keyed merge is what a Delta streaming MERGE
     * lowers to). The checkpoint makes delivery effectively-once per
-    * batch; the merge itself is idempotent under batch replay. */
+    * batch; the merge itself is idempotent under batch replay. This
+    * is the generic keyed door: the push doors ([[annotationPushSink]],
+    * [[tracePushSink]]) put their own diff in front of the same
+    * `MergeWriter.applyTo`, and it is the first door to move when the
+    * door stores adopt the partition-scoped writer. */
   def upsertSink(updates: DataFrame, path: String, checkpoint: String,
                  key: String, deleteFlag: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =

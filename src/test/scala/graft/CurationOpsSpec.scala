@@ -578,7 +578,7 @@ class CurationOpsSpec extends AnyFunSuite {
     // q104 assignment: same (vec_id, cell, cos_bp) triples
     val wantAssign = Similarity.clusterAssign(emb).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val gotAssign = Similarity.reportClusterAssign(frame).collect()
+    val gotAssign = frame.select("vec_id", "cell", "cos_bp").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(gotAssign == wantAssign, "frame assignment must equal the standalone q104 assignment")
     // q104b sample: identical ordered rows

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{CurationPipeline, Morphology, NeuriteAtlas, Validation}
-import graft.plans.PlanWalk
 
 /** q141: the composed curation pipeline must (a) reuse the standalone
   * operators' verdicts and bodies bit-for-bit (shared-definition
@@ -80,7 +79,7 @@ class CurationPipelineSpec extends AnyFunSuite {
     // the report build: exactly one BinaryType-carrying exchange (the
     // skew-evening repartition before the single decode)
     val build = NeuriteAtlas.morphReport(docs).toDF()
-    val nBlob = PlanWalk.blobExchanges(build)
+    val nBlob = PlanFences.blobExchanges(build)
     assert(nBlob == 1,
       s"report build must have exactly ONE blob exchange, got $nBlob")
 
@@ -91,7 +90,7 @@ class CurationPipelineSpec extends AnyFunSuite {
     val actions = CurationPipeline.annotationActions(
       CurationPipeline.computedAnnotations(spark.read.parquet(dir)),
       CurationPipeline.existingStore(docs))
-    val binaryNodes = PlanWalk.binaryCarryingNodes(actions)
+    val binaryNodes = PlanFences.binaryCarryingNodes(actions)
     assert(binaryNodes.isEmpty,
       s"the post-persist pipeline must never carry payload bytes, got ${binaryNodes.length} nodes")
   }

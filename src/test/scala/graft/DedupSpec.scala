@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -294,6 +295,21 @@ class DedupSpec extends AnyFunSuite {
     assert(dupGroup.head.getAs[Long]("canonical_id") == 1L)
   }
 
+  /** ALL-PAIRS cosine near-dup reference — the exact recall oracle for
+    * the banded q34. A cartesian product: a reference for small
+    * fixtures, never an inventory shape. */
+  private def nearDupPairsAllPairs(embeddings: DataFrame, topN: Int): DataFrame = {
+    val e = Similarity.withNorm(embeddings).select(col("vec_id"), col("embedding"), col("norm"))
+    val a = e.select(col("vec_id").as("id_a"), col("embedding").as("e_a"), col("norm").as("n_a"))
+    val b = e.select(col("vec_id").as("id_b"), col("embedding").as("e_b"), col("norm").as("n_b"))
+    a.crossJoin(b)
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"),
+        (Similarity.dot(col("e_a"), col("e_b")) / (col("n_a") * col("n_b"))).as("cosine"))
+      .orderBy(col("cosine").desc, col("id_a"), col("id_b"))
+      .limit(topN)
+  }
+
   test("embedding near-dup ranks identical vectors first") {
     val vecs = Seq(
       (1L, Array(1.0f, 0.0f, 0.0f)),
@@ -301,7 +317,7 @@ class DedupSpec extends AnyFunSuite {
       (3L, Array(0.9f, 0.1f, 0.0f)),
       (4L, Array(0.0f, 0.0f, 1.0f))
     ).toDF("vec_id", "embedding")
-    val top = Similarity.nearDupPairsAllPairs(vecs, topN = 2).collect()
+    val top = nearDupPairsAllPairs(vecs, topN = 2).collect()
     assert((top.head.getLong(0), top.head.getLong(1)) == ((1L, 2L)))
     assert(math.abs(top.head.getAs[Double]("cosine") - 1.0) < 1e-9)
   }
@@ -318,7 +334,7 @@ class DedupSpec extends AnyFunSuite {
     val banded = Similarity.nearDupPairsBanded(vecs, nTables = 6, nPlanes = 4,
       dim = 16, minCosine = 0.95).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = Similarity.nearDupPairsAllPairs(vecs, topN = 10000)
+    val exact = nearDupPairsAllPairs(vecs, topN = 10000)
       .filter($"cosine" >= 0.95).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty)
@@ -558,7 +574,7 @@ class DedupSpec extends AnyFunSuite {
       "the benchmark set is probed in the kernel, never joined")
     assert(!ns.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeLike]))
     assert(!ns.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]))
-    val shuffles = graft.plans.PlanWalk.shuffleExchanges(df).map(_.outputPartitioning)
+    val shuffles = PlanFences.shuffleExchanges(df).map(_.outputPartitioning)
     assert(shuffles.length <= 1 && shuffles.forall(
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RangePartitioning]),
       s"the corpus never exchanges on the window key: $shuffles")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dsir, Frequency, LmScreen, TextAnalysis}
@@ -69,7 +70,9 @@ class DocReportSpec extends AnyFunSuite {
   }
 
   test("q137 token entropy derives exactly from the frame's entropy columns") {
-    same(TextAnalysis.reportTokenEntropy(report),
+    same(report.select(col("doc_id"), col("entropy_n_tokens").as("n_tokens"),
+        col("entropy_distinct").as("distinct_tokens"), col("entropy_mb"),
+        (col("entropy_mb") < TextAnalysis.LowEntropyMb).as("is_low_entropy")),
       TextAnalysis.tokenEntropy(docs), "q137")
   }
 
@@ -113,8 +116,18 @@ class DocReportSpec extends AnyFunSuite {
   }
 
   test("q102b chunk dedup derives exactly from the frame's spans") {
-    same(graft.operators.Corpus.chunkDedupFromSpans(
-        TextAnalysis.reportChunkSpans(report)),
+    // the first-occurrence election written out over the frame's
+    // spans: per chunk hash its copy count and the smallest
+    // (doc_id, chunk_idx) holder, which keeps
+    val spans = TextAnalysis.reportChunkSpans(report)
+      .select("doc_id", "chunk_idx", "start_tok", "end_tok", "chunk_hash")
+    val elected = spans.groupBy("chunk_hash").agg(count(lit(1)).as("n_copies"),
+      min(struct(col("doc_id"), col("chunk_idx"))).as("w"))
+    same(spans.join(elected, "chunk_hash")
+        .select(col("doc_id"), col("chunk_idx"), col("start_tok"), col("end_tok"),
+          col("chunk_hash"), col("n_copies"),
+          (col("doc_id") === col("w.doc_id") && col("chunk_idx") === col("w.chunk_idx"))
+            .as("keep")),
       graft.operators.Corpus.chunkDedup(docs), "q102b")
   }
 
@@ -136,7 +149,10 @@ class DocReportSpec extends AnyFunSuite {
   }
 
   test("q116 gopher rule matrix derives exactly from the frame") {
-    same(TextAnalysis.reportGopherRules(report),
+    same(report.select(col("doc_id"), col("n_words"), col("word_count_ok"),
+        col("mean_word_len_ok"), col("stopword_ok"), col("alpha_words_ok"),
+        col("punct_ratio_ok"), col("distinct_ratio_ok"),
+        col("gopher_n_failed").as("n_failed"), col("gopher_keep").as("keep")),
       TextAnalysis.gopherRules(docs), "q116")
   }
 

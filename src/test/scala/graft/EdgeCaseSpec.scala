@@ -36,7 +36,6 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(Similarity.knnLsh(noVecs).isEmpty)
     assert(Similarity.knnIvf(noVecs).isEmpty, "IVF must not throw with zero centroids")
     assert(Similarity.nearDupPairsBanded(noVecs).isEmpty)
-    assert(Similarity.ivfAssign(noVecs, nCells = 4).isEmpty)
     assert(Similarity.pqEncode(noVecs).isEmpty, "PQ must not throw with an empty codebook")
     assert(Similarity.pqAdcSearch(noVecs).isEmpty)
     assert(Similarity.pqSearchReranked(noVecs).isEmpty)

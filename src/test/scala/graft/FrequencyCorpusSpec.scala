@@ -578,12 +578,13 @@ class FrequencyCorpusSpec extends AnyFunSuite {
     assert(cdcTail > 0 && fixTot > 0)
     assert(fixKept.toDouble / fixTot < 0.5,
       s"fixed windows shift everywhere after a prefix edit: $fixKept/$fixTot survived")
-    // the q102b election runs unchanged over CDC spans (same columns):
-    // exactly one kept row per distinct hash
-    val dd = Corpus.chunkDedupFromSpans(Corpus.cdcChunkSpans(docs)).collect()
-    val kept = dd.filter(_.getAs[Boolean]("keep")).map(_.getAs[Long]("chunk_hash"))
-    assert(kept.length == kept.distinct.length
-      && kept.toSet == dd.map(_.getAs[Long]("chunk_hash")).toSet)
+    // CDC spans carry the q102 span columns and types, so every span
+    // consumer reads either geometry, and (doc_id, chunk_idx) is a key,
+    // so the q102b first-occurrence election keeps one row per hash
+    def cols(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    val cdc = Corpus.cdcChunkSpans(docs)
+    assert(cols(cdc) == cols(Corpus.chunkSpans(docs)))
+    assert(cdc.select("doc_id", "chunk_idx").distinct().count() == cdc.count())
   }
 
   test("chunk diff localizes edits: a suffix edit costs one chunk, not the doc") {

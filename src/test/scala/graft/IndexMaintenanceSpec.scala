@@ -123,8 +123,11 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     IndexCatalog.registerReleaseStores(docs, "rel_store")
     val inc = graft.operators.Dedup.ingestView(docs)
     // catalog-probe verdicts are bit-identical to the self-contained op
-    val viaCatalog = IndexCatalog.releaseDedupFromCatalog(spark, "rel_store", inc)
-      .collect().toSeq
+    // the per-batch probe: two LEFT equi-joins against the named stores
+    def probe(batch: org.apache.spark.sql.DataFrame) =
+      graft.operators.Dedup.releaseDedupWithStores(
+        spark.table("rel_store_fp"), spark.table("rel_store_bands"), batch)
+    val viaCatalog = probe(inc).collect().toSeq
     val direct = graft.operators.Dedup.releaseDedup(docs, inc).collect().toSeq
     assert(viaCatalog == direct,
       "the registered-store probe must equal the rebuild path verdict-for-verdict")
@@ -145,7 +148,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     }
     val before = Seq("rel_store_fp", "rel_store_bands", "rel_store_docs").map(files)
     val inc2 = inc.withColumn("doc_id", col("doc_id") + 7000000000000L)
-    val n2 = IndexCatalog.releaseDedupFromCatalog(spark, "rel_store", inc2).count()
+    val n2 = probe(inc2).count()
     assert(n2 == inc.count(), "the second batch gets one verdict per doc")
     val after = Seq("rel_store_fp", "rel_store_bands", "rel_store_docs").map(files)
     assert(before == after,

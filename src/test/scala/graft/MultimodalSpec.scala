@@ -1,10 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Multimodal
-import graft.operators.Multimodal.{MediaRow, decodeMedia, encodeAudio, encodeImage, encodeVideo}
-import graft.plans.PlanWalk
+import graft.operators.Multimodal.{FrameSample, MediaRow, decodeMedia, encodeAudio, encodeImage, encodeVideo}
 
 /** Unit specs for the REAL media codecs (q41): header parse, payload
   * validation, content-based dispatch, nearest-neighbour resize and
@@ -15,6 +15,15 @@ class MultimodalSpec extends AnyFunSuite {
   private def img(w: Int, h: Int, px: Int => Int): MediaRow =
     MediaRow(1L, Multimodal.ImageMime,
       encodeImage(w, h, Array.tabulate(w * h * 3)(i => px(i).toByte)))
+
+  /** the frame-sample stage with no decode spread and no sort: the
+    * reference q41c's manifest and the media report's frame samples
+    * must each reproduce. */
+  private def sampleFrames(docs: DataFrame): Dataset[FrameSample] = {
+    import docs.sparkSession.implicits._
+    Multimodal.mediaFrame(docs).as[MediaRow]
+      .mapPartitions(_.flatMap(Multimodal.sampleFrameStats(_)))
+  }
 
   test("image decode recovers header geometry and exact pixel sums") {
     val f = decodeMedia(img(3, 2, i => i)) // bytes 0..17
@@ -198,7 +207,7 @@ class MultimodalSpec extends AnyFunSuite {
     val wantF = Multimodal.extractFeatures(docs).collect().map(_.toSeq).toSet
     val gotF = Multimodal.reportFeatures(frame).collect().map(_.toSeq).toSet
     assert(gotF == wantF, "q41 features must derive from the frame")
-    val wantS = Multimodal.sampleFrames(docs).collect()
+    val wantS = sampleFrames(docs).collect()
       .map(s => (s.doc_id, s.frame_idx, s.frame_sum)).toSet
     val gotS = Multimodal.reportFrameSamples(frame).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -211,7 +220,7 @@ class MultimodalSpec extends AnyFunSuite {
     // q41c is exactly the frame-sample stage, total-ordered
     val frames = Multimodal.frameSampleManifest(docs).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    val want = Multimodal.sampleFrames(docs).collect()
+    val want = sampleFrames(docs).collect()
       .sortBy(f => (f.doc_id, f.frame_idx))
       .map(f => (f.doc_id, f.frame_idx, f.frame_sum)).toSeq
     assert(frames == want && frames.nonEmpty)
@@ -250,7 +259,7 @@ class MultimodalSpec extends AnyFunSuite {
     // pin exists to catch (payload bytes dominate I/O there).
     val spark = TestSpark.spark
     val docs = Tables.documents(spark, TestSpark.sf)
-    // the SHARED fence predicate (PlanWalk) — MutationPinSpec
+    // the SHARED fence predicate (PlanFences) — MutationPinSpec
     // mutation-tests exactly this definition, so a walker blind spot
     // cannot rot here unnoticed
     Seq(
@@ -258,7 +267,7 @@ class MultimodalSpec extends AnyFunSuite {
       "q41c" -> Multimodal.frameSampleManifest(docs),
       "q41d" -> Multimodal.resizedFeatures(docs)
     ).foreach { case (name, df) =>
-      val nBlob = PlanWalk.blobExchanges(df)
+      val nBlob = PlanFences.blobExchanges(df)
       assert(nBlob == 1,
         s"$name must have exactly ONE blob-carrying exchange (the skew-evening " +
           s"repartition), got $nBlob")

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Curation, Multimodal, Scale}
-import graft.plans.PlanWalk
 
 /** PERMANENT MUTATION TESTS (r15 verdict item 5): the repo's plan
   * fences were mutation-tested by hand in r15 (inject the regression,
@@ -19,11 +18,11 @@ class MutationPinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val docs = Tables.documents(spark, TestSpark.sf)
 
-  // the SHARED fence predicate the real pins run ([[graft.plans.PlanWalk]]) — not
+  // the SHARED fence predicate the real pins run ([[PlanFences]]) — not
   // a local copy, so this spec mutation-tests the predicate the other
   // specs actually enforce
   private def blobExchanges(df: org.apache.spark.sql.DataFrame): Int =
-    PlanWalk.blobExchanges(df)
+    PlanFences.blobExchanges(df)
 
   test("blob-exchange pin bites: a second payload exchange reads 2, clean reads 1") {
     assert(!Multimodal.mutantExtraBlobExchange)

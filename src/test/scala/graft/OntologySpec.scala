@@ -22,15 +22,6 @@ class OntologySpec extends AnyFunSuite {
       ("leaf1", "root", 2), ("leaf2", "root", 2)))
   }
 
-  test("descendantsOf returns the subclass tree of a root") {
-    val edges = Seq(
-      ("a", "stim"), ("b", "stim"), ("c", "a"), ("x", "other")
-    ).toDF("child", "parent")
-    val out = Ontology.descendantsOf(edges, "stim").collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSet
-    assert(out == Set(("a", 1), ("b", 1), ("c", 2)))
-  }
-
   private def paths(df: DataFrame): Seq[(String, String, Int)] =
     df.select("node", "ancestor", "depth").collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq.sorted

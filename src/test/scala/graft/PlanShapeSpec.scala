@@ -44,7 +44,6 @@ class PlanShapeSpec extends AnyFunSuite {
     val stimulus = graft.operators.Traces.StimulusEdges.toDF("child", "parent")
     Seq(
       "transitiveClosure" -> Ontology.transitiveClosure(stimulus),
-      "descendantsOf" -> Ontology.descendantsOf(stimulus, graft.operators.Traces.SingleCellRoot),
       "geoAncestors" -> graft.operators.Atlas.geoAncestors(r, n),
       "geoClosure" -> Ontology.geoClosure(r, n)
     ).foreach { case (name, df) =>
@@ -508,7 +507,7 @@ class PlanShapeSpec extends AnyFunSuite {
         val ns = PlanWalk.nodes(dimDf.queryExecution.executedPlan)
         assert(!ns.exists(_.isInstanceOf[FileSourceScanExec]),
           s"$name must be a local relation, not a parquet-derived plan")
-        assert(PlanWalk.shuffleExchanges(dimDf).isEmpty,
+        assert(PlanFences.shuffleExchanges(dimDf).isEmpty,
           s"$name must carry no exchange")
     }
   }
@@ -558,7 +557,6 @@ class PlanShapeSpec extends AnyFunSuite {
     val books = Similarity.pqCodebooks(emb)
     val callers: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "annRecallSweep" -> (() => Similarity.annRecallSweep(emb)),
-      "ivfAssign" -> (() => Similarity.ivfAssign(emb, 16)),
       "knnIvf" -> (() => Similarity.knnIvf(emb)),
       "knnIvfFiltered" -> (() => Similarity.knnIvfFiltered(emb, Tables.documents(spark, dir))),
       "knnIvfPq" -> (() => Similarity.knnIvfPq(emb)),

@@ -26,25 +26,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.getMessage.contains("must be seeded"), e.getMessage)
   }
 
-  test("streaming hourly windows equal the batch aggregation") {
-    val stream = EventStreams.readEventStream(spark, eventsDir)
-    val q = EventStreams.hourlyCounts(stream)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("hourly_out")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("hourly_out")
-      .orderBy("hour_us", "event_type").collect()
-    val batch = EventOps.hourlyWindowAgg(Tables.events(spark, sf)).collect()
-    assert(streamed.length == batch.length)
-    streamed.zip(batch).foreach { case (s, b) =>
-      assert(s.getAs[Long]("hour_us") == b.getAs[Long]("hour_us"))
-      assert(s.getAs[Long]("n") == b.getAs[Long]("n"))
-    }
-  }
-
   test("streaming rate-burst monitor equals the batch report under the frozen baseline") {
     val batchEvents = Tables.events(spark, sf)
     val baseline = EventOps.rateBaseline(batchEvents)
@@ -171,8 +152,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(after.contains(90002L), "novel quality doc must be emitted on resume")
   }
 
-  test("event-time hourly language counts equal the batch aggregation") {
-    import spark.implicits._
+  /** streams the documents, stamped with an `ingest_ts` spread over
+    * seven hours, through `hourlyLangCounts`; returns the streamed and
+    * the batch (hour, lang) -> n maps. */
+  private def hourlyLangCountsVsBatch(queryName: String)
+      : (Map[(Long, String), Long], Map[(Long, String), Long]) = {
     val dir = java.nio.file.Files.createTempDirectory("graft_evt_counts").toString
     val docs = Tables.documents(spark, sf)
       .withColumn("ingest_ts",
@@ -181,17 +165,22 @@ class StreamingSpec extends AnyFunSuite {
     val stream = graft.streaming.DocStreams.readDocStreamWithTs(spark, dir)
     val q = graft.streaming.DocStreams.hourlyLangCounts(stream)
       .writeStream.outputMode("complete")
-      .format("memory").queryName("evt_counts_out")
+      .format("memory").queryName(queryName)
       .trigger(Trigger.AvailableNow())
       .start()
     q.processAllAvailable(); q.stop()
-    val streamed = spark.table("evt_counts_out")
+    val streamed = spark.table(queryName)
       .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
     val batch = docs
       .groupBy(window(col("ingest_ts"), "1 hour"), col("lang"))
       .agg(count(lit(1)).as("n"))
       .select(unix_micros(col("window.start")).as("h"), col("lang"), col("n"))
       .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+    (streamed, batch)
+  }
+
+  test("event-time hourly language counts equal the batch aggregation") {
+    val (streamed, batch) = hourlyLangCountsVsBatch("evt_counts_out")
     assert(streamed == batch)
     assert(streamed.nonEmpty)
   }
@@ -416,7 +405,7 @@ class StreamingSpec extends AnyFunSuite {
     val want = graft.operators.Multimodal.mediaReport(docs)
       .toDF().collect().map(r => r.getAs[org.apache.spark.sql.Row]("features")
         .getAs[Long]("doc_id") -> r.toSeq.mkString("|")).toMap
-    val q = graft.streaming.DocStreams.mediaReportStream(
+    val q = graft.operators.Multimodal.mediaReport(
         graft.streaming.DocStreams.readDocStream(spark, dir))
       .writeStream.outputMode("append")
       .format("memory").queryName("media_report_out")
@@ -705,64 +694,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(hits.count(_ == (9L, 1L)) == 8 && hits.count(_ == (9L, 2L)) == 8,
       s"probe must collide with both indexed copies in all bands: $hits")
     assert(!hits.exists(_._2 == 3L), "no collision with the unrelated doc")
-  }
-
-  test("streaming session windows match the batch session_window operator") {
-    val stream = EventStreams.readEventStream(spark, eventsDir)
-    val q = EventStreams.sessionWindows(stream)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("sessions_out")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("sessions_out").count()
-    val batch = EventOps.sessionWindowAgg(Tables.events(spark, sf)).count()
-    assert(streamed == batch)
-  }
-
-  test("streaming dedup-within-watermark drops re-sent event ids") {
-    val stream = EventStreams.readEventStream(spark, eventsDir)
-    val q = EventStreams.dedupStream(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("dedup_out")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val n = spark.table("dedup_out").count()
-    val distinctIds = Tables.events(spark, sf).select("event_id").distinct().count()
-    assert(n == distinctIds)
-  }
-
-  test("stream-static enrichment resolves segments like the batch join") {
-    val stream = EventStreams.readEventStream(spark, eventsDir)
-    val q = EventStreams.enrichWithUsers(stream, Tables.customer(spark, sf))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("enrich_out")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("enrich_out")
-    assert(streamed.count() == Tables.events(spark, sf).count())
-    assert(streamed.filter(col("segment").isNotNull).count() > 0)
-  }
-
-  test("stream-stream interval join matches the batch interval join pair count") {
-    val stream = EventStreams.readEventStream(spark, eventsDir)
-    val q = EventStreams.clickToPurchaseJoin(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ssjoin_out")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val streamedPairs = spark.table("ssjoin_out").count()
-    val batchPairs = graft.operators.EventOps.intervalJoin(Tables.events(spark, sf))
-      .agg(sum(col("n_clicks_before"))).collect().head.getLong(0)
-    assert(streamedPairs == batchPairs,
-      s"streamed $streamedPairs vs batch $batchPairs")
   }
 
   test("sketch aggregates run under streaming aggregation: KMV exactly, MG with its guarantee") {
@@ -1116,18 +1047,9 @@ class StreamingSpec extends AnyFunSuite {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val stream = EventStreams.readEventStream(spark, eventsDir)
-      val q = EventStreams.hourlyCounts(stream)
-        .writeStream.outputMode("complete")
-        .format("memory").queryName("rocksdb_out")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable(); q.stop()
-      val streamed = spark.sql("SELECT * FROM rocksdb_out").count()
-      val batch = EventOps.hourlyWindowAgg(
-        Tables.events(spark, sf)).count()
-      assert(streamed == batch,
-        s"RocksDB-backed result rows $streamed != batch $batch")
+      val (streamed, batch) = hourlyLangCountsVsBatch("rocksdb_out")
+      assert(streamed.nonEmpty && streamed == batch,
+        s"RocksDB-backed result rows ${streamed.size} != batch ${batch.size}")
     } finally {
       saved match {
         case Some(v) => spark.conf.set(key, v)

@@ -98,12 +98,14 @@ class TextAnalysisSpec extends AnyFunSuite {
 
   test("multimodal resize lands images at target dims, frame sampling explodes videos 1-to-N") {
     val docs = Tables.documents(spark, sf)
-    val resized = Multimodal.resizeAll(docs, newW = 8, newH = 6).collect()
-    resized.filter(_.mime == Multimodal.ImageMime).foreach { r =>
-      val f = Multimodal.decodeMedia(r)
+    val images = Multimodal.mediaFrame(docs).as[Multimodal.MediaRow].collect()
+      .filter(_.mime == Multimodal.ImageMime)
+    assert(images.nonEmpty)
+    images.foreach { r =>
+      val f = Multimodal.decodeMedia(Multimodal.resizeImage(r, newW = 8, newH = 6))
       assert(f.width == 8 && f.height == 6, "resized image must re-decode at target dims")
     }
-    val frames = Multimodal.sampleFrames(docs, stride = 1)
+    val frames = Multimodal.frameSampleManifest(docs, stride = 1)
     val videoDocs = Multimodal.mediaFrame(docs)
       .filter($"mime" === Multimodal.VideoMime).count()
     assert(frames.count() >= 2 * videoDocs, "every video has >= 2 frames")

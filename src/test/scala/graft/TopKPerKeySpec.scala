@@ -10,12 +10,11 @@ class TopKPerKeySpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  private lazy val data = {
-    // 50 keys × 200 values, deterministic pseudo-random scores
-    (0 until 10000).map { i =>
-      (i % 50L, i.toLong, ((i * 2654435761L) % 1000003L).toDouble)
-    }.toDF("key", "id", "score")
+  // 50 keys × 200 values, deterministic pseudo-random scores
+  private val rows = (0 until 10000).map { i =>
+    (i % 50L, i.toLong, ((i * 2654435761L) % 1000003L).toDouble)
   }
+  private lazy val data = rows.toDF("key", "id", "score")
 
   test("topKPerKey equals the window row_number formulation") {
     val viaOp = TopKPerKey(data, Seq(col("key")), Seq(col("score").desc, col("id")), 5)
@@ -37,20 +36,32 @@ class TopKPerKeySpec extends AnyFunSuite {
   }
 
   test("RewriteWindowTopK collapses the row_number idiom into the custom operator") {
-    graft.plans.TopKInstaller.install(spark)
+    // the route users take: a session built with GraftExtensions; the
+    // shared session is left as it was, so no later suite inherits it
+    val before = spark.experimental.extraOptimizations
     val w = Window.partitionBy("key").orderBy(col("score").desc, col("id"))
-    val q = data.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-    val plan = q.queryExecution.executedPlan.toString()
-    assert("TopKPerKey \\[".r.findAllIn(plan).length == 2,
-      s"rewrite did not fire:\n$plan")
-    // results identical to the un-rewritten window (rn column included)
-    val rows = q.select("key", "id", "rn").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    spark.experimental.extraOptimizations = Nil // disable rule
-    val baseline = data.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-      .select("key", "id", "rn").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(rows == baseline)
+    def idiom(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
+    def topRows(df: org.apache.spark.sql.DataFrame) = df.select("key", "id", "rn")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val ext = org.apache.spark.sql.classic.SparkSession.builder()
+      .withExtensions(new GraftExtensions).create()
+    try {
+      val q = idiom(ext.createDataFrame(rows).toDF("key", "id", "score"))
+      val plan = q.queryExecution.executedPlan.toString()
+      assert("TopKPerKey \\[".r.findAllIn(plan).length == 2,
+        s"rewrite did not fire:\n$plan")
+      // results identical to the un-rewritten window (rn column included)
+      val baseline = idiom(data)
+      assert(!baseline.queryExecution.executedPlan.toString().contains("TopKPerKey"),
+        "the shared session must not rewrite")
+      assert(topRows(q) == topRows(baseline))
+    } finally {
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+    }
+    assert(spark.experimental.extraOptimizations == before,
+      "the shared session's optimizer rules must be unchanged")
   }
 
   test("ascending ordering keeps the smallest k") {

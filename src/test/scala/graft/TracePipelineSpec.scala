@@ -83,7 +83,7 @@ class TracePipelineSpec extends AnyFunSuite {
 
   test("decode-once plan pin: ONE blob exchange in the report build, ZERO payload binary downstream") {
     val build = Traces.traceReport(docs).toDF()
-    val nBlob = PlanWalk.blobExchanges(build)
+    val nBlob = PlanFences.blobExchanges(build)
     assert(nBlob == 1,
       s"report build must have exactly ONE blob exchange, got $nBlob")
 
@@ -99,7 +99,7 @@ class TracePipelineSpec extends AnyFunSuite {
     Traces.traceReport(docs).write.mode("overwrite").parquet(dir)
     val updates = TracePipeline.pushUpdates(spark.read.parquet(dir),
       TracePipeline.existingStore(docs))
-    val nDownstreamBinary = PlanWalk.blobExchanges(updates)
+    val nDownstreamBinary = PlanFences.blobExchanges(updates)
     assert(nDownstreamBinary <= 1,
       s"post-persist chain may carry binary only in the classify buffer exchange, got $nDownstreamBinary")
     val nodes = PlanWalk.nodes(updates.queryExecution.executedPlan)

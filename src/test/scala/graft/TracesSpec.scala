@@ -161,8 +161,9 @@ class TracesSpec extends AnyFunSuite {
     val out = Traces.singleCellTypeFix(docs).collect()
     assert(out.length == docs.count(), "one verdict per trace")
     // recompute membership from the q80 view through the closure by hand
-    val closure = graft.operators.Ontology.descendantsOf(
-        Traces.StimulusEdges.toDF("child", "parent"), Traces.SingleCellRoot)
+    val closure = graft.operators.Ontology.transitiveClosure(
+        Traces.StimulusEdges.toDF("child", "parent"))
+      .filter($"ancestor" === Traces.SingleCellRoot)
       .select("node").collect().map(_.getString(0)).toSet
     assert(closure == Set("current_injection", "step", "ramp"),
       s"the 2-level ontology must close transitively: $closure")
